@@ -14,6 +14,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the local-mode heap ceiling, in MiB.
+_MAX_HEAP_MB = 16 << 10
+
+
+def default_driver_memory(mem_total_bytes: int) -> str:
+    """min(16g, half of physical memory), in MiB: the heap is pre-touched
+    at startup, so it must leave the host room for the Python workers."""
+    return f"{min(_MAX_HEAP_MB, mem_total_bytes // 2 >> 20)}m"
+
 
 def get_spark(
     app_name: str = "cawd-spark",
@@ -23,19 +32,25 @@ def get_spark(
 
     Environment knobs:
 
-    - ``SPARK_GRAFT_CPUS``: local core count (default 32).
+    - ``SPARK_GRAFT_CPUS``: local core count (default: the cores this
+      process may run on).
     - ``CAWD_SHUFFLE_PARTITIONS``: shuffle width (default = core count; on a
       real cluster set to 2-3x total executor cores).
-    - ``CAWD_DRIVER_MEMORY``: local-mode heap (default 32g; local mode is
-      driver-only so this is the only memory knob that matters).
+    - ``CAWD_DRIVER_MEMORY``: local-mode heap (default
+      :func:`default_driver_memory` of the host's physical memory; local
+      mode is driver-only so this is the only memory knob that matters).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
     parts = str(
         shuffle_partitions
         or os.environ.get("CAWD_SHUFFLE_PARTITIONS")
         or cpus
     )
-    mem = os.environ.get("CAWD_DRIVER_MEMORY", "16g")
+    mem = os.environ.get("CAWD_DRIVER_MEMORY") or default_driver_memory(
+        os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

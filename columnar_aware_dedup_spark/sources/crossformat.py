@@ -101,9 +101,9 @@ def _value_sigs(df: DataFrame, fmt: str) -> DataFrame:
     canonical renderings ≈ seconds of single-threaded CPU at sf0.1;
     measured 2.85 s ORC / 3.16 s parquet as 1-task aggs). An explicit
     repartition to the session's parallelism moves the hash work off the
-    scan task: the scan ships raw rows (cheap — one narrow exchange of
-    the 11 projected columns), and the md5 + decimal partial sums run
-    32-way. The `_fanned` discipline: size stages by CPU work, not input
+    scan task: the scan ships raw rows (a full hash shuffle of the 11
+    projected columns — paid because the md5 work it spreads costs more),
+    and the md5 + decimal partial sums run 32-way. The `_fanned` discipline: size stages by CPU work, not input
     bytes. Exact order-free sums are partition-order-invariant, so the
     result is bit-identical."""
     spread = df.select(*[n for n, _t in _LINEITEM_COLS]).repartition(

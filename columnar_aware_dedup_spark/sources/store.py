@@ -8,10 +8,10 @@ the big side of every probe, and bucketing pre-partitions it on the join key
 so a probe shuffles ONLY the incoming chunks — the store is read in place,
 bucket-aligned. Probes are signature-only (content never travels).
 
-Merge discipline (idempotent append) matches
-:mod:`columnar_aware_dedup_spark.streaming.ingest`: anti-join then append;
-duplicate signatures from at-least-once delivery are collapsed by the
-probe-side ``distinct``, which is also bucket-local (no shuffle).
+Merge discipline (idempotent append) is the fold core's
+(:mod:`columnar_aware_dedup_spark.streaming.fold`), shared with every
+streaming index family: anti-join then append, so at-least-once delivery
+never re-appends a signature.
 Concurrent merges serialize on an atomic lock directory (:func:`store_lock`),
 so two writers can no longer both observe a signature as missing and
 double-append it.
@@ -28,8 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 64
-
-_STORE_COLS = ["signature", "chunk_type", "size"]
 
 
 class StoreLockTimeout(RuntimeError):
@@ -174,26 +172,24 @@ def create_store(
     certificate run costs more than the write itself); the fresh-create
     path keeps the orphaned-directory hygiene. Either way the rows
     repartition to the bucket width first so each write task emits one
-    bucket file."""
+    bucket file. (Not ``fold.init_tables`` + an append: on a fresh table
+    that is two write jobs where this is one.)"""
+    from columnar_aware_dedup_spark.streaming.fold import (
+        truncate_if_layout_matches,
+    )
+
     rows = (
         _store_projection(chunks)
         .dropDuplicates(["signature"])  # the store is signature-keyed
         .repartition(n_buckets, "signature")
     )
-    if spark.catalog.tableExists(table_name):
-        empty = spark.createDataFrame([], rows.schema)
-        if (
-            spark.table(table_name).schema == empty.schema
-            and bucket_spec(spark, table_name) == (n_buckets, "signature")
-        ):
-            spark.sql(f"TRUNCATE TABLE {table_name}")
-            spark.catalog.refreshTable(table_name)
-            rows.write.format("parquet").mode("append").insertInto(
-                table_name
-            )
-            return
+    if truncate_if_layout_matches(
+        spark, table_name, rows.schema, (n_buckets, "signature")
+    ):
+        rows.write.format("parquet").mode("append").insertInto(table_name)
+        return
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    _invalidate_bucketed_width(spark, table_name)
+    _invalidate_bucket_layout(spark, table_name)
     # a fresh metastore (Derby home is ephemeral) can orphan the physical
     # location from an earlier process; clear it so saveAsTable can claim it
     import shutil
@@ -214,40 +210,23 @@ def merge_into_store(
 ) -> int:
     """Idempotent merge: append only signatures the store lacks; returns the
     number appended. (MERGE INTO with Delta/Iceberg; anti-join + append on
-    plain parquet buckets.)
+    plain parquet buckets, through the fold core's ``append_new``.)
 
-    The anti-join result is persisted so the count and the append see the
-    SAME rows — re-executing the plan for each action could disagree if the
-    store changed in between or the input is nondeterministic. Writers
-    serialize on :func:`store_lock`, so the observe-miss/double-append race
-    between concurrent merges is gone (r02's single-writer caveat removed;
-    proven by ``tests/test_store.py::test_concurrent_merges_never_double_append``).
-    The anti-join executes under the lock (both actions run inside it), so
-    every writer sees the store state its append is based on.
+    Writers serialize on :func:`store_lock`, so the observe-miss/double-
+    append race between concurrent merges is gone (proven by
+    ``tests/test_store.py::test_concurrent_merges_never_double_append``).
+    The anti-join executes under the lock, so every writer sees the store
+    state its append is based on.
     """
-    with store_lock(spark, table_name):
-        # see files appended by writers in other sessions/processes
-        spark.catalog.refreshTable(table_name)
-        store_sigs = spark.table(table_name).select("signature")
-        # repartition to the store's bucket width before the insert (r11 —
-        # the merge_bm25_delta discipline: the AQE-coalesced delta
-        # otherwise writes every bucket file from one task, serially)
-        new = (
-            _store_projection(chunks)
-            .dropDuplicates(["signature"])
-            .join(store_sigs, "signature", "left_anti")
-            .repartition(bucketed_width(spark, table_name, 64), "signature")
-            .persist()
+    from columnar_aware_dedup_spark.streaming import fold
+
+    with fold.locked(spark, table_name, table_name):
+        return fold.append_new(
+            spark,
+            _store_projection(chunks).dropDuplicates(["signature"]),
+            table_name,
+            "signature",
         )
-        try:
-            n = new.count()
-            if n:
-                new.write.format("parquet").mode("append").insertInto(
-                    table_name
-                )
-        finally:
-            new.unpersist()
-        return n
 
 
 def linked_store_rows(linked: DataFrame) -> DataFrame:
@@ -341,7 +320,7 @@ def drop_table_and_dir(spark: SparkSession, tbl: str) -> None:
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         location = f"{warehouse}/{tbl.lower()}"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    _invalidate_bucketed_width(spark, tbl)
+    _invalidate_bucket_layout(spark, tbl)
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(location)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -370,39 +349,37 @@ def bucket_spec(
     return int(n), cols.strip("[] ").strip("`")
 
 
-#: memoized bucket widths (a catalog table's bucketing is stable for its
+#: memoized bucket specs (a catalog table's bucketing is stable for its
 #: lifetime; DESCRIBE FORMATTED costs a driver round trip per merge
 #: otherwise). Keyed by warehouse so tests with distinct warehouses don't
 #: cross-contaminate. Every path that can REBIND a table name to a new
-#: layout (``drop_table_and_dir``, ``create_store``'s fresh-create branch)
-#: pops the entry, so a recreate at a different width can never leave
-#: later delta appends repartitioning to the stale count (ADVICE r11).
-_BUCKET_WIDTH_CACHE: dict[str, int] = {}
+#: layout (``drop_table_and_dir``, ``create_store``'s fresh-create branch,
+#: the staged swap, compaction recovery) pops the entry, so a recreate at
+#: a different layout can never leave later delta appends repartitioning
+#: to the stale spec (ADVICE r11).
+_BUCKET_SPEC_CACHE: dict[str, tuple[int | None, str | None]] = {}
 
 
-def _width_cache_key(spark: SparkSession, table_name: str) -> str:
+def _spec_cache_key(spark: SparkSession, table_name: str) -> str:
     return (
         f"{spark.conf.get('spark.sql.warehouse.dir')}::{table_name.lower()}"
     )
 
 
-def _invalidate_bucketed_width(spark: SparkSession, table_name: str) -> None:
-    _BUCKET_WIDTH_CACHE.pop(_width_cache_key(spark, table_name), None)
+def _invalidate_bucket_layout(spark: SparkSession, table_name: str) -> None:
+    _BUCKET_SPEC_CACHE.pop(_spec_cache_key(spark, table_name), None)
 
 
-def bucketed_width(
-    spark: SparkSession, table_name: str, default: int = 8
-) -> int:
-    """The table's bucket count (memoized) — the repartition width every
-    delta append should use so each insert task writes exactly its own
-    bucket file (r11: the AQE-coalesced delta otherwise writes every
-    bucket file from ONE task, serially)."""
-    key = _width_cache_key(spark, table_name)
-    n = _BUCKET_WIDTH_CACHE.get(key)
-    if n is None:
-        n = bucket_spec(spark, table_name)[0] or default
-        _BUCKET_WIDTH_CACHE[key] = n
-    return n
+def bucket_layout(
+    spark: SparkSession, table_name: str
+) -> tuple[int | None, str | None]:
+    """:func:`bucket_spec`, memoized — the layout every delta append
+    repartitions to (``streaming/fold.py::append_new``)."""
+    key = _spec_cache_key(spark, table_name)
+    spec = _BUCKET_SPEC_CACHE.get(key)
+    if spec is None:
+        spec = _BUCKET_SPEC_CACHE[key] = bucket_spec(spark, table_name)
+    return spec
 
 
 def staged_swap_overwrite(
@@ -450,7 +427,7 @@ def staged_swap_overwrite(
     shutil.rmtree(f"{warehouse}/{aside.lower()}", ignore_errors=True)
     spark.catalog.refreshTable(table_name)
     # the swap may have rebound the name to a DIFFERENT bucket layout
-    _invalidate_bucketed_width(spark, table_name)
+    _invalidate_bucket_layout(spark, table_name)
 
 
 def _n_data_files(path: str) -> int:
@@ -571,5 +548,5 @@ def recover_compaction_unlocked(
     _drop(tmp if pick == aside else aside)
     spark.catalog.refreshTable(table_name)
     # the recovery may have rebound the name to a DIFFERENT bucket layout
-    _invalidate_bucketed_width(spark, table_name)
+    _invalidate_bucket_layout(spark, table_name)
     return "new" if pick == tmp else "old"

@@ -38,17 +38,10 @@ from columnar_aware_dedup_spark.operators.retrieval import (
     corpus_stats,
     doc_lengths,
 )
-from columnar_aware_dedup_spark.sources.store import store_lock
+from columnar_aware_dedup_spark.streaming import fold
 
 #: suffixes of the partial-row tables the commit protocol guards.
 _PARTIAL_SUFFIXES = ("", "_docs", "_stats")
-
-def _bucket_width(spark: SparkSession, table_name: str) -> int:
-    """The postings table's bucket count (one memoized resolver repo-wide —
-    ``sources/store.py::bucketed_width``)."""
-    from columnar_aware_dedup_spark.sources.store import bucketed_width
-
-    return bucketed_width(spark, table_name, 8)
 
 
 def sweep_uncommitted_bm25(spark: SparkSession, table_name: str) -> int:
@@ -124,12 +117,10 @@ def _merge_bm25(
     discipline are written once."""
     import uuid
 
-    def _refresh_all() -> None:
-        for suffix in (*_PARTIAL_SUFFIXES, "_attempts", "_commits"):
-            spark.catalog.refreshTable(table_name + suffix)
-
-    with store_lock(spark, table_name):
-        _refresh_all()
+    tables = [
+        table_name + s for s in (*_PARTIAL_SUFFIXES, "_attempts", "_commits")
+    ]
+    with fold.locked(spark, table_name, *tables):
         if sweep:
             sweep_uncommitted_bm25(spark, table_name)
         seen = committed_bm25(spark, table_name, "_docs").select("doc_id")
@@ -164,17 +155,9 @@ def _merge_bm25(
         tag = F.lit(attempt).alias("attempt_id")
         postings, registry = frames_of(fresh)
         registry_delta = registry.select(*keys, "dl", tag)
-        # repartition to the postings table's bucket width on the bucket
-        # key before the insert (r11 optimization): the delta postings are
-        # AQE-coalesced to one partition at delta sizes, so the bucketed
-        # append otherwise runs as a single task serially sorting and
-        # writing every bucket file (guide §2.4 — establish the write's
-        # required distribution once, on the skinny delta rows).
-        postings.select(
-            "term", *keys, "tf", "dl", tag
-        ).repartition(_bucket_width(spark, table_name), "term").write.format(
-            "parquet"
-        ).mode("append").insertInto(table_name)
+        fold.laid_out(
+            spark, postings.select("term", *keys, "tf", "dl", tag), table_name
+        ).write.format("parquet").mode("append").insertInto(table_name)
         registry_delta.write.format("parquet").mode("append").insertInto(
             table_name + "_docs"
         )
@@ -209,7 +192,8 @@ def _merge_bm25(
         )
 
         append_marker_row(spark, table_name + "_commits", attempt)
-        _refresh_all()
+        for t in tables:
+            spark.catalog.refreshTable(t)
         return n
 
 
@@ -223,23 +207,12 @@ def start_bm25_indexer(
 
     ``availableNow`` drains everything present then stops (the
     test/backfill trigger); a deployment drops the trigger for continuous
-    tailing. The four index tables must exist (seed them with
+    tailing. The index tables must exist (seed them with
     ``retrieval.write_bm25_index`` over the initial corpus)."""
-    docs = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, n_chars long"
-        )
-        .parquet(docs_dir)
-    )
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        merge_bm25_delta(spark, batch, table_name)
-
-    return (
-        docs.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return fold.start(
+        fold.docs_stream(spark, docs_dir),
+        lambda batch: merge_bm25_delta(spark, batch, table_name),
+        checkpoint,
     )
 
 
@@ -256,21 +229,10 @@ def merge_doc_vectors_delta(
         _doc_hash_vectors_of,
     )
 
-    with store_lock(spark, table_name):
-        spark.catalog.refreshTable(table_name)
-        seen = spark.table(table_name).select("doc_id")
+    with fold.locked(spark, table_name, table_name):
         # dropDuplicates: same intra-batch replay guard as merge_bm25_delta
         # (a doc twice in one batch would append two vector rows).
-        fresh = (
-            docs.dropDuplicates(["doc_id"])
-            .join(seen, "doc_id", "left_anti")
-            .localCheckpoint(eager=True)
+        return fold.append_new(
+            spark, _doc_hash_vectors_of(docs.dropDuplicates(["doc_id"])),
+            table_name, "doc_id",
         )
-        n = fresh.count()
-        if not n:
-            return 0
-        _doc_hash_vectors_of(fresh).write.format("parquet").mode(
-            "append"
-        ).insertInto(table_name)
-        spark.catalog.refreshTable(table_name)
-        return n

@@ -44,11 +44,8 @@ from pyspark.sql import functions as F
 from columnar_aware_dedup_spark.operators.clustering import (
     connected_components_star,
 )
-from columnar_aware_dedup_spark.sources.store import (
-    drop_table_and_dir,
-    store_lock,
-)
-from columnar_aware_dedup_spark.streaming import lsh
+from columnar_aware_dedup_spark.sources.store import drop_table_and_dir
+from columnar_aware_dedup_spark.streaming import fold, lsh
 
 
 # catalog-resolving table+directory cleanup, shared with the LSH band-table
@@ -64,15 +61,11 @@ def init_cluster_tables(
     been FOLDED into labels, which is strictly later than being indexed.
     Re-init truncates layout-matching tables in place (r11 — the
     ``init_bm25_tables`` discipline)."""
-    from columnar_aware_dedup_spark.operators.retrieval import (
-        _init_catalog_tables,
-    )
-
     for tbl, schema in (
         (label_table, "doc_id long, cluster_id long"),
         (done_table, "doc_id long"),
     ):
-        _init_catalog_tables(spark, tbl, {"": (schema, False)}, 0, "")
+        fold.init_tables(spark, tbl, {"": (schema, False)}, 0, "")
 
 
 def delta_pairs(bands: DataFrame, todo_ids: DataFrame) -> DataFrame:
@@ -109,9 +102,7 @@ def merge_clusters(
     """Fold one batch of documents-schema rows into the maintained labels;
     returns the number of docs folded (0 on pure replays)."""
     lsh.merge_bands(spark, docs, band_table)
-    with store_lock(spark, label_table):
-        for t in (band_table, label_table, done_table):
-            spark.catalog.refreshTable(t)
+    with fold.locked(spark, label_table, band_table, label_table, done_table):
         bands = spark.table(band_table)
         done = spark.table(done_table)
         todo_ids = (
@@ -205,7 +196,7 @@ def recover_labels(
     if prefer not in ("new", "old"):
         raise ValueError(f"prefer must be 'new' or 'old', got {prefer!r}")
     candidates = {"new": f"{label_table}__next", "old": f"{label_table}__prev"}
-    with store_lock(spark, label_table):
+    with fold.locked(spark, label_table):
         if spark.catalog.tableExists(label_table):
             for tbl in candidates.values():
                 _drop_table_and_dir(spark, tbl)
@@ -244,19 +235,12 @@ def start_cluster_indexer(
     done_table: str,
     checkpoint: str,
 ) -> "object":
-    """File-source stream over documents-schema parquet -> label merges.
-    ``availableNow`` drains then stops (test/backfill trigger); drop it for
-    continuous tailing."""
-    docs = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).parquet(docs_dir)
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        merge_clusters(spark, batch, band_table, label_table, done_table)
-
-    return (
-        docs.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """File-source stream over documents-schema parquet -> label merges
+    (``fold.start``)."""
+    return fold.start(
+        fold.docs_stream(spark, docs_dir),
+        lambda batch: merge_clusters(
+            spark, batch, band_table, label_table, done_table
+        ),
+        checkpoint,
     )

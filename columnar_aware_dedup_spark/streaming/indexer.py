@@ -19,10 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from columnar_aware_dedup_spark.operators.text import _NORM_SPARK
-from columnar_aware_dedup_spark.sources.store import store_lock
-
-#: postings layout (matches operators.search.write_postings_index).
-_POSTING_COLS = ["term", "doc_id", "tf"]
+from columnar_aware_dedup_spark.streaming import fold
 
 
 def batch_postings(docs: DataFrame) -> DataFrame:
@@ -45,28 +42,14 @@ def merge_postings(
     dropped whole — a replayed file re-derives identical postings, so
     skipping the doc entirely keeps tf exact. The anti-join's build side is
     the DISTINCT indexed doc_id set, not the postings table."""
-    with store_lock(spark, table_name):
-        spark.catalog.refreshTable(table_name)
-        seen = spark.table(table_name).select("doc_id").distinct()
+    with fold.locked(spark, table_name, table_name):
         # dropDuplicates: a file and its at-least-once replay can land in
         # the SAME micro-batch, invisible to the seen anti-join — without
-        # the intra-batch dedup that doc's tf doubles (the
-        # ingest.merge_chunks_into_store discipline).
-        fresh = (
-            batch_postings(docs.dropDuplicates(["doc_id"]))
-            .join(seen, "doc_id", "left_anti")
-            .select(*_POSTING_COLS)
-            .persist()
+        # the intra-batch dedup that doc's tf doubles.
+        return fold.append_new(
+            spark, batch_postings(docs.dropDuplicates(["doc_id"])),
+            table_name, "doc_id",
         )
-        try:
-            n = fresh.count()
-            if n:
-                fresh.write.format("parquet").mode("append").insertInto(
-                    table_name
-                )
-        finally:
-            fresh.unpersist()
-        return n
 
 
 def start_indexer(
@@ -75,25 +58,11 @@ def start_indexer(
     table_name: str,
     checkpoint: str,
 ) -> "object":
-    """File-source stream over documents-schema parquet -> postings merges.
-
-    ``availableNow`` drains everything present then stops (the test/backfill
-    trigger); a deployment drops the trigger for continuous tailing. The
-    index table must exist (create it with
+    """File-source stream over documents-schema parquet -> postings merges
+    (``fold.start``). The index table must exist (create it with
     ``operators.search.write_postings_index`` or an empty frame)."""
-    docs = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, n_chars long"
-        )
-        .parquet(docs_dir)
-    )
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        merge_postings(spark, batch, table_name)
-
-    return (
-        docs.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return fold.start(
+        fold.docs_stream(spark, docs_dir),
+        lambda batch: merge_postings(spark, batch, table_name),
+        checkpoint,
     )

@@ -5,10 +5,9 @@ The reference runs a long-lived TCP loop — client streams files as they
 appear, server keeps an unbounded in-heap chunk store
 (``net/SpeedupClient.java:44-64``, ``orc/dedup/NaiveORCChunkStore.java:15``).
 Spark-native: a ``binaryFile`` file-source stream feeds the structural
-chunker; each micro-batch probes a *persisted* signature store (parquet,
-signature-keyed) and appends only misses — an idempotent anti-join merge in
-``foreachBatch``. The store survives restarts and is bucketable by signature
-at scale (vs. the reference's process-lifetime HashMap).
+chunker; each micro-batch merges into the *persisted* signature-bucketed
+chunk store (``sources/store.py::merge_into_store``), appending only misses.
+The store survives restarts (vs. the reference's process-lifetime HashMap).
 """
 
 from __future__ import annotations
@@ -16,61 +15,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from columnar_aware_dedup_spark.sources import store
 from columnar_aware_dedup_spark.sources.chunkers import CHUNK_SCHEMA, _chunk_batches
-
-#: store layout: signature + provenance, no content (signature-only probes).
-_STORE_COLS = ["signature", "chunk_type", "size"]
-
-
-def load_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """Read the persisted store, empty-frame fallback for a missing one.
-
-    Asks Spark (not the filesystem) whether the store exists: a store written
-    with partitioning or a nonstandard file layout has no ``*.parquet``
-    directly in the directory, and a string-match on entries would misread it
-    as empty — silently re-transferring every signature on the next merge.
-    """
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(store_path)  # schema inference is eager
-    except AnalysisException:
-        return spark.createDataFrame([], schema=CHUNK_SCHEMA).select(*_STORE_COLS)
-
-
-def merge_chunks_into_store(
-    chunks: DataFrame, store_path: str
-) -> None:
-    """Idempotent store merge: append signatures not already present.
-
-    Anti-join against the current store, dedup within the batch, append.
-    (With Delta/Iceberg this is MERGE; plain parquet append + anti-join gives
-    the same at-least-once-safe semantics because re-appended duplicates are
-    filtered on the next probe's distinct.)
-    """
-    spark = chunks.sparkSession
-    store = load_store(spark, store_path).select("signature").distinct()
-    new = (
-        chunks.select(*_STORE_COLS)
-        .dropDuplicates(["signature"])
-        .join(store, "signature", "left_anti")
-    )
-    new.write.mode("append").parquet(store_path)
+from columnar_aware_dedup_spark.streaming import fold
 
 
 def start_ingest(
     spark: SparkSession,
     input_dir: str,
-    store_path: str,
+    store_table: str,
     checkpoint: str,
     glob: str = "*.parquet",
 ):
-    """Stream files from ``input_dir`` into the chunk store (availableNow).
+    """Stream files from ``input_dir`` into the chunk-store table
+    ``store_table``, creating it empty if it does not exist (``fold.start``).
 
     Returns the StreamingQuery; callers ``awaitTermination()``. Restart-safe
-    via checkpoint; store merge is idempotent, so at-least-once delivery is
-    fine.
+    via checkpoint; the store merge is idempotent, so at-least-once delivery
+    is fine.
     """
+    if not spark.catalog.tableExists(store_table):
+        store.create_store(
+            spark, spark.createDataFrame([], CHUNK_SCHEMA), store_table
+        )
     files = (
         spark.readStream.format("binaryFile")
         .schema(
@@ -80,16 +47,10 @@ def start_ingest(
         .load(input_dir)
         .select("path", "content")
     )
-    chunks = files.mapInPandas(_chunk_batches, CHUNK_SCHEMA)
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        merge_chunks_into_store(batch, store_path)
-
-    return (
-        chunks.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return fold.start(
+        files.mapInPandas(_chunk_batches, CHUNK_SCHEMA),
+        lambda batch: store.merge_into_store(spark, batch, store_table),
+        checkpoint,
     )
 
 

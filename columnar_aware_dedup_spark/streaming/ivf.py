@@ -34,7 +34,7 @@ from columnar_aware_dedup_spark.operators.similarity import (
     _CENTROID_LO,
     ivf_assign,
 )
-from columnar_aware_dedup_spark.sources.store import store_lock
+from columnar_aware_dedup_spark.streaming import fold
 
 
 def frozen_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,7 +62,7 @@ def merge_vectors(
     anti-join, never a re-assignment."""
     from pyspark.errors import AnalysisException
 
-    with store_lock(spark, "ivf_index_" + path.replace("/", "_")):
+    with fold.locked(spark, "ivf_index_" + path.replace("/", "_")):
         # dropDuplicates: intra-batch replay guard (the indexer/ingest
         # discipline) — a vector twice in one batch would land twice in
         # its cell partition.
@@ -96,21 +96,14 @@ def start_ivf_indexer(
     path: str,
     checkpoint: str,
 ) -> "object":
-    """File-source stream over embeddings-schema parquet -> cell merges.
-    ``availableNow`` drains then stops (test/backfill trigger); drop it
-    for continuous tailing."""
+    """File-source stream over embeddings-schema parquet -> cell merges
+    (``fold.start``)."""
     vecs = spark.readStream.schema(
         "vec_id long, embedding array<float>, label int"
     ).parquet(vectors_dir)
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        merge_vectors(spark, batch, cent, path)
-
-    return (
-        vecs.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return fold.start(
+        vecs, lambda batch: merge_vectors(spark, batch, cent, path),
+        checkpoint,
     )
 
 

@@ -40,9 +40,7 @@ from columnar_aware_dedup_spark.operators.text import (
     _minhash_slots_spark,
     _NORM_SPARK,
 )
-from columnar_aware_dedup_spark.sources.store import store_lock
-
-_BAND_COLS = ["bucket", "band", "doc_id"]
+from columnar_aware_dedup_spark.streaming import fold
 
 
 def init_band_table(spark: SparkSession, table_name: str) -> str:
@@ -57,11 +55,7 @@ def init_band_table(spark: SparkSession, table_name: str) -> str:
     drop + recreate round trip per certificate run costs more than a
     merge); crash debris otherwise cleaned through the catalog-resolving
     ``store.drop_table_and_dir`` inside the shared init."""
-    from columnar_aware_dedup_spark.operators.retrieval import (
-        _init_catalog_tables,
-    )
-
-    return _init_catalog_tables(
+    return fold.init_tables(
         spark, table_name,
         {"": ("bucket string, band int, doc_id long", True)}, 8, "bucket",
     )
@@ -97,30 +91,13 @@ def merge_bands(spark: SparkSession, docs: DataFrame, table_name: str) -> int:
     Documents already indexed are dropped whole (the indexer discipline):
     a replayed file re-derives the identical 4 band rows, so skipping the
     doc keeps every bucket's membership exact."""
-    with store_lock(spark, table_name):
-        spark.catalog.refreshTable(table_name)
-        seen = spark.table(table_name).select("doc_id").distinct()
-        # dropDuplicates: intra-batch replay guard (the indexer/ingest
-        # discipline) — a doc twice in one batch would double its band rows.
-        # repartition to the table's bucket width on the bucket key before
-        # the insert (r11 — the merge_bm25_delta discipline: the AQE-
-        # coalesced delta otherwise writes every bucket file from one task)
-        fresh = (
-            batch_bands(docs.dropDuplicates(["doc_id"]))
-            .join(seen, "doc_id", "left_anti")
-            .select(*_BAND_COLS)
-            .repartition(8, "bucket")
-            .persist()
+    with fold.locked(spark, table_name, table_name):
+        # dropDuplicates: intra-batch replay guard — a doc twice in one
+        # batch would double its band rows.
+        return fold.append_new(
+            spark, batch_bands(docs.dropDuplicates(["doc_id"])), table_name,
+            "doc_id",
         )
-        try:
-            n = fresh.count()
-            if n:
-                fresh.write.format("parquet").mode("append").insertInto(
-                    table_name
-                )
-        finally:
-            fresh.unpersist()
-        return n
 
 
 def near_dup_pairs_from_index(spark: SparkSession, table_name: str) -> DataFrame:
@@ -177,19 +154,10 @@ def probe_near_dups(
 def start_lsh_indexer(
     spark: SparkSession, docs_dir: str, table_name: str, checkpoint: str
 ) -> "object":
-    """File-source stream over documents-schema parquet -> band merges.
-    ``availableNow`` drains then stops (test/backfill trigger); drop it for
-    continuous tailing."""
-    docs = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).parquet(docs_dir)
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        merge_bands(spark, batch, table_name)
-
-    return (
-        docs.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """File-source stream over documents-schema parquet -> band merges
+    (``fold.start``)."""
+    return fold.start(
+        fold.docs_stream(spark, docs_dir),
+        lambda batch: merge_bands(spark, batch, table_name),
+        checkpoint,
     )

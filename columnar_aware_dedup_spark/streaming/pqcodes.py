@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from columnar_aware_dedup_spark.operators.pq import encode_expr
-from columnar_aware_dedup_spark.sources.store import store_lock
+from columnar_aware_dedup_spark.streaming import fold
 
 
 def init_code_table(spark: SparkSession, table_name: str) -> str:
@@ -37,11 +37,7 @@ def init_code_table(spark: SparkSession, table_name: str) -> str:
     metastore no longer lists the table. Re-init truncates a
     layout-matching table in place (r11 — the ``init_bm25_tables``
     discipline). Returns the table name for chaining."""
-    from columnar_aware_dedup_spark.operators.retrieval import (
-        _init_catalog_tables,
-    )
-
-    return _init_catalog_tables(
+    return fold.init_tables(
         spark, table_name, {"": ("vec_id long, codes array<int>", False)},
         0, "",
     )
@@ -54,27 +50,15 @@ def merge_codes(
     persisted code table; returns rows appended. Only the batch encodes
     (broadcast argmin, zero shuffle); the history contributes one vec_id
     column scan for the anti-join, never a re-encode."""
-    with store_lock(spark, table_name):
-        spark.catalog.refreshTable(table_name)
-        seen = spark.table(table_name).select("vec_id").distinct()
-        # dropDuplicates: intra-batch replay guard (the indexer/ingest
-        # discipline) — a vector twice in one batch would append two rows.
-        fresh = (
+    with fold.locked(spark, table_name, table_name):
+        # dropDuplicates: intra-batch replay guard — a vector twice in one
+        # batch would append two rows.
+        codes = (
             batch.dropDuplicates(["vec_id"])
             .join(F.broadcast(cbs))
             .select("vec_id", encode_expr().alias("codes"))
-            .join(seen, "vec_id", "left_anti")
-            .persist()
         )
-        try:
-            n = fresh.count()
-            if n:
-                fresh.write.format("parquet").mode("append").insertInto(
-                    table_name
-                )
-        finally:
-            fresh.unpersist()
-        return n
+        return fold.append_new(spark, codes, table_name, "vec_id")
 
 
 def start_pq_indexer(
@@ -84,19 +68,12 @@ def start_pq_indexer(
     table_name: str,
     checkpoint: str,
 ) -> "object":
-    """File-source stream over embeddings-schema parquet -> code merges.
-    ``availableNow`` drains then stops (test/backfill trigger); drop it
-    for continuous tailing."""
+    """File-source stream over embeddings-schema parquet -> code merges
+    (``fold.start``)."""
     vecs = spark.readStream.schema(
         "vec_id long, embedding array<float>, label int"
     ).parquet(vectors_dir)
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        merge_codes(spark, batch, cbs, table_name)
-
-    return (
-        vecs.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return fold.start(
+        vecs, lambda batch: merge_codes(spark, batch, cbs, table_name),
+        checkpoint,
     )

@@ -24,17 +24,15 @@ from pyspark.sql import functions as F
 
 from columnar_aware_dedup_spark.operators.selection import score_documents
 from columnar_aware_dedup_spark.operators.text import _NORM_SPARK
+from columnar_aware_dedup_spark.streaming import fold
 
-_DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 
 def scored_stream(spark: SparkSession, docs_dir: str, lam: DataFrame) -> DataFrame:
     """Streaming (doc_id, n_tokens, logw, keep) over a documents-schema
     parquet directory, scored against the frozen one-row ``lam``."""
-    docs = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .parquet(docs_dir)
-        .withColumn("toks", F.split(F.expr(_NORM_SPARK), " "))
+    docs = fold.docs_stream(spark, docs_dir).withColumn(
+        "toks", F.split(F.expr(_NORM_SPARK), " ")
     )
     return score_documents(docs, lam)
 

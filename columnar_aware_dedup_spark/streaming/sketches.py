@@ -28,9 +28,7 @@ from columnar_aware_dedup_spark.operators.selection import (
     _HLL_RHO_SPARK,
 )
 from columnar_aware_dedup_spark.operators.text import _NORM_SPARK
-from columnar_aware_dedup_spark.sources.store import store_lock
-
-_DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+from columnar_aware_dedup_spark.streaming import fold
 
 
 def _tokens(docs: DataFrame) -> DataFrame:
@@ -82,13 +80,9 @@ def init_sketch_tables(spark: SparkSession, prefix: str) -> None:
     ``prefix``, replacing any previous state — including a leftover
     warehouse directory from a session whose metastore no longer lists
     the table. Re-init goes through the shared TRUNCATE-reuse discipline
-    (r11 — ``_init_catalog_tables``: five Derby drop + recreate round
-    trips per certificate run cost more than the merges)."""
-    from columnar_aware_dedup_spark.operators.retrieval import (
-        _init_catalog_tables,
-    )
-
-    _init_catalog_tables(
+    (r11 — ``fold.init_tables``: five Derby drop + recreate round trips
+    per certificate run cost more than the merges)."""
+    fold.init_tables(
         spark,
         prefix,
         {
@@ -163,12 +157,10 @@ def merge_sketches(
     """
     import uuid
 
-    def _refresh_all() -> None:
-        for suffix in ("seen", "cms", "hll", "attempts", "commits"):
-            spark.catalog.refreshTable(f"{prefix}_{suffix}")
-
-    with store_lock(spark, f"{prefix}_seen"):
-        _refresh_all()
+    tables = [
+        f"{prefix}_{s}" for s in ("seen", "cms", "hll", "attempts", "commits")
+    ]
+    with fold.locked(spark, f"{prefix}_seen", *tables):
         if sweep:
             sweep_uncommitted(spark, prefix)
         seen = _committed(spark, prefix, "seen")
@@ -208,7 +200,8 @@ def merge_sketches(
                 append_marker_row(spark, f"{prefix}_commits", attempt)
         finally:
             fresh.unpersist()
-        _refresh_all()
+        for t in tables:
+            spark.catalog.refreshTable(t)
         return n
 
 
@@ -234,16 +227,10 @@ def served_hll(spark: SparkSession, prefix: str) -> DataFrame:
 def start_sketcher(
     spark: SparkSession, docs_dir: str, prefix: str, checkpoint: str
 ) -> "object":
-    """File-source stream over documents-schema parquet -> sketch merges.
-    ``availableNow`` drains then stops; drop it for continuous tailing."""
-    docs = spark.readStream.schema(_DOC_SCHEMA).parquet(docs_dir)
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        merge_sketches(spark, batch, prefix)
-
-    return (
-        docs.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """File-source stream over documents-schema parquet -> sketch merges
+    (``fold.start``)."""
+    return fold.start(
+        fold.docs_stream(spark, docs_dir),
+        lambda batch: merge_sketches(spark, batch, prefix),
+        checkpoint,
     )

@@ -24,9 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from columnar_aware_dedup_spark.operators.text import _NORM_SPARK, _SPANS_SPARK
-from columnar_aware_dedup_spark.sources.store import store_lock
-
-_SPAN_COLS = ["span", "doc_id"]
+from columnar_aware_dedup_spark.streaming import fold
 
 
 def init_span_table(spark: SparkSession, table_name: str) -> str:
@@ -38,11 +36,7 @@ def init_span_table(spark: SparkSession, table_name: str) -> str:
     ``init_bm25_tables`` discipline); crash debris otherwise cleaned
     through the catalog-resolving ``store.drop_table_and_dir`` inside the
     shared init."""
-    from columnar_aware_dedup_spark.operators.retrieval import (
-        _init_catalog_tables,
-    )
-
-    return _init_catalog_tables(
+    return fold.init_tables(
         spark, table_name, {"": ("span string, doc_id long", True)}, 8,
         "span",
     )
@@ -64,30 +58,13 @@ def merge_spans(spark: SparkSession, docs: DataFrame, table_name: str) -> int:
     Documents already indexed are dropped whole (the indexer discipline):
     a replayed file re-derives the identical span set, so skipping the doc
     keeps per-span doc counts exact."""
-    with store_lock(spark, table_name):
-        spark.catalog.refreshTable(table_name)
-        seen = spark.table(table_name).select("doc_id").distinct()
-        # dropDuplicates: intra-batch replay guard (the indexer/ingest
-        # discipline) — a doc twice in one batch would double its span rows.
-        # repartition to the table's bucket width on the bucket key before
-        # the insert (r11 — the merge_bm25_delta discipline: the AQE-
-        # coalesced delta otherwise writes every bucket file from one task)
-        fresh = (
-            batch_spans(docs.dropDuplicates(["doc_id"]))
-            .join(seen, "doc_id", "left_anti")
-            .select(*_SPAN_COLS)
-            .repartition(8, "span")
-            .persist()
+    with fold.locked(spark, table_name, table_name):
+        # dropDuplicates: intra-batch replay guard — a doc twice in one
+        # batch would double its span rows.
+        return fold.append_new(
+            spark, batch_spans(docs.dropDuplicates(["doc_id"])), table_name,
+            "doc_id",
         )
-        try:
-            n = fresh.count()
-            if n:
-                fresh.write.format("parquet").mode("append").insertInto(
-                    table_name
-                )
-        finally:
-            fresh.unpersist()
-        return n
 
 
 def dup_fraction_from_index(spark: SparkSession, table_name: str) -> DataFrame:
@@ -116,19 +93,10 @@ def dup_fraction_from_index(spark: SparkSession, table_name: str) -> DataFrame:
 def start_span_indexer(
     spark: SparkSession, docs_dir: str, table_name: str, checkpoint: str
 ) -> "object":
-    """File-source stream over documents-schema parquet -> span merges.
-    ``availableNow`` drains then stops (test/backfill trigger); drop it for
-    continuous tailing."""
-    docs = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).parquet(docs_dir)
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        merge_spans(spark, batch, table_name)
-
-    return (
-        docs.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """File-source stream over documents-schema parquet -> span merges
+    (``fold.start``)."""
+    return fold.start(
+        fold.docs_stream(spark, docs_dir),
+        lambda batch: merge_spans(spark, batch, table_name),
+        checkpoint,
     )

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from columnar_aware_dedup_spark.sources.store import store_lock
+from columnar_aware_dedup_spark.streaming import fold
 
 #: the index schema — exactly the chunker output (_PRUNE_SCHEMA's shape).
 _SCHEMA = (
@@ -54,11 +54,7 @@ def init_statskey_table(
     """(Re-)create the EMPTY stats-key index table (truncate-in-place
     when the layout already matches, the ``init_bm25_tables`` re-init
     discipline). ``two_level=True`` creates the level-tagged layout."""
-    from columnar_aware_dedup_spark.operators.retrieval import (
-        _init_catalog_tables,
-    )
-
-    return _init_catalog_tables(
+    return fold.init_tables(
         spark, table_name,
         {"": (_SCHEMA2 if two_level else _SCHEMA, False)}, 0, "",
     )
@@ -78,30 +74,14 @@ def merge_statskey_delta(
     from pyspark.sql import functions as F
 
     key = [c for c in rows.columns if c != "data_size"]
-    with store_lock(spark, table_name):
-        spark.catalog.refreshTable(table_name)
-        seen = spark.table(table_name).select(*key)
-        # dropDuplicates: intra-batch replay guard (the maintainer
-        # discipline — a region twice in one batch would double-insert
-        # before the anti-join could see it); localCheckpoint, NOT
-        # persist: the anti-join's lineage reads the table this merge
-        # appends to, and an insert invalidates caches over it (the
-        # merge_bm25_delta lesson).
-        fresh = (
-            rows.dropDuplicates(key)
-            .join(seen, key, "left_anti")
-            .localCheckpoint(eager=True)
+    with fold.locked(spark, table_name, table_name):
+        # dropDuplicates: intra-batch replay guard — a region twice in one
+        # batch would double-insert before the anti-join could see it.
+        return fold.append_new(
+            spark,
+            rows.dropDuplicates(key).withColumn(
+                "data_size", F.col("data_size").cast("long")
+            ),
+            table_name,
+            key,
         )
-        n = fresh.count()
-        if not n:
-            return 0
-        # insertInto is positional: select in the TABLE's column order.
-        cols = [
-            F.col(c).cast("long") if c == "data_size" else F.col(c)
-            for c in spark.table(table_name).columns
-        ]
-        fresh.select(*cols).write.format("parquet").mode(
-            "append"
-        ).insertInto(table_name)
-        spark.catalog.refreshTable(table_name)
-        return n

@@ -37,12 +37,9 @@ from columnar_aware_dedup_spark.operators.winnowing import (
     overlap_report,
     winnowed_rows,
 )
-from columnar_aware_dedup_spark.sources.store import store_lock
+from columnar_aware_dedup_spark.streaming import fold
 
-
-#: fingerprint-table bucket count — also the append-side repartition width
-#: (each insert task writes exactly its own bucket file, see
-#: :func:`merge_winnow_delta`).
+#: fingerprint-table bucket count (the layout contract of the init).
 _N_BUCKETS = 8
 
 
@@ -54,21 +51,17 @@ def init_winnow_tables(
     ``bucketBy(8, 'fp')`` so the pair self-join and the cap aggregation
     read co-partitioned buckets; membership plain (doc_id, tsig).
 
-    r11 (optimization): re-init goes through the shared
-    ``_init_catalog_tables`` TRUNCATE discipline (``operators/
-    retrieval.py``) — a layout-matching existing table is truncated in
-    place instead of Derby drop + recreate (measured ~1.7 s per
-    certificate run on the two-table pair, guide §1.2 step 1: remove
-    work, here two catalog round trips and an empty bucketed write)."""
-    from columnar_aware_dedup_spark.operators.retrieval import (
-        _init_catalog_tables,
-    )
-
-    _init_catalog_tables(
+    r11 (optimization): re-init goes through the shared TRUNCATE
+    discipline (``fold.init_tables``) — a layout-matching existing table
+    is truncated in place instead of Derby drop + recreate (measured
+    ~1.7 s per certificate run on the two-table pair, guide §1.2 step 1:
+    remove work, here two catalog round trips and an empty bucketed
+    write)."""
+    fold.init_tables(
         spark, fp_table, {"": ("tsig string, fp string", True)},
         _N_BUCKETS, "fp",
     )
-    _init_catalog_tables(
+    fold.init_tables(
         spark, member_table, {"": ("doc_id long, tsig string", False)},
         _N_BUCKETS, "fp",
     )
@@ -102,50 +95,19 @@ def merge_winnow_delta(
     path tolerates a class briefly present in fingerprints but not yet
     in membership (it joins through ``tsig`` and simply emits no member
     pairs for it)."""
-    with store_lock(spark, fp_table):
-        spark.catalog.refreshTable(fp_table)
-        spark.catalog.refreshTable(member_table)
+    with fold.locked(spark, fp_table, fp_table, member_table):
         w = _batch_winnowed(docs)
-        seen_cls = spark.table(fp_table).select("tsig").distinct()
-        # repartition to the table's bucket width on the bucket key BEFORE
-        # the insert (r11 optimization): the anti-join output is AQE-
-        # coalesced to one partition at delta sizes, so the bucketed append
-        # otherwise runs as ONE task serially sorting and writing all
-        # 8 bucket files (measured ~1.0 s/merge; ~0.4 s repartitioned —
-        # guide §2.4: the write's required distribution established once,
-        # by us, on the skinny exploded rows)
-        fresh_fp = (
-            w.dropDuplicates(["tsig"])
-            .join(seen_cls, "tsig", "left_anti")
-            .select("tsig", F.explode("sel").alias("fp"))
-            .repartition(_N_BUCKETS, "fp")
-            .persist()
+        fold.append_new(
+            spark,
+            w.dropDuplicates(["tsig"]).select(
+                "tsig", F.explode("sel").alias("fp")
+            ),
+            fp_table,
+            "tsig",
         )
-        try:
-            # count-then-write (the spans.py discipline): a replayed wave
-            # derives an empty delta, and skipping the append skips a
-            # whole write job + file commit
-            if fresh_fp.count():
-                fresh_fp.write.format("parquet").mode("append").insertInto(
-                    fp_table
-                )
-        finally:
-            fresh_fp.unpersist()
-        seen_docs = spark.table(member_table).select("doc_id")
-        fresh_members = (
-            w.select("doc_id", "tsig")
-            .join(seen_docs, "doc_id", "left_anti")
-            .persist()
+        return fold.append_new(
+            spark, w.select("doc_id", "tsig"), member_table, "doc_id"
         )
-        try:
-            n = fresh_members.count()
-            if n:
-                fresh_members.write.format("parquet").mode("append").insertInto(
-                    member_table
-                )
-        finally:
-            fresh_members.unpersist()
-        return n
 
 
 def overlap_pairs_from_index(

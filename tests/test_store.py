@@ -419,7 +419,7 @@ def test_merge_defaults_missing_chunk_type(spark):
 
 def test_bucketed_width_invalidated_on_recreate(spark):
     """Recreating a table at a NEW bucket count must not leave later delta
-    appends repartitioning to the stale memoized width (ADVICE r11): the
+    appends repartitioning to the stale memoized spec (ADVICE r11): the
     resolver re-reads the catalog after any path that rebinds the name —
     drop_table_and_dir and create_store's fresh-create branch."""
     tbl = "test_store_width_recreate"
@@ -429,17 +429,18 @@ def test_bucketed_width_invalidated_on_recreate(spark):
     store.drop_table_and_dir(spark, tbl)
     try:
         store.create_store(spark, empty, tbl, n_buckets=8)
-        assert store.bucketed_width(spark, tbl) == 8  # memoized now
+        # memoized now
+        assert store.bucket_layout(spark, tbl) == (8, "signature")
 
         # recreate at a different width through the fresh-create branch
         # (the layout check fails on bucket count, so TRUNCATE-reuse is
         # skipped and the table is dropped + rebuilt)
         store.create_store(spark, empty, tbl, n_buckets=16)
-        assert store.bucketed_width(spark, tbl) == 16
+        assert store.bucket_layout(spark, tbl) == (16, "signature")
 
         # and through an explicit drop + recreate
         store.drop_table_and_dir(spark, tbl)
         store.create_store(spark, empty, tbl, n_buckets=4)
-        assert store.bucketed_width(spark, tbl) == 4
+        assert store.bucket_layout(spark, tbl) == (4, "signature")
     finally:
         store.drop_table_and_dir(spark, tbl)

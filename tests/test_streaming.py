@@ -17,9 +17,12 @@ from tests.conftest import rows_equal
 
 
 def test_ingest_idempotent_store_merge(spark, sf_dir, tmp_path):
+    from columnar_aware_dedup_spark.sources.store import drop_table_and_dir
+
     inbox = tmp_path / "inbox"
     inbox.mkdir()
-    store = str(tmp_path / "store")
+    store = "test_ingest_store"
+    drop_table_and_dir(spark, store)
     ckpt = str(tmp_path / "ckpt")
 
     # batch 1: two files
@@ -27,7 +30,7 @@ def test_ingest_idempotent_store_merge(spark, sf_dir, tmp_path):
     shutil.copy(f"{sf_dir}/nation.parquet", inbox / "b.parquet")
     q = ingest.start_ingest(spark, str(inbox), store, ckpt)
     q.awaitTermination(120)
-    n1 = ingest.load_store(spark, store).count()
+    n1 = spark.table(store).count()
     assert n1 > 0
 
     # batch 2: a byte-identical copy (=> zero new signatures) + one new file
@@ -35,7 +38,7 @@ def test_ingest_idempotent_store_merge(spark, sf_dir, tmp_path):
     shutil.copy(f"{sf_dir}/supplier.parquet", inbox / "c.parquet")
     q = ingest.start_ingest(spark, str(inbox), store, ckpt)
     q.awaitTermination(120)
-    store_df = ingest.load_store(spark, store)
+    store_df = spark.table(store)
     n2 = store_df.count()
     assert n2 > n1, "new file must add signatures"
     assert store_df.count() == store_df.select("signature").distinct().count(), (
@@ -117,6 +120,7 @@ def test_chunk_store_stateful_ttl(spark, sf_dir, tmp_path):
     under the rest of the suite. The queries are now polled for the exact
     condition under test (rows collected; state drained to zero after the
     eviction batch commits) and STOPPED explicitly."""
+    import json
     import time
 
     from columnar_aware_dedup_spark.streaming.stateful import chunk_store_stateful
@@ -144,15 +148,31 @@ def test_chunk_store_stateful_ttl(spark, sf_dir, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
+
+        def done() -> bool:
+            if len(collected) < expect_rows:
+                return False
+            if not drain_state:
+                return True
+            ops = (q.lastProgress or {}).get("stateOperators") or []
+            return bool(ops) and ops[0].get("numRowsTotal") == 0
+
         try:
             deadline = time.time() + 120
-            while time.time() < deadline and q.isActive:
-                if len(collected) >= expect_rows:
-                    if not drain_state:
-                        break
-                    ops = (q.lastProgress or {}).get("stateOperators") or []
-                    if ops and ops[0].get("numRowsTotal") == 0:
-                        break  # the eviction batch committed
+            while True:
+                # sampled BEFORE done(): a stopped query makes no more
+                # progress, so done() is then final and failing is safe
+                stopped = time.time() > deadline or not q.isActive
+                if done():
+                    break
+                if stopped:
+                    raise AssertionError(
+                        f"wanted {expect_rows} rows"
+                        f"{' and drained state' if drain_state else ''};"
+                        f" got {len(collected)} rows, query active:"
+                        f" {q.isActive}; last progress:\n"
+                        + json.dumps(q.lastProgress, indent=1)
+                    )
                 time.sleep(0.2)
         finally:
             if q.isActive:
@@ -964,6 +984,44 @@ def test_lsh_index_compaction_preserves_layout_and_pairs(spark, sf_dir, tmp_path
     assert n_ex <= 2 and "hashpartitioning(bucket" not in plan, (
         f"compaction broke the bucketed layout ({n_ex} exchanges):\n{plan}"
     )
+
+
+def test_band_append_follows_table_bucket_layout(spark, sf_dir):
+    """A merge repartitions its delta to the table's CATALOG bucket spec,
+    not to a width fixed in code: after compaction re-lays the band table
+    at 12 buckets, one merge writes at most one new file per bucket id."""
+    import collections
+    import os
+    import re
+
+    import pyarrow.parquet as pq_
+
+    from columnar_aware_dedup_spark.sources.store import (
+        _store_location,
+        compact_store,
+    )
+    from columnar_aware_dedup_spark.streaming import lsh
+
+    t = pq_.read_table(f"{sf_dir}/documents.parquet")
+    half = t.num_rows // 2
+    tbl = "test_lsh_relaid"
+    lsh.init_band_table(spark, tbl)
+    wave1 = spark.createDataFrame(t.slice(0, half).to_pandas())
+    assert lsh.merge_bands(spark, wave1, tbl) > 0
+    compact_store(spark, tbl, n_buckets=12, key="bucket", dedupe=False)
+
+    location = _store_location(spark, tbl)
+    before = set(os.listdir(location))
+    wave2 = spark.createDataFrame(t.slice(half).to_pandas())
+    assert lsh.merge_bands(spark, wave2, tbl) > 0
+    new = [
+        f for f in os.listdir(location)
+        if f.endswith(".parquet") and f not in before
+    ]
+    per_bucket = collections.Counter(
+        re.search(r"_(\d{5})\.c\d{3}", f).group(1) for f in new
+    )
+    assert new and max(per_bucket.values()) == 1, per_bucket
 
 
 def test_streaming_ivf_index_matches_batch_topk(spark, sf_dir, tmp_path):
