@@ -63,6 +63,7 @@ from columnar_aware_dedup_spark.operators.text import (
     normalized,
 )
 from columnar_aware_dedup_spark.registry import register
+from columnar_aware_dedup_spark.sources.store import bucket_aligned
 from columnar_aware_dedup_spark.streaming.fold import init_tables
 
 #: Okapi BM25 free parameters (the universal defaults).
@@ -727,8 +728,8 @@ def _write_bm25_genesis(
     registry = registry_lengths.select(*keys, "dl", tag)
     init_tables(spark, table_name, specs, n_buckets, "term")
     append_marker_row(spark, table_name + "_attempts", attempt)
-    postings.select("term", *keys, "tf", "dl", tag).repartition(
-        n_buckets, "term"
+    bucket_aligned(
+        postings.select("term", *keys, "tf", "dl", tag), n_buckets, "term"
     ).write.format("parquet").mode("append").insertInto(table_name)
     registry.write.format("parquet").mode("append").insertInto(
         table_name + "_docs"

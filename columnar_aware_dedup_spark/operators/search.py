@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from columnar_aware_dedup_spark.operators.text import _NORM_SQL, _fanned, normalized
 from columnar_aware_dedup_spark.registry import register
+from columnar_aware_dedup_spark.sources.store import bucket_aligned
 
 #: per-document characteristic terms to keep.
 _TOP_TERMS = 3
@@ -310,7 +311,7 @@ def write_postings_index(
     )
     postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
     (
-        postings.repartition(n_buckets, "term")
+        bucket_aligned(postings, n_buckets, "term")
         .write.format("parquet")
         .bucketBy(n_buckets, "term")
         .sortBy("term")

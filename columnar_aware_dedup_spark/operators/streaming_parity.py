@@ -208,13 +208,15 @@ def streaming_store_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         transfer_rollup,
     )
     from columnar_aware_dedup_spark.sources import store as store_mod
+    from columnar_aware_dedup_spark.streaming import fold
 
-    store_tbl = "parity_sig_store"
-    empty = spark.createDataFrame(
-        [], "signature string, chunk_type string, size bigint"
+    store_tbl = fold.init_tables(
+        spark,
+        "parity_sig_store",
+        {"": ("signature string, chunk_type string, size bigint", True)},
+        store_mod.DEFAULT_BUCKETS,
+        "signature",
     )
-    store_mod.drop_table_and_dir(spark, store_tbl)
-    store_mod.create_store(spark, empty, store_tbl)
 
     # the flagship's own chunk/snapshot derivation — reusing it keeps this
     # certificate pinned to whatever dedup_hit_miss actually probes

@@ -12,7 +12,7 @@ one place they are written down:
   sessions;
 - :func:`append_new` is the single-table append policy: anti-join the
   delta against the table's key, lay it out on the table's OWN catalog
-  bucket spec, pin it, count it, append it;
+  bucket spec, and append it in one observed write that counts it;
 - :func:`start` drains a file-source stream through a merge.
 
 Maintainers whose merge spans several tables (``bm25._merge_bm25``,
@@ -25,9 +25,11 @@ from __future__ import annotations
 import contextlib
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from columnar_aware_dedup_spark.sources.store import (
+    bucket_aligned,
     bucket_layout,
     bucket_spec,
     drop_table_and_dir,
@@ -98,12 +100,14 @@ def locked(spark: SparkSession, lock_name: str, *tables: str):
 
 
 def laid_out(spark: SparkSession, rows: DataFrame, table: str) -> DataFrame:
-    """``rows`` repartitioned to ``table``'s catalog bucket spec (unchanged
-    for an unbucketed table), so each insert task writes exactly its own
-    bucket file — an AQE-coalesced delta otherwise writes every bucket
-    file from one task, serially."""
+    """``rows`` laid out for an append to ``table`` (unchanged for an
+    unbucketed table): ``store.bucket_aligned`` on the table's catalog
+    bucket spec — k = min(n_buckets, cores) write tasks keyed on the
+    bucket id, so the append writes at most one new file per bucket
+    whatever k is, and a small delta pays k task launches instead of one
+    per bucket."""
     n_buckets, bucket_col = bucket_layout(spark, table)
-    return rows.repartition(n_buckets, bucket_col) if n_buckets else rows
+    return bucket_aligned(rows, n_buckets, bucket_col) if n_buckets else rows
 
 
 def append_new(
@@ -115,22 +119,25 @@ def append_new(
     deduplicated ``rows`` on its own input unit — a doc's derived rows
     share its doc_id, so deduplicating HERE would drop them.
 
-    The delta is :func:`laid_out` on the table's bucket spec and pinned
-    by an eager local checkpoint, so the count and the insert see the
-    same rows. A checkpoint rather than ``persist``: it stays valid after
-    the insert invalidates caches over the table its anti-join reads, and
-    on an empty delta (a replay) a persisted count ran two more jobs than
-    this on the stats-key index. The table is refreshed after a non-empty append: under
-    ``foreachBatch`` the insert runs in the micro-batch's cloned session,
-    and ``spark``'s readers must not serve the pre-append listing."""
+    One Spark write: the left-anti join against the table's key, the
+    :func:`laid_out` layout and the insert run as a single query, and the
+    appended-row count is an ``Observation`` on that same write, so no
+    separate count or pin runs. An empty delta (a replay) writes no file
+    to a bucketed table, whose writer opens bucket files only for rows it
+    sees; an unbucketed table gets Spark's one zero-row file. The table is
+    refreshed after a non-empty append: under ``foreachBatch`` the insert
+    runs in the micro-batch's cloned session, and ``spark``'s readers must
+    not serve the pre-append listing."""
     target = spark.table(table)
-    fresh = rows.join(target.select(key).distinct(), key, "left_anti").select(
+    fresh = rows.join(target.select(key), key, "left_anti").select(
         *target.columns  # insertInto binds by position
     )
-    fresh = laid_out(spark, fresh, table).localCheckpoint(eager=True)
-    n = fresh.count()
+    appended = Observation()
+    laid_out(spark, fresh, table).observe(
+        appended, F.count(F.lit(1)).alias("n")
+    ).write.format("parquet").mode("append").insertInto(table)
+    n = appended.get["n"]
     if n:
-        fresh.write.format("parquet").mode("append").insertInto(table)
         spark.catalog.refreshTable(table)
     return n
 

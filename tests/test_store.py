@@ -444,3 +444,83 @@ def test_bucketed_width_invalidated_on_recreate(spark):
         assert store.bucket_layout(spark, tbl) == (4, "signature")
     finally:
         store.drop_table_and_dir(spark, tbl)
+
+
+def _bucket_ids(location):
+    """Data file name -> the bucket id in its name (None when absent)."""
+    import os
+    import re
+
+    return {
+        f: (m.group(1) if (m := re.search(r"_(\d{5})\.c\d{3}", f)) else None)
+        for f in os.listdir(location)
+        if f.endswith(".parquet")
+    }
+
+
+def test_replay_merge_leaves_store_files_untouched(spark, sf_dir):
+    """A replayed wave appends nothing AND writes nothing: the observed
+    insert of zero rows must not leave an empty part file in the store."""
+    tbl = "test_store_replay_files"
+    store.drop_table_and_dir(spark, tbl)
+    try:
+        store.create_store(spark, _chunks(spark, sf_dir).limit(0), tbl)
+        wave = _chunks(spark, sf_dir).filter(F.col("file_id") % 2 == 0)
+        assert store.merge_into_store(spark, wave, tbl) > 0
+        location = store._store_location(spark, tbl)
+        before = _bucket_ids(location)
+        assert store.merge_into_store(spark, wave, tbl) == 0
+        after = _bucket_ids(location)
+        assert after == before
+        assert None not in after.values(), after
+    finally:
+        store.drop_table_and_dir(spark, tbl)
+
+
+def test_append_layout_and_observed_count(spark, sf_dir):
+    """The fold's write layout is core-sized but bucket-aligned, and the
+    count ``append_new`` returns is the table's row-count increase."""
+    import collections
+
+    from columnar_aware_dedup_spark.streaming import fold
+
+    tbl = "test_store_layout"
+    chunks = _chunks(spark, sf_dir)
+    store.drop_table_and_dir(spark, tbl)
+    try:
+        store.create_store(
+            spark, chunks.filter(F.col("file_id") % 3 == 0), tbl
+        )
+        cores = spark.sparkContext.defaultParallelism
+        assert (
+            fold.laid_out(spark, chunks, tbl).rdd.getNumPartitions()
+            == min(store.DEFAULT_BUCKETS, cores)
+        )
+
+        location = store._store_location(spark, tbl)
+        before = set(_bucket_ids(location))
+        n0 = spark.table(tbl).count()
+        # partly in the store already: file_id % 3 == 0 overlaps
+        delta = chunks.filter(F.col("file_id") % 3 != 1)
+        added = store.merge_into_store(spark, delta, tbl)
+        assert added > 0
+        assert spark.table(tbl).count() == n0 + added
+        new = {
+            f: b for f, b in _bucket_ids(location).items() if f not in before
+        }
+        per_bucket = collections.Counter(new.values())
+        assert None not in per_bucket and max(per_bucket.values()) == 1, (
+            per_bucket
+        )
+
+        non_empty = (
+            spark.table(tbl)
+            .select(F.pmod(F.hash("signature"), F.lit(store.DEFAULT_BUCKETS)))
+            .distinct()
+            .count()
+        )
+        _before, after = store.compact_store(spark, tbl)
+        buckets = list(_bucket_ids(store._store_location(spark, tbl)).values())
+        assert after == non_empty == len(set(buckets)) == len(buckets)
+    finally:
+        store.drop_table_and_dir(spark, tbl)
