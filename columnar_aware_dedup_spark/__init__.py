@@ -7,6 +7,8 @@ Importing this package populates the query registry (``registry.QUERIES`` /
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from columnar_aware_dedup_spark import registry  # noqa: F401
 from columnar_aware_dedup_spark.operators import dedup  # noqa: F401
 from columnar_aware_dedup_spark.operators import events  # noqa: F401
@@ -46,1727 +48,44 @@ from columnar_aware_dedup_spark.sources import orcfixtures  # noqa: F401
 from columnar_aware_dedup_spark.sources import jsonl  # noqa: F401
 from columnar_aware_dedup_spark.sources import parquetcensus  # noqa: F401
 
-#: the driver's CORRECTNESS window covers the first 50 registered queries —
-#: keep the dedup core, every LLM-pipeline operator, the ORC family, and the
-#: TPC-H macros inside it (see registry.reorder).
-DRIVER_PRIORITY: list[str] = [
-    # dedup core + stats
-    "dedup_hit_miss",
-    "chunk_simulate",
-    "small_chunk_policy",
-    "col_type_stats",
-    "dedup_ratio",
-    "dedup_hierarchical",
-    "transfer_stats_taxonomy",
-    "transfer_stats_rollup",
-    "transfer_stats_rollup_approx",
-    "grouped_percentile",
-    "grouped_percentile_approx",
-    "approx_distinct",
-    # structural file chunkers (ORC + parquet)
-    "orc_file_chunks",
-    "orc_reconstruction",
-    "orc_hierarchical_dedup",
-    "orc_linked_reconstruction",
-    "parquet_file_chunks",
-    # text / LLM-curation suite
-    "line_dedup_corpus",
-    "text_normalize",
-    "text_exact_dedup",
-    "token_topk",
-    "doc_token_stats",
-    "doc_quality_score",
-    "doc_quality_filter",
-    "lang_id_heuristic",
-    "token_count_bpe",
-    "doc_fingerprint",
-    "minhash_signature",
-    "minhash_near_dup",
-    "near_dup_clusters",
-    "simhash_signature",
-    "simhash_hamming_pairs",
-    "ngram_jaccard_pairs",
-    # embeddings / ANN
-    "embedding_norm_stats",
-    "embedding_cosine_topk",
-    "embedding_near_dup_pairs",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    # multimodal (frame_sample sits just past the window; R-checked + pytest)
-    "multimodal_meta",
-    "multimodal_decode",
-    # TPC-H macros + curation pipeline (q1/q3/q5 shapes hold r01 PASS rows)
-    "q4_order_priority",
-    "q6_forecast_revenue",
-    "q10_returned_item",
-    "q14_promo_effect",
-    "q18_large_volume",
-    "q19_bracketed_or",
-    "pipeline_curate",
-    # scale techniques + pandas-UDF surface
-    "salted_groupby",
-    "pandas_udf_scalar",
-    "apply_in_pandas_group",
-]
 
-#: r03 rotation (historical): the 41 queries with no driver CORRECTNESS row from
-#: r01 or r02, the 8 queries registered this round (new registrations have no
-#: prior row by construction), and one flagship re-check to fill the 50-slot
-#: window.  With this window checked, every registered query has at least one
-#: driver row.
-#: ``tests/test_registry_oracles.py`` derives the never-checked set from the
-#: recorded CORRECTNESS_r0*.json files and asserts this list covers it, so a
-#: new registration fails the suite until it is rotated into a window.
-ROTATION_R3: list[str] = [
-    # never driver-checked (r01 window held relational/events; r02 holds
-    # dedup core + LLM pipeline + ORC + macro batch 1)
-    "q2_min_cost_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q11_important_stock",
-    "q12_priority_class",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q16_parts_supplier_cnt",
-    "q17_small_qty_revenue",
-    "q20_part_promotion",
-    "q21_waiting_supplier",
-    "q22_global_sales",
-    "correlated_subquery",
-    "pandas_udf_grouped_agg",
-    "ann_ivf_nprobe_topk",
-    "ann_recall_report",
-    "doc_repetition_score",
-    "decontaminate_ngram_overlap",
-    "pii_redaction",
-    "sequence_pack",
-    "stratified_sample",
-    "corpus_shuffle",
-    "corpus_split",
-    "corpus_report",
-    "domain_mix_sample",
-    "union_all_counts",
-    "intersect_all",
-    "except_all",
-    "posexplode_tokens",
-    "null_fns",
-    "like_rlike_pred",
-    "cast_fns",
-    "limit_offset",
-    "ivf_train_kmeans",
-    "multimodal_frame_sample",
-    "file_inventory",
-    "parquet_reconstruction",
-    "file_parse_overhead",
-    "event_funnel",
-    "cohort_retention",
-    # r03 additions (registered this round, so no prior driver row by
-    # construction — they take 5 of the 9 re-check slots)
-    "semantic_dedup",
-    "tfidf_top_terms",
-    "inverted_index_search",
-    "event_gapfill_locf",
-    "event_anomaly_zscore",
-    "multimodal_audio_features",
-    "doc_hash_embedding",
-    "pipeline_dedup_all",
-    # high-value re-check (the flagship stays exercised)
-    "dedup_hit_miss",
-]
-
-#: r04 rotation (historical): led with the two r03 FAIL rows (driver-canon
-#: fixes — cast_fns ships its decimal as DOUBLE, doc_hash_embedding joins
-#: its vector to a string) and the two R->H promotions (the image pipeline
-#: now hash-checks against a closed-form pixel oracle); then the 39 queries
-#: whose only driver row is from r01 — three rounds stale, the relational /
-#: events / set-op surface — for drift re-verification; then this round's
-#: changed-plan re-checks (event_anomaly_zscore rewired through the
-#: streaming integer-sum scorer, tfidf_top_terms without the vocabulary
-#: broadcast hint) and the flagship.
-ROTATION_R4: list[str] = [
-    # r03 reds, fixed this round — flip first
-    "cast_fns",
-    "doc_hash_embedding",
-    # R -> H promotions (driver row type changes from rows-only to hash)
-    "multimodal_decode",
-    "multimodal_frame_sample",
-    # r01-only rows, three rounds stale (derived from CORRECTNESS_r0*.json;
-    # scan_project, filter_pred, the set ops, and the scalar-fn trio
-    # (string_fns/array_fns/json_extract) yield their slots to new
-    # registrations — they keep r01 rows and the local oracle gate runs
-    # every session)
-    "groupby_sum_count",
-    "stats_agg",
-    "distinct_count",
-    "join_inner",
-    "join_semi",
-    "join_anti",
-    "asof_join",
-    "range_join_bands",
-    "cube_agg",
-    "having_filter",
-    "window_rank",
-    "window_lag_frame",
-    "window_ntile_dist",
-    "dedup_exact_rows",
-    "event_sliding_window",
-    "event_session_window",
-    "event_dedup_first",
-    "event_watermark_filter",
-    "event_hypertable_rollup",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    # new r04 registrations (never driver-checked, so mandatory here;
-    # set_union/intersect/except wait for r05-06 — their *_all twins hold
-    # r03 rows and the local oracle harness still gates them every session)
-    "dup_span_fraction",
-    "bigram_logprob_score",
-    "ngram_containment_pairs",
-    # registered as near_dup_clusters_star in r04; renamed in r05 when the
-    # star contraction became the default engine and label propagation the
-    # checked spec variant (the r04 driver row lives under the old name)
-    "near_dup_clusters_labelprop",
-    "cluster_quality_keeper",
-    "source_overlap_matrix",
-    "ann_pq_topk",
-    "ann_pq_recall",
-    "pq_train_codebooks",
-    # late-r04 data-selection + tokenizer + PCA surface (never
-    # driver-checked, mandatory here; string_fns/array_fns/json_extract/
-    # orderby_limit_topk/event_tumbling_window/row_signature/
-    # percentile_disc_median/join_left/join_full_outer/grouping_sets_agg/
-    # pivot_agg/argminmax_agg/window_first_last/rollup_agg yield their
-    # re-check slots — they keep r01 rows and the local oracle gate runs
-    # every session)
-    "dsir_importance_weights",
-    "dsir_gumbel_resample",
-    "token_zipf_slope",
-    "naive_bayes_source_classify",
-    "token_heavy_hitters_cms",
-    "token_vocab_hll",
-    "dedup_bloom_prefilter",
-    "pmi_collocations",
-    "source_mix_kl",
-    "multimodal_scene_cuts",
-    "near_dup_pagerank",
-    "bpe_train_merges",
-    "bpe_segment_corpus",
-    "embedding_pca_project",
-    # changed-plan re-check (rewired through the streaming scorer) + flagship
-    "event_anomaly_zscore",
-    "dedup_hit_miss",
-]
-
-#: r05 rotation (ACTIVE): with r04 re-verifying the r01-stale surface, this
-#: window's job is the queries whose newest driver row is from r02 — the
-#: dedup core, ORC family, text/embedding suites, and macro batch 1 — plus
-#: the six queries whose oracle status changed this round: the five R->H
-#: trainer certificates (pq_train_codebooks, bpe_train_merges,
-#: bpe_segment_corpus, embedding_pca_project, near_dup_pagerank — the
-#: tolerance-bit pattern, VERDICT r04 "What's missing" #2) and the renamed
-#: never-checked near_dup_clusters_labelprop. Four r02-stale re-checks
-#: (transfer_stats_rollup_approx, grouped_percentile_approx,
-#: apply_in_pandas_group, pandas_udf_scalar — two R-only sketches, two UDF
-#: demos) yield their slots to ROTATION_R6; they keep r02 rows and the
-#: local oracle gate runs every session.
-ROTATION_R5: list[str] = [
-    "ann_ivf_topk",
-    "ann_lsh_topk",
-    "approx_distinct",
-    "chunk_simulate",
-    "col_type_stats",
-    "dedup_ratio",
-    "doc_fingerprint",
-    "doc_quality_filter",
-    "doc_quality_score",
-    "doc_token_stats",
-    "embedding_cosine_topk",
-    "embedding_near_dup_pairs",
-    "embedding_norm_stats",
-    "grouped_percentile",
-    "lang_id_heuristic",
-    "line_dedup_corpus",
-    "minhash_near_dup",
-    "minhash_signature",
-    "multimodal_meta",
-    "near_dup_clusters",
-    "ngram_jaccard_pairs",
-    "orc_file_chunks",
-    "orc_hierarchical_dedup",
-    "orc_linked_reconstruction",
-    "orc_reconstruction",
-    "parquet_file_chunks",
-    "pipeline_curate",
-    "q18_large_volume",
-    "q4_order_priority",
-    "q6_forecast_revenue",
-    "salted_groupby",
-    "simhash_hamming_pairs",
-    "simhash_signature",
-    "small_chunk_policy",
-    "text_exact_dedup",
-    "text_normalize",
-    "token_count_bpe",
-    "token_topk",
-    "transfer_stats_rollup",
-    "transfer_stats_taxonomy",
-    "dedup_hierarchical",
-    # r05 oracle-status changes: the renamed labelprop variant (never
-    # driver-checked under this name) and the five R->H trainer certificates
-    "near_dup_clusters_labelprop",
-    "pq_train_codebooks",
-    "bpe_train_merges",
-    "bpe_segment_corpus",
-    "embedding_pca_project",
-    "near_dup_pagerank",
-    # r05 new registrations (never driver-checked, so mandatory in the
-    # active window): the SQ8 compression ANN path and the perceptual-hash
-    # image near-dup family (three q1x macro re-checks yield slots to R6)
-    "ann_sq8_topk",
-    "image_ahash_signature",
-    "image_ahash_near_dup",
-]
-
-#: r06 rotation (PREPARED, not active): the 45 queries whose newest driver
-#: row is from r03 (ANN batch 2, curation, macro batch 2, the *_all set
-#: ops), plus the four re-checks displaced from the r05 window and the
-#: oldest r01 set-op row. The freshness test arms once CORRECTNESS_r05.json
-#: lands, so any query still missing a driver row then must appear here.
-ROTATION_R6: list[str] = [
-    "ann_ivf_nprobe_topk",
-    "ann_recall_report",
-    "cohort_retention",
-    # r06 batch 5: the Levenshtein candidate verifier (never
-    # driver-checked, so mandatory here); corpus_report yields its
-    # slot and moves to ROTATION_R7 (r03 row; local gate every session)
-    "edit_distance_verify",
-    # r06 batch 5: the near-dup-leakproof split (never driver-checked,
-    # so mandatory here); corpus_shuffle yields its slot and moves to
-    # ROTATION_R7 (r03 row; local gate every session)
-    "cluster_aware_split",
-    "corpus_split",
-    "correlated_subquery",
-    # r06 batch 5: the shingle-novelty score (never driver-checked, so
-    # mandatory here); decontaminate_ngram_overlap yields its slot and
-    # moves to ROTATION_R7 (r03 row; local gate every session)
-    "doc_ngram_novelty",
-    "doc_repetition_score",
-    # r06 batch 5: the MAD length-outlier monitor (never
-    # driver-checked, so mandatory here); domain_mix_sample yields its
-    # slot and moves to ROTATION_R7 (r03 row; local gate every session)
-    "doc_length_outliers",
-    "event_funnel",
-    "event_gapfill_locf",
-    "file_inventory",
-    "file_parse_overhead",
-    "inverted_index_search",
-    # r06 new registrations (never driver-checked, so mandatory in the
-    # active window): the 64-bit banded all-corpus SimHash near-dup family
-    # (VERDICT r05 brief #4); except_all/intersect_all yield their slots
-    # and move to ROTATION_R7 (pytest + local oracle gate cover them
-    # meanwhile)
-    "simhash64_signature",
-    "simhash_band_near_dup",
-    "ivf_train_kmeans",
-    "multimodal_audio_features",
-    # r06 late registrations (never driver-checked, so mandatory in the
-    # active window): the composed IVF+PQ index, the acoustic-fingerprint
-    # near-dup family, and the LSH banding sweep. like_rlike_pred /
-    # limit_offset / null_fns / posexplode_tokens yield their slots and
-    # move to ROTATION_R7 (they keep r03 rows; the local oracle gate runs
-    # them every session)
-    "ann_ivfpq_topk",
-    "audio_fingerprint_signature",
-    "audio_fingerprint_near_dup",
-    "lsh_parameter_sweep",
-    # r06 new registration: the LSH quality gate (never driver-checked, so
-    # mandatory here); pandas_udf_grouped_agg yields its slot and moves to
-    # ROTATION_R7 (pytest + local oracle gate cover it meanwhile)
-    "minhash_recall_report",
-    # r06 late registration: the cross-modality dedup decision table
-    # (never driver-checked, so mandatory here); pii_redaction yields its
-    # slot and moves to ROTATION_R7 (r03 row; local gate covers it)
-    "multimodal_dedup_report",
-    "parquet_reconstruction",
-    "pipeline_dedup_all",
-    # r06 late registrations (batch 3): the dedup reporting pair
-    # (never driver-checked, so mandatory here); q11_important_stock /
-    # q12_priority_class yield their slots and move to ROTATION_R7
-    "dedup_savings_by_source",
-    "near_dup_cluster_stats",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q16_parts_supplier_cnt",
-    "q17_small_qty_revenue",
-    "q20_part_promotion",
-    "q21_waiting_supplier",
-    "q22_global_sales",
-    "q2_min_cost_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "semantic_dedup",
-    "tfidf_top_terms",
-    # r06 late registrations (batch 4): the crawl-delta admission gate, the
-    # prototypicality prune, and the perplexity-bucket partition (never
-    # driver-checked, so mandatory here); sequence_pack /
-    # stratified_sample / union_all_counts yield their slots and move to
-    # ROTATION_R7 (r03 rows; the local oracle gate runs them every session)
-    "crawl_admission_report",
-    "embedding_prototypicality",
-    "perplexity_bucket_report",
-    # displaced from the r05 window (keep r02 rows; local gate every
-    # session); transfer_stats_rollup_approx / grouped_percentile_approx /
-    # apply_in_pandas_group wait for r07 — R-only sketches and a UDF demo
-    # r06 oracle-status changes: the five binary-file queries promoted R->H
-    # via structural certificates (VERDICT r05 brief #5) take the remaining
-    # slots so the driver hash-checks the new oracles THIS round; the five
-    # r02-stale fills (q10/q14/q19, pandas_udf_scalar, set_union) move to
-    # ROTATION_R7 — they keep r01/r02 rows, the local oracle gate runs them
-    # every session, and R7 membership keeps the staleness invariant green
-    "orc_file_chunks",
-    "orc_reconstruction",
-    "orc_hierarchical_dedup",
-    "orc_linked_reconstruction",
-    "parquet_file_chunks",
-]
-
-#: r07 rotation (ACTIVE): the 23-query r01/r02 tail — the
-#: whole simple relational/scalar surface whose newest driver row predates
-#: r04 once r06 lands (VERDICT r05 "What's missing" #2) — plus
-#: except_all/intersect_all (displaced from r06 by the new SimHash family)
-#: the five fills displaced from r06 by the binary-file certificate
-#: promotions, and r04 rows as fill so freshness keeps cycling. The
-#: max-staleness invariant (tests/test_registry_oracles.py::
-#: test_overdue_queries_are_scheduled) holds by construction: every query
-#: 3+ rounds stale after r06 appears here.
-ROTATION_R7: list[str] = [
-    # displaced from r06 by the binary-file certificate promotions (all
-    # overdue after r06, so R7 membership is what keeps them scheduled)
-    "q10_returned_item",
-    "q14_promo_effect",
-    "q19_bracketed_or",
-    "pandas_udf_scalar",
-    "pandas_udf_grouped_agg",
-    "apply_in_pandas_group",
-    # displaced from r06 by the batch-4 registrations (r03 rows — overdue
-    # once r06 lands, so R7 membership keeps them scheduled); they take the
-    # slots of cluster_quality_keeper / dedup_exact_rows / distinct_count
-    # (r04 rows, not overdue until r07 lands — re-seated in ROTATION_R9)
-    "sequence_pack",
-    "stratified_sample",
-    "union_all_counts",
-    "argminmax_agg",
-    "array_fns",
-    "date_fns",
-    # displaced from r06 by doc_ngram_novelty (r03 row — overdue once
-    # r06 lands); takes the slot of dedup_bloom_prefilter (r04 row,
-    # re-seated in ROTATION_R9)
-    "decontaminate_ngram_overlap",
-    # displaced from r06 by cluster_aware_split (r03 row — overdue once
-    # r06 lands); takes the slot of doc_hash_embedding (r04 row,
-    # re-seated in ROTATION_R9)
-    "corpus_shuffle",
-    # displaced from r06 by doc_length_outliers (r03 row — overdue once
-    # r06 lands); takes the slot of dsir_gumbel_resample (r04 row,
-    # re-seated in ROTATION_R9)
-    "domain_mix_sample",
-    # r07 new registrations (never driver-checked, so mandatory in the
-    # active window): the exact substring-duplicate removal pair (VERDICT
-    # r06 brief #6) and the streaming-index parity certificates (brief #7).
-    # They take the slots of dsir_importance_weights / dup_span_fraction /
-    # groupby_sum_count / event_session_window (r04 rows — overdue once
-    # r07 lands, so all four re-seat in ROTATION_R9)
-    "substring_dedup_ranges",
-    "substring_dedup_apply",
-    "streaming_lsh_parity",
-    "streaming_cluster_parity",
-    # late-r07 registration (never driver-checked, so mandatory here): the
-    # crawl-delta substring cutter; the flagship dedup_hit_miss yields its
-    # re-check slot (r04 row; entry() smoke-checks it every driver run
-    # regardless) and re-seats in ROTATION_R9
-    "substring_dedup_delta",
-    # session-2 r07 registrations (never driver-checked, so mandatory
-    # here): the content-defined-chunking family — the byte-oriented dedup
-    # baselines the reference's structural chunkers are measured against
-    # (sources/cdc.py) — and the span-index streaming parity certificate
-    # (the third index family promoted into the driver window). They take
-    # the slots of set_union / set_except / set_intersect (r01 rows —
-    # still overdue, so those three re-seat in ROTATION_R8, which keeps
-    # them inside the R7∪R8 staleness envelope).
-    "cdc_file_chunks",
-    "cdc_dedup_report",
-    "streaming_spans_parity",
-    # session-2 r07 batch 2 (never driver-checked, so mandatory here): the
-    # passage extractor, the exact-k balanced sampler, and the flagship
-    # store-maintenance parity certificate. They take the slots of
-    # string_fns / transfer_stats_rollup_approx / window_first_last
-    # (overdue rows — re-seated in ROTATION_R8, staying inside the R7∪R8
-    # envelope now and the R8∪R9 envelope once r07 lands).
-    "passage_split",
-    "balanced_sample_exact_k",
-    "streaming_store_parity",
-    # session-2 r07 batch 3 (never driver-checked, so mandatory here): the
-    # parquet storage census whose walker-vs-footer bits cross-verify the
-    # from-scratch Thrift page walk (sources/parquetcensus.py). Takes the
-    # slot of scan_project (overdue — re-seated in ROTATION_R8).
-    "parquet_column_census",
-    # session-2 r07 batch 4 (never driver-checked, so mandatory here): the
-    # ORC zone-map pruning certificate (operators/zonemap.py — stripe
-    # min/max statistics from our protobuf walker, soundness/effectiveness
-    # verified against pyarrow's independent re-read). Takes the slot of
-    # row_signature (overdue — re-seated in ROTATION_R8).
-    "orc_zone_map_pruning",
-    # session-2 r07 batch 5 (never driver-checked, so mandatory here): the
-    # boilerplate hot-span census (operators/text.py). Takes the slot of
-    # rollup_agg (overdue — re-seated in ROTATION_R8).
-    "hot_span_census",
-    "except_all",
-    "intersect_all",
-    "q11_important_stock",
-    "q12_priority_class",
-    # displaced from r06 by edit_distance_verify (r03 row — overdue
-    # once r06 lands); takes the slot of event_dedup_first (r04 row,
-    # re-seated in ROTATION_R9)
-    "corpus_report",
-    "event_tumbling_window",
-    "filter_pred",
-    "grouped_percentile_approx",
-    "grouping_sets_agg",
-    "join_full_outer",
-    "join_left",
-    # displaced from r06 by the ann_ivfpq/audio-fingerprint/lsh-sweep
-    # registrations (r03 rows, overdue once r06 lands — R7 membership is
-    # what keeps them scheduled); event_sliding_window /
-    # event_watermark_filter / having_filter / join_inner keep r04 rows
-    # and move to ROTATION_R8
-    "like_rlike_pred",
-    "limit_offset",
-    "null_fns",
-    "posexplode_tokens",
-    "json_extract",
-    "math_fns",
-    "pii_redaction",
-    "orderby_limit_topk",
-    "percentile_disc_median",
-    "pivot_agg",
-]
-
-#: r08 rotation (PREPARED two ahead): the 25 queries whose newest driver
-#: row will be r04 once r06+r07 run as scheduled (the multimodal/sketch/
-#: window/TPC-H-batch-1 surface), plus the alphabetically-first r05 rows as
-#: fill so freshness keeps cycling. Preparing it now keeps the rolling
-#: staleness invariant (`test_overdue_queries_are_scheduled`, which checks
-#: the active window and the next prepared one) satisfiable by construction
-#: when CORRECTNESS_r07 lands; round 7 should re-derive and adjust for any
-#: r06 FAIL re-checks or new registrations before activating R7.
-ROTATION_R8: list[str] = [
-    # displaced from r07 by the four r03 rows the r06 late registrations
-    # pushed down (these keep r04 rows, overdue once r07 lands); the four
-    # alphabetically-first r05 fills (ann_ivf_topk, ann_lsh_topk,
-    # ann_sq8_topk, approx_distinct) drop out — their r05 rows stay fresh
-    # through r07, and round 7's re-derivation reschedules them
-    "event_sliding_window",
-    "event_watermark_filter",
-    "having_filter",
-    "join_inner",
-    "multimodal_decode",
-    "event_anomaly_zscore",
-    "event_hypertable_rollup",
-    "ann_pq_recall",
-    "ann_pq_topk",
-    "asof_join",
-    "bigram_logprob_score",
-    "cast_fns",
-    "cube_agg",
-    "join_anti",
-    "join_semi",
-    "multimodal_frame_sample",
-    "multimodal_scene_cuts",
-    "naive_bayes_source_classify",
-    "ngram_containment_pairs",
-    "pmi_collocations",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "range_join_bands",
-    "source_mix_kl",
-    "source_overlap_matrix",
-    "stats_agg",
-    "token_heavy_hitters_cms",
-    "token_vocab_hll",
-    "token_zipf_slope",
-    # string_fns / transfer_stats_rollup_approx / window_first_last
-    # re-seated here after yielding their ROTATION_R7 slots to the
-    # session-2 batch-2 registrations: their rows stay stale through r07,
-    # so R8 membership keeps the envelope green at newest=6 and 7. They
-    # displace the r04-row window trio (window_lag_frame /
-    # window_ntile_dist / window_rank — overdue once r07 lands, so those
-    # re-seat in ROTATION_R9, inside the R8∪R9 envelope at newest=7).
-    "string_fns",
-    "transfer_stats_rollup_approx",
-    "window_first_last",
-    # r08 registrations (VERDICT r07 "Next round" #6): the three remaining
-    # streaming-family driver certificates — never driver-checked, so they
-    # MUST hold active-window seats. They displace the three
-    # alphabetically-first r05 fills (bpe_train_merges / dedup_hierarchical
-    # / dedup_ratio), which re-seat in ROTATION_R10 (inside the R9∪R10
-    # envelope once their r05 rows go overdue at newest=8; forward-simulated
-    # through newest=10).
-    "streaming_sketch_parity",
-    "streaming_ivf_parity",
-    "streaming_pq_parity",
-    # r08 batch 2: the passage-table consumer and the CDC thesis
-    # measurement's parquet twin (VERDICT r07 "Next round" #7/#8) — never
-    # driver-checked, so active-window seats. They displace the next two
-    # r05 fills (doc_fingerprint / doc_quality_filter → ROTATION_R10, same
-    # envelope reasoning as the batch-1 trio).
-    "passage_near_dup",
-    "cdc_dedup_report_parquet",
-    # r08 batch 3: the retrieval half of the passage story (exact top-k
-    # over hashed passage embeddings) — never driver-checked; displaces
-    # the r05 fill doc_quality_score → ROTATION_R10.
-    "passage_topk_retrieval",
-    # r08 batch 4: file_inventory's R→H certificate promotion gets its
-    # driver row THIS round (the transfer_stats_rollup_approx lesson —
-    # never leave a promotion driver-unconfirmed); displaces the r05 fill
-    # doc_token_stats → ROTATION_R10.
-    "file_inventory",
-    # r08 batch 5: the passage IVF-cell scale path (never driver-checked);
-    # displaces the r05 fill embedding_cosine_topk → ROTATION_R10.
-    "passage_ann_ivf_topk",
-    # r08 batch 6: the parquet zone-map certificate (the other-format twin
-    # of orc_zone_map_pruning, never driver-checked); displaces the r05
-    # fill embedding_near_dup_pairs → ROTATION_R10.
-    "parquet_zone_map_pruning",
-    # r08 batch 7 (session 3): the retrieval pair (BM25 + RRF hybrid) and
-    # the cross-format value-vs-byte dedup certificate — never
-    # driver-checked, so mandatory seats. They displace the three r05
-    # fills embedding_norm_stats / embedding_pca_project /
-    # grouped_percentile, which re-seat in ROTATION_R10 (their newest=8
-    # staleness deadline consults the R9∪R10 envelope); the cascade those
-    # re-seats trigger (R10→R11→R12) is validated end-to-end by
-    # tests/test_rotation_sim.py against the same simulator that derived
-    # it, green through the predicted newest=10 archive — the r07
-    # standard.
-    "bm25_doc_ranking",
-    "hybrid_rrf_fusion",
-    "cross_format_dedup",
-    # rollup_agg re-seated here after yielding its ROTATION_R7 slot to
-    # hot_span_census (batch 5): overdue through r07, so R8 membership
-    # keeps both envelopes green. It displaces the r05 fill
-    # image_ahash_near_dup, whose newest=8 deadline moves to the redundant
-    # ROTATION_R10 seat event_session_window held (that query keeps its
-    # required R9 seat).
-    "rollup_agg",
-    # row_signature re-seated here after yielding its ROTATION_R7 slot to
-    # orc_zone_map_pruning (batch 4): overdue through r07, so R8
-    # membership keeps both envelopes green. It displaces the r05 fill
-    # image_ahash_signature, whose newest=8 deadline moves to the
-    # redundant ROTATION_R10 seat that dup_span_fraction held (that query
-    # keeps its required R9 seat).
-    "row_signature",
-    # scan_project re-seated here after yielding its ROTATION_R7 slot to
-    # parquet_column_census (batch 3): overdue through r07, so R8
-    # membership keeps both envelopes green. It displaces the r05 fill
-    # lang_id_heuristic, whose newest=8 deadline moves to the redundant
-    # ROTATION_R10 seat that dsir_importance_weights held (that query
-    # keeps its required R9 seat, so nothing loses coverage).
-    "scan_project",
-    # set_union/set_except/set_intersect re-seated here after yielding
-    # their ROTATION_R7 slots to the session-2 r07 registrations (the CDC
-    # family + streaming_spans_parity): their rows stay r01-old through
-    # r07, so R8 membership is what keeps the staleness envelope green at
-    # newest=7. They displace the three alphabetically-last r05 fills
-    # (line_dedup_corpus / minhash_near_dup / minhash_signature), which
-    # keep r05 rows and hit the staleness wall at newest=8 — re-seated in
-    # ROTATION_R9 to cover exactly that deadline.
-    "set_except",
-    "set_intersect",
-    "set_union",
-]
-
-
-#: r09 rotation (PREPARED three ahead, derived in r06 from the PREDICTED
-#: archive state: r06/r07/r08 windows land as scheduled): the 25 queries
-#: whose newest driver row will be r05 once r08 runs — they hit the
-#: 3-round staleness wall at newest=8, so R9 ∪ R10 must hold them — plus
-#: the alphabetically-first r06-window rows as fill so freshness keeps
-#: cycling. Round 7+ should re-derive against the real archives before
-#: activating (a FAIL re-check or new registration shifts the sets), the
-#: same contract as ROTATION_R8.
-ROTATION_R9: list[str] = [
-    "ann_ivf_topk",
-    "ann_lsh_topk",
-    "ann_sq8_topk",
-    "approx_distinct",
-    "bpe_segment_corpus",
-    "multimodal_meta",
-    "near_dup_clusters",
-    "near_dup_clusters_labelprop",
-    "near_dup_pagerank",
-    "ngram_jaccard_pairs",
-    "pipeline_curate",
-    "pq_train_codebooks",
-    "q18_large_volume",
-    "q4_order_priority",
-    "q6_forecast_revenue",
-    "salted_groupby",
-    "simhash_hamming_pairs",
-    "simhash_signature",
-    "small_chunk_policy",
-    "text_exact_dedup",
-    "text_normalize",
-    "token_count_bpe",
-    "token_topk",
-    "transfer_stats_rollup",
-    "transfer_stats_taxonomy",
-    "chunk_simulate",
-    "col_type_stats",
-    # the r04-row window trio displaced from ROTATION_R8 by the batch-2
-    # re-seats (session-2 r07): overdue once r07 lands, and the R8∪R9
-    # envelope at newest=7 is satisfied by R9 membership. They take the
-    # slots of the r05-row fills (line_dedup_corpus / minhash_near_dup /
-    # minhash_signature), whose newest=8 deadline moves to ROTATION_R10
-    # (the R9∪R10 envelope at newest=8 admits either window).
-    "window_lag_frame",
-    "window_ntile_dist",
-    "window_rank",
-    # r04-row trio re-seated here after yielding their ROTATION_R7 slots
-    # to the batch-4 displacements (overdue once r07 lands, so R9
-    # membership keeps the staleness invariant green at that point)
-    "cluster_quality_keeper",
-    "dedup_exact_rows",
-    "distinct_count",
-    "dsir_gumbel_resample",
-    "dedup_bloom_prefilter",
-    "event_dedup_first",
-    "doc_hash_embedding",
-    # r09 registrations (VERDICT r08 "Next round" #1 + #6) — never
-    # driver-checked, so mandatory active-window seats: the BM25/RRF
-    # streaming-index parity certificates (the 8th family's driver rows)
-    # and the zone-map dedup consumer. Plus the two SCHEMA_CHANGED_R9
-    # re-seats (brief #3's new rule, enforced by tools/derive_rotation.py
-    # and tests/test_rotation_sim.py): semantic_dedup (reshaped by the r08
-    # cap fix — driver re-confirmation must not wait for its R11 seat) and
-    # passage_near_dup (reshaped this round by the pair-class collapse).
-    # They take the seats of the five slackest-deadline holders
-    # (domain_mix_sample r07-row; ivf_train_kmeans / lsh_parameter_sweep /
-    # minhash_recall_report / multimodal_audio_features r06-rows), whose
-    # displacement chains — R11/R12 swaps with r08-row holders that
-    # themselves re-seat in R13, cascading into the new ROTATION_R15 —
-    # were DERIVED BY THE SIMULATOR (tools/derive_rotation.py repair run,
-    # r09 session) and are green through round 14 with zero residue.
-    "streaming_bm25_parity",
-    "streaming_rrf_parity",
-    "orc_stats_pruned_dedup",
-    "semantic_dedup",
-    "passage_near_dup",
-    # r09 late registration (never driver-checked, so mandatory here):
-    # the parquet row-group twin of the zone-map dedup consumer. It takes
-    # the seat of multimodal_dedup_report (r06 row, overdue at newest=10
-    # -> re-seated in ROTATION_R11 via semantic_dedup's now-redundant
-    # seat there; simulator repair run, green through 14).
-    "parquet_stats_pruned_dedup",
-    # r04-row quartet displaced from ROTATION_R7 by the r07 registrations
-    # (substring dedup pair + streaming parity certificates) — overdue once
-    # r07 lands, so R9 membership keeps the staleness invariant green; the
-    # four r06-row fills they displace (event_funnel, event_gapfill_locf,
-    # file_inventory, file_parse_overhead) hit their next deadline at
-    # newest=9 and belong to the R10/R11 re-derivation (R10's conditional
-    # test arms on CORRECTNESS_r09, so the drift is a test failure then,
-    # not a silent gap)
-    "dsir_importance_weights",
-    "dup_span_fraction",
-    "groupby_sum_count",
-    "event_session_window",
-    # the flagship, displaced from ROTATION_R7 by the late-r07
-    # substring_dedup_delta registration (r04 row — overdue once r07
-    # lands); takes the slot of inverted_index_search (r06 row, re-seated
-    # in ROTATION_R11)
-    "dedup_hit_miss",
-    # (ivf_train_kmeans / lsh_parameter_sweep / minhash_recall_report /
-    # multimodal_audio_features / multimodal_dedup_report yielded their
-    # seats here to the r09 batch — r06 rows, next overdue at newest=10,
-    # re-seated in ROTATION_R11 via the simulator-derived swaps)
-    "orc_file_chunks",
-    "orc_hierarchical_dedup",
-]
-
-# r06: the prepared window goes ACTIVE (VERDICT r05 brief #2).
-
-#: r10 rotation (PREPARED, not active — four ahead): derived from the
-#: PREDICTED archive state after r06..r09 check their windows. The 33
-#: queries below would then hold r06 rows and be 3+ rounds stale by r10
-#: (the freshness test arms once CORRECTNESS_r09 lands, matching the R9
-#: pattern; the rolling staleness invariant consults R10 as R_{newest+2}
-#: once the r08 archive exists);
-#: the fills are the oldest predicted (r07) rows, alphabetical. The
-#: conditional freshness test (tests/test_registry_oracles.py::
-#: test_rotation_r10_is_prepared_and_fresh) re-derives the requirement
-#: from the real archives as they land, so drift in this prediction is a
-#: test failure, not a silent gap.
-ROTATION_R10: list[str] = [
-    # the three r05-row fills displaced from ROTATION_R8 by the r08
-    # streaming-parity registrations: their r05 rows go overdue at
-    # newest=8, and these R10 seats sit inside both the R9∪R10 and
-    # R10∪R11 envelopes. They take the seats of corpus_shuffle /
-    # decontaminate_ngram_overlap (r07 rows, overdue only at newest=10 —
-    # re-seated in ROTATION_R12, inside the R11∪R12 envelope) and
-    # groupby_sum_count (keeps its required ROTATION_R9 seat, so this R10
-    # seat was redundant).
-    "bpe_train_merges",
-    "dedup_hierarchical",
-    "dedup_ratio",
-    # the two r05-row fills displaced from ROTATION_R8 by the r08 batch-2
-    # registrations — same envelope reasoning; they take the seats of
-    # corpus_report / date_fns (r07 rows, overdue only at newest=10 —
-    # re-seated in ROTATION_R12, inside the R11∪R12 envelope).
-    "doc_fingerprint",
-    "doc_quality_filter",
-    "doc_quality_score",
-    "near_dup_cluster_stats",
-    "orc_linked_reconstruction",
-    "orc_reconstruction",
-    "perplexity_bucket_report",
-    "pipeline_dedup_all",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q16_parts_supplier_cnt",
-    "q17_small_qty_revenue",
-    "q20_part_promotion",
-    "q21_waiting_supplier",
-    "q22_global_sales",
-    "q2_min_cost_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "simhash64_signature",
-    "simhash_band_near_dup",
-    "tfidf_top_terms",
-    # the three r05-row fills displaced from ROTATION_R8 by the batch-7
-    # registrations (retrieval pair + cross-format certificate): overdue
-    # at newest=8, which consults the R9∪R10 envelope — R10 membership
-    # covers it. They take the seats of parquet_file_chunks /
-    # parquet_reconstruction / semantic_dedup (r06 rows, overdue at
-    # newest=9 → R10∪R11 envelope), which re-seat in ROTATION_R11.
-    "embedding_norm_stats",
-    "embedding_pca_project",
-    "grouped_percentile",
-    # the three r06-row fills displaced from ROTATION_R9 by the r05-row
-    # re-seats (session-2 r07): overdue at newest=9, which is when the
-    # R10∪R11 envelope is consulted — R10 membership covers it. They take
-    # the slots of the three alphabetically-first r07-predicted fills
-    # (apply_in_pandas_group / argminmax_agg / array_fns — fresh r07 rows
-    # once the R7 window runs, not overdue until newest=10, so they belong
-    # to the R11/R12 re-derivation).
-    # the r05-row fills displaced from ROTATION_R9 by the window-trio
-    # re-seats (session-2 r07 batch 2): their newest=8 staleness deadline
-    # is covered by R10 membership (R9∪R10 envelope). They take the slots
-    # of three fills that duplicated R9 entries (dedup_bloom_prefilter /
-    # dedup_hit_miss / doc_hash_embedding get r09 rows from their R9
-    # seats, so the R10 copies were redundant re-checks).
-    "line_dedup_corpus",
-    "minhash_near_dup",
-    "minhash_signature",
-    # lang_id_heuristic displaced from ROTATION_R8 by scan_project's
-    # batch-3 re-seat: its r05 row hits the staleness wall at newest=8,
-    # covered by this R10 seat (previously a redundant second seat for
-    # dsir_importance_weights, which keeps its required R9 seat).
-    "lang_id_heuristic",
-    # image_ahash_signature displaced from ROTATION_R8 by row_signature's
-    # batch-4 re-seat: same newest=8 deadline, covered by the redundant
-    # R10 seat dup_span_fraction held (it keeps its required R9 seat).
-    "image_ahash_signature",
-    # image_ahash_near_dup displaced from ROTATION_R8 by rollup_agg's
-    # batch-5 re-seat: same newest=8 deadline, covered by the redundant
-    # R10 seat event_session_window held (required R9 seat kept).
-    "image_ahash_near_dup",
-    # fills: oldest predicted (r07) rows, alphabetical (groupby_sum_count's
-    # redundant seat here yielded to the r08 displacement cascade — its
-    # required ROTATION_R9 seat stands; corpus_report / date_fns /
-    # event_tumbling_window / except_all / filter_pred /
-    # grouped_percentile_approx yielded their seats to the batch-2..6
-    # cascades and re-seat in ROTATION_R12)
-    "doc_token_stats",
-    "embedding_cosine_topk",
-    "embedding_near_dup_pairs",
-    # --- r10 re-pack (simulator-derived, tools/derive_rotation.py) ---
-    # Required seats this round: the five r10 registrations (the passage
-    # hybrid family + the column-level stats-pruned fallback pair), the
-    # two SCHEMA_CHANGED re-seats (the stats-pruned certificates gained
-    # the string-perturbed fixture row), and the REWRITTEN re-seats (the
-    # new rule, VERDICT r09 "Next round" #5: minhash_recall_report's
-    # class-level rewrite, lsh_parameter_sweep via the shared
-    # _pair_jaccard/_prefix_candidates rewrite, and the three parity
-    # certificates whose merge path moved to driver-side marker commits;
-    # minhash_near_dup / minhash_signature already held seats here).
-    # They take the seats of the twelve slackest-deadline fills
-    # (r07/r08-row holders), which re-seat in ROTATION_R11 — the whole
-    # cascade through R17 was DERIVED AND VERIFIED by the simulator
-    # (green through round 16, zero allowlisted residue).
-    "lsh_parameter_sweep",
-    "minhash_recall_report",
-    "orc_stats_pruned_columns",
-    "orc_stats_pruned_dedup",
-    "parquet_stats_pruned_columns",
-    "parquet_stats_pruned_dedup",
-    "passage_bm25_scores",
-    "passage_rrf_from_index",
-    "passage_rrf_fusion",
-    "streaming_bm25_parity",
-    "streaming_rrf_parity",
-    "streaming_sketch_parity",
-    # r10 late registration (the 9th streaming family, never checked):
-    "streaming_statsprune_parity",
-]
-
-#: r11 rotation (PREPARED four ahead, derived in r07 from the PREDICTED
-#: archive state after r07..r10 check their windows): the 8 queries that
-#: would be 3+ rounds stale once CORRECTNESS_r09 lands and sit in neither
-#: R10 nor any later window (the r06-row set displaced from R9 by the r07
-#: re-seats, plus the two r06 rows R10 never picked up), then the full
-#: post-r10 overdue set (r07-window rows — the simple relational/scalar
-#: tail plus this round's four registrations), then the alphabetically
-#: first r08-window rows as fill. The conditional freshness test arms on
-#: CORRECTNESS_r10; rounds 8+ re-derive against the real archives before
-#: activating, the same contract as ROTATION_R8..R10.
-ROTATION_R11: list[str] = [
-    # (re-packed r11 session 2 by tools/repair_rotation.py from the
-    # real archives — the seven late registrations seated here;
-    # simulator-verified green through R21)
-    "retrieval_rbo_report",
-    "streaming_winnow_parity",
-    "jsonl_ingest_dedup",
-    "minhash_bbit_near_dup",
-    "shingle_dup_sample_estimate",
-    "winnowing_fingerprints",
-    "winnowing_overlap_pairs",
-    "orc_hierarchical_dedup",
-    "orc_hierarchical_pruned",
-    "orc_linked_reconstruction",
-    "orc_stats_census_drift",
-    "orc_stats_pruned_columns",
-    "passage_rrf_from_index",
-    "streaming_bm25_parity",
-    "streaming_rrf_parity",
-    "streaming_statsprune_columns_parity",
-    "streaming_statsprune_parity",
-    "streaming_statsprune_parquet_parity",
-    "cluster_aware_split",
-    "correlated_subquery",
-    "doc_ngram_novelty",
-    "doc_repetition_score",
-    "event_funnel",
-    "event_gapfill_locf",
-    "file_parse_overhead",
-    "sequence_pack",
-    "ivf_train_kmeans",
-    "multimodal_audio_features",
-    "stratified_sample",
-    "streaming_cluster_parity",
-    "streaming_lsh_parity",
-    "substring_dedup_apply",
-    "substring_dedup_delta",
-    "substring_dedup_ranges",
-    "parquet_file_chunks",
-    "parquet_reconstruction",
-    "multimodal_dedup_report",
-    "inverted_index_search",
-    "ann_ivf_nprobe_topk",
-    "ann_ivfpq_topk",
-    "ann_recall_report",
-    "audio_fingerprint_near_dup",
-    "audio_fingerprint_signature",
-    "cohort_retention",
-    "corpus_split",
-    "crawl_admission_report",
-    "dedup_savings_by_source",
-    "doc_length_outliers",
-    "edit_distance_verify",
-    "embedding_prototypicality",
-]
-
-#: r12 rotation (PREPARED five ahead, derived in r07 session 2 from the
-#: PREDICTED archive state after r07..r11 check their windows): the 12
-#: session-2 r07 registrations land their second driver rows here (their
-#: r07 rows hit the 3-round staleness wall at newest=10, and R11 —
-#: derived before they existed — cannot hold them), plus the
-#: apply_in_pandas_group / argminmax_agg / array_fns trio displaced from
-#: R10 by the session-2 re-seats, then the predicted newest=11 overdue
-#: set (the R8-window r08 rows) as fill. Rounds 8+ re-derive against the
-#: real archives before activating — the same contract as R8..R11; the
-#: conditional freshness test arms on CORRECTNESS_r11.
-ROTATION_R12: list[str] = [
-    # (re-packed r11 session 2 by tools/repair_rotation.py from the
-    # real archives — the seven late registrations seated here;
-    # simulator-verified green through R21)
-    "q19_bracketed_or",
-    "q14_promo_effect",
-    "pii_redaction",
-    "pivot_agg",
-    "posexplode_tokens",
-    "q10_returned_item",
-    "q12_priority_class",
-    "intersect_all",
-    "join_full_outer",
-    "join_left",
-    "json_extract",
-    "like_rlike_pred",
-    "limit_offset",
-    "null_fns",
-    "orderby_limit_topk",
-    "pandas_udf_grouped_agg",
-    "pandas_udf_scalar",
-    "percentile_disc_median",
-    "apply_in_pandas_group",
-    "argminmax_agg",
-    "array_fns",
-    "balanced_sample_exact_k",
-    "cdc_dedup_report",
-    "cdc_file_chunks",
-    "hot_span_census",
-    "orc_zone_map_pruning",
-    "parquet_column_census",
-    "passage_split",
-    "streaming_spans_parity",
-    "streaming_store_parity",
-    "corpus_shuffle",
-    "decontaminate_ngram_overlap",
-    "domain_mix_sample",
-    "math_fns",
-    "q11_important_stock",
-    "union_all_counts",
-    "corpus_report",
-    "date_fns",
-    "event_tumbling_window",
-    "except_all",
-    "filter_pred",
-    "grouped_percentile_approx",
-    "source_overlap_matrix",
-    "token_zipf_slope",
-    "rollup_agg",
-    "row_signature",
-    "scan_project",
-    "set_except",
-    "set_intersect",
-    "grouping_sets_agg",
-]
-
-#: r13 rotation (prepared five ahead, derived r08 by forward simulation
-#: through the predicted r12 archive): leads with the 16 queries whose
-#: projected rows go overdue at newest=11 and hold no ROTATION_R12 seat —
-#: the r08 registrations' first re-check, the r08-refreshed R8∩R12
-#: yielders, and the cascade re-seats — then fills with the oldest
-#: projected (r09) rows, alphabetical. Exactly-50/uniqueness/coverage
-#: enforced by the same test family as ROTATION_R9..R12.
-ROTATION_R13: list[str] = [
-    # (re-packed r11 session 2 by tools/repair_rotation.py from the
-    # real archives — the seven late registrations seated here;
-    # simulator-verified green through R21)
-    "pmi_collocations",
-    "ngram_containment_pairs",
-    "join_semi",
-    "multimodal_decode",
-    "multimodal_frame_sample",
-    "multimodal_scene_cuts",
-    "naive_bayes_source_classify",
-    "ann_pq_topk",
-    "asof_join",
-    "bigram_logprob_score",
-    "cast_fns",
-    "event_sliding_window",
-    "event_watermark_filter",
-    "file_inventory",
-    "having_filter",
-    "join_anti",
-    "join_inner",
-    "cdc_dedup_report_parquet",
-    "cube_agg",
-    "parquet_zone_map_pruning",
-    "passage_ann_ivf_topk",
-    "passage_near_dup",
-    "passage_topk_retrieval",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "range_join_bands",
-    "source_mix_kl",
-    "stats_agg",
-    "streaming_ivf_parity",
-    "streaming_pq_parity",
-    "token_heavy_hitters_cms",
-    "token_vocab_hll",
-    "bm25_doc_ranking",
-    "cross_format_dedup",
-    "hybrid_rrf_fusion",
-    "event_session_window",
-    "groupby_sum_count",
-    "window_first_last",
-    "transfer_stats_rollup_approx",
-    "string_fns",
-    "set_union",
-    "multimodal_meta",
-    "near_dup_clusters",
-    "near_dup_clusters_labelprop",
-    "near_dup_pagerank",
-    "ngram_jaccard_pairs",
-    "orc_file_chunks",
-    "ann_pq_recall",
-    "event_anomaly_zscore",
-    "event_hypertable_rollup",
-]
-
-#: r14 rotation (PREPARED six ahead, derived in r08 session 3 BY THE
-#: SIMULATOR, RE-DERIVED in r09 against the real r08 archive — the r09
-#: registrations and their displacement chains shifted five seats: the
-#: bm25/cross-format/hybrid trio moved up to ROTATION_R13 (retiring the
-#: r08 residue allowlist), and their seats here went to the r09
-#: registrations' second driver rows plus pipeline_curate /
-#: pq_train_codebooks (displaced from R13 by that move, overdue at
-#: newest=13 — the R13∪R14 envelope admits this window; q17/q20 fills
-#: moved to ROTATION_R15's required set). Rounds 10+ MUST re-derive
-#: against the real archives before activating (a FAIL re-check or new
-#: registration shifts the sets) — run `python tools/derive_rotation.py`
-#: after any edit; the conditional freshness test arms on
-#: CORRECTNESS_r13.
-ROTATION_R14: list[str] = [
-    # (re-packed r11 session 2 by tools/repair_rotation.py from the
-    # real archives — the seven late registrations seated here;
-    # simulator-verified green through R21)
-    "event_dedup_first",
-    "dup_span_fraction",
-    "distinct_count",
-    "doc_hash_embedding",
-    "dsir_gumbel_resample",
-    "dsir_importance_weights",
-    "minhash_recall_report",
-    "dedup_hit_miss",
-    "doc_token_stats",
-    "embedding_cosine_topk",
-    "lsh_parameter_sweep",
-    "orc_stats_pruned_dedup",
-    "pipeline_curate",
-    "pq_train_codebooks",
-    "q18_large_volume",
-    "q4_order_priority",
-    "q6_forecast_revenue",
-    "salted_groupby",
-    "simhash_hamming_pairs",
-    "simhash_signature",
-    "small_chunk_policy",
-    "text_exact_dedup",
-    "text_normalize",
-    "token_count_bpe",
-    "token_topk",
-    "transfer_stats_rollup",
-    "transfer_stats_taxonomy",
-    "window_lag_frame",
-    "window_ntile_dist",
-    "window_rank",
-    "minhash_near_dup",
-    "minhash_signature",
-    "near_dup_cluster_stats",
-    "orc_reconstruction",
-    "perplexity_bucket_report",
-    "pipeline_dedup_all",
-    "q13_customer_distribution",
-    "semantic_dedup",
-    "parquet_stats_pruned_dedup",
-    "ann_ivf_topk",
-    "ann_lsh_topk",
-    "ann_sq8_topk",
-    "approx_distinct",
-    "bpe_segment_corpus",
-    "chunk_simulate",
-    "cluster_quality_keeper",
-    "col_type_stats",
-    "dedup_bloom_prefilter",
-    "dedup_exact_rows",
-    "streaming_sketch_parity",
-]
-
-#: r15 rotation (PREPARED six ahead, derived in r09 BY THE SIMULATOR'S
-#: repair run against the real r08 archive + the r09 displacement
-#: cascade): the 16 queries whose projected newest row hits the
-#: staleness wall at newest=14 and which R14 cannot hold — the r09
-#: cascade's terminal re-seats (the four R9-evictees' next rows, the
-#: R12/R14 fill yielders, and the newest=14 overdue tail R14 left to
-#: the horizon) — then fills with the oldest projected (r11) rows,
-#: alphabetical. Preparing this window is what moves the enforced
-#: GREEN_THROUGH horizon from 11 to 14 with an EMPTY residue allowlist;
-#: the only remaining simulator info line is the inevitable horizon edge
-#: at round 15 (R16 is round 10's derivation). Rounds 10+ re-derive
-#: before activating, the same contract as R9..R14.
-ROTATION_R15: list[str] = [
-    # (re-packed r11 session 2 by tools/repair_rotation.py from the
-    # real archives — the seven late registrations seated here;
-    # simulator-verified green through R21)
-    "doc_quality_score",
-    "doc_quality_filter",
-    "bpe_train_merges",
-    "dedup_hierarchical",
-    "dedup_ratio",
-    "doc_fingerprint",
-    "orc_hierarchical_dedup",
-    "embedding_pca_project",
-    "grouped_percentile",
-    "image_ahash_near_dup",
-    "image_ahash_signature",
-    "lang_id_heuristic",
-    "line_dedup_corpus",
-    "multimodal_dedup_report",
-    "orc_linked_reconstruction",
-    "streaming_bm25_parity",
-    "streaming_rrf_parity",
-    "embedding_near_dup_pairs",
-    "multimodal_audio_features",
-    "q17_small_qty_revenue",
-    "q20_part_promotion",
-    "q21_waiting_supplier",
-    "q22_global_sales",
-    "q2_min_cost_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "simhash64_signature",
-    "simhash_band_near_dup",
-    "tfidf_top_terms",
-    "parquet_file_chunks",
-    "parquet_reconstruction",
-    "q15_top_supplier",
-    "q16_parts_supplier_cnt",
-    "audio_fingerprint_near_dup",
-    "audio_fingerprint_signature",
-    "cohort_retention",
-    "corpus_split",
-    "crawl_admission_report",
-    "dedup_savings_by_source",
-    "doc_length_outliers",
-    "edit_distance_verify",
-    "embedding_norm_stats",
-    "orc_stats_pruned_columns",
-    "parquet_stats_pruned_columns",
-    "passage_bm25_scores",
-    "passage_rrf_from_index",
-    "passage_rrf_fusion",
-    "embedding_prototypicality",
-    "streaming_statsprune_parity",
-]
-
-#: r16 rotation (PREPARED seven ahead, derived in r09 session 2 BY
-#: THE SIMULATOR against the projected r09..r15 archives): the 13
-#: queries whose projected newest row hits the staleness wall at
-#: newest=15 and which R15 cannot hold (the round-15 horizon edge the
-#: r09 GREEN_THROUGH=14 derivation named as this window's demand),
-#: then fills with the oldest projected (r12) rows, alphabetical.
-#: Preparing R16 moves the enforced horizon to GREEN_THROUGH=15; the
-#: only remaining info line is the edge at 16 (R17 = round 10's
-#: derivation). Rounds 10+ re-derive before activating, the same
-#: contract as R9..R15.
-ROTATION_R16: list[str] = [
-    # (re-packed r11 session 2 by tools/repair_rotation.py from the
-    # real archives — the seven late registrations seated here;
-    # simulator-verified green through R21)
-    "ann_ivf_nprobe_topk",
-    "retrieval_rbo_report",
-    "q14_promo_effect",
-    "streaming_winnow_parity",
-    "jsonl_ingest_dedup",
-    "minhash_bbit_near_dup",
-    "pii_redaction",
-    "pivot_agg",
-    "posexplode_tokens",
-    "q10_returned_item",
-    "q12_priority_class",
-    "shingle_dup_sample_estimate",
-    "winnowing_fingerprints",
-    "winnowing_overlap_pairs",
-    "ann_recall_report",
-    "like_rlike_pred",
-    "limit_offset",
-    "null_fns",
-    "orc_hierarchical_pruned",
-    "orc_stats_census_drift",
-    "orderby_limit_topk",
-    "pandas_udf_grouped_agg",
-    "pandas_udf_scalar",
-    "percentile_disc_median",
-    "streaming_statsprune_columns_parity",
-    "streaming_statsprune_parquet_parity",
-    "q19_bracketed_or",
-    "rollup_agg",
-    "row_signature",
-    "scan_project",
-    "sequence_pack",
-    "set_except",
-    "set_intersect",
-    "stratified_sample",
-    "streaming_cluster_parity",
-    "streaming_lsh_parity",
-    "substring_dedup_apply",
-    "substring_dedup_delta",
-    "substring_dedup_ranges",
-    "math_fns",
-    "cluster_aware_split",
-    "correlated_subquery",
-    "doc_ngram_novelty",
-    "doc_repetition_score",
-    "event_funnel",
-    "event_gapfill_locf",
-    "file_parse_overhead",
-    "inverted_index_search",
-    "ivf_train_kmeans",
-    "ann_ivfpq_topk",
-]
-
-
-#: r17 rotation (PREPARED seven ahead, derived in r10 BY THE SIMULATOR'S
-#: repair run against the real r09 archive + the r10 seat cascade): the
-#: overdue-at-16 demand R16 cannot hold — the r09 horizon edge the
-#: GREEN_THROUGH=15 derivation named as this window's required set,
-#: plus the seventeen terminal re-seats of the r10 cascade — then fills
-#: with the oldest projected rows, alphabetical. Preparing R17 moves the
-#: enforced horizon to GREEN_THROUGH=16; the only remaining info line is
-#: the edge at 17 (R18 = round 11's derivation). Rounds 11+ re-derive
-#: before activating, the same contract as R9..R16.
-ROTATION_R17: list[str] = [
-    # (re-packed r11 session 2 by tools/repair_rotation.py from the
-    # real archives — the seven late registrations seated here;
-    # simulator-verified green through R21)
-    "join_left",
-    "json_extract",
-    "intersect_all",
-    "join_full_outer",
-    "domain_mix_sample",
-    "event_tumbling_window",
-    "except_all",
-    "filter_pred",
-    "grouped_percentile_approx",
-    "grouping_sets_agg",
-    "hot_span_census",
-    "join_semi",
-    "multimodal_decode",
-    "multimodal_frame_sample",
-    "cdc_file_chunks",
-    "corpus_report",
-    "corpus_shuffle",
-    "date_fns",
-    "decontaminate_ngram_overlap",
-    "event_watermark_filter",
-    "file_inventory",
-    "having_filter",
-    "join_anti",
-    "join_inner",
-    "apply_in_pandas_group",
-    "argminmax_agg",
-    "array_fns",
-    "balanced_sample_exact_k",
-    "cdc_dedup_report",
-    "multimodal_scene_cuts",
-    "naive_bayes_source_classify",
-    "ngram_containment_pairs",
-    "orc_zone_map_pruning",
-    "parquet_column_census",
-    "passage_split",
-    "pmi_collocations",
-    "q11_important_stock",
-    "source_overlap_matrix",
-    "streaming_spans_parity",
-    "streaming_store_parity",
-    "token_zipf_slope",
-    "union_all_counts",
-    "groupby_sum_count",
-    "hybrid_rrf_fusion",
-    "multimodal_meta",
-    "near_dup_clusters",
-    "near_dup_clusters_labelprop",
-    "near_dup_pagerank",
-    "ngram_jaccard_pairs",
-    "orc_file_chunks",
-]
-
-
-#: r18 rotation (PREPARED eight ahead, derived in r10 session 2 BY THE
-#: SOLVER — tools/repair_rotation.py, now a permanent tool — against the
-#: projected r10..r17 archives): the 50 queries whose projected newest
-#: row hits the staleness wall at newest=17 and which R17 cannot hold
-#: (the round-17 horizon edge the GREEN_THROUGH=16 derivation named as
-#: this window's demand), topped up with the oldest projected rows.
-#: Preparing R18 moves the enforced horizon to GREEN_THROUGH=17; the
-#: only remaining info line is the edge at 18 (R19 = a later round's
-#: derivation). Rounds 11+ re-derive before activating, the same
-#: contract as R9..R17.
-ROTATION_R18: list[str] = [
-    # (re-packed r11 session 2 by tools/repair_rotation.py from the
-    # real archives — the seven late registrations seated here;
-    # simulator-verified green through R21)
-    "event_session_window",
-    "event_sliding_window",
-    "event_dedup_first",
-    "event_hypertable_rollup",
-    "asof_join",
-    "bigram_logprob_score",
-    "cast_fns",
-    "dsir_gumbel_resample",
-    "dsir_importance_weights",
-    "dup_span_fraction",
-    "event_anomaly_zscore",
-    "minhash_recall_report",
-    "ann_pq_topk",
-    "bm25_doc_ranking",
-    "cdc_dedup_report_parquet",
-    "cross_format_dedup",
-    "cube_agg",
-    "doc_token_stats",
-    "embedding_cosine_topk",
-    "lsh_parameter_sweep",
-    "ann_pq_recall",
-    "parquet_zone_map_pruning",
-    "passage_ann_ivf_topk",
-    "passage_near_dup",
-    "passage_topk_retrieval",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "range_join_bands",
-    "set_union",
-    "source_mix_kl",
-    "stats_agg",
-    "streaming_ivf_parity",
-    "streaming_pq_parity",
-    "string_fns",
-    "token_heavy_hitters_cms",
-    "token_vocab_hll",
-    "transfer_stats_rollup_approx",
-    "window_first_last",
-    "minhash_near_dup",
-    "minhash_signature",
-    "near_dup_cluster_stats",
-    "orc_reconstruction",
-    "orc_stats_pruned_dedup",
-    "parquet_stats_pruned_dedup",
-    "perplexity_bucket_report",
-    "pipeline_curate",
-    "pipeline_dedup_all",
-    "pq_train_codebooks",
-    "q13_customer_distribution",
-    "q18_large_volume",
-]
-
-#: r19 rotation (horizon window, derived r11 by the repair
-#: solver): the staleness-ordered fill after the r11 demand
-#: cascade; re-derive against the real archives before
-#: activating, the ROTATION_R8+ contract.
-ROTATION_R19: list[str] = [
-    # (re-packed r11 session 2 by tools/repair_rotation.py from the
-    # real archives — the seven late registrations seated here;
-    # simulator-verified green through R21)
-    "doc_hash_embedding",
-    "doc_quality_score",
-    "distinct_count",
-    "doc_quality_filter",
-    "cluster_quality_keeper",
-    "col_type_stats",
-    "dedup_bloom_prefilter",
-    "dedup_exact_rows",
-    "dedup_hit_miss",
-    "orc_hierarchical_dedup",
-    "ann_ivf_topk",
-    "ann_lsh_topk",
-    "ann_sq8_topk",
-    "approx_distinct",
-    "bpe_segment_corpus",
-    "chunk_simulate",
-    "embedding_pca_project",
-    "grouped_percentile",
-    "image_ahash_near_dup",
-    "image_ahash_signature",
-    "lang_id_heuristic",
-    "line_dedup_corpus",
-    "multimodal_dedup_report",
-    "orc_linked_reconstruction",
-    "q4_order_priority",
-    "q6_forecast_revenue",
-    "salted_groupby",
-    "semantic_dedup",
-    "simhash_hamming_pairs",
-    "simhash_signature",
-    "small_chunk_policy",
-    "streaming_sketch_parity",
-    "text_exact_dedup",
-    "text_normalize",
-    "token_count_bpe",
-    "token_topk",
-    "transfer_stats_rollup",
-    "transfer_stats_taxonomy",
-    "window_lag_frame",
-    "window_ntile_dist",
-    "window_rank",
-    "embedding_norm_stats",
-    "embedding_prototypicality",
-    "multimodal_audio_features",
-    "orc_stats_pruned_columns",
-    "parquet_file_chunks",
-    "parquet_reconstruction",
-    "parquet_stats_pruned_columns",
-    "passage_bm25_scores",
-    "passage_rrf_from_index",
-]
-
-
-#: r20 rotation (horizon window, derived r11 session 2 by the repair
-#: solver): the staleness-ordered fill after the late-r11 demand
-#: cascade; re-derive against the real archives before
-#: activating, the ROTATION_R8+ contract.
-ROTATION_R20: list[str] = [
-    # (re-packed r11 session 2 by tools/repair_rotation.py from the
-    # real archives — the seven late registrations seated here;
-    # simulator-verified green through R21)
-    "dedup_ratio",
-    "doc_fingerprint",
-    "bpe_train_merges",
-    "dedup_hierarchical",
-    "ann_ivf_nprobe_topk",
-    "audio_fingerprint_near_dup",
-    "audio_fingerprint_signature",
-    "cohort_retention",
-    "corpus_split",
-    "crawl_admission_report",
-    "dedup_savings_by_source",
-    "doc_length_outliers",
-    "edit_distance_verify",
-    "embedding_near_dup_pairs",
-    "passage_rrf_fusion",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q16_parts_supplier_cnt",
-    "q17_small_qty_revenue",
-    "q20_part_promotion",
-    "q21_waiting_supplier",
-    "q22_global_sales",
-    "q2_min_cost_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "simhash64_signature",
-    "simhash_band_near_dup",
-    "streaming_bm25_parity",
-    "streaming_rrf_parity",
-    "streaming_statsprune_parity",
-    "tfidf_top_terms",
-    "ann_ivfpq_topk",
-    "ann_recall_report",
-    "cluster_aware_split",
-    "correlated_subquery",
-    "doc_ngram_novelty",
-    "doc_repetition_score",
-    "event_funnel",
-    "event_gapfill_locf",
-    "file_parse_overhead",
-    "inverted_index_search",
-    "ivf_train_kmeans",
-    "jsonl_ingest_dedup",
-    "like_rlike_pred",
-    "limit_offset",
-    "math_fns",
-    "minhash_bbit_near_dup",
-    "null_fns",
-    "orc_hierarchical_pruned",
-]
-
-
-#: r21 rotation (horizon window, derived r11 session 2 by the repair
-#: solver): the staleness-ordered fill after the late-r11 demand
-#: cascade; re-derive against the real archives before
-#: activating, the ROTATION_R8+ contract.
-ROTATION_R21: list[str] = [
-    # (re-packed r11 session 2 by tools/repair_rotation.py from the
-    # real archives — the seven late registrations seated here;
-    # simulator-verified green through R21)
-    "join_left",
-    "json_extract",
-    "retrieval_rbo_report",
-    "intersect_all",
-    "join_full_outer",
-    "orc_stats_census_drift",
-    "orderby_limit_topk",
-    "pandas_udf_grouped_agg",
-    "pandas_udf_scalar",
-    "percentile_disc_median",
-    "pii_redaction",
-    "pivot_agg",
-    "posexplode_tokens",
-    "q10_returned_item",
-    "q12_priority_class",
-    "q19_bracketed_or",
-    "rollup_agg",
-    "row_signature",
-    "scan_project",
-    "sequence_pack",
-    "set_except",
-    "set_intersect",
-    "shingle_dup_sample_estimate",
-    "stratified_sample",
-    "streaming_cluster_parity",
-    "streaming_lsh_parity",
-    "streaming_statsprune_columns_parity",
-    "streaming_statsprune_parquet_parity",
-    "streaming_winnow_parity",
-    "substring_dedup_apply",
-    "substring_dedup_delta",
-    "substring_dedup_ranges",
-    "winnowing_fingerprints",
-    "winnowing_overlap_pairs",
-    "argminmax_agg",
-    "array_fns",
-    "balanced_sample_exact_k",
-    "cdc_dedup_report",
-    "cdc_file_chunks",
-    "corpus_report",
-    "corpus_shuffle",
-    "date_fns",
-    "decontaminate_ngram_overlap",
-    "domain_mix_sample",
-    "event_tumbling_window",
-    "event_watermark_filter",
-    "except_all",
-    "file_inventory",
-    "filter_pred",
-    "groupby_sum_count",
-]
-
-
-#: r22 rotation (horizon window, derived r11 session 2 by the repair
-#: solver): the staleness-ordered fill after the late-r11 demand
-#: cascade; re-derive against the real archives before
-#: activating, the ROTATION_R8+ contract.
-ROTATION_R22: list[str] = [
-    # (re-packed r11 session 2 by tools/repair_rotation.py from the
-    # real archives — the seven late registrations seated here;
-    # simulator-verified green through R21)
-    "apply_in_pandas_group",
-    "event_session_window",
-    "event_sliding_window",
-    "grouped_percentile_approx",
-    "grouping_sets_agg",
-    "having_filter",
-    "hot_span_census",
-    "hybrid_rrf_fusion",
-    "join_anti",
-    "join_inner",
-    "join_semi",
-    "multimodal_decode",
-    "multimodal_frame_sample",
-    "multimodal_meta",
-    "multimodal_scene_cuts",
-    "naive_bayes_source_classify",
-    "near_dup_clusters",
-    "near_dup_clusters_labelprop",
-    "near_dup_pagerank",
-    "ngram_containment_pairs",
-    "ngram_jaccard_pairs",
-    "orc_file_chunks",
-    "orc_zone_map_pruning",
-    "parquet_column_census",
-    "passage_split",
-    "pmi_collocations",
-    "q11_important_stock",
-    "source_overlap_matrix",
-    "streaming_spans_parity",
-    "streaming_store_parity",
-    "token_zipf_slope",
-    "union_all_counts",
-    "ann_pq_recall",
-    "ann_pq_topk",
-    "asof_join",
-    "bigram_logprob_score",
-    "bm25_doc_ranking",
-    "cast_fns",
-    "cdc_dedup_report_parquet",
-    "cross_format_dedup",
-    "cube_agg",
-    "doc_token_stats",
-    "dsir_gumbel_resample",
-    "dsir_importance_weights",
-    "dup_span_fraction",
-    "embedding_cosine_topk",
-    "event_anomaly_zscore",
-    "event_dedup_first",
-    "event_hypertable_rollup",
-    "lsh_parameter_sweep",
-]
-
-
-#: queries whose OUTPUT CONTRACT (schema or semantics) changed since
-#: their newest driver row, keyed by the round whose window must re-check
-#: them (VERDICT r08 "Next round" #3: the r08 cap fix reshaped
-#: semantic_dedup while its next seat sat three windows out — a
-#: schema-changed query now MUST hold a seat in the next active window,
-#: enforced by tools/derive_rotation.py and tests/test_rotation_sim.py).
-#: r09: semantic_dedup (n_cells_capped column, r08) and passage_near_dup
-#: (pair-class collapse, r09). r10: both stats-pruned dedup certificates
-#: gained the string-perturbed fixture row.
-#: r11: streaming_statsprune_parity gained the served_from_index guard
-#: bit (its oracle changed with it).
-SCHEMA_CHANGED: dict[int, list[str]] = {
-    9: ["semantic_dedup", "passage_near_dup"],
-    10: ["orc_stats_pruned_dedup", "parquet_stats_pruned_dedup"],
-    11: ["streaming_statsprune_parity"],
+#: queries whose code or output contract changed after their newest driver
+#: row, mapped to the newest archive round the change postdates. Each one
+#: seats in the next driver window until the driver checks it again (see
+#: registry.driver_window); an entry then expires by itself.
+CHANGED: dict[str, int] = {
+    # r12: the LSH bucket fold and fused-scan checkpoint rewrites.
+    "ann_lsh_topk": 12,
+    "ann_recall_report": 12,
+    "embedding_near_dup_pairs": 12,
+    "lsh_parameter_sweep": 12,
+    # the store and streaming merges moved onto streaming/fold.py
+    # (init_tables / append_new) and store.bucket_aligned.
+    "streaming_bm25_parity": 12,
+    "streaming_cluster_parity": 12,
+    "streaming_ivf_parity": 12,
+    "streaming_lsh_parity": 12,
+    "streaming_pq_parity": 12,
+    "streaming_rrf_parity": 12,
+    "streaming_sketch_parity": 12,
+    "streaming_spans_parity": 12,
+    "streaming_statsprune_columns_parity": 12,
+    "streaming_statsprune_parity": 12,
+    "streaming_statsprune_parquet_parity": 12,
+    "streaming_store_parity": 12,
+    "streaming_winnow_parity": 12,
+    # the BM25 genesis write goes through store.bucket_aligned.
+    "passage_rrf_from_index": 12,
 }
 
-#: queries whose IMPLEMENTATION was rewritten materially since their
-#: newest driver row while keeping the output contract (VERDICT r09
-#: "Next round" #5: result-identical rewrites slipped the schema-changed
-#: rule — minhash_near_dup / simhash_band_near_dup shipped r09 code under
-#: r05/r06 driver rows). Same enforcement as SCHEMA_CHANGED: a seat in
-#: the NEXT active window, checked by tools/derive_rotation.py and
-#: tests/test_rotation_sim.py — a driver hash archived against code that
-#: no longer ships is evidence of nothing. r10: the class-level recall
-#: gate rewrite and its shared-helper consumers (_pair_jaccard /
-#: _prefix_candidates / the minhash slot spelling), and the three parity
-#: certificates whose merge path moved to driver-side marker commits +
-#: truncate re-init + foldwise sweep.
-REWRITTEN: dict[int, list[str]] = {
-    10: [
-        "minhash_recall_report",
-        "lsh_parameter_sweep",
-        "minhash_near_dup",
-        "minhash_signature",
-        "streaming_bm25_parity",
-        "streaming_rrf_parity",
-        "streaming_sketch_parity",
-    ],
-    # r11: the passage hybrid's registered row now serves its lexical
-    # list from the persisted passage postings (plan rewrite, same
-    # oracle); the BM25 parity rows run the merge through the
-    # key-generalized _merge_bm25 core (parameter-identity refactor —
-    # listed defensively, same rule as r10's shared-helper consumers);
-    # the two linked-chunk consumers run the schema-extended walk
-    # (stats_key fields, NULL on their path); orc_stats_pruned_columns'
-    # incoming derivation moved into the shared
-    # orc_strmod_two_level_incoming helper.
-    11: [
-        "passage_rrf_from_index",
-        "streaming_bm25_parity",
-        "streaming_rrf_parity",
-        "orc_hierarchical_dedup",
-        "orc_linked_reconstruction",
-        "orc_stats_pruned_columns",
-    ],
-}
-
-# r11: the prepared window went ACTIVE after the repair solver re-packed
-# it against the real r01-r10 archives — the four r11 registrations
-# (streaming_statsprune_parquet/columns_parity, orc_hierarchical_pruned,
-# orc_stats_census_drift), the schema-changed statsprune row, the six
-# REWRITTEN re-seats, and the overdue r06/r07-row set; the displaced
-# fills cascade through R12-R18 and the new R19 horizon window
-# (simulator-verified green through R18).
-# r12: the window advances on schedule (VERDICT r11 "Next round" #9 —
-# "rotation R12 seated 50/50"): the r11-session-2 re-pack seated the
-# seven late registrations here; all 50 seats are H rows (the
-# file_parse_overhead R seat rotated out exactly as the verdict
-# expected), simulator-verified green through R17 against the real
-# archives (tools/derive_rotation.py; windows prepared through R22).
-registry.reorder(ROTATION_R12)
+#: the driver's CORRECTNESS window is the first 50 registered queries,
+#: computed from the committed CORRECTNESS_r*.json archives.
+registry.reorder(
+    registry.driver_window(
+        list(registry.QUERIES),
+        registry.archive_state(Path(__file__).resolve().parent.parent)[0],
+        CHANGED,
+    )
+)
 
 __all__ = ["registry"]

@@ -10,7 +10,9 @@ ops (float-ranked ANN, seeded MinHash, pandas-UDF chunkers).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+from collections.abc import Callable, Iterable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -44,19 +46,62 @@ def reorder(priority: list[str]) -> None:
 
     The driver records CORRECTNESS rows for the first N registered queries in
     dict order, so registration order is part of the driver contract: the
-    priority window must hold the queries whose driver verification matters
-    most (the dedup core, every LLM-pipeline operator, the TPC-H macros);
-    the long tail of scalar-function variants stays registered — and covered
-    by ``tests/test_registry_oracles.py`` — behind them.
+    package passes :func:`driver_window` here at import; every other query
+    stays registered — and covered by ``tests/test_registry_oracles.py`` —
+    behind it.
     """
-    missing = [n for n in priority if n not in QUERIES]
-    if missing:
-        raise ValueError(f"priority list names unregistered queries: {missing}")
-    if len(set(priority)) != len(priority):
-        raise ValueError("priority list contains duplicates")
-    rest = [n for n in QUERIES if n not in set(priority)]
+    chosen = set(priority)
+    rest = [n for n in QUERIES if n not in chosen]
     for order in (priority, rest):
         for n in order:
             QUERIES[n] = QUERIES.pop(n)
             if n in ORACLES:
                 ORACLES[n] = ORACLES.pop(n)
+
+
+def archive_state(root: str | Path) -> tuple[dict[str, int], int]:
+    """(newest driver round per checked query, newest archive round).
+
+    Reads the driver's ``CORRECTNESS_r{N}.json`` archives under ``root``;
+    with none present both are empty (``({}, 0)``).
+    """
+    latest: dict[str, int] = {}
+    newest = 0
+    for path in sorted(Path(root).glob("CORRECTNESS_r*.json")):
+        rnd = int(path.stem.split("_r")[1])
+        newest = max(newest, rnd)
+        for q in json.loads(path.read_text()):
+            latest[q] = max(latest.get(q, 0), rnd)
+    return latest, newest
+
+
+def driver_window(
+    names: Iterable[str],
+    latest: dict[str, int],
+    changed: dict[str, int],
+    n: int = 50,
+) -> list[str]:
+    """The ``n`` queries the next driver run should check, in seat order.
+
+    1. queries with no driver row (new registrations);
+    2. queries in ``changed`` whose newest driver row is at or before their
+       entry — the archived hash predates the code that ships, and the
+       entry expires by itself once the driver re-checks the query;
+    3. the rest.
+
+    Within a group the stalest newest row goes first; ties break on name.
+    Pure: no Spark, no I/O. Each round seats the
+    stalest queries, so a query waits about ``ceil(len(names) / n)`` rounds
+    between driver checks, one more when a round's ``changed`` seats push
+    the stale fill back.
+    """
+
+    def seat(q: str) -> tuple[int, int, str]:
+        last = latest.get(q)
+        if last is None:
+            return (0, 0, q)
+        if last <= changed.get(q, -1):
+            return (1, last, q)
+        return (2, last, q)
+
+    return sorted(names, key=seat)[:n]

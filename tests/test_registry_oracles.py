@@ -56,15 +56,19 @@ def test_h_query_outputs_are_canon_safe(spark, sf_dir):
 
 
 def test_driver_window_holds_rotation_queries():
-    """The driver checks the first 50 registered queries in dict order; the
-    active r12 rotation (the r11-session-2 re-pack: the seven late
-    registrations + the cascade re-seats — all 50 seats H rows) must be
-    exactly that window."""
-    import columnar_aware_dedup_spark as pkg
+    """The driver checks the first 50 registered queries in dict order;
+    they must be the window computed from the committed archives, and it
+    must seat every CHANGED query."""
+    from pathlib import Path
 
-    names = list(_QUERIES)
-    assert len(pkg.DRIVER_PRIORITY) == 50
-    assert names[: len(pkg.ROTATION_R12)] == pkg.ROTATION_R12
+    import columnar_aware_dedup_spark as pkg
+    from columnar_aware_dedup_spark import registry
+
+    root = Path(__file__).resolve().parent.parent
+    latest, _newest = registry.archive_state(root)
+    window = registry.driver_window(list(_QUERIES), latest, pkg.CHANGED)
+    assert list(_QUERIES)[:50] == window
+    assert set(pkg.CHANGED) <= set(window)
 
 
 #: every rows-only (no-oracle) query must be on this list with its reason —
@@ -109,119 +113,6 @@ def test_rows_only_queries_are_allowlisted():
     )
 
 
-def _driver_checked_queries() -> set[str]:
-    import json
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    checked: set[str] = set()
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        checked |= set(json.loads(path.read_text()))
-    return checked
-
-
-def test_rotation_r5_is_a_valid_window():
-    """Historical record: ROTATION_R5 (the r05 active window) stays a
-    well-formed 50-name window. Never-checked coverage moved to the ACTIVE
-    window's test (r06) when R6 took over — r06 registrations are not
-    R5's job."""
-    import columnar_aware_dedup_spark as pkg
-
-    assert len(pkg.ROTATION_R5) == 50
-    assert len(set(pkg.ROTATION_R5)) == 50
-    assert set(pkg.ROTATION_R5) <= set(_QUERIES)
-
-
-def test_rotation_r6_is_a_valid_window():
-    """Historical record: ROTATION_R6 (the r06 active window) stays a
-    well-formed 50-name window. Never-checked coverage moved to the ACTIVE
-    window's test (r07) when R7 took over — r07 registrations are not
-    R6's job."""
-    import columnar_aware_dedup_spark as pkg
-
-    assert len(pkg.ROTATION_R6) == 50
-    assert len(set(pkg.ROTATION_R6)) == 50
-    assert set(pkg.ROTATION_R6) <= set(_QUERIES)
-
-
-def _latest_driver_round() -> tuple[dict[str, int], int]:
-    """(latest round per checked query, newest archive round)."""
-    import json
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    latest: dict[str, int] = {}
-    newest = 0
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        rnd = int(path.stem.split("_r")[1])
-        newest = max(newest, rnd)
-        for q in json.loads(path.read_text()):
-            latest[q] = max(latest.get(q, 0), rnd)
-    return latest, newest
-
-
-def test_rotation_r7_is_a_valid_window():
-    """Historical record: ROTATION_R7 (the r07 active window) stays a
-    well-formed 50-name window. Never-checked coverage moved to the ACTIVE
-    window's test (r08) when R8 took over — r08 registrations are not
-    R7's job."""
-    import columnar_aware_dedup_spark as pkg
-
-    assert len(pkg.ROTATION_R7) == 50
-    assert len(set(pkg.ROTATION_R7)) == 50
-    assert set(pkg.ROTATION_R7) <= set(_QUERIES)
-
-
-def test_overdue_queries_are_scheduled():
-    """MAXIMUM-STALENESS invariant (VERDICT r05 brief #3): never-checked
-    coverage alone let 21 queries sit on four-round-old driver rows. Any
-    registered query whose newest driver row is 3+ rounds behind the newest
-    archive must appear in the active or next prepared rotation window, so
-    it is re-verified within two driver runs. ROLLING (r06): the scheduled
-    set is derived from the archives — the window the next driver run will
-    check (ROTATION_R{newest+1}) plus the one after it — so the test keeps
-    arming as rounds advance instead of rotting on a hardcoded pair, and a
-    round that forgets to prepare its forward window fails here the moment
-    the previous archive lands."""
-    import columnar_aware_dedup_spark as pkg
-
-    latest, newest = _latest_driver_round()
-    overdue = {
-        q for q in _QUERIES if latest.get(q, 0) <= newest - 3
-    }
-    scheduled: set[str] = set()
-    for n in (newest + 1, newest + 2):
-        scheduled |= set(getattr(pkg, f"ROTATION_R{n}", []))
-    unscheduled = overdue - scheduled
-    assert not unscheduled, (
-        f"{len(unscheduled)} queries are 3+ driver rounds stale and in "
-        f"neither ROTATION_R{newest + 1} nor ROTATION_R{newest + 2}: "
-        f"{sorted(unscheduled)}"
-    )
-
-
-def test_rotation_r8_is_prepared_and_fresh():
-    """ROTATION_R8 (prepared two ahead) must be 50 unique registered names;
-    once CORRECTNESS_r07.json lands, it must also cover every query still
-    lacking a driver row."""
-    from pathlib import Path
-
-    import columnar_aware_dedup_spark as pkg
-
-    assert len(pkg.ROTATION_R8) == 50
-    assert len(set(pkg.ROTATION_R8)) == 50
-    assert set(pkg.ROTATION_R8) <= set(_QUERIES)
-
-    root = Path(__file__).resolve().parent.parent
-    if (root / "CORRECTNESS_r07.json").exists() and not (root / "CORRECTNESS_r08.json").exists():
-        never_checked = set(_QUERIES) - _driver_checked_queries()
-        missing = never_checked - set(pkg.ROTATION_R8)
-        assert not missing, (
-            "queries with no driver row must be in the prepared r08 "
-            f"window: {sorted(missing)}"
-        )
-
-
 def test_coverage_doc_counts_match_registry():
     """VERDICT r05 "What's wrong" #3: COVERAGE.md's header counts drifted
     from the registry twice (said 164/153H/11R while the registry held
@@ -244,204 +135,3 @@ def test_coverage_doc_counts_match_registry():
     assert total == len(_QUERIES), (total, len(_QUERIES))
     assert h == len(_ORACLES), (h, len(_ORACLES))
     assert r == len(_QUERIES) - len(_ORACLES), (r, len(_QUERIES) - len(_ORACLES))
-
-
-def test_rotation_r9_is_prepared_and_fresh():
-    """ROTATION_R9 (prepared three ahead) must be 50 unique registered
-    names; once CORRECTNESS_r08.json lands, it must also cover every query
-    still lacking a driver row."""
-    from pathlib import Path
-
-    import columnar_aware_dedup_spark as pkg
-
-    assert len(pkg.ROTATION_R9) == 50
-    assert len(set(pkg.ROTATION_R9)) == 50
-    assert set(pkg.ROTATION_R9) <= set(_QUERIES)
-
-    root = Path(__file__).resolve().parent.parent
-    if (root / "CORRECTNESS_r08.json").exists() and not (root / "CORRECTNESS_r09.json").exists():
-        never_checked = set(_QUERIES) - _driver_checked_queries()
-        missing = never_checked - set(pkg.ROTATION_R9)
-        assert not missing, (
-            "queries with no driver row must be in the prepared r09 "
-            f"window: {sorted(missing)}"
-        )
-
-
-def test_rotation_r10_is_prepared_and_fresh():
-    """ROTATION_R10 (prepared four ahead) must be 50 unique registered
-    names; once CORRECTNESS_r09.json lands, it must also cover every query
-    still lacking a driver row."""
-    from pathlib import Path
-
-    import columnar_aware_dedup_spark as pkg
-
-    assert len(pkg.ROTATION_R10) == 50
-    assert len(set(pkg.ROTATION_R10)) == 50
-    assert set(pkg.ROTATION_R10) <= set(_QUERIES)
-
-    root = Path(__file__).resolve().parent.parent
-    if (root / "CORRECTNESS_r09.json").exists() and not (root / "CORRECTNESS_r10.json").exists():
-        never_checked = set(_QUERIES) - _driver_checked_queries()
-        missing = never_checked - set(pkg.ROTATION_R10)
-        assert not missing, (
-            "queries with no driver row must be in the prepared r10 "
-            f"window: {sorted(missing)}"
-        )
-
-def test_rotation_r11_is_prepared_and_fresh():
-    """ROTATION_R11 (prepared four ahead, derived r07) must be 50 unique
-    registered names; once CORRECTNESS_r10.json lands, it must also cover
-    every query still lacking a driver row."""
-    from pathlib import Path
-
-    import columnar_aware_dedup_spark as pkg
-
-    assert len(pkg.ROTATION_R11) == 50
-    assert len(set(pkg.ROTATION_R11)) == 50
-    assert set(pkg.ROTATION_R11) <= set(_QUERIES)
-
-    root = Path(__file__).resolve().parent.parent
-    if (root / "CORRECTNESS_r10.json").exists() and not (root / "CORRECTNESS_r11.json").exists():
-        never_checked = set(_QUERIES) - _driver_checked_queries()
-        missing = never_checked - set(pkg.ROTATION_R11)
-        assert not missing, (
-            "queries with no driver row must be in the prepared r11 "
-            f"window: {sorted(missing)}"
-        )
-
-
-def test_rotation_r12_is_prepared_and_fresh():
-    """ROTATION_R12 (prepared five ahead, derived r07 session 2) must be
-    50 unique registered names; once CORRECTNESS_r11.json lands, it must
-    also cover every query still lacking a driver row."""
-    from pathlib import Path
-
-    import columnar_aware_dedup_spark as pkg
-
-    assert len(pkg.ROTATION_R12) == 50
-    assert len(set(pkg.ROTATION_R12)) == 50
-    assert set(pkg.ROTATION_R12) <= set(_QUERIES)
-
-    root = Path(__file__).resolve().parent.parent
-    if (root / "CORRECTNESS_r11.json").exists() and not (root / "CORRECTNESS_r12.json").exists():
-        never_checked = set(_QUERIES) - _driver_checked_queries()
-        missing = never_checked - set(pkg.ROTATION_R12)
-        assert not missing, (
-            "queries with no driver row must be in the prepared r12 "
-            f"window: {sorted(missing)}"
-        )
-
-
-def test_rotation_r13_is_prepared_and_fresh():
-    """ROTATION_R13 (prepared five ahead, derived r08) must be 50 unique
-    registered names; once CORRECTNESS_r12.json lands, it must also cover
-    every query still lacking a driver row."""
-    from pathlib import Path
-
-    import columnar_aware_dedup_spark as pkg
-
-    assert len(pkg.ROTATION_R13) == 50
-    assert len(set(pkg.ROTATION_R13)) == 50
-    assert set(pkg.ROTATION_R13) <= set(_QUERIES)
-
-    root = Path(__file__).resolve().parent.parent
-    if (root / "CORRECTNESS_r12.json").exists() and not (root / "CORRECTNESS_r13.json").exists():
-        never_checked = set(_QUERIES) - _driver_checked_queries()
-        missing = never_checked - set(pkg.ROTATION_R13)
-        assert not missing, (
-            "queries with no driver row must be in the prepared r13 "
-            f"window: {sorted(missing)}"
-        )
-
-
-def test_rotation_r14_is_prepared_and_fresh():
-    """ROTATION_R14 (prepared six ahead, simulator-derived in r08
-    session 3) must be 50 unique registered names; once
-    CORRECTNESS_r13.json lands, it must also cover every query still
-    lacking a driver row."""
-    from pathlib import Path
-
-    import columnar_aware_dedup_spark as pkg
-
-    assert len(pkg.ROTATION_R14) == 50
-    assert len(set(pkg.ROTATION_R14)) == 50
-    assert set(pkg.ROTATION_R14) <= set(_QUERIES)
-
-    root = Path(__file__).resolve().parent.parent
-    if (root / "CORRECTNESS_r13.json").exists() and not (root / "CORRECTNESS_r14.json").exists():
-        never_checked = set(_QUERIES) - _driver_checked_queries()
-        missing = never_checked - set(pkg.ROTATION_R14)
-        assert not missing, (
-            "queries with no driver row must be in the prepared r14 "
-            f"window: {sorted(missing)}"
-        )
-
-
-def test_rotation_r15_is_prepared_and_fresh():
-    """ROTATION_R15 (prepared six ahead, derived by the r09 simulator
-    repair run) must be 50 unique registered names; once
-    CORRECTNESS_r14.json lands, it must also cover every query still
-    lacking a driver row."""
-    from pathlib import Path
-
-    import columnar_aware_dedup_spark as pkg
-
-    assert len(pkg.ROTATION_R15) == 50
-    assert len(set(pkg.ROTATION_R15)) == 50
-    assert set(pkg.ROTATION_R15) <= set(_QUERIES)
-
-    root = Path(__file__).resolve().parent.parent
-    if (root / "CORRECTNESS_r14.json").exists() and not (root / "CORRECTNESS_r15.json").exists():
-        never_checked = set(_QUERIES) - _driver_checked_queries()
-        missing = never_checked - set(pkg.ROTATION_R15)
-        assert not missing, (
-            "queries with no driver row must be in the prepared r15 "
-            f"window: {sorted(missing)}"
-        )
-
-
-def test_rotation_r16_is_prepared_and_fresh():
-    """ROTATION_R16 (prepared seven ahead, derived by the r09 session-2
-    simulator run) must be 50 unique registered names; once
-    CORRECTNESS_r15.json lands, it must also cover every query still
-    lacking a driver row."""
-    from pathlib import Path
-
-    import columnar_aware_dedup_spark as pkg
-
-    assert len(pkg.ROTATION_R16) == 50
-    assert len(set(pkg.ROTATION_R16)) == 50
-    assert set(pkg.ROTATION_R16) <= set(_QUERIES)
-
-    root = Path(__file__).resolve().parent.parent
-    if (root / "CORRECTNESS_r15.json").exists() and not (
-        root / "CORRECTNESS_r16.json"
-    ).exists():
-        never_checked = set(_QUERIES) - _driver_checked_queries()
-        missing = never_checked - set(pkg.ROTATION_R16)
-        assert not missing, (
-            "queries with no driver row must be in the prepared r16 "
-            f"window: {sorted(missing)}"
-        )
-
-
-def test_schema_changed_queries_seat_in_next_window():
-    """VERDICT r08 "Next round" #3: a query whose output contract changed
-    since its newest driver row must hold a seat in the NEXT active
-    window — the driver's archived hash no longer describes the code
-    that ships, so its re-confirmation cannot wait out a multi-window
-    rotation. SCHEMA_CHANGED is keyed by the round whose window must
-    re-check; entries for already-landed rounds are historical record."""
-    import columnar_aware_dedup_spark as pkg
-
-    _latest, newest = _latest_driver_round()
-    for rnd, names in pkg.SCHEMA_CHANGED.items():
-        if rnd != newest + 1:
-            continue
-        window = set(getattr(pkg, f"ROTATION_R{rnd}"))
-        missing = sorted(set(names) - window)
-        assert not missing, (
-            f"schema-changed queries not seated in ROTATION_R{rnd}: "
-            f"{missing}"
-        )
