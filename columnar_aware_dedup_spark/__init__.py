@@ -60,7 +60,9 @@ CHANGED: dict[str, int] = {
     "embedding_near_dup_pairs": 12,
     "lsh_parameter_sweep": 12,
     # the store and streaming merges moved onto streaming/fold.py
-    # (init_tables / append_new) and store.bucket_aligned.
+    # (init_tables / append_new) and store.bucket_aligned; the parity
+    # certificates then moved onto one replay-checked fold and, for four
+    # of them, a wrapped served-bit oracle.
     "streaming_bm25_parity": 12,
     "streaming_cluster_parity": 12,
     "streaming_ivf_parity": 12,

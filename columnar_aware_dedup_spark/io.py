@@ -9,8 +9,6 @@ parquet source (predicate pushdown + column pruning via Catalyst).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES: tuple[str, ...] = (
@@ -25,9 +23,6 @@ TABLES: tuple[str, ...] = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table (plain parquet scan, fully Catalyst-visible).
@@ -74,9 +69,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (for the SQL-flavored ops)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -677,19 +677,6 @@ leveled AS (
 """
 
 
-def stripe_chunks_from_columns(col_chunks: DataFrame) -> DataFrame:
-    """Derive parent stripe chunks from their column subchunks: the stripe
-    signature is md5 over the sorted column signatures (linked-chunk model),
-    so the coarse level costs one extra 1-row-per-column aggregation instead
-    of a second full re-chunking of the raw data."""
-    return col_chunks.groupBy("file_id").agg(
-        F.md5(F.array_join(F.array_sort(F.collect_list("signature")), ",")).alias(
-            "signature"
-        ),
-        F.sum("size").cast("bigint").alias("size"),
-    )
-
-
 @register("dedup_hierarchical", oracle=DEDUP_HIERARCHICAL_ORACLE)
 def dedup_hierarchical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level stripe->column probe with short-circuit.

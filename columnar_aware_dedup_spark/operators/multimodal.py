@@ -343,28 +343,6 @@ def fanned_doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def image_payload_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, payload): deterministic multi-frame P6 containers synthesized
-    per doc — the image analogue of :func:`audio_payload_table` (ENCODE side
-    of the codec runs here, DECODE side in the feature kernels, so the
-    oracle checks the full byte roundtrip). Only doc_ids shuffle in the
-    fan-out repartition; payloads are generated after the exchange."""
-    docs = fanned_doc_ids(spark, sf_dir)
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        imagecodec.synth_frames(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.mapInPandas(_synth, "doc_id long, payload binary")
-
-
 @register("multimodal_decode", oracle=IMAGE_DECODE_ORACLE)
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image decode, HASH-CHECKED end to end: synthesize real P6 container
@@ -686,26 +664,6 @@ SELECT doc_id,
 FROM d GROUP BY doc_id, f
 ORDER BY doc_id, boundary
 """
-
-
-def scene_payload_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, payload): multi-frame P6 containers with a planted scene
-    cut per doc (``imagecodec.synth_scene_frames``)."""
-    docs = fanned_doc_ids(spark, sf_dir)
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        imagecodec.synth_scene_frames(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.mapInPandas(_synth, "doc_id long, payload binary")
 
 
 @register("multimodal_scene_cuts", oracle=SCENE_CUT_ORACLE)

@@ -1,89 +1,48 @@
 """Registry-visible certificates for the streaming index-maintenance story.
 
-The seven streaming families (``streaming/*.py``) are pytest-proven via
-two-waves-plus-replay parity, but until r07 none had a DRIVER row — the
-judge saw the streaming story only through the local suite (VERDICT r06
-"Next round" #7). These queries put hash-checked driver certificates on the
-two families whose served state is batch-expressible in ANSI SQL:
+Each ``streaming_*_parity`` query folds the fixture corpus into one
+maintained index family (``streaming/*.py`` and ``sources/store.py``),
+then serves a batch query's result from the maintained tables alone. It is
+hash-checked against the SAME DuckDB oracle as that batch query, so the
+maintained index must be indistinguishable from a corpus recompute.
 
-* ``streaming_lsh_parity`` — fold the corpus into the maintained LSH band
-  index in two waves (plus a wave-1 REPLAY, so at-least-once delivery is
-  part of the certified surface), then serve the candidate-pair table from
-  the index. Hash-checked against the SAME DuckDB oracle as the batch
-  ``minhash_near_dup``: the maintained index must be indistinguishable
-  from a corpus re-hash.
-* ``streaming_spans_parity`` — the same waves folded into the maintained
-  substring-span index (``streaming/spans.py``; replay must append zero
-  rows), then the per-doc duplicated-span verdicts served from the index.
-  Hash-checked against the batch ``dup_span_fraction`` corpus-scan oracle.
-* ``streaming_store_parity`` — snapshot A's chunk signatures folded into
-  the persisted bucketed signature store (``sources/store.py``) in two
-  waves plus a replay (must append zero), then the FLAGSHIP byte
-  accounting served by probing that table. Hash-checked against the
-  ``dedup_hit_miss`` oracle: incremental store maintenance must be
-  indistinguishable from the in-plan snapshot derivation.
-* ``streaming_cluster_parity`` — the same waves folded through the
-  incremental cluster maintainer (``streaming/clusters.py``: each wave's
-  delta pairs probe the band index, star contraction runs on delta +
-  affected clusters only, labels swap atomically; the replay fold must
-  report zero docs). Served verdict table hash-checked against the batch
-  ``near_dup_clusters`` recursive-closure oracle: folding deltas against
-  label-edges must equal re-clustering the corpus, because min-id labels
-  are associative under edge union.
+Every family folds through one replay-checked fold, :func:`_certify`: the
+rows split into two deterministic deltas by key parity; wave 1 folds, wave
+1 is REPLAYED and must append nothing, then wave 2 folds. At-least-once
+delivery is therefore part of the certified surface. It is load-bearing,
+not tidy: CMS cells and BM25 tf/N/avgdl are additive, so a double-counted
+replay would silently shift every served value. One run covers the
+delta-vs-history, delta-internal and replay paths.
 
-r08 (VERDICT r07 "Next round" #6) adds the three families the r07 batch
-left pytest-only:
+Four certificates (the three stats-key legs and winnowing) serve results
+whose oracle is input-identical between a maintained-table serve and an
+in-plan recompute. Their rows carry a ``served_from_index`` bit
+(:func:`_served`): TRUE only when every file the serve plan scanned lives
+under the maintained warehouse tables. Their oracle restates it TRUE
+(:func:`_served_oracle`), so an in-plan substitute fails the row (flip
+tests in ``tests/test_streaming.py`` and ``tests/test_winnowing.py``).
 
-* ``streaming_sketch_parity`` — the corpus folded into the maintained CMS
-  cell table (``streaming/sketches.py``) in two waves plus a replay (CMS
-  addition is NOT idempotent, so the zero-new-docs replay check is
-  load-bearing here, not merely tidy), then the ``token_heavy_hitters_cms``
-  report served with every estimate answered from the maintained cells.
-* ``streaming_ivf_parity`` — the embeddings folded into the cell-partitioned
-  IVF index directory (``streaming/ivf.py``, frozen centroids, broadcast
-  argmin per delta) in two waves plus a replay, then the ``ann_ivf_topk``
-  ranking served from the index via the partition-pruned
-  ``ann_ivf_topk_from_index`` path.
-* ``streaming_pq_parity`` — the embeddings encoded into the persisted PQ
-  code table (``streaming/pqcodes.py``, frozen codebooks) in two waves plus
-  a replay, then the ``ann_pq_topk`` ADC ranking served from the codes
-  alone via ``ann_pq_topk_from_index``.
+Scale shape: this is the daily-crawl contract at 100 TB. History is never
+re-hashed or re-clustered; each wave pays only its own derivation, its
+bucket-keyed probe and, for clusters, a star contraction bounded by the
+affected component set.
 
-r09 (VERDICT r08 "Next round" #1) adds the eighth family — the round-8
-registration the judge flagged as the only one without a driver row:
-
-* ``streaming_bm25_parity`` — the corpus folded into the five-table BM25
-  index (``streaming/bm25.py``: term-bucketed postings, doc registry,
-  per-attempt stats partials, attempts manifest, commits — the
-  commit-marker protocol across multiple plain-parquet tables) in two
-  waves plus a replay (must index zero docs: a double-counted replay
-  would inflate tf, N and avgdl permanently), then the
-  ``bm25_doc_ranking`` top-k served from the maintained index alone via
-  the bucket-pruned ``bm25_from_index`` path.
-* ``streaming_rrf_parity`` — BOTH halves of the hybrid maintained
-  incrementally: the same two-wave BM25 fold plus the doc-vector table's
-  single-append fold (``merge_doc_vectors_delta``, each with its own
-  replay-zero check), then the ``hybrid_rrf_fusion`` ranking served
-  entirely from the two persisted indexes through ``rrf_from_index`` —
-  the certificate that continuous maintenance of the full retrieval
-  stack is indistinguishable from a corpus recompute.
-
-Scale shape: this is the daily-crawl contract at 100 TB — the history is
-never re-hashed and never re-clustered; each wave pays only its own band
-derivation, its bucket-keyed probe, and a star contraction bounded by the
-affected component set. The fixture waves are halves of the corpus purely
-so the certificate covers delta-vs-history, delta-internal, AND replay
-paths in one run.
+Each merge is looked up at call time inside its ``_certify`` lambda, never
+bound at import, so wrappers installed on the maintainer modules (the
+merge tracing in ``perfbench/``) see every call.
 
 Reference parity: the reference maintains its chunk-signature stores
 incrementally across transfers — the receiver's store fields live for the
 whole socket session (``orc/net/StripePlusColumnORCReceiver.java:41-44``)
 and the server's receive loop keeps serving files against them
 (``net/SpeedupServer.java:66-81``); these certificates are the engine's
-equivalent claim for its near-dup index family.
+equivalent claim for its index families.
 """
 
 from __future__ import annotations
+
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -92,185 +51,179 @@ from columnar_aware_dedup_spark.io import table
 from columnar_aware_dedup_spark.operators.clustering import (
     NEAR_DUP_CLUSTERS_ORACLE,
 )
-from columnar_aware_dedup_spark.operators.dedup import DEDUP_HIT_MISS_ORACLE
-from columnar_aware_dedup_spark.operators.pq import ANN_PQ_ORACLE
+from columnar_aware_dedup_spark.operators.dedup import (
+    DEDUP_HIT_MISS_ORACLE,
+    incoming_and_store_chunks,
+    transfer_rollup,
+)
+from columnar_aware_dedup_spark.operators.pq import (
+    ANN_PQ_ORACLE,
+    ann_pq_topk_from_index,
+    fixed_codebooks,
+)
 from columnar_aware_dedup_spark.operators.retrieval import (
     BM25_ORACLE,
     RRF_ORACLE,
+    bm25_from_index,
+    init_bm25_tables,
+    init_doc_vector_table,
+    rrf_from_index,
 )
-from columnar_aware_dedup_spark.operators.selection import TOKEN_CMS_ORACLE
-from columnar_aware_dedup_spark.operators.similarity import ANN_IVF_ORACLE
+from columnar_aware_dedup_spark.operators.selection import (
+    TOKEN_CMS_ORACLE,
+    heavy_hitters_from_cells,
+)
+from columnar_aware_dedup_spark.operators.similarity import (
+    ANN_IVF_ORACLE,
+    ann_ivf_topk_from_index,
+)
 from columnar_aware_dedup_spark.operators.text import (
     DUP_SPAN_ORACLE,
     MINHASH_NEAR_DUP_ORACLE,
+)
+from columnar_aware_dedup_spark.operators.winnowing import (
+    WINNOW_OVERLAP_ORACLE,
 )
 from columnar_aware_dedup_spark.operators.zonemap import (
     ORC_COLPRUNE_ORACLE,
     ORC_STATS_PRUNED_ORACLE,
     PARQUET_STATS_PRUNED_ORACLE,
+    _column_fallback_probe,
+    _orc_incoming_stats,
+    _parquet_incoming_stats,
+    _stats_pruned_probe,
+    orc_strmod_two_level_incoming,
+    orc_two_level_table,
+    parquet_rg_stats_key_table,
+    stats_pruned_certificate,
+    stripe_stats_key_table,
 )
 from columnar_aware_dedup_spark.registry import register
+from columnar_aware_dedup_spark.sources import store
+from columnar_aware_dedup_spark.sources.orcfixtures import (
+    orc_fixture_dirs,
+    parquet_fixture_dirs,
+)
+from columnar_aware_dedup_spark.streaming import bm25 as sbm25
+from columnar_aware_dedup_spark.streaming import (
+    clusters,
+    fold,
+    ivf,
+    lsh,
+    pqcodes,
+    sketches,
+    spans,
+    statskeys,
+    winnow,
+)
 
 
-def _waves(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """The corpus split into two deterministic crawl deltas by id parity.
-    Wave 2 is the complement (``!= 0``), not ``== 1`` — Spark's ``%``
-    returns -1 for negative odd ids, so an equality test would silently
-    drop such docs from both waves and fail the full-corpus parity check
-    (the doc_id schema is a plain long with no non-negativity contract)."""
-    docs = table(spark, sf_dir, "documents")
-    return (
-        docs.filter(F.col("doc_id") % 2 == 0),
-        docs.filter(F.col("doc_id") % 2 != 0),
-    )
+def _certify(
+    merge: Callable[[DataFrame], int], rows: DataFrame, key: str
+) -> None:
+    """Fold ``rows`` through ``merge`` in two waves split on ``key``
+    parity, with a wave-1 replay between them that must append nothing.
+
+    Wave 2 is the complement (``!= 0``), not ``== 1``: Spark's ``%``
+    returns -1 for negative odd keys, so an equality test would drop them
+    from both waves (no key column promises non-negative ids)."""
+    wave1 = rows.filter(F.col(key) % 2 == 0)
+    wave2 = rows.filter(F.col(key) % 2 != 0)
+    merge(wave1)
+    replayed = merge(wave1)
+    if replayed:
+        raise AssertionError(
+            f"wave-1 replay appended {replayed} rows; merge is not idempotent"
+        )
+    merge(wave2)
 
 
 @register("streaming_lsh_parity", oracle=MINHASH_NEAR_DUP_ORACLE)
 def streaming_lsh_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve ``minhash_near_dup`` from the two-wave maintained band index
-    (module doc). The wave-1 replay between the folds must append zero
-    rows — at-least-once delivery is part of what this row certifies."""
-    from columnar_aware_dedup_spark.streaming import lsh
-
-    band_tbl = lsh.init_band_table(spark, "parity_lsh_bands")
-    wave1, wave2 = _waves(spark, sf_dir)
-    lsh.merge_bands(spark, wave1, band_tbl)
-    replayed = lsh.merge_bands(spark, wave1, band_tbl)
-    if replayed:
-        raise AssertionError(
-            f"wave-1 replay appended {replayed} rows; merge is not idempotent"
-        )
-    lsh.merge_bands(spark, wave2, band_tbl)
-    return lsh.near_dup_pairs_from_index(spark, band_tbl)
+    """Serve ``minhash_near_dup``'s candidate pairs from the maintained
+    LSH band index."""
+    tbl = lsh.init_band_table(spark, "parity_lsh_bands")
+    _certify(
+        lambda d: lsh.merge_bands(spark, d, tbl),
+        table(spark, sf_dir, "documents"),
+        "doc_id",
+    )
+    return lsh.near_dup_pairs_from_index(spark, tbl)
 
 
 @register("streaming_spans_parity", oracle=DUP_SPAN_ORACLE)
 def streaming_spans_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve ``dup_span_fraction`` from the two-wave maintained span index
-    (module doc). The wave-1 replay between the folds must append zero
-    rows — the indexer's doc-granular anti-join discipline is part of what
-    this row certifies."""
-    from columnar_aware_dedup_spark.streaming import spans
-
-    span_tbl = spans.init_span_table(spark, "parity_span_index")
-    wave1, wave2 = _waves(spark, sf_dir)
-    spans.merge_spans(spark, wave1, span_tbl)
-    replayed = spans.merge_spans(spark, wave1, span_tbl)
-    if replayed:
-        raise AssertionError(
-            f"wave-1 replay appended {replayed} rows; merge is not idempotent"
-        )
-    spans.merge_spans(spark, wave2, span_tbl)
-    return spans.dup_fraction_from_index(spark, span_tbl)
+    """Serve ``dup_span_fraction``'s per-doc verdicts from the maintained
+    substring-span index; the replay certifies the indexer's doc-granular
+    anti-join."""
+    tbl = spans.init_span_table(spark, "parity_span_index")
+    _certify(
+        lambda d: spans.merge_spans(spark, d, tbl),
+        table(spark, sf_dir, "documents"),
+        "doc_id",
+    )
+    return spans.dup_fraction_from_index(spark, tbl)
 
 
 @register("streaming_cluster_parity", oracle=NEAR_DUP_CLUSTERS_ORACLE)
 def streaming_cluster_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve ``near_dup_clusters`` from the incrementally maintained label
-    table after two delta folds plus a replay fold (module doc): the
-    certificate that the maintainer's fold-never-recluster path reaches
-    the same fixed point as the batch star contraction over the whole
-    corpus."""
-    from columnar_aware_dedup_spark.streaming import clusters, lsh
-
+    table: each wave's delta pairs probe the band index and star
+    contraction runs on delta + affected clusters only. Folding deltas
+    against label edges must reach the batch fixed point, because min-id
+    labels are associative under edge union."""
     band_tbl = lsh.init_band_table(spark, "parity_cluster_bands")
     label_tbl, done_tbl = "parity_cluster_labels", "parity_cluster_done"
     clusters.init_cluster_tables(spark, label_tbl, done_tbl)
-    wave1, wave2 = _waves(spark, sf_dir)
-    clusters.merge_clusters(spark, wave1, band_tbl, label_tbl, done_tbl)
-    refolded = clusters.merge_clusters(
-        spark, wave1, band_tbl, label_tbl, done_tbl
+    _certify(
+        lambda d: clusters.merge_clusters(
+            spark, d, band_tbl, label_tbl, done_tbl
+        ),
+        table(spark, sf_dir, "documents"),
+        "doc_id",
     )
-    if refolded:
-        raise AssertionError(
-            f"wave-1 replay folded {refolded} docs; merge is not idempotent"
-        )
-    clusters.merge_clusters(spark, wave2, band_tbl, label_tbl, done_tbl)
     return clusters.clusters_from_index(spark, label_tbl)
 
 
 @register("streaming_store_parity", oracle=DEDUP_HIT_MISS_ORACLE)
 def streaming_store_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve the FLAGSHIP byte accounting from the persisted bucketed
-    signature store after two incremental merges plus a replay: snapshot
-    A's chunks fold into ``sources/store.py``'s signature-bucketed table in
-    two deterministic waves (file-id parity), the wave-1 replay must append
-    ZERO rows (``merge_into_store``'s anti-join-under-lock discipline), and
-    the full chunk table then probes the SERVED table via ``probe_store`` —
-    whose plan shuffles only the incoming side, the property that makes
-    continuous dedup affordable at 100 TB. Hash-checked against the SAME
-    DuckDB oracle as ``dedup_hit_miss``: the incrementally maintained store
-    must be indistinguishable from the in-plan snapshot-A derivation. This
-    puts a driver row on the store-maintenance story itself — the core
-    object every other streaming index family imitates."""
-    from columnar_aware_dedup_spark.operators.dedup import (
-        incoming_and_store_chunks,
-        transfer_rollup,
-    )
-    from columnar_aware_dedup_spark.sources import store as store_mod
-    from columnar_aware_dedup_spark.streaming import fold
-
-    store_tbl = fold.init_tables(
+    signature store: snapshot A's chunks fold in by file-id parity
+    (``merge_into_store``'s anti-join-under-lock discipline), then the full
+    chunk table probes the served table via ``probe_store``, whose plan
+    shuffles only the incoming side. This is the store-maintenance story
+    itself — the object every other index family imitates."""
+    tbl = fold.init_tables(
         spark,
         "parity_sig_store",
         {"": ("signature string, chunk_type string, size bigint", True)},
-        store_mod.DEFAULT_BUCKETS,
+        store.DEFAULT_BUCKETS,
         "signature",
     )
-
     # the flagship's own chunk/snapshot derivation — reusing it keeps this
     # certificate pinned to whatever dedup_hit_miss actually probes
     chunks, snap_a = incoming_and_store_chunks(spark, sf_dir)
-    wave1 = snap_a.filter(F.col("file_id") % 2 == 0)
-    wave2 = snap_a.filter(F.col("file_id") % 2 != 0)
-    store_mod.merge_into_store(spark, wave1, store_tbl)
-    replayed = store_mod.merge_into_store(spark, wave1, store_tbl)
-    if replayed:
-        raise AssertionError(
-            f"wave-1 replay appended {replayed} rows; merge is not idempotent"
-        )
-    store_mod.merge_into_store(spark, wave2, store_tbl)
-    return transfer_rollup(store_mod.probe_store(spark, chunks, store_tbl))
-
-
-def _vector_waves(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """The embeddings split into two deterministic deltas by id parity
-    (complement form for the odd wave, same reasoning as :func:`_waves`)."""
-    e = table(spark, sf_dir, "embeddings")
-    return (
-        e.filter(F.col("vec_id") % 2 == 0),
-        e.filter(F.col("vec_id") % 2 != 0),
+    _certify(
+        lambda d: store.merge_into_store(spark, d, tbl), snap_a, "file_id"
     )
+    return transfer_rollup(store.probe_store(spark, chunks, tbl))
 
 
 @register("streaming_sketch_parity", oracle=TOKEN_CMS_ORACLE)
 def streaming_sketch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve ``token_heavy_hitters_cms`` from the two-wave maintained CMS
-    cell table (module doc). CMS cells ADD — a double-counted replay would
-    silently inflate every estimate, so the zero-new-docs replay assertion
-    is the certificate's core claim, and hash equality with the batch
-    oracle proves the maintained cells equal a corpus re-sketch
-    cell-for-cell."""
-    from columnar_aware_dedup_spark.operators.selection import (
-        heavy_hitters_from_cells,
-    )
-    from columnar_aware_dedup_spark.streaming import sketches
-
+    """Serve ``token_heavy_hitters_cms`` with every estimate answered from
+    the maintained CMS cells; hash equality proves the cells equal a
+    corpus re-sketch cell for cell."""
     prefix = "parity_sketch"
     sketches.init_sketch_tables(spark, prefix)
-    wave1, wave2 = _waves(spark, sf_dir)
-    # sweep=False: init just zeroed all five tables, so there is no
-    # debris to reclaim (r11 — the _fold_bm25_waves argument; debris
-    # handling stays crash-injection-tested in tests/test_streaming.py)
-    sketches.merge_sketches(spark, wave1, prefix, sweep=False)
-    replayed = sketches.merge_sketches(spark, wave1, prefix, sweep=False)
-    if replayed:
-        raise AssertionError(
-            f"wave-1 replay absorbed {replayed} docs; merge is not idempotent"
-        )
-    sketches.merge_sketches(spark, wave2, prefix, sweep=False)
+    # sweep=False: init just zeroed every table, so there is no debris to
+    # reclaim; the sweeping path stays crash-injection-tested in
+    # tests/test_streaming.py
+    _certify(
+        lambda d: sketches.merge_sketches(spark, d, prefix, sweep=False),
+        table(spark, sf_dir, "documents"),
+        "doc_id",
+    )
     return heavy_hitters_from_cells(
         spark, sf_dir, sketches.served_cms(spark, prefix)
     )
@@ -278,108 +231,58 @@ def streaming_sketch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("streaming_ivf_parity", oracle=ANN_IVF_ORACLE)
 def streaming_ivf_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve ``ann_ivf_topk`` from the two-wave maintained cell-partitioned
-    IVF index (module doc): each delta assigns against the frozen broadcast
-    centroids and appends into the ``partitionBy(cid)`` layout; the replay
-    must append zero rows; the served ranking goes through the partition-
-    pruned ``ann_ivf_topk_from_index`` scan — so this row certifies both
-    the maintenance discipline and the pruned serve path at once."""
-    import shutil
-
-    from columnar_aware_dedup_spark.operators.similarity import (
-        ann_ivf_topk_from_index,
-    )
-    from columnar_aware_dedup_spark.streaming import ivf
-
+    """Serve ``ann_ivf_topk`` from the cell-partitioned IVF index: each
+    delta assigns against the frozen broadcast centroids and appends into
+    the ``partitionBy(cid)`` layout, and the ranking goes through the
+    partition-pruned ``ann_ivf_topk_from_index`` scan."""
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     path = f"{warehouse}/parity_ivf_index"
     shutil.rmtree(path, ignore_errors=True)
     cent = ivf.frozen_centroids(spark, sf_dir)
-    wave1, wave2 = _vector_waves(spark, sf_dir)
-    ivf.merge_vectors(spark, wave1, cent, path)
-    replayed = ivf.merge_vectors(spark, wave1, cent, path)
-    if replayed:
-        raise AssertionError(
-            f"wave-1 replay appended {replayed} rows; merge is not idempotent"
-        )
-    ivf.merge_vectors(spark, wave2, cent, path)
+    _certify(
+        lambda d: ivf.merge_vectors(spark, d, cent, path),
+        table(spark, sf_dir, "embeddings"),
+        "vec_id",
+    )
     return ann_ivf_topk_from_index(spark, sf_dir, path)
 
 
-def _fold_bm25_waves(spark: SparkSession, sf_dir: str, tbl: str) -> None:
-    """Init the empty five-table BM25 index and fold the corpus in two
-    waves with a wave-1 replay that must index ZERO documents — the
-    shared certificate prologue of the two retrieval parity rows.
-
-    ``sweep=False`` on every merge (r10, VERDICT r09 "What's wrong" #4):
-    init just zeroed all five tables, so there is no debris to reclaim
-    and the per-merge sweep — even its read-nothing manifest fast path —
-    was pure constant cost on the certificate (3 x ~0.5 s of the bench
-    line). Debris handling stays certified by ``tests/test_streaming``'s
-    crash-injection tests, which exercise the sweeping path."""
-    from columnar_aware_dedup_spark.operators.retrieval import (
-        init_bm25_tables,
-    )
-    from columnar_aware_dedup_spark.streaming import bm25 as sbm25
-
+def _bm25_index(spark: SparkSession, sf_dir: str, tbl: str) -> str:
+    """Init the five-table BM25 index ``tbl`` and fold the corpus into it
+    through the commit-marker protocol. ``sweep=False`` as in the sketch
+    certificate: the tables were just zeroed."""
     init_bm25_tables(spark, tbl)
-    wave1, wave2 = _waves(spark, sf_dir)
-    sbm25.merge_bm25_delta(spark, wave1, tbl, sweep=False)
-    replayed = sbm25.merge_bm25_delta(spark, wave1, tbl, sweep=False)
-    if replayed:
-        raise AssertionError(
-            f"wave-1 replay indexed {replayed} docs; merge is not idempotent"
-        )
-    sbm25.merge_bm25_delta(spark, wave2, tbl, sweep=False)
+    _certify(
+        lambda d: sbm25.merge_bm25_delta(spark, d, tbl, sweep=False),
+        table(spark, sf_dir, "documents"),
+        "doc_id",
+    )
+    return tbl
 
 
 @register("streaming_bm25_parity", oracle=BM25_ORACLE)
 def streaming_bm25_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve ``bm25_doc_ranking`` from the two-wave maintained BM25 index
-    (module doc): postings/registry/stats advance ONLY through the
-    commit-marker protocol's attempt-tagged appends, the wave-1 replay
-    must index zero docs (tf/N/avgdl are additive — a double-count would
-    shift every score permanently, the CMS argument applied to ranking),
-    and the served top-k reads the term-bucket-pruned postings plus the
-    committed stats partials alone. Hash equality against the batch
-    oracle proves the incrementally maintained index is
-    indistinguishable from a corpus re-derivation."""
-    from columnar_aware_dedup_spark.operators.retrieval import (
-        bm25_from_index,
+    """Serve ``bm25_doc_ranking``'s top-k from the maintained BM25 index:
+    the term-bucket-pruned postings plus the committed stats partials."""
+    return bm25_from_index(
+        spark, _bm25_index(spark, sf_dir, "parity_bm25_index")
     )
-
-    tbl = "parity_bm25_index"
-    _fold_bm25_waves(spark, sf_dir, tbl)
-    return bm25_from_index(spark, tbl)
 
 
 @register("streaming_rrf_parity", oracle=RRF_ORACLE)
 def streaming_rrf_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve ``hybrid_rrf_fusion`` ENTIRELY from maintained state (module
-    doc): the BM25 side folds through the commit-marker merge, the dense
-    side through the doc-vector table's single-append merge (each with a
-    replay that must absorb zero), and the fused ranking goes through the
-    same ``fuse_rrf`` tail as the from-scratch query — certifying the
-    whole hybrid serving stack, not one list at a time."""
-    from columnar_aware_dedup_spark.operators.retrieval import (
-        init_doc_vector_table,
-        rrf_from_index,
-    )
-    from columnar_aware_dedup_spark.streaming import bm25 as sbm25
-
-    bm25_tbl = "parity_rrf_bm25"
+    """Serve ``hybrid_rrf_fusion`` ENTIRELY from maintained state: the
+    BM25 side through the commit-marker merge, the dense side through the
+    doc-vector table's single-append merge, fused by the same
+    ``fuse_rrf`` tail as the from-scratch query."""
+    bm25_tbl = _bm25_index(spark, sf_dir, "parity_rrf_bm25")
     vec_tbl = "parity_rrf_vecs"
-    _fold_bm25_waves(spark, sf_dir, bm25_tbl)
     init_doc_vector_table(spark, vec_tbl)
-    wave1, wave2 = _waves(spark, sf_dir)
-    sbm25.merge_doc_vectors_delta(spark, wave1, vec_tbl)
-    replayed = sbm25.merge_doc_vectors_delta(spark, wave1, vec_tbl)
-    if replayed:
-        raise AssertionError(
-            f"wave-1 replay appended {replayed} vectors; merge is not"
-            " idempotent"
-        )
-    sbm25.merge_doc_vectors_delta(spark, wave2, vec_tbl)
+    _certify(
+        lambda d: sbm25.merge_doc_vectors_delta(spark, d, vec_tbl),
+        table(spark, sf_dir, "documents"),
+        "doc_id",
+    )
     return rrf_from_index(spark, bm25_tbl, vec_tbl)
 
 
@@ -387,16 +290,11 @@ def _index_served_bit(
     spark: SparkSession, df: DataFrame, table: str, *more_tables: str
 ) -> bool:
     """TRUE iff every physical input file of ``df``'s scan lives under the
-    warehouse directory of ``table`` — the served-from-index guard bit
-    (r11, VERDICT r10 "What's wrong" #4): the statsprune certificates'
-    oracles are input-identical between the persisted-table serve and an
-    in-plan recompute, so without this bit the "from the maintained
-    index" claim was enforced only by the query body. Computed
-    driver-side from the plan's file listing (the ``cross_format_dedup``
-    walker-ran-bit pattern: a fact about HOW the result was produced,
-    attached as a literal and restated TRUE by the oracle); an in-plan
-    substitute scans fixture bytes outside the warehouse and flips it
-    (pytest-pinned)."""
+    warehouse directory of ``table`` (or one of ``more_tables``) — the
+    served-from-index guard bit. Computed driver-side from the plan's file
+    listing: a fact about HOW the result was produced. An in-plan
+    substitute scans fixture bytes outside the warehouse and flips it, and
+    a file-less frame never passes."""
     def _path(uri: str) -> str:
         # "file:/x", "file:///x" and bare "/x" all normalize to "/x"
         p = uri.removeprefix("file:")
@@ -412,47 +310,39 @@ def _index_served_bit(
     return bool(files) and all(f.startswith(prefixes) for f in files)
 
 
-def _with_served_bit(cert: DataFrame, served: bool) -> DataFrame:
-    """Attach the guard bit right after ``file_name`` (column order is
-    cosmetic — the driver sorts by name — but keeps the frame readable)."""
-    rest = [c for c in cert.columns if c != "file_name"]
-    return cert.select(
-        "file_name",
-        F.lit(bool(served)).alias("served_from_index"),
-        *rest,
+def _served(
+    spark: SparkSession, cert: DataFrame, scanned: DataFrame, *tables: str
+) -> DataFrame:
+    """``cert`` with the guard bit appended: TRUE iff ``scanned`` read only
+    the maintained ``tables``."""
+    return cert.withColumn(
+        "served_from_index",
+        F.lit(_index_served_bit(spark, scanned, *tables)),
     )
 
 
 def _served_oracle(oracle: str) -> str:
-    """The statsprune oracle with the guard bit restated TRUE — derived
-    from the batch oracle string so the two cannot drift on the other
-    columns."""
-    return oracle.replace(
-        "SELECT file_name,",
-        "SELECT file_name, TRUE AS served_from_index,",
-        1,
-    )
+    """The batch oracle with the guard bit restated TRUE. It wraps the
+    oracle instead of editing it, so the two cannot drift on the other
+    columns; oracle compare sorts columns by name, so the bit's position
+    does not matter."""
+    return f"SELECT *, TRUE AS served_from_index FROM ({oracle}) AS o"
 
 
-def _fold_statskey_waves(
+def _statskey_index(
     spark: SparkSession, store_rows: DataFrame, tbl: str
-) -> None:
-    """Fold a store's stats-key rows into the maintained table in two
-    deterministic waves (region-index parity) with a wave-1 replay that
-    must append ZERO rows — the shared prologue of the three statsprune
-    parity rows."""
-    from columnar_aware_dedup_spark.streaming import statskeys
-
-    wave1 = store_rows.filter(F.col("stripe_idx") % 2 == 0)
-    wave2 = store_rows.filter(F.col("stripe_idx") % 2 != 0)
-    statskeys.merge_statskey_delta(spark, wave1, tbl)
-    replayed = statskeys.merge_statskey_delta(spark, wave1, tbl)
-    if replayed:
-        raise AssertionError(
-            f"wave-1 replay appended {replayed} rows; merge is not"
-            " idempotent"
-        )
-    statskeys.merge_statskey_delta(spark, wave2, tbl)
+) -> DataFrame:
+    """Fold a store's stats-key rows into the maintained table ``tbl`` by
+    region-index parity and return the served table. The lazy checkpoint
+    lets one parse of the store bytes feed all three merges; each merge's
+    eager checkpoint would otherwise re-run the binaryFile + footer walk."""
+    rows = store_rows.localCheckpoint(eager=False)
+    _certify(
+        lambda d: statskeys.merge_statskey_delta(spark, d, tbl),
+        rows,
+        "stripe_idx",
+    )
+    return spark.table(tbl)
 
 
 @register(
@@ -462,49 +352,19 @@ def _fold_statskey_waves(
 def streaming_statsprune_parity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Serve ``orc_stats_pruned_dedup`` from the PERSISTED per-stripe
-    stats-key index after two incremental folds plus a replay (r10 — the
-    ninth index family): the store file's (stats_key, signature,
-    data_size) rows fold into ``streaming/statskeys.py``'s single-append
-    table in two deterministic waves (stripe-index parity), the wave-1
-    replay must append ZERO rows (the (file, region) anti-join
-    discipline), and the full incoming workload then probes the SERVED
-    table through the SAME format-agnostic probe + certificate as the
-    in-plan query. Hash equality against the batch oracle proves the
-    incrementally maintained metadata index is indistinguishable from a
-    store re-parse — and the r11 ``served_from_index`` guard bit makes
-    the row self-describing: it is TRUE only when the probe's store scan
-    physically read the maintained warehouse table, so an in-plan
-    substitute cannot pass (flip test in ``tests/test_streaming.py``)."""
-    from columnar_aware_dedup_spark.operators.zonemap import (
-        _orc_incoming_stats,
-        _stats_pruned_probe,
-        stats_pruned_certificate,
-        stripe_stats_key_table,
-    )
-    from columnar_aware_dedup_spark.sources.orcfixtures import (
-        orc_fixture_dirs,
-    )
-    from columnar_aware_dedup_spark.streaming import statskeys
-
+    """Serve ``orc_stats_pruned_dedup`` from the persisted per-stripe
+    stats-key index: the incoming workload probes the SERVED table through
+    the same format-agnostic probe + certificate as the in-plan query, so
+    the maintained metadata index must equal a store re-parse."""
     store_dir, incoming_dir = orc_fixture_dirs(sf_dir)
     tbl = statskeys.init_statskey_table(spark, "parity_statskey_index")
-    # one parse of the store bytes feeds all three folds (each merge's
-    # eager checkpoint would otherwise re-run the binaryFile + footer
-    # walk — the _minhash_tagged_sigs lesson)
-    store_rows = stripe_stats_key_table(spark, store_dir).localCheckpoint(
-        eager=False
+    served = _statskey_index(
+        spark, stripe_stats_key_table(spark, store_dir), tbl
     )
-    _fold_statskey_waves(spark, store_rows, tbl)
-    served = spark.table(tbl)
-    return _with_served_bit(
-        stats_pruned_certificate(
-            _stats_pruned_probe(
-                _orc_incoming_stats(spark, sf_dir, incoming_dir), served
-            )
-        ),
-        _index_served_bit(spark, served, tbl),
+    probe = _stats_pruned_probe(
+        _orc_incoming_stats(spark, sf_dir, incoming_dir), served
     )
+    return _served(spark, stats_pruned_certificate(probe), served, tbl)
 
 
 @register(
@@ -514,41 +374,18 @@ def streaming_statsprune_parity(
 def streaming_statsprune_parquet_parity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The PARQUET leg of the maintained stats-key index (r11, VERDICT
-    r10 "Next round" #3: the batch side ships both formats but the
-    persisted index family covered ORC only): the store file's
-    per-row-group (stats_key, signature, data_size) rows — raw-payload
-    keys from OUR Thrift-compact footer walker — fold into the SAME
-    format-agnostic single-append maintainer in two waves plus a
-    replay-zero check, and the full parquet incoming workload probes the
-    SERVED table through the same probe + certificate as
-    ``parquet_stats_pruned_dedup``. Guard bit as the ORC row."""
-    from columnar_aware_dedup_spark.operators.zonemap import (
-        _parquet_incoming_stats,
-        _stats_pruned_probe,
-        parquet_rg_stats_key_table,
-        stats_pruned_certificate,
-    )
-    from columnar_aware_dedup_spark.sources.orcfixtures import (
-        parquet_fixture_dirs,
-    )
-    from columnar_aware_dedup_spark.streaming import statskeys
-
+    """The PARQUET leg of the maintained stats-key index: per-row-group
+    keys from the Thrift-compact footer walker fold into the same
+    maintainer and serve ``parquet_stats_pruned_dedup``."""
     store_dir, incoming_dir = parquet_fixture_dirs(sf_dir)
     tbl = statskeys.init_statskey_table(spark, "parity_statskey_pq")
-    store_rows = parquet_rg_stats_key_table(
-        spark, store_dir
-    ).localCheckpoint(eager=False)
-    _fold_statskey_waves(spark, store_rows, tbl)
-    served = spark.table(tbl)
-    return _with_served_bit(
-        stats_pruned_certificate(
-            _stats_pruned_probe(
-                _parquet_incoming_stats(spark, sf_dir, incoming_dir), served
-            )
-        ),
-        _index_served_bit(spark, served, tbl),
+    served = _statskey_index(
+        spark, parquet_rg_stats_key_table(spark, store_dir), tbl
     )
+    probe = _stats_pruned_probe(
+        _parquet_incoming_stats(spark, sf_dir, incoming_dir), served
+    )
+    return _served(spark, stats_pruned_certificate(probe), served, tbl)
 
 
 @register(
@@ -558,134 +395,59 @@ def streaming_statsprune_parquet_parity(
 def streaming_statsprune_columns_parity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The COLUMN-LEVEL leg of the maintained stats-key index (r11,
-    VERDICT r10 "Next round" #3's second half): the store's TWO-LEVEL
-    rows — per-stripe region keys AND per-(stripe, column) keys from the
-    one level-tagged footer walk — fold into the level-aware maintained
-    table (``statskeys.init_statskey_table(two_level=True)``; the
-    idempotence key gains ``level``) in two waves plus a replay-zero
-    check, and the ``orc_stats_pruned_columns`` certificate is then
-    served ENTIRELY from that table: the hierarchical fallback set
-    derives from its region rows, the column probe from its column rows.
-    Hash equality against the batch column-fallback oracle proves the
-    maintained two-level index is indistinguishable from a store
-    re-parse at BOTH granularities. Guard bit as the ORC region row."""
-    from columnar_aware_dedup_spark.operators.zonemap import (
-        _column_fallback_probe,
-        orc_strmod_two_level_incoming,
-        orc_two_level_table,
-        stats_pruned_certificate,
-    )
-    from columnar_aware_dedup_spark.sources.orcfixtures import (
-        orc_fixture_dirs,
-    )
-    from columnar_aware_dedup_spark.streaming import statskeys
-
+    """The COLUMN-LEVEL leg: per-stripe region keys AND per-(stripe,
+    column) keys from one level-tagged footer walk fold into the
+    level-aware table (the idempotence key gains ``level``), and the
+    ``orc_stats_pruned_columns`` certificate is served ENTIRELY from it —
+    the fallback set from its region rows, the column probe from its
+    column rows."""
     store_dir, _incoming_dir = orc_fixture_dirs(sf_dir)
     tbl = statskeys.init_statskey_table(
         spark, "parity_statskey_cols", two_level=True
     )
-    store_rows = orc_two_level_table(spark, store_dir).localCheckpoint(
-        eager=False
-    )
-    _fold_statskey_waves(spark, store_rows, tbl)
     # the SAME frame feeds the probe and the guard bit — a checkpointed
     # or recomputed substitute would decouple them and make the bit
-    # tautological (r11 review); the double table scan this costs is a
-    # plain catalog parquet read, not a footer re-parse
-    served = spark.table(tbl)
+    # tautological; the double table scan this costs is a plain catalog
+    # parquet read, not a footer re-parse
+    served = _statskey_index(spark, orc_two_level_table(spark, store_dir), tbl)
     inc = orc_strmod_two_level_incoming(spark, sf_dir)
-    return _with_served_bit(
-        stats_pruned_certificate(
-            _column_fallback_probe(
-                inc.filter(F.col("level") == "region").drop("level"),
-                served.filter(F.col("level") == "region").drop("level"),
-                inc.filter(F.col("level") == "column").drop("level"),
-                served.filter(F.col("level") == "column").drop("level"),
-            )
-        ),
-        _index_served_bit(spark, served, tbl),
+    probe = _column_fallback_probe(
+        inc.filter(F.col("level") == "region").drop("level"),
+        served.filter(F.col("level") == "region").drop("level"),
+        inc.filter(F.col("level") == "column").drop("level"),
+        served.filter(F.col("level") == "column").drop("level"),
     )
+    return _served(spark, stats_pruned_certificate(probe), served, tbl)
 
 
-def _served_winnow_oracle() -> str:
-    """The batch overlap oracle with the guard bit restated TRUE —
-    derived from the single-copy oracle text so the columns cannot
-    drift."""
-    from columnar_aware_dedup_spark.operators.winnowing import (
-        WINNOW_OVERLAP_ORACLE,
-    )
-
-    out = WINNOW_OVERLAP_ORACLE.replace(
-        "SELECT doc_a, doc_b, shared_fps FROM pairs",
-        "SELECT doc_a, doc_b, shared_fps, TRUE AS served_from_index"
-        " FROM pairs",
-        1,
-    )
-    assert "served_from_index" in out  # replace() anchored on the tail
-    return out
-
-
-@register("streaming_winnow_parity", oracle=_served_winnow_oracle())
+@register(
+    "streaming_winnow_parity", oracle=_served_oracle(WINNOW_OVERLAP_ORACLE)
+)
 def streaming_winnow_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve ``winnowing_overlap_pairs`` from the maintained two-table
-    winnowing index (``streaming/winnow.py``, r11 late — the 10th
-    family): the corpus folds in two waves, the wave-1 replay must
-    append ZERO membership rows (per-table anti-join idempotence: class
-    fingerprints key on ``tsig``, membership on ``doc_id`` — the
-    property that makes the two-table append crash-safe without a
-    manifest), and the overlap report is then served ENTIRELY from the
-    fingerprint + membership tables through the SAME ``overlap_report``
-    chain as the batch corpus scan. Hash equality against the batch
-    oracle proves daily-delta maintenance of the selection index is
-    indistinguishable from re-winnowing history; the
-    ``served_from_index`` guard bit (TRUE only when every file the
-    report's plan scanned lives under one of the TWO maintained
-    warehouse tables) makes an in-plan substitute fail the row
-    (flip test in ``tests/test_winnowing.py``)."""
-    from columnar_aware_dedup_spark.streaming import winnow
-
+    winnowing index through the SAME ``overlap_report`` chain as the batch
+    corpus scan. The replay certifies per-table anti-join idempotence
+    (class fingerprints key on ``tsig``, membership on ``doc_id``), which
+    makes the two-table append crash-safe without a manifest; the guard
+    bit requires every scanned file to live under the two tables."""
     fp_tbl, mem_tbl = winnow.init_winnow_tables(
         spark, "parity_winnow_fp", "parity_winnow_members"
     )
-    wave1, wave2 = _waves(spark, sf_dir)
-    winnow.merge_winnow_delta(spark, wave1, fp_tbl, mem_tbl)
-    replayed = winnow.merge_winnow_delta(spark, wave1, fp_tbl, mem_tbl)
-    if replayed:
-        raise AssertionError(
-            f"wave-1 replay appended {replayed} membership rows; merge is"
-            " not idempotent"
-        )
-    winnow.merge_winnow_delta(spark, wave2, fp_tbl, mem_tbl)
-    report = winnow.overlap_pairs_from_index(spark, fp_tbl, mem_tbl)
-    return report.withColumn(
-        "served_from_index",
-        F.lit(_index_served_bit(spark, report, fp_tbl, mem_tbl)),
+    _certify(
+        lambda d: winnow.merge_winnow_delta(spark, d, fp_tbl, mem_tbl),
+        table(spark, sf_dir, "documents"),
+        "doc_id",
     )
+    report = winnow.overlap_pairs_from_index(spark, fp_tbl, mem_tbl)
+    return _served(spark, report, report, fp_tbl, mem_tbl)
 
 
 @register("streaming_pq_parity", oracle=ANN_PQ_ORACLE)
 def streaming_pq_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve ``ann_pq_topk`` from the two-wave maintained PQ code table
-    (module doc): each delta encodes against the frozen broadcast codebooks
-    and appends ``(vec_id, codes)`` rows; the replay must append zero; the
-    served ADC ranking reads ONLY the maintained codes
-    (``ann_pq_topk_from_index``), so hash equality proves the incremental
-    encode equals a corpus re-encode."""
-    from columnar_aware_dedup_spark.operators.pq import (
-        ann_pq_topk_from_index,
-        fixed_codebooks,
-    )
-    from columnar_aware_dedup_spark.streaming import pqcodes
-
+    """Serve ``ann_pq_topk``'s ADC ranking from the maintained PQ codes
+    alone; each delta encodes against the frozen broadcast codebooks."""
     tbl = pqcodes.init_code_table(spark, "parity_pq_codes")
-    cbs = fixed_codebooks(table(spark, sf_dir, "embeddings"))
-    wave1, wave2 = _vector_waves(spark, sf_dir)
-    pqcodes.merge_codes(spark, wave1, cbs, tbl)
-    replayed = pqcodes.merge_codes(spark, wave1, cbs, tbl)
-    if replayed:
-        raise AssertionError(
-            f"wave-1 replay appended {replayed} rows; merge is not idempotent"
-        )
-    pqcodes.merge_codes(spark, wave2, cbs, tbl)
+    vecs = table(spark, sf_dir, "embeddings")
+    cbs = fixed_codebooks(vecs)
+    _certify(lambda d: pqcodes.merge_codes(spark, d, cbs, tbl), vecs, "vec_id")
     return ann_pq_topk_from_index(spark, sf_dir, tbl)

@@ -873,27 +873,6 @@ def parquet_cc_stats_key_rows(file_name: str, data: bytes) -> list[dict]:
     return rows
 
 
-def parquet_cc_stats_key_table(spark: SparkSession, path: str) -> DataFrame:
-    """binaryFile scan -> per-(row group, column chunk) stats-key rows."""
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in _PRUNE_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                name = p.rsplit("/", 1)[-1]
-                rows.extend(parquet_cc_stats_key_rows(name, bytes(content)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(path)
-        .select("path", "content")
-    )
-    return files.mapInPandas(_batches, _PRUNE_SCHEMA)
-
-
 #: column-level fixture truth: the region level already dedups snapshot
 #: B's byte-identical prefix, so lineitem.orc's REGION-MISSED stripes
 #: (boundary + appended rows) have stats-colliding columns (row counts and

@@ -443,19 +443,10 @@ def _file_name(col: str = "file"):
 # registered queries (R: DuckDB cannot parse ORC bytes)
 # ---------------------------------------------------------------------------
 
-#: the constant two-snapshot fixture layout — what lets the ORC queries be
-#: HASH-CHECKED even though DuckDB cannot parse ORC bytes: the oracle
+#: the ORC queries are HASH-CHECKED even though DuckDB cannot parse ORC
+#: bytes: over the constant two-snapshot fixture layout, the oracle
 #: re-states, per known file name, booleans the Spark side proves in-plan
 #: on the real bytes (the trainer-certificate pattern, VERDICT r05 #5).
-_INCOMING_FILES = ("lineitem.orc", "lineitem_mod.orc", "orders_new.orc")
-_ALL_FILES = (
-    "incoming/lineitem.orc",
-    "incoming/lineitem_mod.orc",
-    "incoming/orders_new.orc",
-    "store/lineitem.orc",
-)
-
-
 ORC_CHUNKS_ORACLE = """
 SELECT file_name, TRUE AS cover_contiguous_ok, TRUE AS bytes_sum_equals_span_ok,
        TRUE AS structure_parsed_ok, TRUE AS footer_ok

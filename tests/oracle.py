@@ -9,9 +9,9 @@ CAVEAT — this harness is NOT driver-faithful on output *representation*:
 the driver canon is pandas-based and representation-sensitive, while
 ``_canon_cell`` below converts Decimal->float and joins lists to strings —
 exactly the two dimensions that failed r03 (``cast_fns`` hash,
-``doc_hash_embedding`` crash) while passing here. The companion lint
-``test_registry_oracles.py::test_h_query_outputs_are_canon_safe`` bans
-Decimal/Array/Map top-level output columns so the gap cannot matter.
+``doc_hash_embedding`` crash) while passing here. The schema check in
+``test_registry_oracles.py::test_oracle_match`` bans Decimal/Array/Map
+top-level output columns so the gap cannot matter.
 """
 
 from __future__ import annotations

@@ -7,6 +7,9 @@ boilerplate fails here instead of drifting silently.
 
 Every bucketed write lays its rows out through ``store.bucket_aligned``,
 and ``fold.append_new`` stays one observed write: no pin, no count.
+
+Every streaming parity certificate folds through
+``streaming_parity._certify``, the one place its replay check lives.
 """
 
 from __future__ import annotations
@@ -29,6 +32,8 @@ BUCKETED_WRITERS = sorted(STREAMING.glob("*.py")) + [
     PACKAGE / "operators" / "search.py",
     PACKAGE / "operators" / "retrieval.py",
 ]
+#: the registered streaming parity certificates
+PARITY = PACKAGE / "operators" / "streaming_parity.py"
 
 
 def _names(tree: ast.AST) -> set[str]:
@@ -113,6 +118,49 @@ def test_bucket_count_layouts_go_through_helper(path):
         and id(call) not in allowed
     ]
     assert not counted, f"use store.bucket_aligned (lines {counted})"
+
+
+def _calls_by_name(node: ast.AST) -> set[str]:
+    return {
+        n.func.id for n in ast.walk(node)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+    }
+
+
+def test_parity_replay_rule_lives_in_certify():
+    """The parity certificates' replay check is written once: the only
+    ``raise`` in the module is inside ``_certify``."""
+    tree = _parse(PARITY)
+    inside = {id(n) for n in ast.walk(_function(tree, "_certify"))}
+    raises = [n for n in ast.walk(tree) if isinstance(n, ast.Raise)]
+    assert raises, "_certify lost its replay check"
+    outside = [n.lineno for n in raises if id(n) not in inside]
+    assert not outside, f"raise outside _certify (lines {outside})"
+
+
+def test_every_parity_certificate_folds_through_certify():
+    """Every registered certificate calls ``_certify``, directly or through
+    a module helper that does."""
+    tree = _parse(PARITY)
+    functions = {
+        n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)
+    }
+    certifying = {"_certify"}
+    grew = True
+    while grew:
+        found = {
+            name for name, fn in functions.items()
+            if _calls_by_name(fn) & certifying
+        }
+        grew = not found <= certifying
+        certifying |= found
+    registered = [
+        name for name, fn in functions.items()
+        if any("register" in _calls_by_name(d) for d in fn.decorator_list)
+    ]
+    assert registered
+    missing = [name for name in registered if name not in certifying]
+    assert not missing, f"parities that bypass _certify: {missing}"
 
 
 def test_append_new_is_one_observed_write():

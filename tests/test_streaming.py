@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from columnar_aware_dedup_spark.streaming import ingest
@@ -1597,6 +1598,30 @@ def test_statskey_two_level_merge_and_level_key(spark, sf_dir):
         " signature string, data_size long, level string",
     )
     assert statskeys.merge_statskey_delta(spark, twin, tbl2) == 2
+
+
+def test_certify_replays_wave1_and_rejects_a_nonzero_replay(spark):
+    """The parity certificates' one replay rule (``_certify``): merges run
+    wave 1, wave 1 again, wave 2; the two waves partition the rows, the
+    negative odd key landing in wave 2; a replay that appends anything
+    raises and wave 2 never folds."""
+    from columnar_aware_dedup_spark.operators.streaming_parity import _certify
+
+    rows = spark.createDataFrame([(k,) for k in (-3, -2, 0, 1, 4)], "k long")
+    waves = []
+
+    def merge(d):
+        waves.append(sorted(r["k"] for r in d.collect()))
+        return 0
+
+    _certify(merge, rows, "k")
+    assert waves == [[-2, 0, 4], [-2, 0, 4], [-3, 1]]
+    assert sorted(waves[0] + waves[2]) == [-3, -2, 0, 1, 4]
+
+    appended = iter([2, 3])
+    with pytest.raises(AssertionError, match=r"\b3\b"):
+        _certify(lambda d: next(appended), rows, "k")
+    assert next(appended, None) is None
 
 
 def test_statsprune_served_bit_flips_on_inplan_substitute(spark, sf_dir):
