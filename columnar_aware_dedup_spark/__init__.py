@@ -7,6 +7,9 @@ Importing this package populates the query registry (``registry.QUERIES`` /
 
 from __future__ import annotations
 
+# first: every Python worker that unpickles an engine UDF runs this import
+from columnar_aware_dedup_spark import zipimport_cache  # noqa: F401
+
 from pathlib import Path
 
 from columnar_aware_dedup_spark import registry  # noqa: F401
@@ -78,6 +81,12 @@ CHANGED: dict[str, int] = {
     "streaming_winnow_parity": 12,
     # the BM25 genesis write goes through store.bucket_aligned.
     "passage_rrf_from_index": 12,
+    # dedup.classified_chunks materializes the chunk table once.
+    "col_type_stats": 12,
+    "dedup_hit_miss": 12,
+    "dedup_ratio": 12,
+    "transfer_stats_rollup": 12,
+    "transfer_stats_rollup_approx": 12,
 }
 
 #: the driver's CORRECTNESS window is the first 50 registered queries,

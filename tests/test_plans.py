@@ -7,6 +7,8 @@ heap-based top-k, and bounded shuffle counts in the dedup dataflow.
 
 from __future__ import annotations
 
+import re
+
 from columnar_aware_dedup_spark.operators import dedup, relational
 from columnar_aware_dedup_spark.plans import explain
 
@@ -51,6 +53,18 @@ def test_flagship_shuffle_budget(spark, sf_dir):
     df = dedup.dedup_hit_miss(spark, sf_dir)
     n = explain.n_exchanges(df)
     assert n <= 5, f"flagship grew to {n} shuffles:\n{explain.plan_string(df)}"
+
+
+def test_flagship_chunks_lineitem_once(spark, sf_dir):
+    """Catalyst pushes the store side's semi-join below its own chunk
+    aggregation instead of reusing the incoming side's, so an unshared plan
+    holds two final ``collect_list`` aggregations over lineitem.
+    classified_chunks materializes the chunk table once; at most one may
+    remain."""
+    df = dedup.dedup_hit_miss(spark, sf_dir)
+    plan = explain.plan_string(df)
+    n = len(re.findall(r"^Functions \[\d+\]: \[collect_list\(", plan, re.M))
+    assert n <= 1, f"flagship chunks lineitem {n} times:\n{plan}"
 
 
 def test_chunk_simulate_single_shuffle(spark, sf_dir):
