@@ -47,6 +47,7 @@ from columnar_aware_dedup_spark.operators.similarity import (
     EMBEDDING_TOPK_ORACLE,
 )
 from columnar_aware_dedup_spark.registry import register
+from columnar_aware_dedup_spark.sources.store import drop_table_and_dir
 
 #: number of subspaces (codes per vector) and sub-centroids per subspace.
 _M = 4
@@ -506,11 +507,7 @@ def write_pq_index(
     ``(vec_id, codes array<int>)``, ~``_M`` bytes of payload per vector
     instead of the full embedding. Encoding pays the zero-shuffle argmin
     once; afterwards every ADC query scans codes, never raw vectors."""
-    import shutil
-
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{warehouse}/{table_name.lower()}", ignore_errors=True)
+    drop_table_and_dir(spark, table_name)
     e = table(spark, sf_dir, "embeddings")
     encoded = e.join(F.broadcast(fixed_codebooks(e))).select(
         "vec_id", encode_expr().alias("codes")

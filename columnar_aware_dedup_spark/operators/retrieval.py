@@ -41,6 +41,7 @@ data. Nothing here is corpus-global except the one-row N/avgdl aggregates.
 from __future__ import annotations
 
 import hashlib
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -63,7 +64,8 @@ from columnar_aware_dedup_spark.operators.text import (
     normalized,
 )
 from columnar_aware_dedup_spark.registry import register
-from columnar_aware_dedup_spark.sources.store import bucket_aligned
+from columnar_aware_dedup_spark.sources.store import drop_table_and_dir
+from columnar_aware_dedup_spark.streaming import commitlog
 from columnar_aware_dedup_spark.streaming.fold import init_tables
 
 #: Okapi BM25 free parameters (the universal defaults).
@@ -607,17 +609,10 @@ def corpus_stats(registry: DataFrame) -> DataFrame:
 def committed_bm25(
     spark: SparkSession, table_name: str, suffix: str
 ) -> DataFrame:
-    """``{table}{suffix}`` rows restricted to COMMITTED attempts — the
-    read discipline that makes the maintainer's multi-table appends
-    crash-safe: a crash between appends leaves rows whose attempt never
-    reached ``{table}_commits``, and the semi-join (the shared protocol
-    machinery, ``streaming/commitlog.py``) makes them invisible to every
-    reader."""
-    from columnar_aware_dedup_spark.streaming.commitlog import committed_rows
-
-    return committed_rows(
-        spark, table_name + suffix, table_name + "_commits"
-    )
+    """``{table}{suffix}`` rows restricted to COMMITTED attempts
+    (``commitlog.committed``) — a crashed merge's rows are invisible to
+    every reader."""
+    return commitlog.committed(spark, table_name, suffix)
 
 
 #: the five-table BM25 index family: suffix -> (schema, bucketed-by-term?).
@@ -625,13 +620,12 @@ def committed_bm25(
 #: empty init the streaming parity certificate folds into — so the two
 #: creation paths cannot diverge on a schema or bucketing change.
 _BM25_TABLE_SPECS: dict[str, tuple[str, bool]] = {
-    "_attempts": ("attempt_id string", False),
+    **commitlog.MARKER_TABLES,
     "": ("term string, doc_id long, tf bigint, dl bigint, attempt_id string",
          True),
     "_docs": ("doc_id long, dl bigint, attempt_id string", False),
     "_stats": ("attempt_id string, n_docs bigint, n_dl_docs bigint,"
                " dl_sum bigint", False),
-    "_commits": ("attempt_id string", False),
 }
 
 
@@ -685,7 +679,6 @@ def write_bm25_index(
         _BM25_TABLE_SPECS,
         batch_bm25_postings(docs),
         doc_lengths(docs),
-        ("doc_id",),
         n_buckets,
     )
 
@@ -695,64 +688,25 @@ def _write_bm25_genesis(
     table_name: str,
     specs: dict[str, tuple[str, bool]],
     postings: DataFrame,
-    registry_lengths: DataFrame,
-    keys: tuple[str, ...],
+    registry: DataFrame,
     n_buckets: int,
 ) -> None:
     """The genesis build shared by the document and passage BM25 indexes:
-    materialize the five-table layout from one batch's postings
-    ``(term, *keys, tf, dl)`` and registry ``(*keys, dl)`` under a single
-    genesis attempt, committed last like any streamed merge.
-
-    r11 (optimization): the build re-zeroes the five tables through the
-    TRUNCATE-reuse discipline (``streaming/fold.py::init_tables`` — layout-
-    matching tables truncate in place; five Derby drop + recreate round
-    trips dominated the repeated build) and writes in merge order —
-    manifest marker first, the two data tables as distributed appends,
-    then the one-row stats partial and the commit marker driver-side
-    through the commit-file writer (``commitlog.append_driver_rows``) —
-    so the genesis pays two distributed writes instead of five, with the
-    same crash story as any streamed merge (uncommitted debris on any
-    interruption, the commit marker published atomically last)."""
-    import uuid
-
-    import pyarrow as pa
-
-    from columnar_aware_dedup_spark.streaming.commitlog import (
-        append_driver_rows,
-        append_marker_row,
-    )
-
-    attempt = "genesis-" + uuid.uuid4().hex
-    tag = F.lit(attempt).alias("attempt_id")
-    registry = registry_lengths.select(*keys, "dl", tag)
+    re-zero the five-table layout (``fold.init_tables`` — layout-matching
+    tables truncate in place; five Derby drop + recreate round trips
+    dominated the repeated build, r11) and publish one batch's postings
+    ``(term, *keys, tf, dl)`` and registry ``(*keys, dl)`` as a single
+    ``genesis-`` attempt through ``commitlog.commit``, the transaction
+    every streamed merge uses: two distributed writes, the stats partial
+    and markers driver-side, the commit marker last."""
     init_tables(spark, table_name, specs, n_buckets, "term")
-    append_marker_row(spark, table_name + "_attempts", attempt)
-    bucket_aligned(
-        postings.select("term", *keys, "tf", "dl", tag), n_buckets, "term"
-    ).write.format("parquet").mode("append").insertInto(table_name)
-    registry.write.format("parquet").mode("append").insertInto(
-        table_name + "_docs"
-    )
-    srow = (
-        corpus_stats(registry)
-        .select(tag, "n_docs", "n_dl_docs", "dl_sum")
-        .collect()[0]
-    )
-    append_driver_rows(
+    commitlog.commit(
         spark,
-        table_name + "_stats",
-        pa.table(
-            {
-                "attempt_id": pa.array([srow["attempt_id"]], pa.string()),
-                "n_docs": pa.array([srow["n_docs"]], pa.int64()),
-                "n_dl_docs": pa.array([srow["n_dl_docs"]], pa.int64()),
-                "dl_sum": pa.array([srow["dl_sum"]], pa.int64()),
-            }
-        ),
+        table_name,
+        f"genesis-{uuid.uuid4().hex}",
+        {"": postings, "_docs": registry},
+        {"_stats": corpus_stats(registry)},
     )
-    # the publication point, written LAST
-    append_marker_row(spark, table_name + "_commits", attempt)
 
 
 def bm25_from_index(
@@ -858,13 +812,9 @@ def write_doc_vector_index(
     delta path (``streaming/bm25.py::merge_doc_vectors_delta``), which is
     the inherently crash-safe single-append shape (the pqcodes pattern)
     and needs no commit protocol; serving filters ``nrm > 0``."""
-    import shutil
-
     from columnar_aware_dedup_spark.io import table
 
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    shutil.rmtree(f"{warehouse}/{table_name.lower()}", ignore_errors=True)
+    drop_table_and_dir(spark, table_name)
     _doc_hash_vectors_of(table(spark, sf_dir, "documents")).write.format(
         "parquet"
     ).mode("overwrite").saveAsTable(table_name)
@@ -1079,14 +1029,13 @@ _PASSAGE_KEYS = ("doc_id", "passage_idx")
 #: granularity), the registry keys passages, the stats partials are
 #: passage-scoped sums (N = passage count, dl = passage token count).
 _PASSAGE_BM25_TABLE_SPECS: dict[str, tuple[str, bool]] = {
-    "_attempts": ("attempt_id string", False),
+    **commitlog.MARKER_TABLES,
     "": ("term string, doc_id long, passage_idx int, tf bigint,"
          " dl bigint, attempt_id string", True),
     "_docs": ("doc_id long, passage_idx int, dl bigint, attempt_id string",
               False),
     "_stats": ("attempt_id string, n_docs bigint, n_dl_docs bigint,"
                " dl_sum bigint", False),
-    "_commits": ("attempt_id string", False),
 }
 
 
@@ -1159,12 +1108,7 @@ def write_passage_bm25_index(
         table(spark, sf_dir, "documents")
     )
     _write_bm25_genesis(
-        spark,
-        table_name,
-        _PASSAGE_BM25_TABLE_SPECS,
-        postings,
-        registry,
-        _PASSAGE_KEYS,
+        spark, table_name, _PASSAGE_BM25_TABLE_SPECS, postings, registry,
         n_buckets,
     )
 
@@ -1267,12 +1211,7 @@ def passage_rrf_from_index_served(
         spark, sf_dir, path, vecs=hash_vectors_from_tf(tf, _PASSAGE_KEYS)
     )
     _write_bm25_genesis(
-        spark,
-        "passage_rrf_bm25_index",
-        _PASSAGE_BM25_TABLE_SPECS,
-        postings,
-        registry,
-        _PASSAGE_KEYS,
-        8,
+        spark, "passage_rrf_bm25_index", _PASSAGE_BM25_TABLE_SPECS,
+        postings, registry, 8,
     )
     return passage_rrf_from_index(spark, "passage_rrf_bm25_index", path)

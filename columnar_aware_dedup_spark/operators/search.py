@@ -31,7 +31,10 @@ from pyspark.sql import functions as F
 
 from columnar_aware_dedup_spark.operators.text import _NORM_SQL, _fanned, normalized
 from columnar_aware_dedup_spark.registry import register
-from columnar_aware_dedup_spark.sources.store import bucket_aligned
+from columnar_aware_dedup_spark.sources.store import (
+    bucket_aligned,
+    drop_table_and_dir,
+)
 
 #: per-document characteristic terms to keep.
 _TOP_TERMS = 3
@@ -299,11 +302,7 @@ def write_postings_index(
     """
     # ephemeral-metastore hygiene (same as sources.store.create_store): a
     # fresh Derby can orphan the physical location from an earlier process
-    import shutil
-
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{warehouse}/{table_name.lower()}", ignore_errors=True)
+    drop_table_and_dir(spark, table_name)
     toks = (
         _fanned(spark, sf_dir)
         .select("doc_id", F.explode("toks").alias("term"))

@@ -196,7 +196,7 @@ def streaming_store_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl = fold.init_tables(
         spark,
         "parity_sig_store",
-        {"": ("signature string, chunk_type string, size bigint", True)},
+        {"": (store.STORE_SCHEMA, True)},
         store.DEFAULT_BUCKETS,
         "signature",
     )

@@ -29,6 +29,9 @@ from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 64
 
+#: the store table's columns, in :func:`_store_projection`'s order.
+STORE_SCHEMA = "signature string, chunk_type string, size bigint"
+
 
 class StoreLockTimeout(RuntimeError):
     """Raised when a writer cannot acquire the store lock in time."""
@@ -188,9 +191,9 @@ def create_store(
     :func:`bucket_aligned` first, so each write task emits at most one
     file per bucket. The fresh-create ``saveAsTable`` is not free even
     for an empty frame (three jobs, about 1.2 s on a 4-core host); a
-    caller that only needs an EMPTY store re-zeroed uses
-    ``fold.init_tables``, which truncates a layout-matching table in
-    place with no job."""
+    caller that only needs an EMPTY store uses ``fold.init_tables``,
+    which truncates a layout-matching table in place or creates it by
+    DDL, with no job either way."""
     from columnar_aware_dedup_spark.streaming.fold import (
         truncate_if_layout_matches,
     )
@@ -206,14 +209,9 @@ def create_store(
     ):
         rows.write.format("parquet").mode("append").insertInto(table_name)
         return
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    _invalidate_bucket_layout(spark, table_name)
     # a fresh metastore (Derby home is ephemeral) can orphan the physical
     # location from an earlier process; clear it so saveAsTable can claim it
-    import shutil
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{warehouse}/{table_name.lower()}", ignore_errors=True)
+    drop_table_and_dir(spark, table_name)
     (
         rows.write.bucketBy(n_buckets, "signature")
         .sortBy("signature")
@@ -327,14 +325,9 @@ def drop_table_and_dir(spark: SparkSession, tbl: str) -> None:
     ``{db}.db/{tbl}`` directory, defeating the crash-debris cleanup). The
     warehouse-join fallback remains only for never-created tables, whose
     debris — if any — can only live at the default-database location."""
-    location = None
     if spark.catalog.tableExists(tbl):
-        rows = spark.sql(f"DESCRIBE FORMATTED {tbl}").collect()
-        location = next(
-            (r["data_type"] for r in rows if r["col_name"] == "Location"),
-            None,
-        )
-    if location is None:  # not in the catalog: only default-layout debris
+        location = _store_location(spark, tbl)
+    else:  # not in the catalog: only default-layout debris
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         location = f"{warehouse}/{tbl.lower()}"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -419,13 +412,9 @@ def staged_swap_overwrite(
     between the renames leaves the canonical name briefly unbound with
     BOTH versions intact; :func:`recover_compaction` rebinds either. Call
     under the table family's store lock."""
-    import shutil
-
     tmp = f"{table_name}__compacting"
     aside = f"{table_name}__precompact"
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    shutil.rmtree(f"{warehouse}/{tmp.lower()}", ignore_errors=True)
+    drop_table_and_dir(spark, tmp)
     if n_buckets and key:
         (
             bucket_aligned(df, n_buckets, key)
@@ -437,12 +426,10 @@ def staged_swap_overwrite(
         )
     else:
         df.write.format("parquet").mode("overwrite").saveAsTable(tmp)
-    spark.sql(f"DROP TABLE IF EXISTS {aside}")
-    shutil.rmtree(f"{warehouse}/{aside.lower()}", ignore_errors=True)
+    drop_table_and_dir(spark, aside)
     spark.sql(f"ALTER TABLE {table_name} RENAME TO {aside}")
     spark.sql(f"ALTER TABLE {tmp} RENAME TO {table_name}")
-    spark.sql(f"DROP TABLE {aside}")
-    shutil.rmtree(f"{warehouse}/{aside.lower()}", ignore_errors=True)
+    drop_table_and_dir(spark, aside)
     spark.catalog.refreshTable(table_name)
     # the swap may have rebound the name to a DIFFERENT bucket layout
     _invalidate_bucket_layout(spark, table_name)
@@ -538,21 +525,13 @@ def recover_compaction_unlocked(
     commit-protocol sweep runs under its merge's lock, whose name can be
     the very table being recovered; re-acquiring would deadlock the
     non-reentrant mkdir mutex)."""
-    import shutil
-
     if prefer not in ("new", "old"):
         raise ValueError(f"prefer must be 'new' or 'old', got {prefer!r}")
     tmp = f"{table_name}__compacting"
     aside = f"{table_name}__precompact"
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-
-    def _drop(name: str) -> None:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(f"{warehouse}/{name.lower()}", ignore_errors=True)
-
     if spark.catalog.tableExists(table_name):
-        _drop(tmp)
-        _drop(aside)
+        drop_table_and_dir(spark, tmp)
+        drop_table_and_dir(spark, aside)
         return None
     candidates = {"new": tmp, "old": aside}
     pick = candidates[prefer]
@@ -563,7 +542,7 @@ def recover_compaction_unlocked(
                 f"nothing to recover: neither {tmp} nor {aside} exists"
             )
     spark.sql(f"ALTER TABLE {pick} RENAME TO {table_name}")
-    _drop(tmp if pick == aside else aside)
+    drop_table_and_dir(spark, tmp if pick == aside else aside)
     spark.catalog.refreshTable(table_name)
     # the recovery may have rebound the name to a DIFFERENT bucket layout
     _invalidate_bucket_layout(spark, table_name)

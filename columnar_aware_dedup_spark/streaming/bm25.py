@@ -7,15 +7,11 @@ store persistence the rule generalizes lives in the reference's receiver
 fields, ``orc/net/StripePlusColumnORCReceiver.java:41-44``, and the server
 receive loop, ``net/SpeedupServer.java:66-81``).
 
-Atomic-commit protocol (the ``streaming/sketches.py`` pattern — this
-merge appends to THREE tables, and plain parquet gives no cross-table
-atomicity): every row of a merge carries a fresh ``attempt_id``; readers
-(``retrieval.bm25_from_index``) and the dedup anti-join only honor rows
-whose attempt reached ``{table}_commits`` — appended LAST as the single-
-table publication point. A crash between appends leaves invisible debris
-(physically reclaimed by :func:`sweep_uncommitted_bm25` at the next
-merge); the checkpoint replay re-derives the same documents under a NEW
-attempt and only that one commits.
+Every merge publishes through the commit-marker protocol
+(``streaming/commitlog.py``): this index spans THREE partial tables —
+postings, the ``{table}_docs`` registry and the ``{table}_stats``
+partials — and readers (``retrieval.bm25_from_index``) honor only
+committed attempts.
 
 Idempotence: the ``{table}_docs`` registry records EVERY indexed document
 — including token-less ones, which carry no postings but do count into
@@ -30,44 +26,26 @@ time, so there is no per-term table to rewrite here.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from columnar_aware_dedup_spark.operators.retrieval import (
     batch_bm25_postings,
-    committed_bm25,
     corpus_stats,
     doc_lengths,
+    passage_bm25_frames,
 )
-from columnar_aware_dedup_spark.streaming import fold
+from columnar_aware_dedup_spark.streaming import commitlog, fold
 
-#: suffixes of the partial-row tables the commit protocol guards.
-_PARTIAL_SUFFIXES = ("", "_docs", "_stats")
-
-
-def sweep_uncommitted_bm25(spark: SparkSession, table_name: str) -> int:
-    """Physically remove crash debris from the three partial tables.
-    Called under the store lock at the start of each merge — cheap when
-    nothing crashed, because the shared implementation
-    (``streaming/commitlog.py::sweep_uncommitted``) answers "any debris?"
-    from the attempts/commits manifests alone and reclaims through the
-    crash-safe staged swap (preserving the postings table's
-    term-bucketing spec via the catalog)."""
-    from columnar_aware_dedup_spark.streaming import commitlog
-
-    return commitlog.sweep_uncommitted(
-        spark,
-        [table_name + s for s in _PARTIAL_SUFFIXES],
-        table_name + "_commits",
-        table_name + "_attempts",
-    )
+#: the attempt-tagged tables, the doc-keyed registry first
+#: (``commitlog.merge``'s replay guard reads it).
+_PARTIALS = ("_docs", "", "_stats")
 
 
 def merge_bm25_delta(
     spark: SparkSession, docs: DataFrame, table_name: str, sweep: bool = True
 ) -> int:
     """Idempotently fold one batch of documents into the BM25 index;
-    returns the number of NEW documents indexed (module doc has the
-    commit protocol and the replay argument). ``sweep=False`` skips the
+    returns the number of NEW documents indexed (the transaction and the
+    replay guard are ``commitlog.merge``'s). ``sweep=False`` skips the
     per-merge debris reclaim — debris is invisible to readers regardless
     (the commits semi-join), so a caller that just initialized the tables
     empty (the parity certificates) or batches reclaim to one final sweep
@@ -75,7 +53,6 @@ def merge_bm25_delta(
     return _merge_bm25(
         spark, docs, table_name, sweep,
         lambda d: (batch_bm25_postings(d), doc_lengths(d)),
-        ("doc_id",),
     )
 
 
@@ -91,14 +68,7 @@ def merge_passage_bm25_delta(
     (doc_id, passage_idx) key; the stats partials are passage-scoped and
     both frames derive from the ONE checkpointed window derivation
     (``retrieval.passage_bm25_frames``)."""
-    from columnar_aware_dedup_spark.operators.retrieval import (
-        passage_bm25_frames,
-    )
-
-    return _merge_bm25(
-        spark, docs, table_name, sweep, passage_bm25_frames,
-        ("doc_id", "passage_idx"),
-    )
+    return _merge_bm25(spark, docs, table_name, sweep, passage_bm25_frames)
 
 
 def _merge_bm25(
@@ -107,94 +77,20 @@ def _merge_bm25(
     table_name: str,
     sweep: bool,
     frames_of,
-    keys: tuple[str, ...],
 ) -> int:
-    """The one commit-protocol merge behind both granularities — the
-    layouts differ only in the item key the ``frames_of`` builder emits
-    (one call -> (postings, registry), so a granularity whose two frames
-    share a derivation pays it once), while the protocol (manifest
-    first, attempt-tagged appends, marker commit last) and the replay
-    discipline are written once."""
-    import uuid
+    """The one merge behind both granularities: the layouts differ only
+    in the item key the ``frames_of`` builder emits (one call ->
+    (postings, registry), so a granularity whose two frames share a
+    derivation pays it once); the transaction is ``commitlog.merge``'s."""
 
-    tables = [
-        table_name + s for s in (*_PARTIAL_SUFFIXES, "_attempts", "_commits")
-    ]
-    with fold.locked(spark, table_name, *tables):
-        if sweep:
-            sweep_uncommitted_bm25(spark, table_name)
-        seen = committed_bm25(spark, table_name, "_docs").select("doc_id")
-        # dropDuplicates: a file AND its at-least-once replay can land in
-        # the SAME micro-batch (both present before the stream's first
-        # trigger), where the registry anti-join cannot see them — without
-        # the intra-batch dedup that doc's tf doubles and N/avgdl inflate
-        # permanently. localCheckpoint, NOT persist: the anti-join's
-        # lineage reads the registry table this merge appends to, and an
-        # insert invalidates caches over the inserted table — a persisted
-        # `fresh` silently recomputes as EMPTY after the registry append
-        # (observed: the old single-row stats went (old_n, NULL, NULL)
-        # because sum-of-empty is NULL). Checkpointing severs the lineage
-        # so the batch's delta is pinned before any write.
-        fresh = (
-            docs.dropDuplicates(["doc_id"])
-            .join(seen, "doc_id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        n = fresh.count()
-        if not n:
-            return 0
-        attempt = uuid.uuid4().hex
-        # manifest first (the protocol's step zero): a crash anywhere past
-        # this line is detectable from the attempts/commits diff alone
-        from columnar_aware_dedup_spark.streaming.commitlog import (
-            append_driver_rows,
-            record_attempt,
-        )
-
-        record_attempt(spark, table_name + "_attempts", attempt)
-        tag = F.lit(attempt).alias("attempt_id")
+    def derive(fresh: DataFrame):
         postings, registry = frames_of(fresh)
-        registry_delta = registry.select(*keys, "dl", tag)
-        fold.laid_out(
-            spark, postings.select("term", *keys, "tf", "dl", tag), table_name
-        ).write.format("parquet").mode("append").insertInto(table_name)
-        registry_delta.write.format("parquet").mode("append").insertInto(
-            table_name + "_docs"
-        )
-        # the stats partial is ONE aggregated row per merge — write it
-        # driver-side like the markers (r11 optimization; the Delta-
-        # commit-file discipline: metadata-sized appends cost no
-        # distributed job — was a full shuffle + write job, ~0.3 s/merge)
-        srow = (
-            corpus_stats(registry_delta)
-            .select(tag, "n_docs", "n_dl_docs", "dl_sum")
-            .collect()[0]
-        )
-        import pyarrow as pa
-
-        append_driver_rows(
-            spark,
-            table_name + "_stats",
-            pa.table(
-                {
-                    "attempt_id": pa.array([srow["attempt_id"]], pa.string()),
-                    "n_docs": pa.array([srow["n_docs"]], pa.int64()),
-                    "n_dl_docs": pa.array([srow["n_dl_docs"]], pa.int64()),
-                    "dl_sum": pa.array([srow["dl_sum"]], pa.int64()),
-                }
-            ),
-        )
-        # the publication point: everything above becomes visible in this
-        # one single-table marker append (driver-side atomic rename — the
-        # commit-file discipline, streaming/commitlog.py)
-        from columnar_aware_dedup_spark.streaming.commitlog import (
-            append_marker_row,
+        return (
+            {"": postings, "_docs": registry},
+            {"_stats": corpus_stats(registry)},
         )
 
-        append_marker_row(spark, table_name + "_commits", attempt)
-        for t in tables:
-            spark.catalog.refreshTable(t)
-        return n
+    return commitlog.merge(spark, table_name, _PARTIALS, docs, derive, sweep)
 
 
 def start_bm25_indexer(

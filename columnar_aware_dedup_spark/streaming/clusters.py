@@ -28,12 +28,13 @@ Crash discipline (the sketches/spans lesson): band rows append first
 from ``bands-docs MINUS done-docs``, so a crash between the band append
 and the label write leaves debris that the NEXT merge folds — replays are
 no-ops because a doc's band rows and pair contributions are pure functions
-of its text. The one window the anti-join cannot heal is a crash BETWEEN
-the label swap's two renames (canonical name briefly unbound, both
-versions intact on disk) — :func:`recover_labels` is the executable
-rebind for it, mirroring ``store.recover_compaction``, and binding the
-OLD labels is always safe because the crashed merge's docs were never
-marked done.
+of its text. The label table is replaced through the store's crash-safe
+swap (``store.staged_swap_overwrite``). The one window the anti-join
+cannot heal is a crash BETWEEN that swap's two renames (canonical name
+briefly unbound, both versions intact on disk);
+``store.recover_compaction`` rebinds either version, and binding the OLD
+labels is always safe because the crashed merge's docs were never marked
+done.
 """
 
 from __future__ import annotations
@@ -44,13 +45,8 @@ from pyspark.sql import functions as F
 from columnar_aware_dedup_spark.operators.clustering import (
     connected_components_star,
 )
-from columnar_aware_dedup_spark.sources.store import drop_table_and_dir
+from columnar_aware_dedup_spark.sources.store import staged_swap_overwrite
 from columnar_aware_dedup_spark.streaming import fold, lsh
-
-
-# catalog-resolving table+directory cleanup, shared with the LSH band-table
-# init (the implementation and its ADVICE r06 rationale live in store.py)
-_drop_table_and_dir = drop_table_and_dir
 
 
 def init_cluster_tables(
@@ -145,74 +141,23 @@ def merge_clusters(
             else:
                 relabeled = connected_components_star(edges)
             keep = labels.join(affected, "cluster_id", "left_anti")
-            new_labels = keep.unionByName(
-                relabeled.select("doc_id", "cluster_id")
-            ).localCheckpoint(eager=True)
-
-            # swap labels with compact_store's rename-aside discipline (a
-            # crash between the renames leaves both versions intact on disk;
-            # :func:`recover_labels` rebinds — the executable recovery path,
-            # like store.recover_compaction), THEN append markers: a crash
-            # before the markers means the next merge re-folds the same docs
-            # onto already-correct labels — idempotent, same pairs, same
-            # components, same minima.
-            for suffix in ("__next", "__prev"):
-                _drop_table_and_dir(spark, f"{label_table}{suffix}")
-            new_labels.write.format("parquet").mode("overwrite").saveAsTable(
-                f"{label_table}__next"
+            # swap labels through the store's staged swap (the staging
+            # table is fully written before the first rename, so the frame
+            # may read the label table itself), THEN append markers: a
+            # crash before the markers means the next merge re-folds the
+            # same docs onto already-correct labels — idempotent, same
+            # pairs, same components, same minima.
+            staged_swap_overwrite(
+                spark,
+                label_table,
+                keep.unionByName(relabeled.select("doc_id", "cluster_id")),
             )
-            spark.sql(
-                f"ALTER TABLE {label_table} RENAME TO {label_table}__prev"
-            )
-            spark.sql(
-                f"ALTER TABLE {label_table}__next RENAME TO {label_table}"
-            )
-            spark.sql(f"DROP TABLE {label_table}__prev")
             todo_ids.write.format("parquet").mode("append").insertInto(
                 done_table
             )
             return n_todo
         finally:
             todo_ids.unpersist()
-
-
-def recover_labels(
-    spark: SparkSession, label_table: str, prefer: str = "new"
-) -> str | None:
-    """Recover from a label swap crashed between the two renames — the
-    ``store.recover_compaction`` procedure for the cluster maintainer's
-    ``__next`` / ``__prev`` suffixes. Under the same writer lock:
-
-    - canonical table bound -> nothing to recover; drop stray swap debris
-      and return None;
-    - canonical unbound (the crash window): rebind ``prefer`` ("new" = the
-      fully-written relabeled table, "old" = the pre-merge labels — both
-      intact by construction, because rename-aside happens only after the
-      relabeled table is completely materialized), drop the other, return
-      which was bound. Binding "old" is always SAFE, not just available:
-      the done markers append after the swap, so a crashed merge left its
-      docs unmarked and the next merge re-folds them onto the old labels.
-    """
-    if prefer not in ("new", "old"):
-        raise ValueError(f"prefer must be 'new' or 'old', got {prefer!r}")
-    candidates = {"new": f"{label_table}__next", "old": f"{label_table}__prev"}
-    with fold.locked(spark, label_table):
-        if spark.catalog.tableExists(label_table):
-            for tbl in candidates.values():
-                _drop_table_and_dir(spark, tbl)
-            return None
-        pick = candidates[prefer]
-        if not spark.catalog.tableExists(pick):
-            pick = candidates["old" if prefer == "new" else "new"]
-        if not spark.catalog.tableExists(pick):
-            raise RuntimeError(
-                f"neither swap candidate of {label_table} exists — nothing "
-                "to rebind (was init_cluster_tables ever run?)"
-            )
-        spark.sql(f"ALTER TABLE {pick} RENAME TO {label_table}")
-        other = [t for t in candidates.values() if t != pick][0]
-        _drop_table_and_dir(spark, other)
-        return pick
 
 
 def clusters_from_index(spark: SparkSession, label_table: str) -> DataFrame:

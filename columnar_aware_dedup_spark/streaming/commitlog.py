@@ -1,20 +1,21 @@
-"""The commit-marker protocol's shared machinery: attempt-tagged partial
-tables, an attempts manifest appended FIRST, a commits table appended
-LAST, committed-only reads, and a crash-safe debris sweep — ONE copy
-serving every multi-table maintainer (``streaming/sketches.py``
-originated the protocol for the CMS/HLL tables; ``streaming/bm25.py``
-adopted it for the BM25 index; any future index whose merge spans
-several plain-parquet tables plugs in here).
+"""The commit-marker protocol for the indexes whose merge spans several
+plain-parquet tables: one transaction, :func:`commit`, and the merge
+around it, :func:`merge`. The document and passage BM25 indexes
+(``streaming/bm25.py``, ``retrieval.write_bm25_index``'s genesis) and the
+CMS/HLL sketches (``streaming/sketches.py``) publish through them; a new
+multi-table index declares its tables and a ``derive`` and plugs in here.
 
-The protocol: plain parquet gives no cross-table atomicity, so every row
-of a merge carries a fresh ``attempt_id`` and readers only honor rows
-whose attempt reached the commits table — the single-table publication
-point. The merge records its attempt in the MANIFEST table before
-touching any data table, so "did anything crash?" is answerable from two
-one-column tables of one row per merge each (``attempts ∖ commits``) —
-the per-merge sweep reads ZERO data rows when nothing crashed (VERDICT
-r08 "What's wrong" #3: the manifest-less probe paid a full anti-join
-scan of every guarded table per merge just to learn "0 debris").
+A family ``f`` is its partial tables ``f{suffix}`` plus the two marker
+tables of :data:`MARKER_TABLES`. Plain parquet gives no cross-table
+atomicity, so every row of a merge carries a fresh ``attempt_id`` and
+readers only honor rows whose attempt reached ``f_commits``
+(:func:`committed`) — the single-table publication point. :func:`commit`
+records the attempt in the ``f_attempts`` MANIFEST before touching any
+data table, so "did anything crash?" is answerable from two one-column
+tables of one row per merge each (``attempts ∖ commits``) — the
+per-merge sweep reads ZERO data rows when nothing crashed (VERDICT r08
+"What's wrong" #3: the manifest-less probe paid a full anti-join scan of
+every guarded table per merge just to learn "0 debris").
 
 A crash between appends leaves invisible debris; the sweep physically
 reclaims it at the next merge through the ``compact_store`` staged-swap
@@ -31,17 +32,36 @@ sweep's preflight rebinds the fully-swept version automatically.
 
 from __future__ import annotations
 
+import uuid
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from columnar_aware_dedup_spark.sources.store import (
+    _store_location,
+    bucket_spec,
+    recover_compaction_unlocked,
+    staged_swap_overwrite,
+)
+from columnar_aware_dedup_spark.streaming import fold
 
-def committed_rows(
-    spark: SparkSession, table: str, commits_table: str
-) -> DataFrame:
-    """``table`` rows restricted to COMMITTED attempts (the broadcast
-    semi-join every reader of a protocol-guarded table goes through)."""
-    return spark.table(table).join(
-        F.broadcast(spark.table(commits_table)), "attempt_id", "left_semi"
+#: the two marker tables every protocol family carries, as
+#: ``fold.init_tables`` specs: the attempts manifest and the commits.
+MARKER_TABLES: dict[str, tuple[str, bool]] = {
+    "_attempts": ("attempt_id string", False),
+    "_commits": ("attempt_id string", False),
+}
+
+
+def committed(spark: SparkSession, family: str, suffix: str) -> DataFrame:
+    """``{family}{suffix}`` rows restricted to COMMITTED attempts (the
+    broadcast semi-join every reader of a protocol-guarded table goes
+    through)."""
+    return spark.table(family + suffix).join(
+        F.broadcast(spark.table(family + "_commits")),
+        "attempt_id",
+        "left_semi",
     )
 
 
@@ -57,8 +77,6 @@ def _table_location(spark: SparkSession, table: str) -> str:
     row and raises a named error, so the two cannot drift); the returned
     plain path resolves to a pyarrow LocalFileSystem locally and to the
     scheme-matched filesystem elsewhere."""
-    from columnar_aware_dedup_spark.sources.store import _store_location
-
     key = f"{spark.conf.get('spark.sql.warehouse.dir')}::{table.lower()}"
     loc = _LOCATION_CACHE.get(key)
     if loc is None:
@@ -81,14 +99,12 @@ def append_driver_rows(spark: SparkSession, table: str, pa_table) -> None:
 
     For bounded single-row appends only (markers, per-attempt stats
     partials) — data tables keep the distributed write path."""
-    import uuid as _uuid
-
     import pyarrow.parquet as pq
     from pyarrow import fs as pafs
 
     location = _table_location(spark, table)
     filesystem, path = pafs.FileSystem.from_uri(location)
-    fname = f"part-{_uuid.uuid4().hex}-marker.parquet"
+    fname = f"part-{uuid.uuid4().hex}-marker.parquet"
     tmp, final = f"{path}/.{fname}", f"{path}/{fname}"
     with filesystem.open_output_stream(tmp) as out:
         pq.write_table(pa_table, out)
@@ -119,15 +135,97 @@ def record_attempt(
     append_marker_row(spark, attempts_table, attempt_id)
 
 
+def commit(
+    spark: SparkSession,
+    family: str,
+    attempt: str,
+    appends: dict[str, DataFrame],
+    rows: dict[str, DataFrame],
+) -> None:
+    """Publish one attempt of ``family``: the manifest row first, then
+    each ``appends[suffix]`` frame as a distributed append to
+    ``{family}{suffix}``, then each one-row ``rows[suffix]`` frame
+    driver-side (:func:`append_driver_rows` — metadata-sized partials
+    such as the BM25 stats row cost no distributed job), then the commit
+    marker LAST. Every frame is tagged with ``attempt`` and selected in
+    its table's column order (``insertInto`` binds by position); appends
+    are laid out on the table's own bucket spec (``fold.laid_out``). A
+    crash anywhere before the marker leaves only invisible debris."""
+    tag = F.lit(attempt).alias("attempt_id")
+
+    def tagged(frame: DataFrame, table: str) -> DataFrame:
+        return frame.select("*", tag).select(*spark.table(table).columns)
+
+    record_attempt(spark, family + "_attempts", attempt)
+    for suffix, frame in appends.items():
+        table = family + suffix
+        fold.laid_out(spark, tagged(frame, table), table).write.format(
+            "parquet"
+        ).mode("append").insertInto(table)
+    for suffix, frame in rows.items():
+        table = family + suffix
+        append_driver_rows(spark, table, tagged(frame, table).toArrow())
+    append_marker_row(spark, family + "_commits", attempt)
+
+
+def merge(
+    spark: SparkSession,
+    family: str,
+    partials: tuple[str, ...],
+    docs: DataFrame,
+    derive: Callable[
+        [DataFrame], tuple[dict[str, DataFrame], dict[str, DataFrame]]
+    ],
+    sweep: bool,
+) -> int:
+    """Idempotently fold one batch of documents into ``family``; returns
+    the number of NEW documents. ``partials`` are the suffixes of the
+    attempt-tagged tables, the doc-keyed registry first; ``derive`` maps
+    the new documents to :func:`commit`'s ``(appends, rows)``.
+
+    Under the family lock: the optional debris sweep (``sweep=False``
+    loses space-accounting, never correctness — debris is invisible to
+    readers regardless — so a caller that just zeroed the tables skips
+    it), then the batch deduplicated on ``doc_id`` and anti-joined against
+    the COMMITTED registry, so at-least-once delivery — a replay in a
+    later batch or in the same one — adds nothing. The new documents are
+    pinned by an eager ``localCheckpoint``, NOT ``persist``: the
+    anti-join's lineage reads the registry this merge appends to, and an
+    insert invalidates caches over the inserted table — a persisted delta
+    silently recomputes as EMPTY after the registry append (observed: the
+    BM25 stats row went (old_n, NULL, NULL)). A crashed attempt's batch
+    re-derives under a NEW attempt and only that one commits.
+
+    Every family table is refreshed on ``spark`` before reading and after
+    publishing: under ``foreachBatch`` the appends run in the micro-batch's
+    CLONED session, and a later reader on ``spark`` must never serve the
+    pre-append listing."""
+    tables = [family + s for s in (*partials, *MARKER_TABLES)]
+    with fold.locked(spark, family, *tables):
+        if sweep:
+            sweep_uncommitted(
+                spark, tables[: len(partials)],
+                family + "_commits", family + "_attempts",
+            )
+        seen = committed(spark, family, partials[0]).select("doc_id")
+        fresh = (
+            docs.dropDuplicates(["doc_id"])
+            .join(seen, "doc_id", "left_anti")
+            .localCheckpoint(eager=True)
+        )
+        n = fresh.count()
+        if n:
+            commit(spark, family, uuid.uuid4().hex, *derive(fresh))
+        for t in tables:
+            spark.catalog.refreshTable(t)
+        return n
+
+
 def _recover_if_unbound(spark: SparkSession, name: str) -> None:
     """Preflight for a sweep that crashed mid-swap: the canonical name is
     unbound but both staged versions are intact — rebind the swept one.
-    Runs UNLOCKED (the caller holds the family lock, whose name may be
-    this very table; the mkdir mutex is not reentrant)."""
-    from columnar_aware_dedup_spark.sources.store import (
-        recover_compaction_unlocked,
-    )
-
+    Runs UNLOCKED (the caller holds the family lock; the mkdir mutex is
+    not reentrant)."""
     if not spark.catalog.tableExists(name):
         recover_compaction_unlocked(spark, name, prefer="new")
         spark.catalog.refreshTable(name)
@@ -140,11 +238,11 @@ def sweep_uncommitted(
     attempts_table: str,
 ) -> int:
     """Physically remove crash debris from ``tables``: rows whose
-    ``attempt_id`` never reached ``commits_table``. Call under the store
-    lock at the start of a merge. Debris is invisible to readers
-    regardless (the commits semi-join), so this is a space reclaim, not a
-    correctness step — but without it an often-crashing writer accretes
-    dead rows forever.
+    ``attempt_id`` never reached ``commits_table``. Call under the family
+    lock at the start of a merge (:func:`merge` does). Debris is invisible
+    to readers regardless (the commits semi-join), so this is a space
+    reclaim, not a correctness step — but without it an often-crashing
+    writer accretes dead rows forever.
 
     Fast path: crashed attempts are read off the MANIFEST
     (``attempts_table`` ∖ ``commits_table`` — two one-column tables, one
@@ -160,11 +258,6 @@ def sweep_uncommitted(
     mid-swap is repaired by the next sweep's preflight. The manifest is
     shrunk to live attempts LAST, so an interrupted reclaim simply
     resumes. Returns debris rows removed."""
-    from columnar_aware_dedup_spark.sources.store import (
-        bucket_spec,
-        staged_swap_overwrite,
-    )
-
     for name in (attempts_table, commits_table):
         _recover_if_unbound(spark, name)
     # one row per merge ever — driver-collectable by construction

@@ -15,9 +15,11 @@ one place they are written down:
   bucket spec, and append it in one observed write that counts it;
 - :func:`start` drains a file-source stream through a merge.
 
-Maintainers whose merge spans several tables (``bm25._merge_bm25``,
-``sketches.merge_sketches``, ``clusters.merge_clusters``) keep their
-commit protocol and use :func:`locked` as the shell around it.
+Maintainers whose merge spans several tables publish through the
+commit-marker transaction in ``streaming/commitlog.py`` (the BM25 and
+sketch families), which is built from :func:`locked` and
+:func:`laid_out`; ``clusters.merge_clusters`` replaces its label table
+through the store's crash-safe swap (``store.staged_swap_overwrite``).
 """
 
 from __future__ import annotations
@@ -53,17 +55,22 @@ def init_tables(
     run, and a Derby drop/create round trip per table costs more than the
     merges themselves. Any other existing state, including crash debris
     from an earlier session, goes through the catalog-resolving
-    ``store.drop_table_and_dir``."""
+    ``store.drop_table_and_dir``, and the table is then created by DDL:
+    a catalog call with no Spark job (writing an empty frame ran a job of
+    ``defaultParallelism`` Python tasks)."""
     for suffix, (schema, bucketed) in specs.items():
         name = table_name + suffix
         buckets = (n_buckets, bucket_key) if bucketed else (None, None)
         if truncate_if_layout_matches(spark, name, schema, buckets):
             continue
         drop_table_and_dir(spark, name)
-        writer = spark.createDataFrame([], schema).write.format("parquet")
-        if bucketed:
-            writer = writer.bucketBy(n_buckets, bucket_key).sortBy(bucket_key)
-        writer.mode("overwrite").saveAsTable(name)
+        layout = (
+            f" CLUSTERED BY ({bucket_key}) SORTED BY ({bucket_key})"
+            f" INTO {n_buckets} BUCKETS"
+            if bucketed
+            else ""
+        )
+        spark.sql(f"CREATE TABLE {name} ({schema}) USING parquet{layout}")
     return table_name
 
 

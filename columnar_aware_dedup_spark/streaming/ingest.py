@@ -35,8 +35,12 @@ def start_ingest(
     is fine.
     """
     if not spark.catalog.tableExists(store_table):
-        store.create_store(
-            spark, spark.createDataFrame([], CHUNK_SCHEMA), store_table
+        fold.init_tables(
+            spark,
+            store_table,
+            {"": (store.STORE_SCHEMA, True)},
+            store.DEFAULT_BUCKETS,
+            "signature",
         )
     files = (
         spark.readStream.format("binaryFile")

@@ -13,7 +13,9 @@ re-aggregate at serve time (SUM cells, MAX registers), and
 ``sources.store.compact_store`` folds the appends back to one row per cell
 when the table grows. Exact equality with the batch-built sketch follows
 from disjoint-doc additivity, and the two-waves-plus-replay test asserts
-it cell-for-cell.
+it cell-for-cell. A merge appends to three tables (seen docs, CMS cells,
+HLL registers) and publishes them through the commit-marker protocol
+(``streaming/commitlog.py``).
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ from columnar_aware_dedup_spark.operators.selection import (
     _HLL_RHO_SPARK,
 )
 from columnar_aware_dedup_spark.operators.text import _NORM_SPARK
-from columnar_aware_dedup_spark.streaming import fold
+from columnar_aware_dedup_spark.streaming import commitlog, fold
 
 
 def _tokens(docs: DataFrame) -> DataFrame:
@@ -74,6 +76,11 @@ def batch_hll_regs(docs: DataFrame) -> DataFrame:
     )
 
 
+#: the attempt-tagged tables, the doc-keyed registry first
+#: (``commitlog.merge``'s replay guard reads it).
+_PARTIALS = ("_seen", "_cms", "_hll")
+
+
 def init_sketch_tables(spark: SparkSession, prefix: str) -> None:
     """Create the five empty state tables (seen docs, CMS cells, HLL
     register partials, attempts manifest, commit markers) under
@@ -89,37 +96,10 @@ def init_sketch_tables(spark: SparkSession, prefix: str) -> None:
             "_seen": ("doc_id long, attempt_id string", False),
             "_cms": ("d int, b int, n long, attempt_id string", False),
             "_hll": ("reg int, mr int, attempt_id string", False),
-            "_attempts": ("attempt_id string", False),
-            "_commits": ("attempt_id string", False),
+            **commitlog.MARKER_TABLES,
         },
         0,
         "",
-    )
-
-
-def _committed(spark: SparkSession, prefix: str, suffix: str) -> DataFrame:
-    """The ``suffix`` partial rows restricted to COMMITTED attempts
-    (through the shared protocol machinery, ``streaming/commitlog.py``)."""
-    from columnar_aware_dedup_spark.streaming.commitlog import committed_rows
-
-    return committed_rows(spark, f"{prefix}_{suffix}", f"{prefix}_commits")
-
-
-def sweep_uncommitted(spark: SparkSession, prefix: str) -> int:
-    """Physically remove crash debris from the three partial tables.
-    Must be called under the store lock (``merge_sketches`` does,
-    opportunistically, before each merge — cheap when nothing crashed:
-    the shared implementation,
-    ``streaming/commitlog.py::sweep_uncommitted``, answers "any debris?"
-    from the attempts/commits manifests alone and reclaims through the
-    crash-safe staged swap)."""
-    from columnar_aware_dedup_spark.streaming import commitlog
-
-    return commitlog.sweep_uncommitted(
-        spark,
-        [f"{prefix}_{s}" for s in ("seen", "cms", "hll")],
-        f"{prefix}_commits",
-        f"{prefix}_attempts",
     )
 
 
@@ -127,89 +107,35 @@ def merge_sketches(
     spark: SparkSession, docs: DataFrame, prefix: str, sweep: bool = True
 ) -> int:
     """Idempotently fold one batch into the sketch tables; returns the
-    number of NEW documents absorbed. ``sweep=False`` skips the per-merge
-    debris reclaim (r11 — the ``merge_bm25_delta`` flag, same argument:
-    debris is invisible to readers regardless via the commits semi-join,
-    so a caller that just initialized the tables empty loses
-    space-accounting, never correctness).
-
-    Atomic-commit protocol (ADVICE r04 #1 — the three appends are not
-    atomic on plain parquet, so a crash between them must not corrupt the
-    additive CMS): every partial row of this merge carries a fresh
-    ``attempt_id``, and readers / the dedup anti-join only honor rows whose
-    attempt appears in the ``commits`` table — which is appended LAST, as
-    the single-table publication point. A crash before the commit marker
-    leaves invisible garbage (physically removed by
-    :func:`sweep_uncommitted` at the start of the next merge);
-    the checkpoint replay then re-derives the same docs under a NEW attempt
-    and only that attempt ever commits. A replayed file after a successful
-    commit anti-joins away as before, so it still adds zero counts.
-
-    Cache discipline: under ``foreachBatch`` the partial appends execute in
-    the micro-batch's CLONED session, which invalidates only its own
-    table-relation cache — while ``spark`` here is the outer session whose
-    sweep just read (and therefore cached) every table's file listing. The
-    merge refreshes the four tables on ``spark`` both BEFORE reading and
-    AFTER publishing, so a later reader on this session never serves the
-    pre-append listing (without the trailing refresh, ``served_cms``
-    silently dropped the newest attempt's cells once the sweep started
-    touching the tables each round).
-    """
-    import uuid
-
-    tables = [
-        f"{prefix}_{s}" for s in ("seen", "cms", "hll", "attempts", "commits")
-    ]
-    with fold.locked(spark, f"{prefix}_seen", *tables):
-        if sweep:
-            sweep_uncommitted(spark, prefix)
-        seen = _committed(spark, prefix, "seen")
-        # dropDuplicates: intra-batch replay guard (the indexer/ingest
-        # discipline) — a doc twice in one batch would double its CMS/HLL
-        # contributions before the anti-join can see it.
-        fresh = (
-            docs.dropDuplicates(["doc_id"])
-            .join(seen, "doc_id", "left_anti")
-            .persist()
-        )
-        try:
-            n = fresh.count()
-            if n:
-                attempt = uuid.uuid4().hex
-                # manifest first (the protocol's step zero): a crash past
-                # this line is detectable from attempts ∖ commits alone
-                from columnar_aware_dedup_spark.streaming.commitlog import (
-                    append_marker_row,
-                    record_attempt,
-                )
-
-                record_attempt(spark, f"{prefix}_attempts", attempt)
-                tag = F.lit(attempt).alias("attempt_id")
-                batch_cms_cells(fresh).select("d", "b", "n", tag).write.format(
-                    "parquet"
-                ).mode("append").insertInto(f"{prefix}_cms")
-                batch_hll_regs(fresh).select("reg", "mr", tag).write.format(
-                    "parquet"
-                ).mode("append").insertInto(f"{prefix}_hll")
-                fresh.select("doc_id", tag).write.format("parquet").mode(
-                    "append"
-                ).insertInto(f"{prefix}_seen")
-                # the publication point: everything above becomes visible
-                # in this one single-table marker append (driver-side
-                # atomic rename — the commit-file discipline)
-                append_marker_row(spark, f"{prefix}_commits", attempt)
-        finally:
-            fresh.unpersist()
-        for t in tables:
-            spark.catalog.refreshTable(t)
-        return n
+    number of NEW documents absorbed. The three appends are not atomic on
+    plain parquet, so they publish through the commit-marker protocol
+    (``commitlog.merge``, ADVICE r04 #1): a crash before the commit marker
+    must not corrupt the additive CMS, and it cannot — uncommitted cells
+    are invisible to :func:`served_cms`. ``sweep=False`` skips the
+    per-merge debris reclaim (a caller that just initialized the tables
+    empty loses space-accounting, never correctness)."""
+    return commitlog.merge(
+        spark,
+        prefix,
+        _PARTIALS,
+        docs,
+        lambda fresh: (
+            {
+                "_cms": batch_cms_cells(fresh),
+                "_hll": batch_hll_regs(fresh),
+                "_seen": fresh.select("doc_id"),
+            },
+            {},
+        ),
+        sweep,
+    )
 
 
 def served_cms(spark: SparkSession, prefix: str) -> DataFrame:
     """(d, b, n): the maintained sketch — committed appends re-aggregated
     at read (uncommitted attempts are crash debris and never count)."""
     return (
-        _committed(spark, prefix, "cms")
+        commitlog.committed(spark, prefix, "_cms")
         .groupBy("d", "b")
         .agg(F.sum("n").cast("bigint").alias("n"))
     )
@@ -218,7 +144,7 @@ def served_cms(spark: SparkSession, prefix: str) -> DataFrame:
 def served_hll(spark: SparkSession, prefix: str) -> DataFrame:
     """(reg, mr): the maintained registers, committed rows max-merged."""
     return (
-        _committed(spark, prefix, "hll")
+        commitlog.committed(spark, prefix, "_hll")
         .groupBy("reg")
         .agg(F.max("mr").alias("mr"))
     )

@@ -10,6 +10,10 @@ and ``fold.append_new`` stays one observed write: no pin, no count.
 
 Every streaming parity certificate folds through
 ``streaming_parity._certify``, the one place its replay check lives.
+
+The commit-marker protocol's writes (manifest row, driver-side rows,
+commit marker) happen only inside ``streaming/commitlog.py``, and table
+drops and renames only inside ``sources/store.py``.
 """
 
 from __future__ import annotations
@@ -34,6 +38,8 @@ BUCKETED_WRITERS = sorted(STREAMING.glob("*.py")) + [
 ]
 #: the registered streaming parity certificates
 PARITY = PACKAGE / "operators" / "streaming_parity.py"
+#: every module of the package
+PACKAGE_MODULES = sorted(PACKAGE.rglob("*.py"))
 
 
 def _names(tree: ast.AST) -> set[str]:
@@ -175,3 +181,58 @@ def test_append_new_is_one_observed_write():
     ]
     assert not extra, extra
     assert "observe" in {c.func.attr for c in _method_calls(fn)}
+
+
+def _called_names(tree: ast.AST) -> list[tuple[str, int]]:
+    """(callee name, line) of every call, by bare or attribute name."""
+    out = []
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Call):
+            f = n.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+            out.append((name, n.lineno))
+    return out
+
+
+def test_protocol_writes_live_in_commitlog():
+    """The manifest row, the driver-side partial rows and the commit
+    marker are written by ``commitlog.commit`` alone: a maintainer that
+    publishes through its own copy of the protocol fails here."""
+    writers = {"append_marker_row", "append_driver_rows", "record_attempt"}
+    offenders = [
+        f"{path.relative_to(PACKAGE)}:{line} {name}"
+        for path in PACKAGE_MODULES
+        if path != STREAMING / "commitlog.py"
+        for name, line in _called_names(_parse(path))
+        if name in writers
+    ]
+    assert not offenders, offenders
+
+
+def _sql_strings(tree: ast.AST) -> list[ast.Constant]:
+    """String constants that are not docstrings or comment-like bare
+    expressions (f-string parts included)."""
+    bare = {
+        id(n.value) for n in ast.walk(tree)
+        if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
+    }
+    return [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+        and id(n) not in bare
+    ]
+
+
+def test_table_drops_and_renames_live_in_store():
+    """``DROP TABLE`` and ``RENAME TO`` are spelled only in
+    ``sources/store.py`` (``drop_table_and_dir``, the staged swap and its
+    recovery): an inline drop with a local ``rmtree`` silently leaves the
+    directory behind on an hdfs:// or s3a:// warehouse."""
+    offenders = [
+        f"{path.relative_to(PACKAGE)}:{n.lineno}"
+        for path in PACKAGE_MODULES
+        if path != PACKAGE / "sources" / "store.py"
+        for n in _sql_strings(_parse(path))
+        if "DROP TABLE" in n.value.upper() or "RENAME TO" in n.value.upper()
+    ]
+    assert not offenders, offenders

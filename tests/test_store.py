@@ -524,3 +524,33 @@ def test_append_layout_and_observed_count(spark, sf_dir):
         assert after == non_empty == len(set(buckets)) == len(buckets)
     finally:
         store.drop_table_and_dir(spark, tbl)
+
+
+def test_fold_table_create_runs_no_job(spark):
+    """Creating an empty fold table is a catalog call with no Spark job
+    (an empty-frame ``saveAsTable`` ran a job of ``defaultParallelism``
+    Python tasks), and the created layout is the one the spec declares:
+    the next init truncates it in place and an append lands in it."""
+    from columnar_aware_dedup_spark.streaming import fold
+
+    tbl = "test_fold_create_no_job"
+    spec = {"": (store.STORE_SCHEMA, True)}
+    sc = spark.sparkContext
+    store.drop_table_and_dir(spark, tbl)
+    try:
+        sc.setJobGroup(tbl, tbl)
+        try:
+            fold.init_tables(spark, tbl, spec, 8, "signature")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(tbl)) == []
+        assert store.bucket_spec(spark, tbl) == (8, "signature")
+        assert fold.truncate_if_layout_matches(
+            spark, tbl, store.STORE_SCHEMA, (8, "signature")
+        )
+        rows = spark.createDataFrame(
+            [("a", "Row", 1), ("b", "Row", 2)], store.STORE_SCHEMA
+        )
+        assert store.merge_into_store(spark, rows, tbl) == 2
+    finally:
+        store.drop_table_and_dir(spark, tbl)

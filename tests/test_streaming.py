@@ -1285,13 +1285,15 @@ def test_cluster_delta_pairs_probe_discipline(spark, sf_dir, tmp_path):
 
 def test_cluster_label_swap_crash_recovery(spark, sf_dir, tmp_path):
     """Kill the label swap in its unbound window (canonical renamed aside,
-    replacement not yet renamed in) and drive recover_labels through both
-    branches: rebinding the OLD labels must leave the maintainer fully
-    functional — the crashed merge's docs were never marked done, so the
-    next merge re-folds them and converges to the batch answer anyway."""
+    replacement not yet renamed in) and drive the store's swap recovery
+    (``store.recover_compaction``) through both branches: rebinding the
+    OLD labels must leave the maintainer fully functional — the crashed
+    merge's docs were never marked done, so the next merge re-folds them
+    and converges to the batch answer anyway."""
 
     from pyspark.sql import functions as F
 
+    from columnar_aware_dedup_spark.sources import store
     from columnar_aware_dedup_spark.streaming import clusters, lsh
 
     band_tbl = "test_cluster_crash_bands"
@@ -1309,16 +1311,16 @@ def test_cluster_label_swap_crash_recovery(spark, sf_dir, tmp_path):
     # bound-canonical branch: nothing to recover, debris swept
     spark.createDataFrame([(1, 1)], "doc_id long, cluster_id long").write.mode(
         "overwrite"
-    ).saveAsTable(f"{label_tbl}__next")
-    assert clusters.recover_labels(spark, label_tbl) is None
-    assert not spark.catalog.tableExists(f"{label_tbl}__next")
+    ).saveAsTable(f"{label_tbl}__compacting")
+    assert store.recover_compaction(spark, label_tbl) is None
+    assert not spark.catalog.tableExists(f"{label_tbl}__compacting")
 
     # crash window: canonical unbound, old labels sitting aside
-    spark.sql(f"ALTER TABLE {label_tbl} RENAME TO {label_tbl}__prev")
+    spark.sql(f"ALTER TABLE {label_tbl} RENAME TO {label_tbl}__precompact")
     assert not spark.catalog.tableExists(label_tbl)
-    bound = clusters.recover_labels(spark, label_tbl, prefer="new")
+    bound = store.recover_compaction(spark, label_tbl, prefer="new")
     # prefer="new" falls back to the only candidate present — the old one
-    assert bound == f"{label_tbl}__prev"
+    assert bound == "old"
     got = sorted(tuple(r) for r in spark.table(label_tbl).collect())
     assert got == want, "recovered labels must be the pre-crash table"
 
@@ -1751,3 +1753,109 @@ def test_statskey_parquet_two_level_fold_serves_column_certificate(
         )
     )
     assert rows_equal(cert, parquet_stats_pruned_columns(spark, sf_dir))
+
+
+def _sketch_family(spark, name):
+    """(init, merge, served, partial tables) of the sketch family."""
+    from columnar_aware_dedup_spark.streaming import sketches as sk
+
+    def served():
+        return (
+            sorted(tuple(r) for r in sk.served_cms(spark, name).collect()),
+            sorted(tuple(r) for r in sk.served_hll(spark, name).collect()),
+        )
+
+    return (
+        lambda: sk.init_sketch_tables(spark, name),
+        lambda d: sk.merge_sketches(spark, d, name),
+        served,
+        [name + s for s in ("_seen", "_cms", "_hll")],
+    )
+
+
+def _bm25_family(spark, name):
+    """(init, merge, served, partial tables) of the document BM25 family."""
+    from columnar_aware_dedup_spark.operators.retrieval import (
+        bm25_from_index,
+        committed_bm25,
+        init_bm25_tables,
+    )
+    from columnar_aware_dedup_spark.streaming import bm25 as sbm25
+
+    def served():
+        stats = committed_bm25(spark, name, "_stats").groupBy().sum(
+            "n_docs", "n_dl_docs", "dl_sum"
+        )
+        return (
+            sorted(tuple(r) for r in bm25_from_index(spark, name).collect()),
+            tuple(stats.collect()[0]),
+        )
+
+    return (
+        lambda: init_bm25_tables(spark, name),
+        lambda d: sbm25.merge_bm25_delta(spark, d, name),
+        served,
+        [name + s for s in ("", "_docs", "_stats")],
+    )
+
+
+@pytest.mark.parametrize("family", [_sketch_family, _bm25_family],
+                         ids=["sketch", "bm25"])
+def test_crash_before_commit_marker_is_invisible_and_swept(
+    spark, sf_dir, monkeypatch, family
+):
+    """Crash the REAL transaction (``commitlog.commit``) at its last step:
+    the commit marker raises, so every data append of the attempt has
+    already landed. Serving must not see them, and the next (sweeping)
+    merge of the same batch must count the same documents, physically
+    remove the dead attempt and serve what a clean build serves."""
+    from columnar_aware_dedup_spark.streaming import commitlog
+
+    name = f"test_crash_{family.__name__.strip('_')}"
+    init, merge, served, partials = family(spark, name)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    wave1 = docs.filter(F.col("doc_id") % 2 == 0)
+    wave2 = docs.filter(F.col("doc_id") % 2 != 0)
+    init()
+    assert merge(wave1) > 0
+    before = served()
+
+    real = commitlog.append_marker_row
+
+    def crashing(spark_, table, attempt_id):
+        if table.endswith("_commits"):
+            raise RuntimeError("crashed before the commit marker")
+        real(spark_, table, attempt_id)
+
+    monkeypatch.setattr(commitlog, "append_marker_row", crashing)
+    with pytest.raises(RuntimeError, match="commit marker"):
+        merge(wave2)
+    monkeypatch.undo()
+
+    for t in (*partials, f"{name}_attempts", f"{name}_commits"):
+        spark.catalog.refreshTable(t)
+    (dead,) = [
+        r["attempt_id"]
+        for r in spark.table(f"{name}_attempts")
+        .join(spark.table(f"{name}_commits"), "attempt_id", "left_anti")
+        .collect()
+    ]
+
+    def debris():
+        return sum(
+            spark.table(t).filter(F.col("attempt_id") == dead).count()
+            for t in partials
+        )
+
+    # the data appends ran before the crash, and none of them is served
+    assert debris() > 0
+    assert served() == before
+
+    assert merge(wave2) == wave2.count()
+    assert debris() == 0
+    got = served()
+
+    init()
+    merge(wave1)
+    merge(wave2)
+    assert got == served()
