@@ -9,7 +9,10 @@ parquet source (predicate pushdown + column pruning via Catalyst).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -23,6 +26,27 @@ TABLES: tuple[str, ...] = (
     "documents",
     "embeddings",
 )
+
+#: inferred fixture schemas: path -> ((st_mtime_ns, st_size), schema).
+_SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per file
+    version: inference is a one-task Spark job plus a driver-side listing
+    on every call, and every registered query reads several fixtures. A
+    file rewritten in place changes its ``(st_mtime_ns, st_size)`` and is
+    inferred again; a path ``os.stat`` cannot see is read as before."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    stamp = (st.st_mtime_ns, st.st_size)
+    cached = _SCHEMAS.get(path)
+    if cached is None or cached[0] != stamp:
+        cached = _SCHEMAS[path] = (stamp, spark.read.parquet(path).schema)
+    return spark.read.schema(cached[1]).parquet(path)
+
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table (plain parquet scan, fully Catalyst-visible).
@@ -38,7 +62,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``streaming.ingest.events_stream`` applies, so batch/stream comparisons
     compare one type with no implicit NTZ<->LTZ coercion. The legacy conf is
     scoped to the nanos branch (restored otherwise), not left set
-    session-wide (ADVICE r02).
+    session-wide (ADVICE r02). ``events`` is always inferred with the
+    legacy conf set, so its memoized schema (:func:`_read_parquet`) is that
+    branch's.
     """
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; have {TABLES}")
@@ -54,7 +80,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set(key, "true")
         ts_is_long = False
         try:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+            df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
             ts_is_long = isinstance(df.schema["ts"].dataType, LongType)
         finally:
             if not ts_is_long:
@@ -68,4 +94,4 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         else:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")

@@ -207,13 +207,16 @@ def incoming_and_store_chunks(
     Snapshot A consists of *whole orders*, so A's chunk for a given
     (order, column) is byte-identical to the full snapshot's chunk — the
     store is just the incoming chunk table semi-joined to A's order keys.
-    Catalyst does NOT share the chunking between the two sides: it pushes
-    the semi-join below the store side's own ``collect_list``/md5
-    aggregation, so a plan that uses both chunks lineitem twice. A caller
-    for which that costs materializes the chunk table first, as
-    :func:`classified_chunks` does.
+
+    Chunking runs once per call. Left to itself, Catalyst would push the
+    semi-join (and any filter a caller adds, such as a parity certificate's
+    wave split) below the ``collect_list``/md5 aggregation, so every use of
+    either frame would chunk lineitem again. A lazy ``localCheckpoint``
+    materializes the chunk table on the first action instead, and every
+    later use of either frame reads it.
     """
-    incoming = lineitem_chunks(table(spark, sf_dir, "lineitem"))
+    li = table(spark, sf_dir, "lineitem")
+    incoming = lineitem_chunks(li).localCheckpoint(eager=False)
     keys_a = snapshot_a_keys(spark, sf_dir)
     store = incoming.join(
         keys_a, incoming.file_id == keys_a.o_orderkey, "left_semi"
@@ -302,26 +305,12 @@ def classified_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Catalyst does not reuse the chunk aggregation for the store side: it
     pushes the semi-join below that side's own ``collect_list``/md5
-    aggregation and chunks lineitem twice (11 jobs per run at sf0.01). A
-    lazy ``localCheckpoint`` materializes the chunk table once for both
-    sides (10 jobs, 7-15 % faster), the idiom and the trade of
+    aggregation and chunks lineitem twice (11 jobs per run at sf0.01).
+    :func:`incoming_and_store_chunks` materializes the chunk table once for
+    both sides (10 jobs, 7-15 % faster), the idiom and the trade of
     :func:`dedup_hierarchical`.
     """
-    chunks = lineitem_chunks(table(spark, sf_dir, "lineitem")).localCheckpoint(
-        eager=False
-    )
-    keys_a = snapshot_a_keys(spark, sf_dir)
-    store = (
-        chunks.join(keys_a, chunks.file_id == keys_a.o_orderkey, "left_semi")
-        .select("signature")
-        .distinct()
-        .withColumn("_h", F.lit(1))
-    )
-    return (
-        chunks.join(store, "signature", "left")
-        .withColumn("hit", F.col("_h").isNotNull())
-        .drop("_h")
-    )
+    return dedup_classify(*incoming_and_store_chunks(spark, sf_dir))
 
 
 @register("dedup_hit_miss", oracle=DEDUP_HIT_MISS_ORACLE)

@@ -191,8 +191,10 @@ def streaming_store_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature store: snapshot A's chunks fold in by file-id parity
     (``merge_into_store``'s anti-join-under-lock discipline), then the full
     chunk table probes the served table via ``probe_store``, whose plan
-    shuffles only the incoming side. This is the store-maintenance story
-    itself — the object every other index family imitates."""
+    shuffles only the incoming side once the store outgrows the broadcast
+    threshold. Lineitem is chunked once per run: both waves, the replay
+    and the probe read the one chunk table. This is the store-maintenance
+    story itself — the object every other index family imitates."""
     tbl = fold.init_tables(
         spark,
         "parity_sig_store",

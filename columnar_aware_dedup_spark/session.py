@@ -71,6 +71,11 @@ def get_spark(
             " -Dderby.system.home=/tmp/cawd-derby",
         )
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame call-site capture: every functions.* and
+        # DataFrame call otherwise pays a session lookup, a conf read and
+        # an origin set/clear over py4j. Errors lose only their Python
+        # "DataFrame context" line.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # bucketed store tables (sources/store.py) live outside the repo
         .config(

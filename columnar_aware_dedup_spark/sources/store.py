@@ -5,8 +5,11 @@ full chunk contents in heap (``orc/dedup/NaiveORCChunkStore.java:13-31``) —
 unbounded, volatile, single-node. The engine's store is a parquet table
 **bucketed by signature** (SURVEY §4.7/§7 risk list): at 100 TB the store is
 the big side of every probe, and bucketing pre-partitions it on the join key
-so a probe shuffles ONLY the incoming chunks — the store is read in place,
-bucket-aligned. Probes are signature-only (content never travels).
+so a probe shuffles ONLY the incoming chunks — above the session's broadcast
+threshold the store is read in place, bucket-aligned. A store that fits the
+threshold is broadcast anyway, so :func:`read_for_join` reads it as plain
+file splits instead of one task per bucket. Probes are signature-only
+(content never travels).
 
 Merge discipline (idempotent append) is the fold core's
 (:mod:`columnar_aware_dedup_spark.streaming.fold`), shared with every
@@ -286,12 +289,14 @@ def probe_store(
 ) -> DataFrame:
     """Classify incoming chunks against the bucketed store.
 
-    The store side's ``distinct`` and the join both ride the bucket layout —
+    The store side is :func:`read_for_join`'s: above the broadcast
+    threshold its ``distinct`` and the join both ride the bucket layout, so
     only ``incoming`` is exchanged (asserted by
-    ``tests/test_store.py::test_probe_shuffles_only_incoming``).
+    ``tests/test_store.py::test_probe_shuffles_only_incoming``); a store
+    that fits the threshold is read as plain splits and broadcast.
     """
     store_sigs = (
-        spark.table(table_name)
+        read_for_join(spark, table_name)
         .select("signature")
         .distinct()
         .withColumn("_hit", F.lit(1))
@@ -369,6 +374,9 @@ def bucket_spec(
 #: a different layout can never leave later delta appends repartitioning
 #: to the stale spec (ADVICE r11).
 _BUCKET_SPEC_CACHE: dict[str, tuple[int | None, str | None]] = {}
+#: memoized catalog locations, keyed and invalidated with the bucket specs:
+#: a swap or recovery can rebind a name to another directory.
+_LOCATION_CACHE: dict[str, str] = {}
 
 
 def _spec_cache_key(spark: SparkSession, table_name: str) -> str:
@@ -378,7 +386,9 @@ def _spec_cache_key(spark: SparkSession, table_name: str) -> str:
 
 
 def _invalidate_bucket_layout(spark: SparkSession, table_name: str) -> None:
-    _BUCKET_SPEC_CACHE.pop(_spec_cache_key(spark, table_name), None)
+    key = _spec_cache_key(spark, table_name)
+    _BUCKET_SPEC_CACHE.pop(key, None)
+    _LOCATION_CACHE.pop(key, None)
 
 
 def bucket_layout(
@@ -391,6 +401,48 @@ def bucket_layout(
     if spec is None:
         spec = _BUCKET_SPEC_CACHE[key] = bucket_spec(spark, table_name)
     return spec
+
+
+def table_location(spark: SparkSession, table_name: str) -> str:
+    """:func:`_store_location`, memoized beside :func:`bucket_layout` —
+    the one catalog-location resolver for readers and driver-side
+    writers (``streaming/commitlog.py``)."""
+    key = _spec_cache_key(spark, table_name)
+    loc = _LOCATION_CACHE.get(key)
+    if loc is None:
+        loc = _LOCATION_CACHE[key] = _store_location(spark, table_name)
+    return loc
+
+
+def read_for_join(spark: SparkSession, table_name: str) -> DataFrame:
+    """``table_name`` as the table side of a join: the store probe
+    (:func:`probe_store`) and every fold's anti-join
+    (``streaming/fold.py::append_new``) read through here.
+
+    A bucketed scan runs one task per bucket (64 for the store, even an
+    empty one) and pays only when the join consumes the bucketing. At or
+    below the session's ``spark.sql.autoBroadcastJoinThreshold`` (-1 =
+    never) the join broadcasts, yet ``DisableUnnecessaryBucketedScan``
+    keeps the bucketed scan, because a clustering aggregate sits above the
+    join (the probe's ``distinct``, the ``dropDuplicates`` an anti-join is
+    pushed under). So a bucketed table that Spark's own size estimate puts
+    within the threshold is read as plain parquet splits of its files
+    (catalog schema, no inference job), an empty one as an empty relation.
+    Anything else is the catalog table, so at scale a probe still shuffles
+    only its incoming side. The files are listed when the frame is built,
+    as a catalog read lists them until ``refreshTable``."""
+    table = spark.table(table_name)
+    if not bucket_layout(spark, table_name)[0]:
+        return table
+    conf = spark._jsparkSession.sessionState().conf()
+    size = table._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if not 0 <= size <= conf.autoBroadcastJoinThreshold():
+        return table
+    if size == 0:  # Catalyst folds a join against it away: no job at all
+        return table.limit(0)
+    return spark.read.schema(table.schema).parquet(
+        table_location(spark, table_name)
+    )
 
 
 def staged_swap_overwrite(

@@ -39,10 +39,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from columnar_aware_dedup_spark.sources.store import (
-    _store_location,
     bucket_spec,
     recover_compaction_unlocked,
     staged_swap_overwrite,
+    table_location,
 )
 from columnar_aware_dedup_spark.streaming import fold
 
@@ -65,26 +65,6 @@ def committed(spark: SparkSession, family: str, suffix: str) -> DataFrame:
     )
 
 
-#: memoized catalog locations for the marker tables (per-process cache;
-#: the location of a catalog table is stable for its lifetime, and every
-#: marker writer holds the family lock anyway).
-_LOCATION_CACHE: dict[str, str] = {}
-
-
-def _table_location(spark: SparkSession, table: str) -> str:
-    """Memoized catalog-location lookup — one resolver repo-wide (wraps
-    ``sources/store.py::_store_location``, which pads-strips the DESCRIBE
-    row and raises a named error, so the two cannot drift); the returned
-    plain path resolves to a pyarrow LocalFileSystem locally and to the
-    scheme-matched filesystem elsewhere."""
-    key = f"{spark.conf.get('spark.sql.warehouse.dir')}::{table.lower()}"
-    loc = _LOCATION_CACHE.get(key)
-    if loc is None:
-        loc = _store_location(spark, table)
-        _LOCATION_CACHE[key] = loc
-    return loc
-
-
 def append_driver_rows(spark: SparkSession, table: str, pa_table) -> None:
     """Append a METADATA-SIZED pyarrow table to a plain-parquet catalog
     table DRIVER-SIDE: written through pyarrow.fs to a dot-prefixed
@@ -102,7 +82,9 @@ def append_driver_rows(spark: SparkSession, table: str, pa_table) -> None:
     import pyarrow.parquet as pq
     from pyarrow import fs as pafs
 
-    location = _table_location(spark, table)
+    # a plain path: a pyarrow LocalFileSystem locally, the scheme-matched
+    # filesystem elsewhere
+    location = table_location(spark, table)
     filesystem, path = pafs.FileSystem.from_uri(location)
     fname = f"part-{uuid.uuid4().hex}-marker.parquet"
     tmp, final = f"{path}/.{fname}", f"{path}/{fname}"

@@ -29,12 +29,13 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from columnar_aware_dedup_spark.sources.store import (
     bucket_aligned,
     bucket_layout,
-    bucket_spec,
     drop_table_and_dir,
+    read_for_join,
     store_lock,
 )
 
@@ -82,12 +83,16 @@ def truncate_if_layout_matches(
 ) -> bool:
     """TRUNCATE ``name`` in place when it exists with exactly ``schema``
     (a DDL string or StructType) and catalog bucket spec ``buckets``
-    ((None, None) = unbucketed); returns whether it did."""
+    ((None, None) = unbucketed); returns whether it did. The spec is the
+    memoized ``store.bucket_layout``, which every rebinding path
+    invalidates."""
     if not spark.catalog.tableExists(name):
         return False
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
     if (
-        spark.table(name).schema != spark.createDataFrame([], schema).schema
-        or bucket_spec(spark, name) != buckets
+        spark.table(name).schema != schema
+        or bucket_layout(spark, name) != buckets
     ):
         return False
     spark.sql(f"TRUNCATE TABLE {name}")
@@ -126,7 +131,9 @@ def append_new(
     deduplicated ``rows`` on its own input unit — a doc's derived rows
     share its doc_id, so deduplicating HERE would drop them.
 
-    One Spark write: the left-anti join against the table's key, the
+    One Spark write: the left-anti join against the table's key (read
+    through ``store.read_for_join``, so a broadcast-sized bucketed table
+    is scanned as plain splits, not one task per bucket), the
     :func:`laid_out` layout and the insert run as a single query, and the
     appended-row count is an ``Observation`` on that same write, so no
     separate count or pin runs. An empty delta (a replay) writes no file
@@ -135,7 +142,7 @@ def append_new(
     refreshed after a non-empty append: under ``foreachBatch`` the insert
     runs in the micro-batch's cloned session, and ``spark``'s readers must
     not serve the pre-append listing."""
-    target = spark.table(table)
+    target = read_for_join(spark, table)
     fresh = rows.join(target.select(key), key, "left_anti").select(
         *target.columns  # insertInto binds by position
     )

@@ -38,3 +38,15 @@ def rows_equal(a, b) -> bool:
     sa = sorted((tuple(r) for r in a.collect()), key=repr)
     sb = sorted((tuple(r) for r in b.collect()), key=repr)
     return sa == sb
+
+
+def jobs_in(spark, group: str, action):
+    """(``action()``, the ids of the Spark jobs it ran), counted through a
+    job group named ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, list(sc.statusTracker().getJobIdsForGroup(group))

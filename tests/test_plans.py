@@ -67,6 +67,16 @@ def test_flagship_chunks_lineitem_once(spark, sf_dir):
     assert n <= 1, f"flagship chunks lineitem {n} times:\n{plan}"
 
 
+def test_store_chunks_do_not_rechunk_lineitem(spark, sf_dir):
+    """incoming_and_store_chunks chunks lineitem once: the store frame is
+    derived from the materialized incoming chunk table, so its plan scans
+    the snapshot-A order keys but never lineitem itself."""
+    _, store_chunks = dedup.incoming_and_store_chunks(spark, sf_dir)
+    plan = explain.plan_string(store_chunks)
+    assert "lineitem.parquet" not in plan, plan
+    assert "orders.parquet" in plan, plan
+
+
 def test_chunk_simulate_single_shuffle(spark, sf_dir):
     df = dedup.chunk_simulate(spark, sf_dir)
     n = explain.n_exchanges(df)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import functions as F
 
 from columnar_aware_dedup_spark.io import table
@@ -9,7 +11,7 @@ from columnar_aware_dedup_spark.operators.dedup import lineitem_chunks
 from columnar_aware_dedup_spark.plans import explain
 from columnar_aware_dedup_spark.sources import store
 
-from tests.conftest import rows_equal
+from tests.conftest import jobs_in, rows_equal
 
 TABLE = "test_chunk_store"
 
@@ -18,6 +20,20 @@ def _chunks(spark, sf_dir):
     return lineitem_chunks(table(spark, sf_dir, "lineitem")).withColumn(
         "chunk_type", F.lit("Row")
     )
+
+
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value):
+    """Run under ``spark.sql.autoBroadcastJoinThreshold=value``; the store
+    is read bucketed only above the threshold, so ``"-1"`` keeps a small
+    test store on its bucket layout."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_store_roundtrip_and_merge(spark, sf_dir):
@@ -178,13 +194,68 @@ def test_probe_shuffles_only_incoming(spark, sf_dir):
     exchange — only the incoming chunk table shuffles."""
     chunks = _chunks(spark, sf_dir)
     store.create_store(spark, chunks, TABLE, n_buckets=8)
-    classified = store.probe_store(spark, chunks, TABLE)
-    plan = explain.plan_string(classified, "formatted")
-    n = explain.n_exchanges(classified)
+    with _broadcast_threshold(spark, "-1"):
+        classified = store.probe_store(spark, chunks, TABLE)
+        plan = explain.plan_string(classified, "formatted")
+        n = explain.n_exchanges(classified)
     # incoming side: 1 (repartition inside lineitem_chunks) + 1 (join key);
     # the store side must contribute ZERO exchanges (bucket-aligned distinct
     # + join). More than 2 total means the bucket layout stopped being used.
     assert n <= 2, f"store side re-shuffled ({n} exchanges):\n{plan}"
+
+
+def test_broadcast_sized_store_is_read_as_plain_splits(
+    spark, sf_dir, monkeypatch
+):
+    """A store that fits the broadcast threshold is broadcast anyway, so
+    the probe and a merge read it as plain file splits: no stage wider
+    than ``defaultParallelism`` (a bucketed scan is one task per bucket)
+    and no ``Bucketed: true`` scan — with the same results as the
+    bucketed read the same calls make under threshold -1."""
+    from columnar_aware_dedup_spark.streaming import fold
+
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    chunks = _chunks(spark, sf_dir)
+    half = chunks.filter(F.col("file_id") % 2 == 0)
+    plain, bucketed = "test_store_plain_read", "test_store_bucketed_read"
+    for tbl in (plain, bucketed):
+        store.create_store(spark, half, tbl, n_buckets=4 * cores)
+
+    def widest_stage(group, action):
+        result, jobs = jobs_in(spark, group, action)
+        tracker = sc.statusTracker()
+        stages = [
+            tracker.getStageInfo(s)
+            for j in jobs
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+        return result, max(s.numTasks for s in stages if s)
+
+    probe = store.probe_store(spark, chunks, plain)
+    assert "Bucketed: true" not in explain.plan_string(probe, "formatted")
+    got, width = widest_stage("plain_probe", probe.collect)
+    assert width <= cores, f"probe ran a {width}-task stage on {cores} cores"
+    with _broadcast_threshold(spark, "-1"):
+        want = store.probe_store(spark, chunks, bucketed)
+    assert sorted(got) == sorted(want.collect())
+
+    anti_joins = []
+    laid_out = fold.laid_out
+    monkeypatch.setattr(
+        fold,
+        "laid_out",
+        lambda s, rows, t: laid_out(s, anti_joins.append(rows) or rows, t),
+    )
+    n, width = widest_stage(
+        "plain_merge", lambda: store.merge_into_store(spark, chunks, plain)
+    )
+    assert width <= cores, f"merge ran a {width}-task stage on {cores} cores"
+    plan = explain.plan_string(anti_joins[-1], "formatted")
+    assert "Bucketed: true" not in plan, plan
+    with _broadcast_threshold(spark, "-1"):
+        assert store.merge_into_store(spark, chunks, bucketed) == n > 0
+    assert rows_equal(spark.table(plain), spark.table(bucketed))
 
 
 def test_compact_store_collapses_files_and_keeps_buckets(spark, sf_dir):
@@ -210,10 +281,11 @@ def test_compact_store_collapses_files_and_keeps_buckets(spark, sf_dir):
     assert got == want, "compaction must not change the signature set"
 
     # the rewritten table still probes without a store-side exchange
-    classified = store.probe_store(spark, chunks, tbl)
-    assert explain.n_exchanges(classified) <= 2, explain.plan_string(
-        classified, "formatted"
-    )
+    with _broadcast_threshold(spark, "-1"):
+        classified = store.probe_store(spark, chunks, tbl)
+        assert explain.n_exchanges(classified) <= 2, explain.plan_string(
+            classified, "formatted"
+        )
 
 
 def test_compact_generalizes_to_postings_index(spark, sf_dir, tmp_path):
@@ -315,8 +387,9 @@ def test_compaction_crash_recovery_prefers_new(spark, sf_dir):
     assert not spark.catalog.tableExists(f"{tbl}__precompact")
     assert not spark.catalog.tableExists(f"{tbl}__compacting")
     # recovered store still probes shuffle-free on the store side
-    classified = store.probe_store(spark, _chunks(spark, sf_dir), tbl)
-    assert explain.n_exchanges(classified) <= 2
+    with _broadcast_threshold(spark, "-1"):
+        classified = store.probe_store(spark, _chunks(spark, sf_dir), tbl)
+        assert explain.n_exchanges(classified) <= 2
 
 
 def test_compaction_crash_recovery_prefers_old(spark, sf_dir):
@@ -535,15 +608,14 @@ def test_fold_table_create_runs_no_job(spark):
 
     tbl = "test_fold_create_no_job"
     spec = {"": (store.STORE_SCHEMA, True)}
-    sc = spark.sparkContext
     store.drop_table_and_dir(spark, tbl)
     try:
-        sc.setJobGroup(tbl, tbl)
-        try:
-            fold.init_tables(spark, tbl, spec, 8, "signature")
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert list(sc.statusTracker().getJobIdsForGroup(tbl)) == []
+        _, jobs = jobs_in(
+            spark,
+            tbl,
+            lambda: fold.init_tables(spark, tbl, spec, 8, "signature"),
+        )
+        assert jobs == []
         assert store.bucket_spec(spark, tbl) == (8, "signature")
         assert fold.truncate_if_layout_matches(
             spark, tbl, store.STORE_SCHEMA, (8, "signature")

@@ -1665,9 +1665,11 @@ def test_marker_append_is_atomic_and_dotfile_invisible(spark):
     a torn parquet footer can never poison the commits read."""
     import os
 
-    from columnar_aware_dedup_spark.sources.store import drop_table_and_dir
+    from columnar_aware_dedup_spark.sources.store import (
+        drop_table_and_dir,
+        table_location,
+    )
     from columnar_aware_dedup_spark.streaming.commitlog import (
-        _table_location,
         append_marker_row,
     )
 
@@ -1687,7 +1689,7 @@ def test_marker_append_is_atomic_and_dotfile_invisible(spark):
 
     # crash mid-write: a garbage dot-file in the table dir (what a died
     # writer leaves before the rename) must not break or pollute reads
-    loc = _table_location(spark, tbl).removeprefix("file:")
+    loc = table_location(spark, tbl).removeprefix("file:")
     with open(os.path.join(loc, ".part-torn-marker.parquet"), "wb") as fh:
         fh.write(b"\x00\x01 not a parquet footer")
     spark.catalog.refreshTable(tbl)
