@@ -87,6 +87,28 @@ CHANGED: dict[str, int] = {
     "dedup_ratio": 12,
     "transfer_stats_rollup": 12,
     "transfer_stats_rollup_approx": 12,
+    # every file parser reads through sources/binaryfile.py (binary_files +
+    # map_files), and the zone-map audits load the two snapshot dirs.
+    "cdc_dedup_report": 12,
+    "cdc_dedup_report_parquet": 12,
+    "cdc_file_chunks": 12,
+    "cross_format_dedup": 12,
+    "file_inventory": 12,
+    "orc_file_chunks": 12,
+    "orc_hierarchical_dedup": 12,
+    "orc_hierarchical_pruned": 12,
+    "orc_linked_reconstruction": 12,
+    "orc_reconstruction": 12,
+    "orc_stats_census_drift": 12,
+    "orc_stats_pruned_columns": 12,
+    "orc_stats_pruned_dedup": 12,
+    "orc_zone_map_pruning": 12,
+    "parquet_column_census": 12,
+    "parquet_file_chunks": 12,
+    "parquet_reconstruction": 12,
+    "parquet_stats_pruned_columns": 12,
+    "parquet_stats_pruned_dedup": 12,
+    "parquet_zone_map_pruning": 12,
 }
 
 #: the driver's CORRECTNESS window is the first 50 registered queries,

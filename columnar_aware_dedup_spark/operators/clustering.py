@@ -398,37 +398,6 @@ def pagerank(edges: DataFrame, damping: float = 0.85, iters: int = 10) -> DataFr
     return ranks
 
 
-def near_dup_pagerank_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full centrality table over the near-dup graph: PageRank of every
-    edge-bearing document, with the per-cluster argmax flagged as the
-    CANONICAL doc — the centrality-based alternative to min-id
-    (`near_dup_clusters`) and quality-score (`cluster_quality_keeper`)
-    survivor selection: the doc most linked-to by duplicates is the one
-    the crawl keeps re-finding. The rank vector is pytest-pinned to 1e-9
-    against an independent pure-Python power iteration; the registered
-    query (:func:`near_dup_pagerank`) ships the hash-checkable certificate
-    view of this table.
-    """
-    from columnar_aware_dedup_spark.operators.text import minhash_near_dup
-
-    edges = minhash_near_dup(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components_star(edges)
-    ranks = pagerank(edges)
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.desc("rank"), F.col("doc_id")
-    )
-    return (
-        ranks.join(labels, "doc_id")
-        .withColumn("is_canonical", F.row_number().over(w) == 1)
-        .select(
-            "doc_id",
-            "cluster_id",
-            F.round("rank", 8).alias("rank"),
-            "is_canonical",
-        )
-    )
-
-
 NEAR_DUP_PAGERANK_ORACLE = f"""
 WITH RECURSIVE {_pairs_sql()},
 {_closure_sql()},
@@ -463,8 +432,9 @@ def near_dup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
       the groupBy max — two different plans must agree).
 
     Any divergence in the float iteration flips a bit and breaks the
-    driver's value hash. The full (doc_id, rank, is_canonical) table stays
-    available as :func:`near_dup_pagerank_full`, rank-pinned in pytest.
+    driver's value hash. The rank vector itself is pinned to 1e-9 against
+    an independent pure-Python power iteration in
+    ``tests/test_clustering.py::test_pagerank_matches_reference_power_iteration``.
     """
     from columnar_aware_dedup_spark.operators.text import minhash_near_dup
 

@@ -356,52 +356,6 @@ def pq_train(
     return cent
 
 
-def pq_train_codebooks_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train PQ codebooks and report per-(subspace, code) structure: member
-    count, centroid norm, and mean within-cell squared distance (the
-    quantization error ADC inherits). Data-dependent float averages, so not
-    oracle-checkable per cell; intent pinned by planted-structure tests in
-    ``tests/test_pq.py`` and the registered certificate query
-    (:func:`pq_train_codebooks`) hash-checks the Lloyd invariants."""
-    e = table(spark, sf_dir, "embeddings")
-    cent = pq_train(e)
-    subs = subvectors(e)
-    best = (
-        "element_at(array_sort(transform(element_at(cbs, j + 1).cents,"
-        " c -> struct(aggregate(zip_with(sv, c.ce,"
-        " (x, y) -> (x - y) * (x - y)), CAST(0 AS DOUBLE),"
-        " (acc, v) -> acc + v) AS d, c.code AS code))), 1).code"
-    )
-    assigned = subs.join(F.broadcast(_fold_codebooks(cent))).select(
-        "j", F.expr(best).alias("code"), "sv"
-    )
-    d2 = (
-        "aggregate(zip_with(sv, ce, (x, y) -> (x - y) * (x - y)),"
-        " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    return (
-        assigned.join(F.broadcast(cent), ["j", "code"])
-        .select("j", "code", F.expr(d2).alias("d2"), "ce")
-        .groupBy("j", "code")
-        .agg(
-            F.count("*").alias("n_members"),
-            F.round(
-                F.sqrt(
-                    F.first(
-                        F.expr(
-                            "aggregate(zip_with(ce, ce, (x, y) -> x * y),"
-                            " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-                        )
-                    )
-                ),
-                6,
-            ).alias("centroid_norm"),
-            F.round(F.avg("d2"), 6).alias("mean_d2"),
-        )
-        .orderBy("j", "code")
-    )
-
-
 def _init_codebooks(e: DataFrame, m: int = _M, k: int = _KSUB) -> DataFrame:
     """The deterministic seed codebooks (k lowest-id vectors' sub-slices) —
     factored out of :func:`pq_train` so the certificate query can measure
@@ -462,9 +416,8 @@ def pq_train_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``centroids_finite_ok``: every trained centroid coordinate is finite
       (catches NaN propagation from empty-cell division).
 
-    The full per-cell structure table (member counts, centroid norms, mean
-    within-cell error) stays available as
-    :func:`pq_train_codebooks_full`, planted-structure pytest-pinned.
+    Training itself is pinned on planted structure in
+    ``tests/test_pq.py::test_pq_train_recovers_planted_subspace_structure``.
     """
     e = table(spark, sf_dir, "embeddings")
     subs = subvectors(e)

@@ -253,24 +253,6 @@ def grouped_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def grouped_percentile_approx_full(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The raw sketch-value percentiles (engine-specific floats, so
-    unregistered; the registered :func:`grouped_percentile_approx`
-    hash-checks the rank guarantee instead)."""
-    return (
-        table(spark, sf_dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-            F.approx_percentile(F.col("l_quantity").cast("double"), F.lit(0.25), F.lit(10000)).alias("p25_qty"),
-            F.approx_percentile(F.col("l_quantity").cast("double"), F.lit(0.5), F.lit(10000)).alias("p50_qty"),
-            F.approx_percentile(F.col("l_quantity").cast("double"), F.lit(0.75), F.lit(10000)).alias("p75_qty"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
 @register(
     "grouped_percentile_approx",
     oracle="""
@@ -289,8 +271,8 @@ def grouped_percentile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     generalized to percentiles): per group, the exact row count plus a
     tie-safe boolean per sketch output asserting its rank lands within
     tolerance of p·n. The 100 TB contract is unchanged — bounded mergeable
-    sketch per group instead of value buffering; the raw sketch values stay
-    as the unregistered :func:`grouped_percentile_approx_full`."""
+    sketch per group instead of value buffering. Flip test:
+    ``tests/test_planted_round6.py::test_rank_certificate_bits_flip_on_wrong_values``."""
     from columnar_aware_dedup_spark.operators.stats import (
         approx_rank_certificate,
     )

@@ -205,28 +205,6 @@ def transfer_stats_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def transfer_stats_rollup_approx_full(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The raw sketch-value rollup (engine-specific floats, so unregistered;
-    the registered :func:`transfer_stats_rollup_approx` hash-checks its rank
-    guarantee instead)."""
-    stats = per_file_stats(classified_chunks(spark, sf_dir))
-    return (
-        stats.groupBy("stat_type")
-        .agg(
-            F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("total"),
-            F.count("*").alias("occurrences"),
-            F.min("value").alias("min_value"),
-            F.approx_percentile("value", F.lit(0.25), F.lit(10000)).alias("p25"),
-            F.approx_percentile("value", F.lit(0.50), F.lit(10000)).alias("p50"),
-            F.approx_percentile("value", F.lit(0.75), F.lit(10000)).alias("p75"),
-            F.max("value").alias("max_value"),
-        )
-        .orderBy("stat_type")
-    )
-
-
 TRANSFER_STATS_APPROX_ORACLE = (
     _TRANSFER_STATS_CTE
     + """SELECT stat_type,
@@ -252,8 +230,8 @@ def transfer_stats_rollup_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`approx_rank_certificate` — the ``approx_distinct`` discipline
     generalized to percentiles): exact facts (decimal-exact total,
     occurrences, min, max) plus one tie-safe rank bit per sketch output.
-    The raw sketch values stay as the unregistered
-    :func:`transfer_stats_rollup_approx_full`."""
+    Flip test:
+    ``tests/test_planted_round6.py::test_rank_certificate_bits_flip_on_wrong_values``."""
     stats = per_file_stats(classified_chunks(spark, sf_dir))
     facts = stats.groupBy("stat_type").agg(
         F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("total"),

@@ -23,7 +23,9 @@ real pruner has before touching data): the lowest quarter of the key
 range. Each bit is falsifiable through the same derivation code on
 fabricated stripe tables (``tests/test_zonemap.py``).
 
-Scale shape: one parse task per file (binaryFile -> ``mapInPandas``);
+Scale shape: every table here is a pure per-file function (``*_rows`` /
+``*_table``) run as the ``rows_fn`` of the shared per-file parse loop
+(``sources.binaryfile.map_files``: one parse task per file);
 statistics live in the file tail, so the certificate reads each stripe
 once only to VERIFY — a production pruner reads none of the pruned
 bytes, which is the point. Zero shuffles before the presentation sort.
@@ -32,15 +34,25 @@ bytes, which is the point. Zero shuffles before the presentation sort.
 from __future__ import annotations
 
 import io
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from columnar_aware_dedup_spark.registry import register
+from columnar_aware_dedup_spark.sources.binaryfile import (
+    base_name,
+    binary_files,
+    dir_name,
+    map_files,
+)
+from columnar_aware_dedup_spark.sources.chunkers import tag
+from columnar_aware_dedup_spark.sources.orcfixtures import (
+    orc_fixture_dirs,
+    orc_strmod_incoming_dir,
+    parquet_fixture_dirs,
+    parquet_strmod_incoming_dir,
+)
 
 #: the ORC snapshot workload files (``sources/orcfixtures.py`` layout).
 _ZONE_FILES = (
@@ -147,32 +159,13 @@ def zone_map_bits(stripe_rows: list[dict]) -> dict[str, bool]:
     }
 
 
-def _zone_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in _STRIPE_SCHEMA.fields]
-    for pdf in batches:
-        rows = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            name = "/".join(path.rsplit("/", 2)[-2:])
-            rows.extend(zone_map_stripe_table(name, bytes(content)))
-        yield pd.DataFrame(rows, columns=cols)
-
-
 def zone_map_stripe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The numeric per-stripe audit table (engine-side twin)."""
-    from columnar_aware_dedup_spark.sources.orcfixtures import (
-        orc_fixture_dirs,
+    return map_files(
+        binary_files(spark, list(orc_fixture_dirs(sf_dir)), "*.orc"),
+        lambda path, data: zone_map_stripe_table(dir_name(path), data),
+        _STRIPE_SCHEMA,
     )
-
-    store_dir, incoming_dir = orc_fixture_dirs(sf_dir)
-    base = store_dir.rsplit("/", 1)[0]
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.orc")
-        .option("recursiveFileLookup", "true")
-        .load(base)
-        .select("path", "content")
-    )
-    return files.mapInPandas(_zone_batches, _STRIPE_SCHEMA)
 
 
 ZONE_MAP_ORACLE = (
@@ -306,34 +299,13 @@ def zone_map_row_group_table(file_name: str, data: bytes) -> list[dict]:
     return rows
 
 
-def _zone_batches_parquet(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in _RG_SCHEMA.fields]
-    for pdf in batches:
-        rows = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            name = "/".join(path.rsplit("/", 2)[-2:])
-            rows.extend(zone_map_row_group_table(name, bytes(content)))
-        yield pd.DataFrame(rows, columns=cols)
-
-
 def zone_map_row_group_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The numeric per-row-group audit table (engine-side twin)."""
-    from columnar_aware_dedup_spark.sources.orcfixtures import (
-        parquet_fixture_dirs,
+    return map_files(
+        binary_files(spark, list(parquet_fixture_dirs(sf_dir)), "*.parquet"),
+        lambda path, data: zone_map_row_group_table(dir_name(path), data),
+        _RG_SCHEMA,
     )
-
-    store_dir, _incoming = parquet_fixture_dirs(sf_dir)
-    base = store_dir.rsplit("/", 1)[0]
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .load(base)
-        .select("path", "content")
-    )
-    return files.mapInPandas(_zone_batches_parquet, _RG_SCHEMA)
 
 
 ZONE_MAP_PARQUET_ORACLE = (
@@ -435,23 +407,11 @@ def stripe_stats_key_rows(file_name: str, data: bytes) -> list[dict]:
 def stripe_stats_key_table(spark: SparkSession, path: str) -> DataFrame:
     """binaryFile scan -> per-stripe (stats_key, signature, data_size)
     rows, one parse task per file (the chunker discipline)."""
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in _PRUNE_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                name = p.rsplit("/", 1)[-1]
-                rows.extend(stripe_stats_key_rows(name, bytes(content)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.orc")
-        .load(path)
-        .select("path", "content")
+    return map_files(
+        binary_files(spark, path, "*.orc"),
+        lambda p, data: stripe_stats_key_rows(base_name(p), data),
+        _PRUNE_SCHEMA,
     )
-    return files.mapInPandas(_batches, _PRUNE_SCHEMA)
 
 
 #: the certificate bits, with the fixture's guaranteed per-file truth:
@@ -523,10 +483,6 @@ def orc_stats_pruned_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes are two equi-joins (AQE broadcasts the fixture-sized store
     side at runtime; unhinted, the ``lsh_parameter_sweep`` lesson).
     """
-    from columnar_aware_dedup_spark.sources.orcfixtures import (
-        orc_fixture_dirs,
-    )
-
     store_dir, incoming_dir = orc_fixture_dirs(sf_dir)
     return stats_pruned_certificate(
         _stats_pruned_probe(
@@ -542,10 +498,6 @@ def _orc_incoming_stats(
     """The full incoming side of the ORC stats-pruned workload: the
     snapshot dir's three files plus the string-perturbed extra file
     (its own cache dir — see ``orcfixtures._strmod_incoming_dir``)."""
-    from columnar_aware_dedup_spark.sources.orcfixtures import (
-        orc_strmod_incoming_dir,
-    )
-
     return stripe_stats_key_table(spark, incoming_dir).unionByName(
         stripe_stats_key_table(spark, orc_strmod_incoming_dir(sf_dir))
     )
@@ -555,10 +507,6 @@ def _parquet_incoming_stats(
     spark: SparkSession, sf_dir: str, incoming_dir: str
 ) -> DataFrame:
     """Parquet twin of :func:`_orc_incoming_stats`."""
-    from columnar_aware_dedup_spark.sources.orcfixtures import (
-        parquet_strmod_incoming_dir,
-    )
-
     return parquet_rg_stats_key_table(spark, incoming_dir).unionByName(
         parquet_rg_stats_key_table(
             spark, parquet_strmod_incoming_dir(sf_dir)
@@ -686,23 +634,11 @@ def parquet_rg_stats_key_rows(file_name: str, data: bytes) -> list[dict]:
 def parquet_rg_stats_key_table(spark: SparkSession, path: str) -> DataFrame:
     """binaryFile scan -> per-row-group (stats_key, signature, data_size)
     rows, one parse task per file."""
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in _PRUNE_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                name = p.rsplit("/", 1)[-1]
-                rows.extend(parquet_rg_stats_key_rows(name, bytes(content)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(path)
-        .select("path", "content")
+    return map_files(
+        binary_files(spark, path, "*.parquet"),
+        lambda p, data: parquet_rg_stats_key_rows(base_name(p), data),
+        _PRUNE_SCHEMA,
     )
-    return files.mapInPandas(_batches, _PRUNE_SCHEMA)
 
 
 _PRUNE_ROWS_PARQUET = {
@@ -738,10 +674,6 @@ def parquet_stats_pruned_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     A-prefix row groups stats-collide, hash, and hit. Both the statistics
     and the hashed byte spans come from OUR Thrift-compact footer walker
     — pyarrow appears nowhere in the claim path."""
-    from columnar_aware_dedup_spark.sources.orcfixtures import (
-        parquet_fixture_dirs,
-    )
-
     store_dir, incoming_dir = parquet_fixture_dirs(sf_dir)
     return stats_pruned_certificate(
         _stats_pruned_probe(
@@ -816,25 +748,11 @@ def stripe_column_stats_key_table(
 ) -> DataFrame:
     """binaryFile scan -> per-(stripe, column) stats-key rows, one parse
     task per file."""
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in _PRUNE_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                name = p.rsplit("/", 1)[-1]
-                rows.extend(
-                    stripe_column_stats_key_rows(name, bytes(content))
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.orc")
-        .load(path)
-        .select("path", "content")
+    return map_files(
+        binary_files(spark, path, "*.orc"),
+        lambda p, data: stripe_column_stats_key_rows(base_name(p), data),
+        _PRUNE_SCHEMA,
     )
-    return files.mapInPandas(_batches, _PRUNE_SCHEMA)
 
 
 def parquet_cc_stats_key_rows(file_name: str, data: bytes) -> list[dict]:
@@ -943,10 +861,6 @@ def orc_stats_pruned_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes are read and footer-walked once), and the probes are the same
     two equi-joins — nothing here reads data bytes except candidate
     column spans, which is the point."""
-    from columnar_aware_dedup_spark.sources.orcfixtures import (
-        orc_fixture_dirs,
-    )
-
     store_dir, _incoming_dir = orc_fixture_dirs(sf_dir)
     inc = orc_strmod_two_level_incoming(spark, sf_dir)
     store = orc_two_level_table(spark, store_dir).localCheckpoint(
@@ -970,11 +884,6 @@ def orc_strmod_two_level_incoming(
     frame — shared by ``orc_stats_pruned_columns`` and the maintained-
     index parity row (``streaming_statsprune_columns_parity``), so the
     two rows probe identical incoming rows."""
-    from columnar_aware_dedup_spark.sources.orcfixtures import (
-        orc_fixture_dirs,
-        orc_strmod_incoming_dir,
-    )
-
     _store_dir, incoming_dir = orc_fixture_dirs(sf_dir)
     return (
         orc_two_level_table(spark, incoming_dir)
@@ -997,11 +906,6 @@ def parquet_stats_pruned_columns(
     same probe, same certificate, same one-pass two-granularity scan; the
     column-chunk spans and raw-payload stats keys come from OUR
     Thrift-compact walker — pyarrow appears nowhere in the claim path."""
-    from columnar_aware_dedup_spark.sources.orcfixtures import (
-        parquet_fixture_dirs,
-        parquet_strmod_incoming_dir,
-    )
-
     store_dir, incoming_dir = parquet_fixture_dirs(sf_dir)
     strmod_dir = parquet_strmod_incoming_dir(sf_dir)
     inc = (
@@ -1036,28 +940,13 @@ def _two_level_table(
     scans read and footer-walk every file's bytes twice (r10 review).
     Callers checkpoint and filter on ``level``."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in _TWO_LEVEL_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                name = p.rsplit("/", 1)[-1]
-                data = bytes(content)
-                rows.extend(
-                    {**r, "level": "region"} for r in region_rows(name, data)
-                )
-                rows.extend(
-                    {**r, "level": "column"} for r in column_rows(name, data)
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def _rows(p: str, data: bytes) -> list[dict]:
+        name = base_name(p)
+        return tag(region_rows(name, data), level="region") + tag(
+            column_rows(name, data), level="column"
+        )
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "content")
-    )
-    return files.mapInPandas(_batches, _TWO_LEVEL_SCHEMA)
+    return map_files(binary_files(spark, path, glob), _rows, _TWO_LEVEL_SCHEMA)
 
 
 def orc_two_level_table(spark: SparkSession, path: str) -> DataFrame:
@@ -1139,10 +1028,6 @@ def orc_stats_pruned_dedup_full(
 ) -> DataFrame:
     """Numeric twin of ``orc_stats_pruned_dedup`` (see
     :func:`stats_pruned_census`)."""
-    from columnar_aware_dedup_spark.sources.orcfixtures import (
-        orc_fixture_dirs,
-    )
-
     store_dir, incoming_dir = orc_fixture_dirs(sf_dir)
     return stats_pruned_census(
         _stats_pruned_probe(
@@ -1157,10 +1042,6 @@ def parquet_stats_pruned_dedup_full(
 ) -> DataFrame:
     """Numeric twin of ``parquet_stats_pruned_dedup`` (see
     :func:`stats_pruned_census`)."""
-    from columnar_aware_dedup_spark.sources.orcfixtures import (
-        parquet_fixture_dirs,
-    )
-
     store_dir, incoming_dir = parquet_fixture_dirs(sf_dir)
     return stats_pruned_census(
         _stats_pruned_probe(

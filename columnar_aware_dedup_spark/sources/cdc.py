@@ -34,31 +34,34 @@ start) judges identically once the window is warm, and ``_MIN >= 16``
 guarantees it always is — parity with the classic sequential definition is
 pinned in ``tests/test_cdc.py``.
 
-Scale: one task per file via the shared ``mapInPandas`` chunk kernel
-(``sources.chunkers.make_chunk_batches``) — embarrassingly parallel, no
-shuffle until the signature probe, identical dataflow to the structural
-chunkers.
+Scale: one task per file via the shared per-file parse loop
+(``sources.binaryfile.map_files``) — embarrassingly parallel, no shuffle
+until the signature probe, identical dataflow to the structural chunkers.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from columnar_aware_dedup_spark.registry import register
-from columnar_aware_dedup_spark.sources.chunkers import (
-    CHUNK_SCHEMA,
+from columnar_aware_dedup_spark.sources.binaryfile import (
     FIXTURE_TABLES,
     _const_true_rows_sql,
+    binary_files,
+    map_files,
+)
+from columnar_aware_dedup_spark.sources.chunkers import (
+    CHUNK_SCHEMA,
     _finish,
-    make_chunk_batches,
+    chunk_orc_columns_bytes,
+    chunk_parquet_bytes,
+    tag,
 )
 
 _MIN = 512
@@ -164,17 +167,13 @@ def chunk_fixed_bytes(data: bytes, size: int = _NORMAL) -> list[dict]:
 
 def cdc_chunk_files(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
     """binaryFile scan -> CDC chunk table, one parse task per file (the
-    structural chunkers' distributed shape, format-agnostic)."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "content")
-    )
-    # every path ends with "" — the kernel's extension dispatch degenerates
-    # to "chunk everything with CDC", which is the point of a byte-oriented
-    # chunker.
-    return files.mapInPandas(make_chunk_batches({"": chunk_cdc_bytes}), CHUNK_SCHEMA)
+    structural chunkers' distributed shape, format-agnostic: every file is
+    chunked, whatever its extension)."""
+
+    def _rows(path: str, data: bytes) -> list[dict]:
+        return tag(chunk_cdc_bytes(data), file=path)
+
+    return map_files(binary_files(spark, path, glob), _rows, CHUNK_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -285,33 +284,6 @@ _MODE_SCHEMA = T.StructType(
 _REPORT_MODES = ("fixed", "cdc", "structural")
 
 
-def _make_single_mode_batches(mode: str, chunk_fn):
-    """One-mode Arrow kernel: chunk every file in the batch under exactly
-    one discipline, tagging the mode column (r12 — see ``_mode_chunks``)."""
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in _MODE_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for c in chunk_fn(bytes(content)):
-                    rows.append(
-                        {
-                            "mode": mode,
-                            "file": path,
-                            "chunk_idx": c["chunk_idx"],
-                            "chunk_type": c["chunk_type"],
-                            "column_name": c["column_name"],
-                            "start": c["start"],
-                            "size": c["size"],
-                            "signature": c["signature"],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return _batches
-
-
 def _mode_chunks(
     spark: SparkSession, path: str, fmt: str = "orc"
 ) -> DataFrame:
@@ -321,7 +293,7 @@ def _mode_chunks(
     SERIALLY inside one python task per file, so the comparison's
     wall-clock was 3 x the slowest kernel on ~n_files tasks while the
     other cores idled. Each mode now gets its own binaryFile scan +
-    single-mode kernel, unioned — 3 x n_files one-mode tasks that the
+    single-mode ``map_files``, unioned — 3 x n_files one-mode tasks that the
     scheduler runs concurrently. The extra cost is re-reading the file
     bytes per mode (no shuffle is introduced); locally that is page
     cache, and at 100 TB the trade is explicit: 3 x read bandwidth
@@ -331,11 +303,6 @@ def _mode_chunks(
     (same chunkers, same files, mode tags identical), so every consumer
     — the accounting joins, the certificate bits, the oracle — sees the
     identical relation."""
-    from columnar_aware_dedup_spark.sources.chunkers import (
-        chunk_orc_columns_bytes,
-        chunk_parquet_bytes,
-    )
-
     structural = (
         chunk_orc_columns_bytes if fmt == "orc" else chunk_parquet_bytes
     )
@@ -344,16 +311,15 @@ def _mode_chunks(
         "cdc": chunk_cdc_bytes,
         "structural": structural,
     }
+
+    def _rows(mode: str):
+        fn = fns[mode]
+        return lambda path, data: tag(fn(data), mode=mode, file=path)
+
     out = None
-    for mode, fn in fns.items():
-        files = (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", f"*.{fmt}")
-            .load(path)
-            .select("path", "content")
-        )
-        part = files.mapInPandas(
-            _make_single_mode_batches(mode, fn), _MODE_SCHEMA
+    for mode in fns:
+        part = map_files(
+            binary_files(spark, path, f"*.{fmt}"), _rows(mode), _MODE_SCHEMA
         )
         out = part if out is None else out.unionByName(part)
     return out

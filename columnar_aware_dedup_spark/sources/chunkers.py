@@ -1,8 +1,8 @@
 """Structural file chunkers: ORC stripes / Parquet column chunks -> chunk rows.
 
 Spark rendering of the reference's ``eagerChunking`` (pure functions over
-file bytes, executed distributed via ``mapInPandas`` over a ``binaryFile``
-scan — one task per file, embarrassingly parallel at 100 TB):
+file bytes, executed distributed by ``sources.binaryfile.map_files`` — one
+task per file, embarrassingly parallel at 100 TB):
 
 - ORC stripe chunker: index/data/footer byte-ranges per stripe
   (``orc/dedup/NaiveORCChunkingAlgorithm.java:19-50``), file footer +
@@ -26,9 +26,7 @@ from __future__ import annotations
 
 import hashlib
 import io
-from collections.abc import Iterator
-
-import pandas as pd
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +38,13 @@ from columnar_aware_dedup_spark.functions.orcmeta import (
 )
 from columnar_aware_dedup_spark.functions.parquetmeta import page_spans
 from columnar_aware_dedup_spark.registry import register
+from columnar_aware_dedup_spark.sources.binaryfile import (
+    FIXTURE_TABLES,
+    _const_true_rows_sql,
+    base_name,
+    binary_files,
+    map_files,
+)
 
 #: output schema of every chunker (content deliberately excluded — signature
 #: is computed in-task; reassembly tests use the pure functions below).
@@ -243,42 +248,34 @@ def reassemble(data: bytes, chunks: list[dict]) -> bytes:
 
 # ---------------------------------------------------------------------------
 # distributed wrappers
+#
+# Every Spark table below is ``map_files(binary_files(spark, paths, glob),
+# rows_fn, schema)`` from ``sources.binaryfile``: the pure chunkers above do
+# the work, and a wrapper only supplies ``rows_fn(path, data)``, which names
+# the file in its rows (full path here). The streaming ingest runs the same
+# ``file_chunk_rows`` over its file stream.
 # ---------------------------------------------------------------------------
 
-_BY_EXT = {".orc": chunk_orc_bytes, ".parquet": chunk_parquet_bytes}
-_BY_EXT_COLUMNS = {".orc": chunk_orc_columns_bytes, ".parquet": chunk_parquet_bytes}
+
+def tag(chunks: list[dict], **cols) -> list[dict]:
+    """Set ``cols`` (the file name, a mode) on every chunk dict in place
+    and return the chunks: the chunker's own dicts are the output rows."""
+    for c in chunks:
+        c.update(cols)
+    return chunks
 
 
-def make_chunk_batches(by_ext: dict):
-    """Build the mapInPandas kernel for a chunker-per-extension mapping."""
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fn = next(
-                    (f for ext, f in by_ext.items() if path.endswith(ext)), None
-                )
-                if fn is None:
-                    continue
-                for c in fn(bytes(content)):
-                    rows.append(
-                        {
-                            "file": path,
-                            "chunk_idx": c["chunk_idx"],
-                            "chunk_type": c["chunk_type"],
-                            "column_name": c["column_name"],
-                            "start": c["start"],
-                            "size": c["size"],
-                            "signature": c["signature"],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields])
-
-    return _batches
-
-
-_chunk_batches = make_chunk_batches(_BY_EXT)
+def file_chunk_rows(
+    path: str, data: bytes, orc_chunker=chunk_orc_bytes
+) -> list[dict]:
+    """The chunk rows of one file, keyed by its full path: ORC through
+    ``orc_chunker``, parquet through the page walk; any other file has
+    none."""
+    if path.endswith(".orc"):
+        return tag(orc_chunker(data), file=path)
+    if path.endswith(".parquet"):
+        return tag(chunk_parquet_bytes(data), file=path)
+    return []
 
 
 def chunk_files(
@@ -292,14 +289,10 @@ def chunk_files(
     materializes content per row — cap input file size upstream or
     stripe-stream via range reads for multi-GB files).
     """
-    by_ext = _BY_EXT_COLUMNS if orc_mode == "columns" else _BY_EXT
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "content")
-    )
-    return files.mapInPandas(make_chunk_batches(by_ext), CHUNK_SCHEMA)
+    rows = file_chunk_rows
+    if orc_mode == "columns":
+        rows = partial(file_chunk_rows, orc_chunker=chunk_orc_columns_bytes)
+    return map_files(binary_files(spark, path, glob), rows, CHUNK_SCHEMA)
 
 
 def binary_transfer_stats(
@@ -351,47 +344,21 @@ def reconstruct_files(files: DataFrame, chunker=chunk_orc_bytes) -> DataFrame:
     ``main/TestMain.java:48-59``): instead of writing bytes back to disk we
     prove the chunk cover is exact, per file, in parallel.
     """
-    import hashlib
 
-    def _recon(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
-                chunks = chunker(data)
-                rebuilt = reassemble(data, chunks)
-                rows.append(
-                    {
-                        "file": path,
-                        "n_chunks": len(chunks),
-                        "reassembled_md5": hashlib.md5(rebuilt).hexdigest(),
-                        "original_md5": hashlib.md5(data).hexdigest(),
-                        "identical": rebuilt == data,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _RECON_SCHEMA.fields])
+    def _recon(path: str, data: bytes) -> list[dict]:
+        chunks = chunker(data)
+        rebuilt = reassemble(data, chunks)
+        return [
+            {
+                "file": path,
+                "n_chunks": len(chunks),
+                "reassembled_md5": hashlib.md5(rebuilt).hexdigest(),
+                "original_md5": hashlib.md5(data).hexdigest(),
+                "identical": rebuilt == data,
+            }
+        ]
 
-    return files.select("path", "content").mapInPandas(_recon, _RECON_SCHEMA)
-
-
-#: the driver fixture tables — the constant file list both engines know,
-#: which is what lets the binary-file certificates below be HASH-CHECKED:
-#: DuckDB cannot parse ORC/parquet bytes, but it can state, per known file
-#: name, the booleans the Spark side must prove in-plan (the trainer-
-#: certificate pattern, VERDICT r05 brief #5).
-FIXTURE_TABLES = (
-    "customer", "documents", "embeddings", "events", "lineitem",
-    "nation", "orders", "part", "region", "supplier",
-)
-
-
-def _const_true_rows_sql(names: list[str], key: str, bools: list[str]) -> str:
-    """DuckDB oracle: one row per constant key, every certificate bit TRUE."""
-    cols = ", ".join(f"TRUE AS {b}" for b in bools)
-    values = ", ".join(f"('{n}')" for n in names)
-    return (
-        f"SELECT {key}, {cols} FROM (VALUES {values}) t({key}) ORDER BY {key}"
-    )
+    return map_files(files, _recon, _RECON_SCHEMA)
 
 
 PARQUET_RECON_ORACLE = _const_true_rows_sql(
@@ -404,11 +371,7 @@ PARQUET_RECON_ORACLE = _const_true_rows_sql(
 def parquet_reconstruction_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-file reconstruction verdicts with the raw chunk counts (the
     unregistered census twin of :func:`parquet_reconstruction`)."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(sf_dir)
-    )
+    files = binary_files(spark, sf_dir, "*.parquet")
     return reconstruct_files(files, chunker=chunk_parquet_bytes).select(
         F.element_at(F.split("file", "/"), -1).alias("file_name"),
         "n_chunks",
@@ -450,43 +413,19 @@ def file_parse_overhead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import time
 
-    def _timed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                t0 = time.perf_counter()
-                chunks = chunk_parquet_bytes(bytes(content))
-                rows.append(
-                    {
-                        "file": path.rsplit("/", 1)[-1],
-                        "n_chunks": len(chunks),
-                        "parse_ms": round((time.perf_counter() - t0) * 1e3, 3),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _PARSE_SCHEMA.fields])
+    def _timed(path: str, data: bytes) -> list[dict]:
+        t0 = time.perf_counter()
+        chunks = chunk_parquet_bytes(data)
+        return [
+            {
+                "file": base_name(path),
+                "n_chunks": len(chunks),
+                "parse_ms": round((time.perf_counter() - t0) * 1e3, 3),
+            }
+        ]
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(sf_dir)
-        .select("path", "content")
-    )
-    return files.mapInPandas(_timed, _PARSE_SCHEMA).orderBy("file")
-
-
-def parquet_file_chunks_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type chunk census of the fixture parquet files (the unregistered
-    twin keeping the raw counts: n_chunks / bytes / distinct signatures)."""
-    chunks = chunk_files(spark, sf_dir, glob="*.parquet")
-    return (
-        chunks.groupBy("chunk_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n_chunks"),
-            F.sum("size").cast("bigint").alias("bytes"),
-            F.countDistinct("signature").alias("distinct_signatures"),
-        )
-        .orderBy("chunk_type")
-    )
+    files = binary_files(spark, sf_dir, "*.parquet")
+    return map_files(files, _timed, _PARSE_SCHEMA).orderBy("file")
 
 
 def cover_certificate(chunks: DataFrame, page_type: str, footer_type: str) -> DataFrame:
@@ -548,8 +487,8 @@ def parquet_file_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the per-file structural certificate: the in-plan booleans prove the
     Thrift page walk produced an exact, gap-free, footer-terminated cover
     of every file (DuckDB cannot chunk binary files, but it can re-state
-    the constant fixture file list with every invariant TRUE). The
-    per-type census stays as :func:`parquet_file_chunks_full`."""
+    the constant fixture file list with every invariant TRUE). The raw
+    chunk table is :func:`chunk_files`."""
     chunks = chunk_files(spark, sf_dir, glob="*.parquet")
     return cover_certificate(chunks, "PageHeader", "ParquetFooter").select(
         F.element_at(F.split("file", "/"), -1).alias("file_name"),

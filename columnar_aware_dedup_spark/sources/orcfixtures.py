@@ -4,8 +4,8 @@ The reference is an ORC-first system (its flagship is the s+p ORC streamer,
 ``orc/net/StripePlusColumnORCStreamer.java``), but the driver fixtures are
 parquet-only. This module materializes a deterministic two-snapshot ORC
 workload from the parquet fixtures (driver-side, cached, fixture prep only —
-the registered queries themselves are fully distributed binaryFile ->
-mapInPandas dataflows):
+the registered queries themselves are fully distributed
+``binaryfile.map_files`` dataflows):
 
 - ``store/``: snapshot A (orders before the cutoff) as multi-stripe ORC;
 - ``incoming/``: snapshot B written append-style (A's rows first, same sort,
@@ -32,9 +32,6 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -47,6 +44,14 @@ from columnar_aware_dedup_spark.functions.orcmeta import (
     read_orc_structure,
 )
 from columnar_aware_dedup_spark.registry import register
+from columnar_aware_dedup_spark.sources.binaryfile import binary_files, map_files
+from columnar_aware_dedup_spark.sources.chunkers import (
+    chunk_files,
+    chunk_orc_columns_bytes,
+    cover_certificate,
+    reconstruct_files,
+    tag,
+)
 
 #: snapshot cutoff shared with the row-level workload (operators/dedup.py).
 _CUTOFF = "1998-01-01"
@@ -413,26 +418,16 @@ def linked_chunk_files(
     glob: str = "*.orc",
     with_stats_keys: bool = False,
 ) -> DataFrame:
-    """binaryFile scan -> linked chunk table (one parse task per file)."""
+    """binaryFile scan -> linked chunk table (one parse task per file),
+    keyed by full path."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in LINKED_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for path_, content in zip(pdf["path"], pdf["content"]):
-                for c in chunk_orc_stripes_linked(
-                    bytes(content), with_stats_keys=with_stats_keys
-                ):
-                    rows.append({"file": path_, **c})
-            yield pd.DataFrame(rows, columns=cols)
+    def _rows(path_: str, data: bytes) -> list[dict]:
+        return tag(
+            chunk_orc_stripes_linked(data, with_stats_keys=with_stats_keys),
+            file=path_,
+        )
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "content")
-    )
-    return files.mapInPandas(_batches, LINKED_SCHEMA)
+    return map_files(binary_files(spark, path, glob), _rows, LINKED_SCHEMA)
 
 
 def _file_name(col: str = "file"):
@@ -456,36 +451,13 @@ ORDER BY file_name
 """
 
 
-def orc_file_chunks_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type chunk census of the incoming ORC files (the unregistered
-    twin keeping the raw counts: n_chunks / bytes / distinct signatures)."""
-    from columnar_aware_dedup_spark.sources.chunkers import chunk_files
-
-    _, incoming = orc_fixture_dirs(sf_dir)
-    chunks = chunk_files(spark, incoming, glob="*.orc", orc_mode="columns")
-    return (
-        chunks.groupBy("chunk_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n_chunks"),
-            F.sum("size").cast("bigint").alias("bytes"),
-            F.countDistinct("signature").alias("distinct_signatures"),
-        )
-        .orderBy("chunk_type")
-    )
-
-
 @register("orc_file_chunks", oracle=ORC_CHUNKS_ORACLE)
 def orc_file_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stripe+column (s+p) chunking of the incoming ORC files, HASH-CHECKED
     via the per-file structural certificate: in-plan booleans prove the
     from-scratch ORC footer parse produced an exact, gap-free,
     footer-terminated cover with real per-column spans for every file.
-    The per-type census stays as :func:`orc_file_chunks_full`."""
-    from columnar_aware_dedup_spark.sources.chunkers import (
-        chunk_files,
-        cover_certificate,
-    )
-
+    The raw chunk table is ``chunkers.chunk_files``."""
     _, incoming = orc_fixture_dirs(sf_dir)
     chunks = chunk_files(spark, incoming, glob="*.orc", orc_mode="columns")
     return cover_certificate(chunks, "Column", "Footer").select(
@@ -509,15 +481,8 @@ ORDER BY file_name
 def orc_reconstruction_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-file reconstruction verdicts with raw chunk counts (the
     unregistered census twin of :func:`orc_reconstruction`)."""
-    from columnar_aware_dedup_spark.sources.chunkers import (
-        chunk_orc_columns_bytes,
-        reconstruct_files,
-    )
-
     store, incoming = orc_fixture_dirs(sf_dir)
-    files = spark.read.format("binaryFile").option("pathGlobFilter", "*.orc").load(
-        [store, incoming]
-    )
+    files = binary_files(spark, [store, incoming], "*.orc")
     two_level = F.concat_ws(
         "/",
         F.element_at(F.split("file", "/"), -2),

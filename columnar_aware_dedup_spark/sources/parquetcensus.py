@@ -20,24 +20,27 @@ walk and falsifiable on corrupted bytes
 the unregistered ``parquet_column_census_full`` twin, pytest-pinned
 against pyarrow's footer fields.
 
-Scale shape: one parse task per file (binaryFile -> ``mapInPandas``),
-census aggregated in-kernel per column across row groups, ZERO shuffles
-until the final presentation sort — at 100 TB the census output is
-O(files x columns), never O(rows).
+Scale shape: :func:`column_census_rows` is the ``rows_fn`` of the shared
+per-file parse loop (``sources.binaryfile.map_files``: one parse task per
+file), the census aggregated in-kernel per column across row groups, ZERO
+shuffles until the final presentation sort — at 100 TB the census output
+is O(files x columns), never O(rows).
 """
 
 from __future__ import annotations
 
 import io
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from columnar_aware_dedup_spark.registry import register
+from columnar_aware_dedup_spark.sources.binaryfile import (
+    base_name,
+    binary_files,
+    map_files,
+)
 
 #: the fixture tables' LEAF column paths (parquet physical columns — the
 #: arrow-level `embedding` list appears as its repeated leaf). Constant
@@ -155,29 +158,16 @@ def column_census_rows(file_name: str, data: bytes) -> list[dict]:
     ]
 
 
-def _census_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in _CENSUS_SCHEMA.fields]
-    for pdf in batches:
-        rows = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            rows.extend(
-                column_census_rows(path.rsplit("/", 1)[-1], bytes(content))
-            )
-        yield pd.DataFrame(rows, columns=cols)
-
-
 def parquet_column_census_full(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The numeric census (module doc) — engine-side twin of the registered
     certificate, pytest-pinned against pyarrow's footer fields."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(sf_dir)
-        .select("path", "content")
+    return map_files(
+        binary_files(spark, sf_dir, "*.parquet"),
+        lambda path, data: column_census_rows(base_name(path), data),
+        _CENSUS_SCHEMA,
     )
-    return files.mapInPandas(_census_batches, _CENSUS_SCHEMA)
 
 
 PARQUET_CENSUS_ORACLE = (

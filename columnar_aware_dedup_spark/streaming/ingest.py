@@ -5,7 +5,8 @@ The reference runs a long-lived TCP loop — client streams files as they
 appear, server keeps an unbounded in-heap chunk store
 (``net/SpeedupClient.java:44-64``, ``orc/dedup/NaiveORCChunkStore.java:15``).
 Spark-native: a ``binaryFile`` file-source stream feeds the structural
-chunker; each micro-batch merges into the *persisted* signature-bucketed
+chunker through the batch tables' own per-file loop
+(``sources.binaryfile.map_files``); each micro-batch merges into the *persisted* signature-bucketed
 chunk store (``sources/store.py::merge_into_store``), appending only misses.
 The store survives restarts (vs. the reference's process-lifetime HashMap).
 """
@@ -16,7 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from columnar_aware_dedup_spark.sources import store
-from columnar_aware_dedup_spark.sources.chunkers import CHUNK_SCHEMA, _chunk_batches
+from columnar_aware_dedup_spark.sources.binaryfile import map_files
+from columnar_aware_dedup_spark.sources.chunkers import CHUNK_SCHEMA, file_chunk_rows
 from columnar_aware_dedup_spark.streaming import fold
 
 
@@ -49,10 +51,9 @@ def start_ingest(
         )
         .option("pathGlobFilter", glob)
         .load(input_dir)
-        .select("path", "content")
     )
     return fold.start(
-        files.mapInPandas(_chunk_batches, CHUNK_SCHEMA),
+        map_files(files, file_chunk_rows, CHUNK_SCHEMA),
         lambda batch: store.merge_into_store(spark, batch, store_table),
         checkpoint,
     )

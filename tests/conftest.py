@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -50,3 +51,22 @@ def jobs_in(spark, group: str, action):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return result, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextlib.contextmanager
+def spark_conf(spark, **confs):
+    """Run the block under the session confs ``confs`` (pass dotted keys as
+    ``**{"spark.sql.x": "v"}``). On exit each key gets its previous value
+    back, or is unset if it had none, so no later test sees the block's
+    settings, nor a Spark default in place of the session's own value."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -15,6 +15,8 @@ from columnar_aware_dedup_spark.io import table
 from columnar_aware_dedup_spark.operators.scale import write_bucketed
 from columnar_aware_dedup_spark.plans import explain
 
+from tests.conftest import spark_conf
+
 
 @pytest.fixture()
 def bucketed_pair(spark, sf_dir):
@@ -37,8 +39,7 @@ def bucketed_pair(spark, sf_dir):
 
 def test_bucketed_join_has_no_shuffle(spark, bucketed_pair):
     o, li = bucketed_pair
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with spark_conf(spark, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         joined = o.join(li, "o_orderkey").groupBy("o_orderkey").agg(
             F.sum("l_quantity").alias("qty"), F.max("o_totalprice").alias("price")
         )
@@ -48,8 +49,6 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed_pair):
         # would be for the groupBy — but it groups on the bucket key, so the
         # whole plan stays at zero shuffles.
         assert explain.n_exchanges(joined) == 0, plan
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
 def test_bucketed_join_matches_unbucketed(spark, sf_dir, bucketed_pair):

@@ -14,6 +14,10 @@ Every streaming parity certificate folds through
 The commit-marker protocol's writes (manifest row, driver-side rows,
 commit marker) happen only inside ``streaming/commitlog.py``, and table
 drops and renames only inside ``sources/store.py``.
+
+File bytes enter Spark through ``sources/binaryfile.py``: its
+``binary_files`` is the one batch ``binaryFile`` read and its ``map_files``
+the one per-file Arrow loop of the file parsers.
 """
 
 from __future__ import annotations
@@ -236,3 +240,69 @@ def test_table_drops_and_renames_live_in_store():
         if "DROP TABLE" in n.value.upper() or "RENAME TO" in n.value.upper()
     ]
     assert not offenders, offenders
+
+
+BINARYFILE = PACKAGE / "sources" / "binaryfile.py"
+#: the modules whose tables parse file bytes
+FILE_PARSERS = sorted((PACKAGE / "sources").glob("*.py")) + [
+    PACKAGE / "operators" / "zonemap.py",
+]
+
+
+def _binary_file_reads(tree: ast.AST) -> list[tuple[int, bool]]:
+    """(line, is a ``readStream``) of every ``.format("binaryFile")``."""
+    return [
+        (
+            call.lineno,
+            isinstance(call.func.value, ast.Attribute)
+            and call.func.value.attr == "readStream",
+        )
+        for call in _method_calls(tree)
+        if call.func.attr == "format"
+        and call.args
+        and isinstance(call.args[0], ast.Constant)
+        and call.args[0].value == "binaryFile"
+    ]
+
+
+def _batch_loops(tree: ast.AST) -> list[int]:
+    """Lines of every ``for ... in batches`` loop (a hand-written Arrow
+    ``mapInPandas`` kernel)."""
+    return [
+        n.lineno for n in ast.walk(tree)
+        if isinstance(n, ast.For)
+        and isinstance(n.iter, ast.Name)
+        and n.iter.id == "batches"
+    ]
+
+
+def test_file_bytes_enter_through_binary_files():
+    """``binaryfile.binary_files`` is the one batch ``binaryFile`` read;
+    the only other one allowed is the file stream in
+    ``streaming/ingest.py``."""
+    offenders = [
+        f"{path.relative_to(PACKAGE)}:{line}"
+        for path in PACKAGE_MODULES
+        if path != BINARYFILE
+        for line, stream in _binary_file_reads(_parse(path))
+        if not (stream and path == STREAMING / "ingest.py")
+    ]
+    assert not offenders, f"read files with binary_files: {offenders}"
+    fn = _function(_parse(BINARYFILE), "binary_files")
+    assert len(_binary_file_reads(fn)) == 1
+    assert len(_binary_file_reads(_parse(BINARYFILE))) == 1
+
+
+def test_one_per_file_parse_loop():
+    """``binaryfile.map_files`` is the one Arrow loop over file batches: a
+    file parser brings a ``rows_fn``, not its own ``for pdf in batches``."""
+    offenders = [
+        f"{path.relative_to(PACKAGE)}:{line}"
+        for path in FILE_PARSERS
+        if path != BINARYFILE
+        for line in _batch_loops(_parse(path))
+    ]
+    assert not offenders, f"parse files with map_files: {offenders}"
+    tree = _parse(BINARYFILE)
+    assert _batch_loops(tree) == _batch_loops(_function(tree, "map_files"))
+    assert len(_batch_loops(tree)) == 1

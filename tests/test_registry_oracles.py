@@ -75,15 +75,15 @@ R_ALLOWLIST = {
     "file_parse_overhead": "wall-clock measurement",
     # r05: pq_train_codebooks, bpe_train_merges, bpe_segment_corpus,
     # embedding_pca_project, and near_dup_pagerank graduated to H via the
-    # tolerance-bit certificate pattern (their *_full twins stay
-    # pytest-pinned, unregistered).
+    # tolerance-bit certificate pattern (pq_train and pagerank stay
+    # pytest-pinned in test_pq.py / test_clustering.py).
     # r06: the six binary-file queries (orc_file_chunks / orc_reconstruction
     # / orc_hierarchical_dedup / orc_linked_reconstruction /
     # parquet_file_chunks / parquet_reconstruction) graduated to H via
     # per-file/per-level structural certificates — DuckDB cannot chunk
     # binary files, but it CAN re-state the constant fixture layout with
     # the in-plan cover/reconstruction/hierarchy booleans all TRUE; the
-    # raw censuses stay as unregistered *_full twins.
+    # raw tables stay as chunk_files and the unregistered *_full twins.
     # r06 (late): ivf_train_kmeans graduated to H via the same
     # tolerance-bit certificate as pq_train_codebooks (k-cell row keys +
     # inertia non-increase / dimensionality / finiteness bits); the float
@@ -91,10 +91,9 @@ R_ALLOWLIST = {
     # r06 (late): grouped_percentile_approx and transfer_stats_rollup_approx
     # graduated to H via the rank-space certificate
     # (stats.approx_rank_certificate — the approx_distinct tolerance-bit
-    # generalized to percentiles, tie-safe two-sided rank counts); the raw
-    # sketch values stay as unregistered *_full twins. The one query left
-    # here is the genuinely non-oracle-able residue: DuckDB has no wall
-    # clock.
+    # generalized to percentiles, tie-safe two-sided rank counts). The one
+    # query left here is the genuinely non-oracle-able residue: DuckDB has
+    # no wall clock.
 }
 
 

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tests.conftest import spark_conf
+
 
 def test_aqe_splits_skewed_join_partition(spark):
     confs = {
@@ -27,10 +29,7 @@ def test_aqe_splits_skewed_join_partition(spark):
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16KB",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
     }
-    old = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with spark_conf(spark, **confs):
         hot = spark.range(300_000).select(
             F.lit(0).alias("k"), F.col("id").alias("v")
         )
@@ -53,9 +52,3 @@ def test_aqe_splits_skewed_join_partition(spark):
 
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in plan, plan
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

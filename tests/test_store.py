@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import contextlib
-
 from pyspark.sql import functions as F
 
 from columnar_aware_dedup_spark.io import table
@@ -11,7 +9,7 @@ from columnar_aware_dedup_spark.operators.dedup import lineitem_chunks
 from columnar_aware_dedup_spark.plans import explain
 from columnar_aware_dedup_spark.sources import store
 
-from tests.conftest import jobs_in, rows_equal
+from tests.conftest import jobs_in, rows_equal, spark_conf
 
 TABLE = "test_chunk_store"
 
@@ -22,18 +20,11 @@ def _chunks(spark, sf_dir):
     )
 
 
-@contextlib.contextmanager
 def _broadcast_threshold(spark, value):
     """Run under ``spark.sql.autoBroadcastJoinThreshold=value``; the store
     is read bucketed only above the threshold, so ``"-1"`` keeps a small
     test store on its bucket layout."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
+    return spark_conf(spark, **{"spark.sql.autoBroadcastJoinThreshold": value})
 
 
 def test_store_roundtrip_and_merge(spark, sf_dir):

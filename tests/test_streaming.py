@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from columnar_aware_dedup_spark.streaming import ingest
 
-from tests.conftest import rows_equal
+from tests.conftest import rows_equal, spark_conf
 
 
 def test_ingest_idempotent_store_merge(spark, sf_dir, tmp_path):
@@ -819,14 +819,10 @@ def test_streaming_lsh_index_matches_batch_near_dup(spark, sf_dir, tmp_path):
     # and double-counts every exchange.
     from columnar_aware_dedup_spark.plans import explain
 
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with spark_conf(spark, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         fresh = lsh.near_dup_pairs_from_index(spark, tbl)
         plan = explain.plan_string(fresh, "formatted")
         n_ex = explain.n_exchanges(fresh)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
     assert n_ex <= 2, f"bucket self-join re-shuffled ({n_ex} exchanges):\n{plan}"
     assert "hashpartitioning(bucket" not in plan, (
         "the index was re-shuffled on the bucket key it is stored "
@@ -974,14 +970,10 @@ def test_lsh_index_compaction_preserves_layout_and_pairs(spark, sf_dir, tmp_path
     assert n_after < n_before, (n_before, n_after)
     assert {tuple(r) for r in spark.table(tbl).collect()} == before_rows
 
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with spark_conf(spark, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         pairs = lsh.near_dup_pairs_from_index(spark, tbl)
         plan = explain.plan_string(pairs, "formatted")
         n_ex = explain.n_exchanges(pairs)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
     assert n_ex <= 2 and "hashpartitioning(bucket" not in plan, (
         f"compaction broke the bucketed layout ({n_ex} exchanges):\n{plan}"
     )

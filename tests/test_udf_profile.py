@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 from columnar_aware_dedup_spark.operators.udf import apply_in_pandas_group
-from tests.conftest import SF_DIR, rows_equal
+from tests.conftest import SF_DIR, rows_equal, spark_conf
 
 
 def _direct_sql(spark, sf_dir: str):
@@ -37,17 +37,10 @@ def test_profile_exact_under_tiny_arrow_batches(spark, batch_rows):
     every order IS split across partial rows — the cross-batch combine
     (sum of counts / int64 cents / max) must still be exact."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(batch_rows))
-    try:
+    with spark_conf(spark, **{key: str(batch_rows)}):
         assert rows_equal(
             apply_in_pandas_group(spark, SF_DIR), _direct_sql(spark, SF_DIR)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def test_grouped_map_apply_in_pandas_surface(spark):
