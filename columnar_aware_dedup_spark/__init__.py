@@ -109,6 +109,12 @@ CHANGED: dict[str, int] = {
     "parquet_stats_pruned_columns": 12,
     "parquet_stats_pruned_dedup": 12,
     "parquet_zone_map_pruning": 12,
+    # the keyed lexical pipeline: doc_hash_embedding folds through
+    # search.hash_vectors_from_tf, and the passage retrievals take the
+    # shared IVF-cell and dot-product expressions of operators/similarity.
+    "doc_hash_embedding": 12,
+    "passage_ann_ivf_topk": 12,
+    "passage_topk_retrieval": 12,
 }
 
 #: the driver's CORRECTNESS window is the first 50 registered queries,

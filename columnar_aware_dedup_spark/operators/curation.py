@@ -995,9 +995,9 @@ def passage_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def passage_tokens_of(docs: DataFrame) -> DataFrame:
     """:func:`passage_tokens` over one BATCH of documents-schema rows —
     the form the passage-postings index maintainer folds deltas through
-    (``streaming/bm25.py::merge_passage_bm25_delta``): a delta arrives as
-    a DataFrame, not a directory, so the window arithmetic must apply to
-    any frame carrying (doc_id, text). The corpus-path wrapper above
+    (``streaming/bm25.py::merge_bm25_delta`` at passage keys): a delta
+    arrives as a DataFrame, not a directory, so the window arithmetic must
+    apply to any frame carrying (doc_id, text). The corpus-path wrapper above
     delegates here, keeping the ONE copy rule intact. Accepts frames that
     already carry the ``toks`` array (the ``normalized`` shape) and
     derives it otherwise."""
@@ -1159,7 +1159,8 @@ def passage_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy checkpoint: the class table feeds BOTH sides of the band
     # self-join, and physical exchange reuse does not fire across the
     # min(struct) aggregate — without it each side would re-pay the
-    # corpus-wide shingle hashing (the corpus_tf lesson)
+    # corpus-wide shingle hashing (the hybrid's corpus-fold lesson,
+    # retrieval._doc_lists)
     classes = passage_signature_classes(spark, sf_dir).localCheckpoint(
         eager=False
     )

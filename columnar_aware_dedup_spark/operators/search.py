@@ -29,12 +29,69 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from columnar_aware_dedup_spark.operators.text import _NORM_SQL, _fanned, normalized
+from columnar_aware_dedup_spark.operators.curation import (
+    _PASSAGE_S,
+    _PASSAGE_W,
+    passage_tokens,
+    passage_tokens_of,
+)
+from columnar_aware_dedup_spark.operators.similarity import (
+    _DOT_SPARK,
+    centroid_array,
+    nearest_cell_expr,
+)
+from columnar_aware_dedup_spark.operators.text import (
+    _NORM_SPARK,
+    _NORM_SQL,
+    _fanned,
+    normalized,
+)
 from columnar_aware_dedup_spark.registry import register
 from columnar_aware_dedup_spark.sources.store import (
     bucket_aligned,
     drop_table_and_dir,
 )
+
+# -- item frames ---------------------------------------------------------------
+
+#: the item keys of the two lexical granularities: a document, and one
+#: window of it (``curation.passage_tokens``). Every lexical step below
+#: and in ``operators/retrieval.py`` takes one of them.
+DOC_KEYS = ("doc_id",)
+PASSAGE_KEYS = ("doc_id", "passage_idx")
+
+
+def _toks(keys: tuple[str, ...]) -> str:
+    """The token-array column of an item frame: ``toks`` for documents
+    (``text.normalized``), ``ptoks`` for passages
+    (``curation.passage_tokens``)."""
+    return "ptoks" if keys == PASSAGE_KEYS else "toks"
+
+
+def items_of(docs: DataFrame, keys: tuple[str, ...] = DOC_KEYS) -> DataFrame:
+    """The item frame of one batch of documents-schema rows: the item-key
+    columns plus the token array, at the granularity ``keys``."""
+    if keys == PASSAGE_KEYS:
+        return passage_tokens_of(docs)
+    return docs.withColumn("toks", F.split(F.expr(_NORM_SPARK), " "))
+
+
+def term_freqs(
+    items: DataFrame,
+    keys: tuple[str, ...] = DOC_KEYS,
+    terms: tuple[str, ...] | None = None,
+) -> DataFrame:
+    """``(*keys, term, tf)``: the one (item, term) -> tf fold. With
+    ``terms`` only those terms' postings survive the filter, which runs
+    before the shuffle; otherwise every non-empty term does."""
+    keep = F.col("term").isin(*terms) if terms else F.col("term") != ""
+    return (
+        items.select(*keys, F.explode(_toks(keys)).alias("term"))
+        .filter(keep)
+        .groupBy(*keys, "term")
+        .agg(F.count("*").alias("tf"))
+    )
+
 
 #: per-document characteristic terms to keep.
 _TOP_TERMS = 3
@@ -73,22 +130,13 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # _fanned: the single-file documents scan otherwise runs the explode +
     # partial aggregation single-threaded (measured 1.3x at sf0.1).
-    toks = (
-        _fanned(spark, sf_dir)
-        .select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term") != "")
-    )
     # tf feeds both the scores and (since its rows are distinct (doc, term))
     # the document-frequency aggregate; a lazy localCheckpoint materializes
     # the explode+shuffle once instead of once per consumer (AQE compiles
     # the two branches as separate stages, so plain exchange reuse does not
     # fire here — same trade as the hierarchical-dedup chunk sharing;
     # measured 1.4x over the double-explode form at sf0.1).
-    tf = (
-        toks.groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
-    )
+    tf = term_freqs(_fanned(spark, sf_dir)).localCheckpoint(eager=False)
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     tot = normalized(spark, sf_dir).agg(F.count("*").alias("n_docs"))
     # No broadcast hint on df: at web-corpus vocabulary (1e8+ distinct
@@ -231,56 +279,33 @@ def doc_hash_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     every embedding operator (cosine top-k, LSH/IVF ANN, SemDeDup) runs on
     raw documents with no model in the loop.
 
-    Fully columnar: one (doc_id, term) shuffle for tf, one (doc_id, bucket)
-    aggregation, then a per-doc ``map_from_entries`` fold into the dense
-    array — built-ins end to end, no UDF, and the signed-sum semantics make
-    the result independent of aggregation order (integer adds), so the
-    hash check is exact. Docs with no tokens keep a zero vector.
+    Fully columnar: one (doc_id, term) shuffle for tf, then the shared
+    :func:`hash_vectors_from_tf` fold (one (doc_id, bucket) aggregation and
+    a per-doc ``map_from_entries`` into the dense array) — built-ins end
+    to end, no UDF, and the signed-sum semantics make the result
+    independent of aggregation order (integer adds), so the hash check is
+    exact. Docs with no tokens keep a zero vector.
     """
     # _fanned: the single-file documents scan otherwise runs the explode +
     # partial aggregation single-threaded (measured 1.3x at sf0.1).
-    toks = (
-        _fanned(spark, sf_dir)
-        .select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term") != "")
+    vecs = hash_vectors_from_tf(
+        term_freqs(_fanned(spark, sf_dir)), items=normalized(spark, sf_dir)
     )
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    bs = tf.groupBy(
-        "doc_id", F.expr(_BUCKET_SPARK).cast("int").alias("bucket")
-    ).agg(F.expr(f"CAST(sum(({_SIGN_SPARK}) * tf) AS DOUBLE)").alias("v"))
-    folded = bs.groupBy("doc_id").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("bucket", "v"))
-        ).alias("m")
-    )
-    docs = normalized(spark, sf_dir).select("doc_id")
-    dense = (
-        f"transform(sequence(0, {_HASH_DIM - 1}),"
-        " i -> coalesce(element_at(m, i), CAST(0 AS DOUBLE)))"
-    )
-    return (
-        docs.join(folded, "doc_id", "left")
-        .withColumn("vec", F.expr(dense))
-        .withColumn(
-            "nrm",
-            F.expr("sqrt(aggregate(vec, CAST(0 AS DOUBLE), (a, x) -> a + x * x))"),
-        )
-        .select(
-            "doc_id",
-            # The normalized components are joined into ONE string column:
-            # the driver canonicalizer sorts output frames in pandas and an
-            # array<double> cell is unhashable there (CORRECTNESS_r03 crash);
-            # the DECIMAL(9,6) hop pins a fixed-point text form both engines
-            # render identically (double->string diverges on sci-notation).
-            # Same house pattern as array_fns (operators/relational.py).
-            F.expr(
-                "array_join(CASE WHEN nrm > 0"
-                " THEN transform(vec, x -> CAST(CAST(round(x / nrm, 6)"
-                " AS DECIMAL(9,6)) AS STRING))"
-                " ELSE transform(vec, x -> CAST(CAST(round(x, 6)"
-                " AS DECIMAL(9,6)) AS STRING)) END, ',')"
-            ).alias("embedding"),
-        )
+    return vecs.select(
+        "doc_id",
+        # The normalized components are joined into ONE string column: the
+        # driver canonicalizer sorts output frames in pandas and an
+        # array<double> cell is unhashable there (CORRECTNESS_r03 crash);
+        # the DECIMAL(9,6) hop pins a fixed-point text form both engines
+        # render identically (double->string diverges on sci-notation).
+        # Same house pattern as array_fns (operators/relational.py).
+        F.expr(
+            "array_join(CASE WHEN nrm > 0"
+            " THEN transform(vec, x -> CAST(CAST(round(x / nrm, 6)"
+            " AS DECIMAL(9,6)) AS STRING))"
+            " ELSE transform(vec, x -> CAST(CAST(round(x, 6)"
+            " AS DECIMAL(9,6)) AS STRING)) END, ',')"
+        ).alias("embedding"),
     )
 
 
@@ -303,12 +328,7 @@ def write_postings_index(
     # ephemeral-metastore hygiene (same as sources.store.create_store): a
     # fresh Derby can orphan the physical location from an earlier process
     drop_table_and_dir(spark, table_name)
-    toks = (
-        _fanned(spark, sf_dir)
-        .select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term") != "")
-    )
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
+    postings = term_freqs(_fanned(spark, sf_dir)).select("term", "doc_id", "tf")
     (
         bucket_aligned(postings, n_buckets, "term")
         .write.format("parquet")
@@ -351,11 +371,6 @@ def search_with_index(
 #: the corpus (the `embedding_cosine_topk` _NQ discipline applied to docs).
 _RETR_QUERY_DOCS = 3
 _RETR_TOPK = 5
-
-from columnar_aware_dedup_spark.operators.curation import (  # noqa: E402
-    _PASSAGE_S,
-    _PASSAGE_W,
-)
 
 #: the ONE copy of the passage-vector CTE chain (window arithmetic +
 #: hashing-trick vectors, zero-norm passages dropped) shared by the exact
@@ -430,17 +445,22 @@ ORDER BY q_doc, q_passage, cosine_sim DESC, n_doc, n_passage
 
 
 def hash_vectors_from_tf(
-    tf: DataFrame, keys: tuple[str, ...] = ("doc_id",)
+    tf: DataFrame,
+    keys: tuple[str, ...] = DOC_KEYS,
+    items: DataFrame | None = None,
 ) -> DataFrame:
     """``(*keys, vec array<double>, nrm)``: the ONE hashing-trick dense
     fold — (key, term, tf) rows hash into md5-nibble buckets with ±1 sign
     bits, sum into a dense ``_HASH_DIM`` array, and carry their L2 norm —
-    shared by the doc-level vector space (``operators/retrieval.py``) and
-    the passage-level one (:func:`passage_hash_vectors`), generalized
-    over the group key so the two spaces cannot drift. Sums stay
-    UNNORMALIZED integer-valued doubles (downstream dot products exact);
-    zero-norm keys are dropped (callers that need them as a registry
-    re-attach zero rows, e.g. ``retrieval._doc_hash_vectors_of``)."""
+    shared by the doc-level vector space (:func:`doc_hash_embedding`,
+    ``operators/retrieval.py``) and the passage-level one
+    (:func:`passage_hash_vectors`), generalized over the group key so the
+    spaces cannot drift. Sums stay UNNORMALIZED integer-valued doubles
+    (downstream dot products exact). Zero-norm keys are dropped, unless
+    ``items`` is given: then every item of it keeps a row, a zero-norm one
+    with a zero vector and nrm 0.0 (an embedding table lists every doc,
+    and a vector table that doubles as a replay registry must hold
+    token-less docs, ``retrieval._doc_hash_vectors_of``)."""
     bs = tf.groupBy(
         *keys, F.expr(_BUCKET_SPARK).cast("int").alias("bucket")
     ).agg(F.expr(f"CAST(sum(({_SIGN_SPARK}) * tf) AS DOUBLE)").alias("v"))
@@ -448,7 +468,7 @@ def hash_vectors_from_tf(
         f"transform(sequence(0, {_HASH_DIM - 1}),"
         " i -> coalesce(element_at(m, i), CAST(0 AS DOUBLE)))"
     )
-    return (
+    vecs = (
         bs.groupBy(*keys)
         .agg(
             F.map_from_entries(
@@ -465,6 +485,18 @@ def hash_vectors_from_tf(
         .filter(F.col("nrm") > 0)
         .select(*keys, "vec", "nrm")
     )
+    if items is None:
+        return vecs
+    zero = F.expr(f"array_repeat(CAST(0 AS DOUBLE), {_HASH_DIM})")
+    return (
+        items.select(*keys)
+        .join(vecs, list(keys), "left")
+        .select(
+            *keys,
+            F.coalesce("vec", zero).alias("vec"),
+            F.coalesce("nrm", F.lit(0.0)).alias("nrm"),
+        )
+    )
 
 
 def passage_hash_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -473,20 +505,10 @@ def passage_hash_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``doc_hash_embedding`` (same bucket/sign hashes, UNNORMALIZED integer
     sums kept internal so downstream dot products stay exact), from the
     shared ``passage_tokens`` window derivation through the shared
-    :func:`hash_vectors_from_tf` fold. Zero-norm (empty-text) passages
-    are dropped, mirrored in the oracle."""
-    from columnar_aware_dedup_spark.operators.curation import passage_tokens
-
-    pt = passage_tokens(spark, sf_dir)
-    tf = (
-        pt.select(
-            "doc_id", "passage_idx", F.explode("ptoks").alias("term")
-        )
-        .filter(F.col("term") != "")
-        .groupBy("doc_id", "passage_idx", "term")
-        .agg(F.count("*").alias("tf"))
-    )
-    return hash_vectors_from_tf(tf, ("doc_id", "passage_idx"))
+    :func:`term_freqs` and :func:`hash_vectors_from_tf` folds. Zero-norm
+    (empty-text) passages are dropped, mirrored in the oracle."""
+    tf = term_freqs(passage_tokens(spark, sf_dir), PASSAGE_KEYS)
+    return hash_vectors_from_tf(tf, PASSAGE_KEYS)
 
 
 @register("passage_topk_retrieval", oracle=PASSAGE_TOPK_ORACLE)
@@ -509,34 +531,7 @@ def passage_topk_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged once passages are written cell-partitioned); this query is
     their recall oracle, the `embedding_cosine_topk` role one level down.
     """
-    vecs = passage_hash_vectors(spark, sf_dir)
-    q = vecs.filter(F.col("doc_id") < _RETR_QUERY_DOCS).select(
-        F.col("doc_id").alias("q_doc"),
-        F.col("passage_idx").alias("q_passage"),
-        F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-    )
-    dot = (
-        "aggregate(zip_with(qvec, vec, (x, y) -> x * y),"
-        " CAST(0 AS DOUBLE), (a, v) -> a + v)"
-    )
-    pairs = vecs.join(
-        F.broadcast(q), F.col("doc_id") != F.col("q_doc")
-    ).select(
-        "q_doc",
-        "q_passage",
-        F.col("doc_id").alias("n_doc"),
-        F.col("passage_idx").alias("n_passage"),
-        F.expr(f"round(({dot}) / (qnrm * nrm), 6)").alias("cosine_sim"),
-    )
-    w = Window.partitionBy("q_doc", "q_passage").orderBy(
-        F.col("cosine_sim").desc(), "n_doc", "n_passage"
-    )
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _RETR_TOPK)
-        .drop("rn")
-    )
+    return _passage_topk(passage_hash_vectors(spark, sf_dir), in_cell=False)
 
 
 # -- passage-level IVF ANN ----------------------------------------------------
@@ -603,7 +598,7 @@ def passage_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixed passage medoids (passage 0 of docs 20..27) keep the cell
     structure deterministic.
     """
-    return _passage_cell_topk(_passage_ivf_assign(spark, sf_dir))
+    return _passage_topk(_passage_ivf_assign(spark, sf_dir), in_cell=True)
 
 
 def _passage_ivf_assign(
@@ -616,47 +611,38 @@ def _passage_ivf_assign(
     cannot drift on cell geometry. ``vecs`` lets a caller that already
     paid the passage tokenize + tf fold supply the vector frame (the
     build-both-passage-indexes row, r11)."""
-    from columnar_aware_dedup_spark.operators.similarity import centroid_array
-
     if vecs is None:
         vecs = passage_hash_vectors(spark, sf_dir)
     cent = vecs.filter(
         F.col("doc_id").between(_PCENT_LO, _PCENT_HI)
         & (F.col("passage_idx") == 0)
     ).select(F.col("doc_id").alias("cid"), F.col("vec").alias("ce"))
-    d2 = (
-        "round(aggregate(zip_with(vec, c.ce, (x, y) -> (x - y) * (x - y)),"
-        " CAST(0 AS DOUBLE), (acc, t) -> acc + t), 6)"
-    )
-    nearest = F.expr(
-        "element_at(array_sort(transform(cents,"
-        f" c -> struct({d2} AS d, c.cid AS cid))), 1).cid"
-    )
     return vecs.join(F.broadcast(centroid_array(cent))).select(
-        "doc_id", "passage_idx", "vec", "nrm", nearest.alias("cid")
+        "doc_id", "passage_idx", "vec", "nrm",
+        nearest_cell_expr("vec").alias("cid"),
     )
 
 
-def _passage_cell_topk(assign: DataFrame) -> DataFrame:
-    """The nprobe=1 probe + exact in-cell re-rank over any cell-assigned
-    passage frame — shared by the in-plan ``passage_ann_ivf_topk`` and
-    the index-served :func:`passage_ann_ivf_topk_from_index` (so the two
-    serving paths cannot drift, the ``fuse_rrf`` rule)."""
-    q = assign.filter(F.col("doc_id") < _RETR_QUERY_DOCS).select(
+def _passage_topk(cands: DataFrame, in_cell: bool) -> DataFrame:
+    """Every passage of the first ``_RETR_QUERY_DOCS`` documents ranks the
+    OTHER documents' passages of ``cands`` by exact cosine, top
+    ``_RETR_TOPK`` — over every passage (the exact baseline), or, with
+    ``in_cell``, only inside its own IVF cell (the nprobe=1 probe; ``cands``
+    then carries ``cid``). One tail for the exact query, the in-plan ANN
+    query and the index-served one, so the three cannot drift (the
+    ``fuse_rrf`` rule)."""
+    q = cands.filter(F.col("doc_id") < _RETR_QUERY_DOCS).select(
         F.col("doc_id").alias("q_doc"),
         F.col("passage_idx").alias("q_passage"),
         F.col("vec").alias("qvec"),
         F.col("nrm").alias("qnrm"),
-        F.col("cid").alias("qcid"),
+        *([F.col("cid").alias("qcid")] if in_cell else []),
     )
-    dot = (
-        "aggregate(zip_with(qvec, vec, (x, y) -> x * y),"
-        " CAST(0 AS DOUBLE), (a, v) -> a + v)"
-    )
-    pairs = assign.join(
-        F.broadcast(q),
-        (F.col("cid") == F.col("qcid")) & (F.col("doc_id") != F.col("q_doc")),
-    ).select(
+    on = F.col("doc_id") != F.col("q_doc")
+    if in_cell:
+        on = (F.col("cid") == F.col("qcid")) & on
+    dot = _DOT_SPARK.format(a="qvec", b="vec")
+    pairs = cands.join(F.broadcast(q), on).select(
         "q_doc",
         "q_passage",
         F.col("doc_id").alias("n_doc"),
@@ -711,4 +697,4 @@ def passage_ann_ivf_topk_from_index(
     idx = spark.read.parquet(path).withColumn(
         "cid", F.col("cid").cast("long")
     )
-    return _passage_cell_topk(idx)
+    return _passage_topk(idx, in_cell=True)

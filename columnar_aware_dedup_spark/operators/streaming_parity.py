@@ -285,7 +285,7 @@ def streaming_rrf_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "documents"),
         "doc_id",
     )
-    return rrf_from_index(spark, bm25_tbl, vec_tbl)
+    return rrf_from_index(spark, bm25_tbl, spark.table(vec_tbl))
 
 
 def _index_served_bit(

@@ -28,11 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from columnar_aware_dedup_spark.operators.retrieval import (
-    batch_bm25_postings,
-    corpus_stats,
-    doc_lengths,
-    passage_bm25_frames,
+    bm25_frames,
+    bm25_partials,
 )
+from columnar_aware_dedup_spark.operators.search import DOC_KEYS
 from columnar_aware_dedup_spark.streaming import commitlog, fold
 
 #: the attempt-tagged tables, the doc-keyed registry first
@@ -41,56 +40,28 @@ _PARTIALS = ("_docs", "", "_stats")
 
 
 def merge_bm25_delta(
-    spark: SparkSession, docs: DataFrame, table_name: str, sweep: bool = True
-) -> int:
-    """Idempotently fold one batch of documents into the BM25 index;
-    returns the number of NEW documents indexed (the transaction and the
-    replay guard are ``commitlog.merge``'s). ``sweep=False`` skips the
-    per-merge debris reclaim — debris is invisible to readers regardless
-    (the commits semi-join), so a caller that just initialized the tables
-    empty (the parity certificates) or batches reclaim to one final sweep
-    loses space-accounting, never correctness."""
-    return _merge_bm25(
-        spark, docs, table_name, sweep,
-        lambda d: (batch_bm25_postings(d), doc_lengths(d)),
-    )
-
-
-def merge_passage_bm25_delta(
-    spark: SparkSession, docs: DataFrame, table_name: str, sweep: bool = True
-) -> int:
-    """:func:`merge_bm25_delta` for the PASSAGE index
-    (``retrieval.write_passage_bm25_index``'s layout, r11): the delta
-    unit stays the DOCUMENT — a doc's passages derive from its text
-    alone, so they land (or replay away) atomically with it, and the
-    idempotence anti-join keys on doc_id against the passage registry's
-    doc_id column. Postings/registry rows carry the widened
-    (doc_id, passage_idx) key; the stats partials are passage-scoped and
-    both frames derive from the ONE checkpointed window derivation
-    (``retrieval.passage_bm25_frames``)."""
-    return _merge_bm25(spark, docs, table_name, sweep, passage_bm25_frames)
-
-
-def _merge_bm25(
     spark: SparkSession,
     docs: DataFrame,
     table_name: str,
-    sweep: bool,
-    frames_of,
+    sweep: bool = True,
+    keys: tuple[str, ...] = DOC_KEYS,
 ) -> int:
-    """The one merge behind both granularities: the layouts differ only
-    in the item key the ``frames_of`` builder emits (one call ->
-    (postings, registry), so a granularity whose two frames share a
-    derivation pays it once); the transaction is ``commitlog.merge``'s."""
-
-    def derive(fresh: DataFrame):
-        postings, registry = frames_of(fresh)
-        return (
-            {"": postings, "_docs": registry},
-            {"_stats": corpus_stats(registry)},
-        )
-
-    return commitlog.merge(spark, table_name, _PARTIALS, docs, derive, sweep)
+    """Idempotently fold one batch of documents into the BM25 index at the
+    granularity ``keys`` (``retrieval.write_bm25_index``'s layout);
+    returns the number of NEW documents indexed (the transaction and the
+    replay guard are ``commitlog.merge``'s, the frames
+    ``retrieval.bm25_frames``'). The delta unit is the DOCUMENT at every
+    granularity: a doc's passages derive from its text alone, so they land
+    (or replay away) atomically with it, and the idempotence anti-join
+    keys on doc_id against the registry's doc_id column. ``sweep=False``
+    skips the per-merge debris reclaim — debris is invisible to readers
+    regardless (the commits semi-join), so a caller that just initialized
+    the tables empty (the parity certificates) or batches reclaim to one
+    final sweep loses space-accounting, never correctness."""
+    return commitlog.merge(
+        spark, table_name, _PARTIALS, docs,
+        lambda fresh: bm25_partials(*bm25_frames(fresh, keys)), sweep,
+    )
 
 
 def start_bm25_indexer(

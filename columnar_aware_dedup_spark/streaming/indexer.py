@@ -16,21 +16,15 @@ with a zero-shuffle index side.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from columnar_aware_dedup_spark.operators.text import _NORM_SPARK
+from columnar_aware_dedup_spark.operators.search import items_of, term_freqs
 from columnar_aware_dedup_spark.streaming import fold
 
 
 def batch_postings(docs: DataFrame) -> DataFrame:
-    """(term, doc_id, tf) for one batch of documents-schema rows."""
-    return (
-        docs.withColumn("norm", F.expr(_NORM_SPARK))
-        .select("doc_id", F.explode(F.split("norm", " ")).alias("term"))
-        .filter(F.col("term") != "")
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
+    """(term, doc_id, tf) for one batch of documents-schema rows — the
+    shared (key, term) fold in the postings table's column order."""
+    return term_freqs(items_of(docs)).select("term", "doc_id", "tf")
 
 
 def merge_postings(

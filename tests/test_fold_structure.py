@@ -18,12 +18,17 @@ drops and renames only inside ``sources/store.py``.
 File bytes enter Spark through ``sources/binaryfile.py``: its
 ``binary_files`` is the one batch ``binaryFile`` read and its ``map_files``
 the one per-file Arrow loop of the file parsers.
+
+The lexical pipeline is keyed: ``search.term_freqs`` is the one
+(key, term) -> tf fold and ``retrieval._bm25_table_specs`` the one
+renderer of the BM25 index layout, whatever the item granularity.
 """
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 import pytest
 
@@ -306,3 +311,87 @@ def test_one_per_file_parse_loop():
     tree = _parse(BINARYFILE)
     assert _batch_loops(tree) == _batch_loops(_function(tree, "map_files"))
     assert len(_batch_loops(tree)) == 1
+
+
+SEARCH = PACKAGE / "operators" / "search.py"
+RETRIEVAL = PACKAGE / "operators" / "retrieval.py"
+
+
+def _tf_folds(tree: ast.AST) -> list[tuple[int, ast.Call]]:
+    """(line, node) of every ``.groupBy(<key>..., "term")`` followed by an
+    ``.agg`` that counts into ``tf`` — a (key, term) -> tf fold."""
+    out = []
+    for call in _method_calls(tree):
+        grouped = call.func.value
+        if not (
+            call.func.attr == "agg"
+            and isinstance(grouped, ast.Call)
+            and isinstance(grouped.func, ast.Attribute)
+            and grouped.func.attr == "groupBy"
+            and len(grouped.args) >= 2
+            and any(
+                isinstance(a, ast.Constant) and a.value == "term"
+                for a in grouped.args
+            )
+        ):
+            continue
+        aggs = [n for a in call.args for n in ast.walk(a)]
+        counts = any(
+            name == "count" for a in call.args for name, _ in _called_names(a)
+        )
+        into_tf = any(
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "alias"
+            and n.args
+            and isinstance(n.args[0], ast.Constant)
+            and n.args[0].value == "tf"
+            for n in aggs
+        )
+        if counts and into_tf:
+            out.append((call.lineno, call))
+    return sorted(out, key=lambda pair: pair[0])
+
+
+def _inside(tree: ast.AST, name: str) -> set[int]:
+    """ids of the nodes of the module's function ``name`` (none if the
+    module has no such function)."""
+    return {
+        id(n) for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef) and fn.name == name
+        for n in ast.walk(fn)
+    }
+
+
+def test_one_term_frequency_fold():
+    """``search.term_freqs`` is the one (key, term) -> tf group-count: a
+    lexical step brings an item frame and its keys, not its own explode +
+    ``groupBy(key, "term").count()``."""
+    offenders, kept = [], []
+    for path in PACKAGE_MODULES:
+        tree = _parse(path)
+        allowed = _inside(tree, "term_freqs") if path == SEARCH else set()
+        for line, node in _tf_folds(tree):
+            where = f"{path.relative_to(PACKAGE)}:{line}"
+            (kept if id(node) in allowed else offenders).append(where)
+    assert not offenders, f"fold through search.term_freqs: {offenders}"
+    assert len(kept) == 1, kept
+
+
+def test_bm25_table_specs_render_in_one_function():
+    """Every BM25 index schema (postings, registry, stats partials) is
+    rendered by ``retrieval._bm25_table_specs`` from the item keys, so no
+    granularity keeps its own copy of the layout."""
+    spec = re.compile(r"\bdl(_sum)? bigint")
+    offenders, kept = [], []
+    for path in PACKAGE_MODULES:
+        tree = _parse(path)
+        allowed = (
+            _inside(tree, "_bm25_table_specs") if path == RETRIEVAL else set()
+        )
+        for n in _sql_strings(tree):
+            if spec.search(n.value):
+                where = f"{path.relative_to(PACKAGE)}:{n.lineno}"
+                (kept if id(n) in allowed else offenders).append(where)
+    assert not offenders, f"render BM25 specs in _bm25_table_specs: {offenders}"
+    assert len(kept) == 3, kept

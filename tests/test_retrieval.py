@@ -9,6 +9,7 @@ import math
 import re
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from columnar_aware_dedup_spark.operators.retrieval import (
@@ -191,7 +192,7 @@ def test_rrf_index_serving_is_result_identical(spark, sf_dir):
 
     write_bm25_index(spark, sf_dir, "rrf_idx_bm25")
     write_doc_vector_index(spark, sf_dir, "rrf_idx_vecs")
-    served = rrf_from_index(spark, "rrf_idx_bm25", "rrf_idx_vecs")
+    served = rrf_from_index(spark, "rrf_idx_bm25", spark.table("rrf_idx_vecs"))
     assert rows_equal(served, hybrid_rrf_fusion(spark, sf_dir))
 
     # dense delta path: replaying the full corpus absorbs to zero; a
@@ -267,26 +268,6 @@ def test_bm25_index_compaction_preserves_serving(spark, sf_dir, tmp_path):
     assert rows_equal(served, spark.createDataFrame(before_rows))
 
 
-def test_doc_lengths_null_text_is_zero_not_minus_one(spark):
-    """Spark's size(NULL) is -1; a NULL-text document must register dl=0
-    (review finding: -1 would poison dl_sum and shift every served
-    avgdl off the from-scratch path, which drops NULL docs before its
-    average)."""
-    from columnar_aware_dedup_spark.operators.retrieval import (
-        corpus_stats,
-        doc_lengths,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, None), (2, ""), (3, "two tokens")],
-        "doc_id long, text string",
-    )
-    rows = {r["doc_id"]: r["dl"] for r in doc_lengths(docs).collect()}
-    assert rows == {1: 0, 2: 0, 3: 2}
-    stats = corpus_stats(doc_lengths(docs)).collect()[0]
-    assert (stats["n_docs"], stats["n_dl_docs"], stats["dl_sum"]) == (3, 1, 2)
-
-
 def test_passage_rrf_fusion_and_index_twin(spark, sf_dir, tmp_path):
     """The passage-level hybrid: fusion through the SAME generalized
     fuse_rrf tail must produce a top-20 with both list ranks populated
@@ -307,9 +288,12 @@ def test_passage_rrf_fusion_and_index_twin(spark, sf_dir, tmp_path):
 
     path = str(tmp_path / "prrf_ivf")
     search.write_passage_ivf_index(spark, sf_dir, path)
-    retrieval.write_passage_bm25_index(spark, sf_dir, "test_prrf_bm25")
-    served = retrieval.passage_rrf_from_index(
-        spark, "test_prrf_bm25", path
+    retrieval.write_bm25_index(
+        spark, sf_dir, "test_prrf_bm25", keys=search.PASSAGE_KEYS
+    )
+    served = retrieval.rrf_from_index(
+        spark, "test_prrf_bm25", spark.read.parquet(path),
+        search.PASSAGE_KEYS,
     ).collect()
     assert sorted(map(tuple, served)) == sorted(map(tuple, rows))
 
@@ -320,15 +304,16 @@ def test_passage_bm25_index_serving_is_result_identical(spark, sf_dir):
     properties intact at passage granularity: the searched terms' buckets
     are the only postings read and the ranking is a TakeOrdered heap."""
     from columnar_aware_dedup_spark.operators.retrieval import (
-        passage_bm25_from_index,
+        bm25_from_index,
         passage_bm25_topk,
-        write_passage_bm25_index,
+        write_bm25_index,
     )
+    from columnar_aware_dedup_spark.operators.search import PASSAGE_KEYS
     from columnar_aware_dedup_spark.plans import explain
     from tests.conftest import rows_equal
 
-    write_passage_bm25_index(spark, sf_dir, "pbm25_idx_test")
-    served = passage_bm25_from_index(spark, "pbm25_idx_test")
+    write_bm25_index(spark, sf_dir, "pbm25_idx_test", keys=PASSAGE_KEYS)
+    served = bm25_from_index(spark, "pbm25_idx_test", keys=PASSAGE_KEYS)
     plan = explain.plan_string(served, "formatted")
     assert explain.n_exchanges(served) <= 2, plan
     assert explain.has_take_ordered(served), plan
@@ -346,25 +331,29 @@ def test_passage_bm25_fold_parity(spark, sf_dir):
 
     from columnar_aware_dedup_spark.io import table as _table
     from columnar_aware_dedup_spark.operators.retrieval import (
-        init_passage_bm25_tables,
-        passage_bm25_from_index,
+        bm25_from_index,
+        init_bm25_tables,
         passage_bm25_topk,
     )
-    from columnar_aware_dedup_spark.streaming.bm25 import (
-        merge_passage_bm25_delta,
-    )
+    from columnar_aware_dedup_spark.operators.search import PASSAGE_KEYS
+    from columnar_aware_dedup_spark.streaming.bm25 import merge_bm25_delta
     from tests.conftest import rows_equal
 
     tbl = "test_pbm25_fold"
-    init_passage_bm25_tables(spark, tbl)
+    init_bm25_tables(spark, tbl, keys=PASSAGE_KEYS)
     docs = _table(spark, sf_dir, "documents")
     wave1 = docs.filter(F.col("doc_id") % 2 == 0)
     wave2 = docs.filter(F.col("doc_id") % 2 != 0)
-    assert merge_passage_bm25_delta(spark, wave1, tbl, sweep=False) > 0
-    assert merge_passage_bm25_delta(spark, wave1, tbl, sweep=False) == 0
-    assert merge_passage_bm25_delta(spark, wave2, tbl, sweep=False) > 0
+
+    def merge(d):
+        return merge_bm25_delta(spark, d, tbl, sweep=False, keys=PASSAGE_KEYS)
+
+    assert merge(wave1) > 0
+    assert merge(wave1) == 0
+    assert merge(wave2) > 0
     assert rows_equal(
-        passage_bm25_from_index(spark, tbl), passage_bm25_topk(spark, sf_dir)
+        bm25_from_index(spark, tbl, keys=PASSAGE_KEYS),
+        passage_bm25_topk(spark, sf_dir),
     )
 
 
@@ -372,37 +361,35 @@ def test_doc_fuse_rrf_key_generalization_is_identity(spark, sf_dir):
     """The r09 key generalization of fuse_rrf must be a NO-OP for the
     registered doc-level hybrid: explicit ("doc_id",) keys produce the
     identical fused table (guards the default-arg path against drift)."""
-    from pyspark.sql import functions as F
-
     from columnar_aware_dedup_spark.operators import retrieval
-    from columnar_aware_dedup_spark.operators.search import (
-        hash_vectors_from_tf,
-    )
 
-    tf_all = retrieval.corpus_tf(spark, sf_dir)
-    lex = retrieval._bm25_scores(
-        spark, sf_dir,
-        tf=tf_all.filter(F.col("term").isin(*retrieval._SEARCH_TERMS)),
-    )
-    dense = hash_vectors_from_tf(tf_all)
+    lex, dense = retrieval._doc_lists(spark, sf_dir)
     a = retrieval.fuse_rrf(lex, dense).collect()
     b = retrieval.fuse_rrf(lex, dense, keys=("doc_id",)).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b)) and a
 
 
-def test_passage_registry_null_text_is_zero_not_minus_one(spark):
-    """A NULL-text document yields ONE passage with NULL ptoks whose raw
-    size() is -1; the passage registry must floor it to dl=0 (r11
-    review: unfloored it poisons the persisted index's dl_sum and every
-    served avgdl — the doc_lengths rule one level down), and the merge
-    must absorb its replay to zero."""
+@pytest.mark.parametrize(
+    "keys, registry_rows",
+    [
+        (("doc_id",), {(1,): 0, (2,): 0, (3,): 2}),
+        (("doc_id", "passage_idx"), {(1, 0): 0, (2, 0): 0, (3, 0): 2}),
+    ],
+    ids=["doc", "passage"],
+)
+def test_registry_null_text_is_zero_not_minus_one(spark, keys, registry_rows):
+    """Spark's size(NULL) is -1; a NULL-text document (one item, a doc or
+    its one passage) must register dl=0 like an empty one (review
+    findings: -1 would poison the persisted index's dl_sum and shift
+    every served avgdl off the from-scratch path, which drops token-less
+    items before its average), the stats partial must sum the true
+    lengths, and the merge must absorb its replay to zero."""
     from columnar_aware_dedup_spark.operators.retrieval import (
-        init_passage_bm25_tables,
-        passage_bm25_frames,
+        bm25_frames,
+        corpus_stats,
+        init_bm25_tables,
     )
-    from columnar_aware_dedup_spark.streaming.bm25 import (
-        merge_passage_bm25_delta,
-    )
+    from columnar_aware_dedup_spark.streaming.bm25 import merge_bm25_delta
 
     docs = spark.createDataFrame(
         [
@@ -412,13 +399,15 @@ def test_passage_registry_null_text_is_zero_not_minus_one(spark):
         ],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    _postings, registry = passage_bm25_frames(docs)
-    rows = {(r["doc_id"], r["passage_idx"]): r["dl"] for r in registry.collect()}
-    assert rows == {(1, 0): 0, (2, 0): 0, (3, 0): 2}, rows
+    _postings, registry = bm25_frames(docs, keys)
+    rows = {tuple(r[k] for k in keys): r["dl"] for r in registry.collect()}
+    assert rows == registry_rows, rows
+    stats = corpus_stats(registry).collect()[0]
+    assert (stats["n_docs"], stats["n_dl_docs"], stats["dl_sum"]) == (3, 1, 2)
 
-    tbl = init_passage_bm25_tables(spark, "test_pbm25_nulltext")
-    assert merge_passage_bm25_delta(spark, docs, tbl, sweep=False) == 3
-    assert merge_passage_bm25_delta(spark, docs, tbl, sweep=False) == 0
+    tbl = init_bm25_tables(spark, f"test_bm25_nulltext_{len(keys)}", keys=keys)
+    assert merge_bm25_delta(spark, docs, tbl, sweep=False, keys=keys) == 3
+    assert merge_bm25_delta(spark, docs, tbl, sweep=False, keys=keys) == 0
     stats = spark.table(tbl + "_stats").collect()
     assert sum(r["dl_sum"] for r in stats) == 2
     assert sum(r["n_dl_docs"] for r in stats) == 1

@@ -1393,18 +1393,18 @@ def test_streaming_bm25_index_matches_batch(spark, sf_dir, tmp_path):
     assert rows_equal(got, want)
     # the replay absorbed to zero and the empty doc counted exactly once:
     # committed per-attempt stats partials sum to the same corpus totals.
-    from columnar_aware_dedup_spark.operators.retrieval import committed_bm25
+    from columnar_aware_dedup_spark.streaming.commitlog import committed
 
     def totals(name):
-        r = committed_bm25(spark, name, "_stats").groupBy().sum(
+        r = committed(spark, name, "_stats").groupBy().sum(
             "n_docs", "n_dl_docs", "dl_sum"
         ).collect()[0]
         return tuple(r)
 
     assert totals(tbl) == totals(truth_tbl)
     assert (
-        committed_bm25(spark, tbl, "").count()
-        == committed_bm25(spark, truth_tbl, "").count()
+        committed(spark, tbl, "").count()
+        == committed(spark, truth_tbl, "").count()
     )
 
 
@@ -1416,10 +1416,9 @@ def test_streaming_bm25_crash_window(spark, sf_dir, tmp_path):
     import pyarrow.parquet as pq_
 
     from columnar_aware_dedup_spark.operators.retrieval import (
-        batch_bm25_postings,
+        bm25_frames,
         bm25_from_index,
         corpus_stats,
-        doc_lengths,
         write_bm25_index,
     )
     from columnar_aware_dedup_spark.streaming import bm25 as sbm25
@@ -1447,8 +1446,9 @@ def test_streaming_bm25_crash_window(spark, sf_dir, tmp_path):
 
     record_attempt(spark, tbl + "_attempts", "dead-attempt")
     tag = F.lit("dead-attempt").alias("attempt_id")
-    reg = doc_lengths(rest).select("doc_id", "dl", tag)
-    batch_bm25_postings(rest).select(
+    postings, registry = bm25_frames(rest)
+    reg = registry.select("doc_id", "dl", tag)
+    postings.select(
         "term", "doc_id", "tf", "dl", tag
     ).write.format("parquet").mode("append").insertInto(tbl)
     reg.write.format("parquet").mode("append").insertInto(tbl + "_docs")
@@ -1771,13 +1771,13 @@ def _bm25_family(spark, name):
     """(init, merge, served, partial tables) of the document BM25 family."""
     from columnar_aware_dedup_spark.operators.retrieval import (
         bm25_from_index,
-        committed_bm25,
         init_bm25_tables,
     )
     from columnar_aware_dedup_spark.streaming import bm25 as sbm25
+    from columnar_aware_dedup_spark.streaming.commitlog import committed
 
     def served():
-        stats = committed_bm25(spark, name, "_stats").groupBy().sum(
+        stats = committed(spark, name, "_stats").groupBy().sum(
             "n_docs", "n_dl_docs", "dl_sum"
         )
         return (

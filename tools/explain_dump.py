@@ -5,10 +5,12 @@ Usage::
 
     python tools/explain_dump.py TAG QUERY [QUERY ...]
 
-writes ``plans/r12/<query>_<TAG>.txt`` for each query, built at
-``$SPARK_GRAFT_SF_DIR`` (default sf0.1). TAG is ``before`` / ``after`` —
-the optimization-round evidence contract (the judge checks plan claims
-against these files).
+writes ``plans/r<N>/<query>_<TAG>.txt`` for each query, built at
+``$SPARK_GRAFT_SF_DIR`` (default sf0.1). ``N`` is the round the dumps
+are evidence for: the newest committed ``CORRECTNESS_r*.json`` archive's
+round + 1 (``registry.archive_state``), so a change's dumps never land
+among an earlier round's. TAG is ``before`` / ``after`` — the plan
+evidence a change's claims are checked against.
 
 Note: queries with build-side effects (the streaming parity certificates
 fold their index tables while the DataFrame is being CONSTRUCTED) run
@@ -23,6 +25,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from columnar_aware_dedup_spark.plans.explain import plan_string  # noqa: E402
+from columnar_aware_dedup_spark.registry import archive_state  # noqa: E402
 from columnar_aware_dedup_spark.session import get_spark  # noqa: E402
 
 
@@ -36,7 +39,8 @@ def main() -> None:
     spark = get_spark("cawd-explain")
     spark.sparkContext.setLogLevel("ERROR")
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    outdir = os.path.join(here, "plans", "r12")
+    _, newest = archive_state(here)
+    outdir = os.path.join(here, "plans", f"r{newest + 1}")
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         df = queries[name](spark, sf_dir)
