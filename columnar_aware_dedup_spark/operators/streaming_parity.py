@@ -199,7 +199,7 @@ def streaming_store_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "parity_sig_store",
         {"": (store.STORE_SCHEMA, True)},
-        store.DEFAULT_BUCKETS,
+        store.store_buckets(spark),
         "signature",
     )
     # the flagship's own chunk/snapshot derivation — reusing it keeps this

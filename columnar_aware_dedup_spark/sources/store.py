@@ -11,6 +11,14 @@ threshold is broadcast anyway, so :func:`read_for_join` reads it as plain
 file splits instead of one task per bucket. Probes are signature-only
 (content never travels).
 
+A new store is bucketed at the session's shuffle width
+(:func:`store_buckets`): Spark runs a bucketed join with one partition per
+bucket, so the bucket count is the width of every store-side join and
+follows ``spark.sql.shuffle.partitions`` like every other shuffle the
+engine plans. An append writes at most one file per bucket, and a read
+opens every bucket's files. An existing store keeps the width it was
+created with; an explicit :func:`compact_store` ``n_buckets`` re-lays it.
+
 Merge discipline (idempotent append) is the fold core's
 (:mod:`columnar_aware_dedup_spark.streaming.fold`), shared with every
 streaming index family: anti-join then append, so at-least-once delivery
@@ -29,8 +37,6 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-DEFAULT_BUCKETS = 64
 
 #: the store table's columns, in :func:`_store_projection`'s order.
 STORE_SCHEMA = "signature string, chunk_type string, size bigint"
@@ -164,6 +170,14 @@ def _store_projection(chunks: DataFrame) -> DataFrame:
     )
 
 
+def store_buckets(spark: SparkSession) -> int:
+    """The bucket count of a new signature store: the session's shuffle
+    width, ``spark.sql.shuffle.partitions`` (the core count in a
+    ``session.get_spark`` session, ``CAWD_SHUFFLE_PARTITIONS`` on a
+    cluster)."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def bucket_aligned(rows: DataFrame, n_buckets: int, col: str) -> DataFrame:
     """``rows`` laid out for a write into a table bucketed ``n_buckets``
     ways on ``col`` — the one definition of "one file per bucket".
@@ -182,9 +196,10 @@ def create_store(
     spark: SparkSession,
     chunks: DataFrame,
     table_name: str,
-    n_buckets: int = DEFAULT_BUCKETS,
+    n_buckets: int | None = None,
 ) -> None:
-    """Materialize a chunk table as a signature-bucketed store table.
+    """Materialize a chunk table as a signature-bucketed store table,
+    ``n_buckets`` ways (default :func:`store_buckets`).
 
     r11 (optimization): when a layout-matching table already exists it is
     TRUNCATEd and the data appended in place (the ``init_bm25_tables``
@@ -201,6 +216,7 @@ def create_store(
         truncate_if_layout_matches,
     )
 
+    n_buckets = n_buckets or store_buckets(spark)
     rows = bucket_aligned(
         # the store is signature-keyed
         _store_projection(chunks).dropDuplicates(["signature"]),
@@ -419,13 +435,14 @@ def read_for_join(spark: SparkSession, table_name: str) -> DataFrame:
     (:func:`probe_store`) and every fold's anti-join
     (``streaming/fold.py::append_new``) read through here.
 
-    A bucketed scan runs one task per bucket (64 for the store, even an
-    empty one) and pays only when the join consumes the bucketing. At or
-    below the session's ``spark.sql.autoBroadcastJoinThreshold`` (-1 =
-    never) the join broadcasts, yet ``DisableUnnecessaryBucketedScan``
-    keeps the bucketed scan, because a clustering aggregate sits above the
-    join (the probe's ``distinct``, the ``dropDuplicates`` an anti-join is
-    pushed under). So a bucketed table that Spark's own size estimate puts
+    A bucketed scan runs one task per bucket (:func:`store_buckets` for a
+    new store, even an empty one) and pays only when the join consumes the
+    bucketing. At or below the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (-1 = never) the join
+    broadcasts, yet ``DisableUnnecessaryBucketedScan`` keeps the bucketed
+    scan, because a clustering aggregate sits above the join (the probe's
+    ``distinct``, the ``dropDuplicates`` an anti-join is pushed under).
+    So a bucketed table that Spark's own size estimate puts
     within the threshold is read as plain parquet splits of its files
     (catalog schema, no inference job), an empty one as an empty relation.
     Anything else is the catalog table, so at scale a probe still shuffles
@@ -497,12 +514,13 @@ def _n_data_files(path: str) -> int:
 def compact_store(
     spark: SparkSession,
     table_name: str,
-    n_buckets: int = DEFAULT_BUCKETS,
+    n_buckets: int | None = None,
     key: str = "signature",
     dedupe: bool = True,
 ) -> tuple[int, int]:
     """Rewrite a key-bucketed table as one sorted file per bucket; returns
-    (files_before, files_after).
+    (files_before, files_after). The table keeps its own bucket count
+    unless ``n_buckets`` re-lays it at another.
 
     Generic over the bucket key: the chunk store compacts on ``signature``
     (rows deduped — the store is signature-keyed), the streaming postings
@@ -530,6 +548,7 @@ def compact_store(
         spark.catalog.refreshTable(table_name)
         location = _store_location(spark, table_name)
         before = _n_data_files(location)
+        n_buckets = n_buckets or bucket_layout(spark, table_name)[0]
         # read the FILES, not the catalog table: a bucketed-table scan
         # reports HashPartitioning(key, n), so Catalyst elided a key-hash
         # repartition here as redundant — and the auto-bucketed-scan

@@ -41,7 +41,7 @@ def start_ingest(
             spark,
             store_table,
             {"": (store.STORE_SCHEMA, True)},
-            store.DEFAULT_BUCKETS,
+            store.store_buckets(spark),
             "signature",
         )
     files = (

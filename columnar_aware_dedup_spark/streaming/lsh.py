@@ -27,7 +27,7 @@ defeat the single-column bucketing and re-shuffle the whole history —
 plan-pinned in ``tests/test_streaming.py``). ``band`` rides along as data
 for the shared-band count; it is determined by the key, never joined on.
 ``sources.store.compact_store(key='bucket', dedupe=False)`` maintains the
-table as appends accumulate.
+table as appends accumulate, keeping its 8 buckets.
 """
 
 from __future__ import annotations

@@ -15,7 +15,8 @@ whole history by probing only their own spans' buckets.
 
 Layout: bucketed by span (like the postings table by term), so the
 corpus-count aggregation is exchange-free on the index side and
-``sources.store.compact_store(key='span', dedupe=False)`` maintains it.
+``sources.store.compact_store(key='span', dedupe=False)`` maintains it at
+its own 8 buckets.
 """
 
 from __future__ import annotations

@@ -22,6 +22,9 @@ the one per-file Arrow loop of the file parsers.
 The lexical pipeline is keyed: ``search.term_freqs`` is the one
 (key, term) -> tf fold and ``retrieval._bm25_table_specs`` the one
 renderer of the BM25 index layout, whatever the item granularity.
+
+The signature store's bucket count is the session's shuffle width, read
+by ``store.store_buckets`` alone: no fixed count is written down for it.
 """
 
 from __future__ import annotations
@@ -395,3 +398,70 @@ def test_bm25_table_specs_render_in_one_function():
                 (kept if id(n) in allowed else offenders).append(where)
     assert not offenders, f"render BM25 specs in _bm25_table_specs: {offenders}"
     assert len(kept) == 3, kept
+
+
+STORE = PACKAGE / "sources" / "store.py"
+
+
+def _store_width_offenders(path: pathlib.Path) -> list[int]:
+    """Lines where ``path`` fixes the signature store's width instead of
+    taking it from ``store.store_buckets``."""
+    tree = _parse(path)
+    lines = []
+    for call in ast.walk(tree):
+        # a store family created through fold.init_tables
+        if (
+            isinstance(call, ast.Call)
+            and _called_names(call)[0][0] == "init_tables"
+            and "STORE_SCHEMA" in _names(call)
+        ):
+            width = next(
+                (k.value for k in call.keywords if k.arg == "n_buckets"),
+                call.args[3] if len(call.args) > 3 else None,
+            )
+            if width is None or not (
+                isinstance(width, ast.Call)
+                and _called_names(width)[0][0] == "store_buckets"
+            ):
+                lines.append(getattr(width, "lineno", call.lineno))
+    if path == STORE:
+        lines += [
+            n.lineno for n in tree.body
+            if isinstance(n, (ast.Assign, ast.AnnAssign))
+            and isinstance(n.value, ast.Constant)
+            and type(n.value.value) is int
+        ]
+        # the defaults: a new store at the session width, a compaction at
+        # the table's own
+        for fn, source in (
+            ("create_store", "store_buckets"),
+            ("compact_store", "bucket_layout"),
+        ):
+            node = _function(tree, fn)
+            params = [a.arg for a in node.args.args]
+            defaults = dict(zip(params[::-1], node.args.defaults[::-1]))
+            default = defaults["n_buckets"]
+            if not (
+                isinstance(default, ast.Constant) and default.value is None
+                and source in _calls_by_name(node)
+            ):
+                lines.append(default.lineno)
+    return sorted(lines)
+
+
+def test_store_width_comes_from_store_buckets():
+    """No fixed bucket count for the signature store: every store the
+    package creates (``create_store``'s default, ``fold.init_tables`` on
+    ``STORE_SCHEMA``) takes its width from ``store.store_buckets``, and
+    ``compact_store`` keeps a table's own width unless told otherwise."""
+    offenders = [
+        f"{path.relative_to(PACKAGE)}:{line}"
+        for path in PACKAGE_MODULES
+        for line in _store_width_offenders(path)
+    ]
+    assert not offenders, f"take the store width from store_buckets: {offenders}"
+    helper = _function(_parse(STORE), "store_buckets")
+    assert any(
+        isinstance(n, ast.Constant) and n.value == "spark.sql.shuffle.partitions"
+        for n in ast.walk(helper)
+    ), "store_buckets reads the session's shuffle width"

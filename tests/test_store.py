@@ -543,22 +543,25 @@ def test_replay_merge_leaves_store_files_untouched(spark, sf_dir):
 
 def test_append_layout_and_observed_count(spark, sf_dir):
     """The fold's write layout is core-sized but bucket-aligned, and the
-    count ``append_new`` returns is the table's row-count increase."""
+    count ``append_new`` returns is the table's row-count increase. The
+    store has more buckets than write tasks (k < n), so a task writes
+    several buckets."""
     import collections
 
     from columnar_aware_dedup_spark.streaming import fold
 
     tbl = "test_store_layout"
     chunks = _chunks(spark, sf_dir)
+    cores = spark.sparkContext.defaultParallelism
+    n = 4 * cores
     store.drop_table_and_dir(spark, tbl)
     try:
         store.create_store(
-            spark, chunks.filter(F.col("file_id") % 3 == 0), tbl
+            spark, chunks.filter(F.col("file_id") % 3 == 0), tbl, n_buckets=n
         )
-        cores = spark.sparkContext.defaultParallelism
         assert (
             fold.laid_out(spark, chunks, tbl).rdd.getNumPartitions()
-            == min(store.DEFAULT_BUCKETS, cores)
+            == min(n, cores)
         )
 
         location = store._store_location(spark, tbl)
@@ -579,7 +582,7 @@ def test_append_layout_and_observed_count(spark, sf_dir):
 
         non_empty = (
             spark.table(tbl)
-            .select(F.pmod(F.hash("signature"), F.lit(store.DEFAULT_BUCKETS)))
+            .select(F.pmod(F.hash("signature"), F.lit(n)))
             .distinct()
             .count()
         )
@@ -615,5 +618,55 @@ def test_fold_table_create_runs_no_job(spark):
             [("a", "Row", 1), ("b", "Row", 2)], store.STORE_SCHEMA
         )
         assert store.merge_into_store(spark, rows, tbl) == 2
+    finally:
+        store.drop_table_and_dir(spark, tbl)
+
+
+def _width(spark):
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def test_signature_stores_take_the_session_width(spark, sf_dir, tmp_path):
+    """The stores the engine creates — the parity certificate's and the
+    continuous ingest's — are bucketed at the session's shuffle width."""
+    from columnar_aware_dedup_spark.operators.streaming_parity import (
+        streaming_store_parity,
+    )
+    from columnar_aware_dedup_spark.streaming import ingest
+
+    streaming_store_parity(spark, sf_dir)
+    assert store.bucket_spec(spark, "parity_sig_store") == (
+        _width(spark),
+        "signature",
+    )
+
+    tbl = "test_ingest_store_width"
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    store.drop_table_and_dir(spark, tbl)
+    try:
+        q = ingest.start_ingest(spark, str(inbox), tbl, str(tmp_path / "ckpt"))
+        q.awaitTermination(120)
+        assert store.bucket_spec(spark, tbl) == (_width(spark), "signature")
+    finally:
+        store.drop_table_and_dir(spark, tbl)
+
+
+def test_default_width_merge_writes_one_file_per_bucket(spark, sf_dir):
+    """A non-empty merge into a default-width store adds at most one file
+    per bucket: no more files than the session's shuffle width."""
+    tbl = "test_store_default_width"
+    chunks = _chunks(spark, sf_dir)
+    store.drop_table_and_dir(spark, tbl)
+    try:
+        store.create_store(spark, chunks.limit(0), tbl)
+        width = _width(spark)
+        assert store.bucket_spec(spark, tbl) == (width, "signature")
+        location = store._store_location(spark, tbl)
+        before = set(_bucket_ids(location))
+        assert store.merge_into_store(spark, chunks, tbl) > 0
+        new = [b for f, b in _bucket_ids(location).items() if f not in before]
+        assert 0 < len(new) <= width, new
+        assert None not in new and len(set(new)) == len(new), new
     finally:
         store.drop_table_and_dir(spark, tbl)

@@ -943,12 +943,20 @@ def test_crawl_admission_agrees_with_streaming_probe(spark, sf_dir):
 def test_lsh_index_compaction_preserves_layout_and_pairs(spark, sf_dir, tmp_path):
     """`compact_store(key='bucket', dedupe=False)` is the LSH index's
     maintenance path: after two merge waves it must collapse the accreted
-    files, preserve the exact band-row set, and keep the bucketed layout
-    that makes pair serving exchange-free on the index side."""
+    files to one per non-empty bucket, preserve the exact band-row set,
+    and keep the table's own 8-bucket layout that makes pair serving
+    exchange-free on the index side."""
+    import os
+    import re
+
     import pyarrow.parquet as pq_
 
     from columnar_aware_dedup_spark.plans import explain
-    from columnar_aware_dedup_spark.sources.store import compact_store
+    from columnar_aware_dedup_spark.sources.store import (
+        _store_location,
+        bucket_spec,
+        compact_store,
+    )
     from columnar_aware_dedup_spark.streaming import lsh
 
     t = pq_.read_table(f"{sf_dir}/documents.parquet")
@@ -964,11 +972,22 @@ def test_lsh_index_compaction_preserves_layout_and_pairs(spark, sf_dir, tmp_path
         assert lsh.merge_bands(spark, d, tbl) > 0
 
     before_rows = {tuple(r) for r in spark.table(tbl).collect()}
-    n_before, n_after = compact_store(
-        spark, tbl, n_buckets=8, key="bucket", dedupe=False
-    )
+    n_before, n_after = compact_store(spark, tbl, key="bucket", dedupe=False)
     assert n_after < n_before, (n_before, n_after)
     assert {tuple(r) for r in spark.table(tbl).collect()} == before_rows
+    assert bucket_spec(spark, tbl) == (8, "bucket")
+    non_empty = (
+        spark.table(tbl)
+        .select(F.pmod(F.hash("bucket"), F.lit(8)))
+        .distinct()
+        .count()
+    )
+    buckets = [
+        re.search(r"_(\d{5})\.c\d{3}", f).group(1)
+        for f in os.listdir(_store_location(spark, tbl))
+        if f.endswith(".parquet")
+    ]
+    assert n_after == len(buckets) == len(set(buckets)) == non_empty, buckets
 
     with spark_conf(spark, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         pairs = lsh.near_dup_pairs_from_index(spark, tbl)
